@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -97,6 +98,13 @@ def _calibrate_scaling(spark) -> float:
     return round(statistics.median(times), 3)
 
 
+def _cpus(sc) -> int:
+    """Cores the bench ran on: N of a ``local[N]`` master, else the
+    default parallelism (``local[*]`` or a cluster's executor cores)."""
+    m = re.fullmatch(r"local\[(\d+)(?:,\d+)?\]", sc.master)
+    return int(m.group(1)) if m else sc.defaultParallelism
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -177,7 +185,7 @@ def main() -> None:
         # bench really ran at $SPARK_GRAFT_CPUS.
         "calibration_scaling_sec": {"pre": calib_scale_pre,
                                     "post": _calibrate_scaling(spark)},
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", ""),
+        "cpus": str(_cpus(sc)),
         "default_parallelism": sc.defaultParallelism,
         "master": sc.master,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
@@ -224,7 +232,7 @@ def _persist_full_result(result: dict, sf: str) -> None:
     # _c{cpus} suffix so they can never squat on the round's sealed
     # 32-core evidence slot (VERDICT r17 item 2c: the driver's 8-core
     # r17 run landed in BENCH_LOCAL_r18.json, the next round's slot).
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = result["cpus"]
     suffix = "" if cpus == "32" else f"_c{cpus}"
     out = os.path.join(root, f"BENCH_LOCAL_r{rnd}{suffix}.json")
     if os.path.exists(out):

@@ -5,21 +5,9 @@ from __future__ import annotations
 
 from windowsession_using_kafka_flink_docker_spark.plans.catalog import (
     CATALOG,
-    DRIVER_PRIORITY,
     oracle_sql,
     queries,
 )
-
-
-def test_driver_priority_names_exist():
-    """_ordered() silently skips unknown names — a typo here would quietly
-    push an entry out of the driver's correctness window."""
-    missing = [n for n in DRIVER_PRIORITY if n not in CATALOG]
-    assert not missing, f"DRIVER_PRIORITY names not in CATALOG: {missing}"
-
-
-def test_driver_priority_no_duplicates():
-    assert len(DRIVER_PRIORITY) == len(set(DRIVER_PRIORITY))
 
 
 def test_queries_and_oracles_consistent():
@@ -38,478 +26,14 @@ def test_every_entry_documented():
     assert not untagged
 
 
-def _driver_history():
-    """(per-entry last-green-round, latest round number) across ALL
-    CORRECTNESS_r*.json snapshots — NOT just the latest one: the driver
-    window rotates, so 'absent from the latest snapshot' does not mean
-    'never checked' (that conflation was round 4's one red test)."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    last_green: dict[str, int] = {}
-    latest_round = 0
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        rnd = int(os.path.basename(path).split("_r")[1].split(".")[0])
-        latest_round = max(latest_round, rnd)
-        with open(path) as f:
-            snap = json.load(f)
-        for name, row in snap.items():
-            ok = bool(row.get("hash_match")) or (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None)
-            if ok:
-                last_green[name] = max(last_green.get(name, 0), rnd)
-    return last_green, latest_round
-
-
-def test_priority_covers_all_never_checked_entries():
-    """Every entry with no driver row in ANY correctness snapshot must be
-    in the priority front so the next snapshot sees it."""
-    last_green, _ = _driver_history()
-    not_prioritized = [n for n in CATALOG
-                       if n not in last_green and n not in DRIVER_PRIORITY]
-    assert not not_prioritized, (
-        f"never-driver-checked entries missing from DRIVER_PRIORITY: "
-        f"{not_prioritized}")
-
-
-def test_window_re_certifies_stalest_entries():
-    """Rotation invariant: every catalog entry is either inside the
-    upcoming driver window (first DRIVER_WINDOW names of queries()) or was
-    driver-green within the last STALENESS_BOUND snapshots. Keeps
-    certifications fresh against driver-side testdata drift without
-    demanding an infinite window."""
-    from windowsession_using_kafka_flink_docker_spark.plans.catalog import (
-        DRIVER_WINDOW,
-        STALENESS_BOUND,
-    )
-
-    last_green, latest_round = _driver_history()
-    window = set(list(queries())[:DRIVER_WINDOW])
-    stale = [n for n in CATALOG
-             if n not in window
-             and last_green.get(n, 0) < latest_round - (STALENESS_BOUND - 1)]
-    assert not stale, f"entries neither in-window nor recently green: {stale}"
-
-
-def test_priority_is_computed_from_on_disk_history():
-    """DRIVER_PRIORITY must be the pure function of (catalog, history,
-    changed-set) — not a hand-maintained tuple that can drift when a
-    driver snapshot lands post-commit (the round-4 AND round-5 red-test
-    class)."""
-    from windowsession_using_kafka_flink_docker_spark.plans.catalog import (
-        compute_driver_priority,
-        driver_history,
-    )
-    from windowsession_using_kafka_flink_docker_spark.plans.fingerprints import (
-        changed_entries,
-        load_recorded,
-    )
-
-    assert DRIVER_PRIORITY == compute_driver_priority(
-        list(CATALOG), driver_history()[0],
-        changed_entries(CATALOG, load_recorded()))
-
-
-def test_changed_entry_self_schedules_into_next_window():
-    """Change-aware rotation (VERDICT r9 item 4), restated as the policy
-    actually guarantees (VERDICT r13 item 1): a changed entry sorts
-    ahead of every merely-aging entry, so it enters the very next driver
-    window WHENEVER a free slot exists. It does NOT displace at-bound or
-    pinned entries (policy point 5 — the age bound is the hard
-    invariant), so under a saturated window it waits exactly one round.
-    The original live-history version of this test asserted the
-    unconditional claim and went red the moment CORRECTNESS_r13 made the
-    r14 window exactly 40 at-bound + 10 pinned = 50/50. Synthetic
-    histories (the file's :171/:219 precedent) pin both cases."""
-    from windowsession_using_kafka_flink_docker_spark.plans.catalog import (
-        DRIVER_WINDOW,
-        PINNED,
-        STALENESS_BOUND,
-        compute_driver_priority,
-    )
-
-    names = list(CATALOG)
-    latest = 20
-    unpinned = [n for n in names if n not in PINNED]
-
-    # --- Case 1: free slots exist (no at-bound cohort, everything age 0).
-    # An age-0 unpinned entry late in registration order sits outside the
-    # window by age alone; marking it changed pulls it in.
-    last_green = {n: latest for n in names}
-    fresh = unpinned[-1]
-    without = compute_driver_priority(names, last_green)
-    assert fresh not in without[:DRIVER_WINDOW], (
-        "test premise broken: an age-0 unpinned entry at the back of "
-        "registration order should not be in the next window by age alone")
-    with_change = compute_driver_priority(
-        names, last_green, frozenset({fresh}))
-    assert fresh in with_change[:DRIVER_WINDOW], (
-        f"{fresh} marked changed but not scheduled despite free slots")
-
-    # --- Case 2: saturated window (at-bound + pinned == DRIVER_WINDOW,
-    # the live r14 state). The changed entry must NOT displace anyone,
-    # but must head the overflow — first name after the window, ahead of
-    # every merely-aging entry — so it certifies the round the window
-    # reopens.
-    n_at_bound = DRIVER_WINDOW - len(PINNED)
-    at_bound = set(unpinned[:n_at_bound])
-    last_green = {n: latest - STALENESS_BOUND if n in at_bound else latest
-                  for n in names}
-    changed = next(n for n in unpinned if n not in at_bound)
-    order = compute_driver_priority(names, last_green, frozenset({changed}))
-    window = set(order[:DRIVER_WINDOW])
-    assert window == at_bound | (set(PINNED) & set(names)), (
-        "saturated window must be exactly at-bound + pinned")
-    assert changed not in window, (
-        "changed entry displaced an at-bound/pinned entry — breaks the "
-        "hard staleness invariant")
-    assert order[DRIVER_WINDOW] == changed, (
-        f"changed entry must head the overflow (outrank all merely-aging "
-        f"entries); got {order[DRIVER_WINDOW]!r} first instead")
-
-
-def test_changed_burst_cannot_displace_at_bound_entries():
-    """r10 ADVICE: a round with a large edit burst must not consume
-    window slots ahead of entries already at the staleness bound — the
-    bound is the hard invariant (a displaced at-bound entry goes red;
-    a displaced changed entry just re-front-loads next round, its
-    fingerprint still differing). Synthetic worst case: a full-window
-    burst of fresh edits on top of the real history."""
-    from windowsession_using_kafka_flink_docker_spark.plans.catalog import (
-        DRIVER_WINDOW,
-        PINNED,
-        STALENESS_BOUND,
-        compute_driver_priority,
-        driver_history,
-    )
-
-    # Fully synthetic history (r11 ADVICE: deriving the burst from the
-    # live snapshots made the premise assertion fail whenever a future
-    # round lands a small age-0 cohort): DRIVER_WINDOW - len(PINNED)
-    # entries at the bound, everything else freshly green and edited.
-    names = list(CATALOG)
-    latest = 20
-    n_at_bound = DRIVER_WINDOW - len(PINNED)
-    unpinned = [n for n in names if n not in PINNED]
-    at_bound = set(unpinned[:n_at_bound])
-    last_green = {n: latest - STALENESS_BOUND if n in at_bound else latest
-                  for n in names}
-    burst = frozenset(n for n in unpinned if n not in at_bound)
-    assert len(burst) + len(PINNED) >= DRIVER_WINDOW - len(at_bound), \
-        "test premise: the burst must be big enough to overflow the window"
-    window = set(compute_driver_priority(names, last_green, burst)
-                 [:DRIVER_WINDOW])
-    displaced = at_bound - window
-    assert not displaced, (
-        f"edit burst displaced at-bound entries past STALENESS_BOUND: "
-        f"{sorted(displaced)}")
-    # scheduled even with no burst at all
-    plain_window = set(compute_driver_priority(names, last_green)
-                       [:DRIVER_WINDOW])
-    assert at_bound <= plain_window, sorted(at_bound - plain_window)
-    # and the real on-disk history's at-bound entries (if any) must be in
-    # the real next window — the live-state companion assertion
-    real_green, real_latest = driver_history()
-    real_green = {n: r for n, r in real_green.items() if n in CATALOG}
-    real_at_bound = {n for n in names
-                     if n in real_green
-                     and real_green[n] <= real_latest - STALENESS_BOUND}
-    real_window = set(compute_driver_priority(names, real_green)
-                      [:DRIVER_WINDOW])
-    assert real_at_bound <= real_window, sorted(real_at_bound - real_window)
-
-
-def test_registration_burst_cannot_displace_at_bound_entries():
-    """r11 ADVICE: never-checked entries used to sort ahead of
-    everything, so a large batch of newly registered entries plus the
-    pins could displace at-bound entries past STALENESS_BOUND despite
-    the changed-burst protection. At-bound now outranks the never
-    bucket too (a bumped never entry stays never and re-front-loads;
-    a bumped at-bound entry goes red). Synthetic worst case: a
-    window-sized registration burst on top of an at-bound cohort."""
-    from windowsession_using_kafka_flink_docker_spark.plans.catalog import (
-        DRIVER_WINDOW,
-        PINNED,
-        STALENESS_BOUND,
-        compute_driver_priority,
-    )
-
-    names = list(CATALOG)
-    latest = 20
-    n_at_bound = DRIVER_WINDOW - len(PINNED)
-    unpinned = [n for n in names if n not in PINNED]
-    at_bound = set(unpinned[:n_at_bound])
-    # everything unpinned and not at-bound is brand new (no history row)
-    last_green = {n: latest for n in names
-                  if n in PINNED or n in at_bound}
-    for n in at_bound:
-        last_green[n] = latest - STALENESS_BOUND
-    n_never = len(names) - len(last_green)
-    assert n_never + len(PINNED) > DRIVER_WINDOW - len(at_bound), \
-        "test premise: the registration burst must overflow the window"
-    window = set(compute_driver_priority(names, last_green)
-                 [:DRIVER_WINDOW])
-    displaced = at_bound - window
-    assert not displaced, (
-        f"registration burst displaced at-bound entries: "
-        f"{sorted(displaced)}")
-    # pins survive too: at_bound <= W - P under feasible history, so
-    # (at_bound, pinned) always fits ahead of the never bucket
-    assert set(PINNED) & set(names) <= window
-
-
-def test_fingerprint_sees_helper_edits():
-    """The fingerprint closure must cover module-level helpers the
-    registered entry delegates to — the r9 ANALYZE rewrite and the r10
-    n_langs fix both lived in helpers, not the registered two-liner."""
-    from windowsession_using_kafka_flink_docker_spark.plans import relational
-    from windowsession_using_kafka_flink_docker_spark.plans.fingerprints import (
-        _source_closure,
-    )
-
-    spec = CATALOG["orders_column_ndv_kmv"]
-    sources, _ = _source_closure(spec.spark)
-    names = {q for _, q, _ in sources}
-    assert "orders_kmv_state" in names
-    assert "ndv_report_from_kmv_state" in names
-    # and transitively: the merge helper the state builder composes
-    assert any("kmin_merge" in q for q in names), names
-    # sanity: the closure is repo-only (no pyspark internals hashed)
-    mods = {m for m, _, _ in sources}
-    assert all(m.startswith("windowsession_using_kafka_flink_docker_spark")
-               for m in mods), mods
-    assert relational.orders_kmv_state  # referenced, keep the import
-
-
-def test_fingerprint_sees_module_constants():
-    """Module-level constants referenced by the closure must be part of
-    the fingerprint (r10 ADVICE: editing PRICE_SAMPLE_K changed
-    sampled_median_audit's behavior invisibly). Also pins the repr
-    discipline: hash-seed-dependent set ordering is normalized and
-    address-bearing reprs are refused rather than hashed."""
-    from windowsession_using_kafka_flink_docker_spark.plans.fingerprints import (
-        _const_repr,
-        _source_closure,
-        entry_fingerprint,
-    )
-
-    spec = CATALOG["sampled_median_audit"]
-    _, consts = _source_closure(spec.spark)
-    const_names = {n for _, n, _ in consts}
-    assert "PRICE_SAMPLE_K" in const_names, const_names
-    # changing a constant's value must change the fingerprint
-    from windowsession_using_kafka_flink_docker_spark.plans import relational
-    before = entry_fingerprint(spec.spark, spec.oracle)
-    orig = relational.PRICE_SAMPLE_K
-    try:
-        relational.PRICE_SAMPLE_K = orig + 1
-        assert entry_fingerprint(spec.spark, spec.oracle) != before
-    finally:
-        relational.PRICE_SAMPLE_K = orig
-    assert entry_fingerprint(spec.spark, spec.oracle) == before
-    # repr discipline
-    assert _const_repr({"a", "b", "c"}) == _const_repr({"c", "a", "b"})
-    assert _const_repr(object()) is None  # address-bearing repr refused
-    assert _const_repr((1, "x", 2.5)) == _const_repr((1, "x", 2.5))
-    from pyspark.sql.types import LongType, StructField, StructType
-    schema = StructType([StructField("cents", LongType())])
-    assert _const_repr(schema) == _const_repr(
-        StructType([StructField("cents", LongType())]))
-
-
-def test_fingerprint_v2_sees_module_attribute_and_local_import_refs():
-    """ALGO v2 (SURVEY 2.116 follow-up) must close both v1 blind-spot
-    classes: (a) module-ATTRIBUTE references — bm25_search reaches
-    bm25_topk only as ``T.bm25_topk``, so its v2 closure must carry the
-    text_analysis function a v1 closure missed; (b) function-LOCAL
-    imports — capped_sessionization imports its operator inside the
-    body, recovered from the dotted IMPORT_NAME path. And the
-    version-pinned comparison must hold: a record tagged v1 compares
-    under v1 rules (no mass-invalidation on the algorithm switch), an
-    untagged record defaults to v1."""
-    from windowsession_using_kafka_flink_docker_spark.plans.fingerprints import (
-        _source_closure,
-        changed_entries,
-        entry_fingerprint,
-    )
-
-    spec = CATALOG["bm25_search"]
-    v2 = {(m, q) for m, q, _ in _source_closure(spec.spark)[0]}
-    v1 = {(m, q) for m, q, _ in
-          _source_closure(spec.spark, resolve_module_attrs=False)[0]}
-    ta = "windowsession_using_kafka_flink_docker_spark.operators.text_analysis"
-    assert (ta, "bm25_topk") in v2
-    assert (ta, "bm25_topk") not in v1
-
-    capped = CATALOG["capped_sessionization"]
-    v2c = {(m, q) for m, q, _ in _source_closure(capped.spark)[0]}
-    op = "windowsession_using_kafka_flink_docker_spark.operators.capped_sessionize"
-    assert (op, "capped_sessionize") in v2c  # local-import class
-
-    # version-pinned comparison: a v1 record of the CURRENT code is
-    # unchanged under v1 rules even though the v2 hash differs
-    fp_v1 = entry_fingerprint(spec.spark, spec.oracle, algo="v1")
-    fp_v2 = entry_fingerprint(spec.spark, spec.oracle)
-    assert fp_v1 != fp_v2  # the closures genuinely differ
-    rec_v1 = {"bm25_search": {"round": 1, "fingerprint": fp_v1}}
-    rec_v2 = {"bm25_search": {"round": 1, "fingerprint": fp_v2,
-                              "algo": "v2"}}
-    assert "bm25_search" not in changed_entries(
-        {"bm25_search": spec}, rec_v1)
-    assert "bm25_search" not in changed_entries(
-        {"bm25_search": spec}, rec_v2)
-    # and a v1 record compared as if it were v2 WOULD flag — the pin
-    # that the per-record algo dispatch is what prevents it
-    rec_cross = {"bm25_search": {"round": 1, "fingerprint": fp_v1,
-                                 "algo": "v2"}}
-    assert "bm25_search" in changed_entries(
-        {"bm25_search": spec}, rec_cross)
-
-
-def test_certified_record_is_structurally_sound():
-    """CERTIFIED_FINGERPRINTS.json must be internally consistent —
-    catches a missing, truncated, or hand-mangled record file with
-    assertions independent of changed_entries() (the r9 version skipped
-    exactly the mismatching names, so it could never fail — r10 ADVICE).
-    A mangled FINGERPRINT is self-healing (it reads as changed and
-    re-certifies next round), so what must hold structurally: every
-    recorded name is a live catalog entry, every round is a real
-    snapshot round, every fingerprint is well-formed sha256 hex, and the
-    record's newest round R covers every entry green in snapshot R (the
-    record script stamps all of round R's green set when run)."""
-    import re
-
-    from windowsession_using_kafka_flink_docker_spark.plans.catalog import (
-        RENAMED_ENTRIES,
-        driver_history,
-    )
-    from windowsession_using_kafka_flink_docker_spark.plans.fingerprints import (
-        load_recorded,
-    )
-
-    recorded = load_recorded()
-    assert recorded, "CERTIFIED_FINGERPRINTS.json missing or empty"
-    last_green, latest = driver_history()
-    hex64 = re.compile(r"^[0-9a-f]{64}$")
-    for name, rec in recorded.items():
-        assert name in CATALOG, f"record for unknown entry {name}"
-        assert {"round", "fingerprint"} <= set(rec) \
-            <= {"round", "fingerprint", "algo"}, name
-        assert rec.get("algo", "v1") in ("v1", "v2"), name
-        assert isinstance(rec["round"], int) and 1 <= rec["round"] <= latest, \
-            (name, rec["round"])
-        assert hex64.match(rec["fingerprint"]), name
-    rec_latest = max(rec["round"] for rec in recorded.values())
-    # every entry green in snapshot rec_latest must carry that round's
-    # stamp (record_fingerprints.py writes the whole green set at once)
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    snap_path = os.path.join(root, f"CORRECTNESS_r{rec_latest:02d}.json")
-    if not os.path.exists(snap_path):
-        snap_path = os.path.join(root, f"CORRECTNESS_r{rec_latest}.json")
-    with open(snap_path) as f:
-        snap = json.load(f)
-    for name, row in snap.items():
-        name = RENAMED_ENTRIES.get(name, name)
-        ok = bool(row.get("hash_match")) or (
-            row.get("err") == "no_oracle"
-            and row.get("spark_rows") is not None)
-        if ok and name in CATALOG:
-            assert name in recorded, (
-                f"{name} green in r{rec_latest} but absent from the "
-                "certified record — record_fingerprints.py not run?")
-            assert recorded[name]["round"] == rec_latest, name
-    assert glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
-
-
-def test_window_policy_converges_over_projected_rounds():
-    """Project the rotation six rounds ahead (VERDICT r5 item 2, extended
-    for the round-7 and round-10 bound relaxations): simulate the driver
-    certifying each computed window, recompute, and assert no entry's
-    certification ever ages past STALENESS_BOUND rounds. This proves the
-    mechanism converges — a future snapshot can only make the real test
-    greener, never red. Seven projected rounds cover a full rotation cycle
-    of the relaxed bound (every entry certified at least once every
-    STALENESS_BOUND+1 = 6 windows) plus one round of slack. The
-    projection assumes no mid-round edits (empty changed-set); an edit
-    only front-loads its entry, which cannot push the schedule past the
-    bound while the catalog stays under capacity with the mandated
-    headroom."""
-    from windowsession_using_kafka_flink_docker_spark.plans.catalog import (
-        DRIVER_WINDOW,
-        PINNED,
-        STALENESS_BOUND,
-        compute_driver_priority,
-        driver_history,
-    )
-
-    last_green, latest = driver_history()
-    last_green = {n: r for n, r in last_green.items() if n in CATALOG}
-    names = list(CATALOG)
-    for future_round in range(latest + 1, latest + 8):
-        priority = compute_driver_priority(names, last_green)
-        window = set(priority[:DRIVER_WINDOW])
-        assert set(PINNED) <= window
-        # every entry neither in this window nor green within
-        # STALENESS_BOUND rounds would go red — there must be none
-        stale = [n for n in names if n not in window
-                 and last_green.get(n, 0) < future_round - STALENESS_BOUND]
-        assert not stale, (
-            f"round {future_round} projection leaves stale entries: {stale}")
-        for n in window:  # driver certifies the window
-            last_green[n] = future_round
-
-
-def test_catalog_size_leaves_rotation_headroom():
-    """Feasibility bound for the rotation: each round the window holds
-    the pins (P), every entry whose certification aged to STALENESS_BOUND
-    rounds, and oldest-first fill. An entry certified in round r is fresh
-    through r + STALENESS_BOUND - 1 and must re-enter the window by
-    r + STALENESS_BOUND, so the effective cycle is STALENESS_BOUND + 1
-    windows and the capacity is N <= (B+1)*W - B*P (B=2 gave 130, B=3
-    gave 170, the round-10 relaxation to B=4 gave 210; the r18-window
-    relaxation to B=5 gives 250, each paired with the change-aware
-    front-loading so edits never ride the longer age bound, plus the
-    r15+ out-of-band sf0.1 full-catalog sweeps). Fail loudly when an
-    added entry
-    would make the policy arithmetically impossible, and require >= 5
-    entries of headroom so a round's additions never land exactly on the
-    ceiling (VERDICT r6 item 1's done-criterion)."""
-    from windowsession_using_kafka_flink_docker_spark.plans.catalog import (
-        DRIVER_WINDOW,
-        PINNED,
-        STALENESS_BOUND,
-    )
-
-    capacity = ((STALENESS_BOUND + 1) * DRIVER_WINDOW
-                - STALENESS_BOUND * len(PINNED))
-    assert len(CATALOG) <= capacity - 5, (
-        "catalog has outgrown the rotation policy — raise DRIVER_WINDOW "
-        "or relax the staleness bound")
-
-
-def test_core_parity_and_identity_pins_always_in_window():
-    """The 8 reference-parity rows and the 2 ANN exact-identity pins must
-    never rotate out (VERDICT r4 item 6)."""
-    from windowsession_using_kafka_flink_docker_spark.plans.catalog import (
-        DRIVER_WINDOW,
-    )
-
-    window = set(list(queries())[:DRIVER_WINDOW])
-    pinned = {
-        "session_fixed_gap", "session_dynamic_gap",
-        "session_fixed_gap_bucketed", "session_report",
-        "big_customer_alert", "csv_parse_roundtrip",
-        "generated_sessionization", "generated_big_customer_alert",
-        "ivf_recall_vs_exact", "pq_rerank_all_vs_exact",
-    }
-    assert pinned <= window, f"pinned rows out of window: {pinned - window}"
+def test_queries_in_registration_order():
+    """The driver contract lists entries in plain registration order:
+    the reference-parity rows of plans/parity.py lead, with the flagship
+    ``session_fixed_gap`` first."""
+    assert list(queries()) == list(CATALOG)
+    assert list(oracle_sql()) == [
+        n for n in CATALOG if CATALOG[n].oracle is not None]
+    assert next(iter(queries())) == "session_fixed_gap"
 
 
 def test_catalog_md_in_sync():
@@ -548,37 +72,3 @@ def test_survey_names_every_tpch_entry():
     assert not missing, f"SURVEY.md missing TPC-H rows: {missing}"
 
 
-def test_window_projection_tool_reports_recovery():
-    """tools/window_projection.py is the round-protocol gate; its JSON
-    must (a) parse, (b) agree with the live rotation on the window
-    cohorts, and (c) classify every missing changed/never entry as
-    either recovering next round or deferred past it — the
-    deferred-past-next-round list is the too-stale alarm (an entry
-    running driver-uncertified code for two consecutive rounds)."""
-    import json
-    import os
-    import subprocess
-    import sys
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [sys.executable, os.path.join(root, "tools", "window_projection.py")],
-        capture_output=True, text=True, cwd=root)
-    line = next(l for l in proc.stdout.splitlines()
-                if l.startswith("WINDOWPROJ "))
-    rep = json.loads(line[len("WINDOWPROJ "):])
-    assert rep["catalog"] == len(CATALOG)
-    missing = [n for v in rep.get("missing", {}).values() for n in v]
-    recovered = set(rep["missing_recover_next_round"])
-    deferred = set(rep["deferred_past_next_round"])
-    # exit code mirrors ok; every missing changed/never entry is
-    # classified exactly once
-    assert (proc.returncode == 0) == rep["ok"]
-    ch_never = set(rep.get("missing", {}).get("changed", [])) \
-        | set(rep.get("missing", {}).get("never", []))
-    assert ch_never == (recovered | deferred) and not (recovered & deferred)
-    # the hard alarm: nothing may defer past the NEXT window while the
-    # catalog honors the feasibility capacity
-    assert not deferred, (
-        f"entries running uncertified code for 2+ rounds: {sorted(deferred)}")
-    assert missing is not None  # shape sanity

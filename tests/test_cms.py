@@ -1,5 +1,7 @@
-"""Count-min sketch invariants beyond the oracle row: the estimate NEVER
-undercounts, and partition-local sketches merge losslessly."""
+"""Sketch invariants beyond the oracle row. Count-min: the estimate NEVER
+undercounts, and partition-local sketches merge losslessly. HyperLogLog:
+the corrected estimate meets its error bound, and the register build
+partial-aggregates before its one exchange."""
 
 from __future__ import annotations
 
@@ -102,3 +104,55 @@ def test_unseen_tokens_still_estimated(spark):
     assert set(rows) == {"tok1", "never-sketched-xyz"}
     assert rows["tok1"] > 0
     assert rows["never-sketched-xyz"] == 0  # w=64, 37 tokens: some cell empty
+
+
+def test_hll_registers_within_expected_error(spark, sf_dir):
+    """Beyond oracle parity (both engines compute identical registers):
+    the CORRECTED estimate must actually be good. The entry pins only
+    integer-exact columns (raw harmonic estimate + register fill
+    count); the consumer-side small-range correction — linear counting
+    m*ln(m/v) when raw <= 2.5m and empty registers remain — is applied
+    here in Python, and the result must sit within 3.3 sigma of HLL's
+    standard error (1.04/sqrt(512) = 4.6% -> 15%). Register-state
+    consistency: filled_buckets <= min(m, n_exact)."""
+    import math
+
+    from windowsession_using_kafka_flink_docker_spark.operators.hll import (
+        HLL_M as _HLL_M,
+    )
+    from windowsession_using_kafka_flink_docker_spark.plans.analytics import (
+        hll_ndv_by_event_type,
+    )
+
+    rows = hll_ndv_by_event_type(spark, sf_dir).collect()
+    assert rows
+    for r in rows:
+        assert r.n_exact > 0
+        assert 0 < r.filled_buckets <= min(_HLL_M, r.n_exact)
+        v = _HLL_M - r.filled_buckets
+        if r.ndv_hll_raw <= 2.5 * _HLL_M and v > 0:
+            est = _HLL_M * math.log(_HLL_M / v)   # linear counting
+        else:
+            est = float(r.ndv_hll_raw)
+        assert abs(est - r.n_exact) <= 0.15 * r.n_exact, (
+            r.event_type, r.n_exact, r.filled_buckets, r.ndv_hll_raw, est)
+
+
+def test_hll_register_build_is_partial_aggregated(spark, sf_dir):
+    """The 100 TB claim the SCALING entry makes: the register build
+    plans ONE hash exchange with a partial max BEFORE it — the shuffle
+    carries per-task register states (<= |types| x 512 rows), never
+    raw keys. No Python anywhere."""
+    from windowsession_using_kafka_flink_docker_spark.operators.hll import (
+        hll_registers,
+    )
+    from windowsession_using_kafka_flink_docker_spark.sources.batch import load_table
+
+    plan = (hll_registers(load_table(spark, sf_dir, "events"))
+            ._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode
+                .fromString("simple")))
+    assert plan.count("Exchange hashpartitioning") == 1
+    pre_exchange = plan.split("Exchange hashpartitioning")[1]
+    assert "partial_max" in pre_exchange
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

@@ -1,7 +1,8 @@
 """Data-curation operator tests: boilerplate removal must restore the
 pre-plant text exactly, quality flags must be internally consistent,
 sampling must be deterministic with rates honored, quantization must meet
-its reconstruction-error bound."""
+its reconstruction-error bound, token-budget packing must respect its
+budget and resume across batches."""
 
 from __future__ import annotations
 
@@ -383,3 +384,69 @@ class TestCurationPipelineE2E:
             flags.where(~F.col("contaminated")).select("doc_id"),
             "doc_id", "left_semi")
         assert 0 < survivors.count() == n_near - n_contam
+
+
+def test_token_packing_respects_budget_and_isolates_oversized(spark):
+    """The packing invariants the oracle cannot see directly: every
+    multi-doc bin holds <= budget tokens; an oversized doc sits ALONE
+    in its bin; bin ids are contiguous from 0 per shard; packing is
+    order-preserving (first_doc/last_doc ranges of consecutive bins
+    never interleave)."""
+    import windowsession_using_kafka_flink_docker_spark.plans.curation as M
+
+    # shard = doc_id % 16; keep everything in shard 0 for determinism
+    docs = [
+        (0, "tok " * 1000),     # 1000 tokens
+        (16, "tok " * 1000),    # fits with previous (2000 <= 2048)
+        (32, "tok " * 100),     # would overflow -> opens bin 1
+        (48, "tok " * 5000),    # oversized -> isolates into bin 2
+        (64, "tok " * 10),      # bin 3 (previous bin oversized)
+        (80, "tok " * 10),      # joins bin 3
+        (65, "tok " * 3),       # shard 1: its own fold, bin 0
+    ]
+    ev = spark.createDataFrame(docs, "doc_id LONG, text STRING")
+    orig = M.load_table
+    M.load_table = lambda s, sf, name: ev
+    try:
+        out = {(r.shard, r.bin_id): (r.n_docs, r.bin_tokens,
+                                     r.first_doc, r.last_doc)
+               for r in M.token_budget_packing(spark, "x").collect()}
+    finally:
+        M.load_table = orig
+
+    assert out == {
+        (0, 0): (2, 2000, 0, 16),
+        (0, 1): (1, 100, 32, 32),
+        (0, 2): (1, 5000, 48, 48),
+        (0, 3): (2, 20, 64, 80),
+        (1, 0): (1, 3, 65, 65),
+    }
+
+
+def test_greedy_fold_resumption_property():
+    """The algebra maintainer #28 rides: folding a token sequence in
+    two parts — the second resumed from the first's returned tail —
+    must equal folding it at once, for EVERY split point. Randomized
+    over sizes spanning far-below to far-above the budget (oversized
+    docs included)."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from windowsession_using_kafka_flink_docker_spark.operators.packing import (
+        greedy_fold,
+    )
+
+    toks = st.lists(st.integers(min_value=0, max_value=5000),
+                    min_size=0, max_size=60)
+
+    @settings(max_examples=200, deadline=None)
+    @given(xs=toks, frac=st.floats(min_value=0.0, max_value=1.0))
+    def check(xs, frac):
+        k = int(frac * len(xs))
+        full, fb, fc, ff = greedy_fold(xs)
+        a, b1, c1, f1 = greedy_fold(xs[:k])
+        b, b2, c2, f2 = greedy_fold(xs[k:], b1, c1, f1)
+        assert a + b == full
+        assert (b2, c2, f2) == (fb, fc, ff)
+
+    check()

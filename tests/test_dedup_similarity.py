@@ -136,12 +136,18 @@ class TestTextNearDups:
         shared = D.eager_filled_persist(df)
         lvl = shared.storageLevel
         assert lvl.useMemory and lvl.useDisk  # spillable, not memory-pinned
-        # the fill already happened at construction: the RDD reports
-        # cached partitions without any consumer having run yet
+        # the fill already happened at construction: THIS frame's cached
+        # RDD (not any other cache in the shared session) reports every
+        # partition cached without any consumer having run yet
+        builder = (spark._jsparkSession.sharedState().cacheManager()
+                   .lookupCachedData(shared._jdf).get()
+                   .cachedRepresentation().cacheBuilder())
+        rdd = builder.cachedColumnBuffers()
         jsc = spark.sparkContext._jsc.sc()
-        rdd_infos = [i for i in jsc.getRDDStorageInfo()
-                     if i.numCachedPartitions() > 0]
-        assert rdd_infos, "persist was not filled eagerly"
+        cached = {i.id(): i.numCachedPartitions()
+                  for i in jsc.getRDDStorageInfo()}
+        assert cached.get(rdd.id(), 0) == rdd.getNumPartitions() > 0, (
+            "persist was not filled eagerly")
         assert shared.count() == 1000  # consumers read the filled cache
         shared.unpersist()
         assert not shared.storageLevel.useMemory  # deterministic release

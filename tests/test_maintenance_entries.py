@@ -1,5 +1,5 @@
 """Behavior and plan-shape tests for the maintained-index / incremental
-session family promoted out of staging in the r18 window:
+session family:
 
 - ``event_type_crosscorr`` (plans/relational.py) — numpy-referenced
   Pearson on a crafted daily grid + plan-shape pin;
@@ -10,9 +10,8 @@ session family promoted out of staging in the r18 window:
   (plans/llm_pipeline.py) — persisted-index layout, combined bucket
   cap, partition-pruned postings reads, torn-export guards.
 
-These moved here from tests/test_staging_r15.py on promotion day with
-imports re-pointed at the registered homes; the driver's oracle gate
-covers value parity, so these tests pin what the oracle cannot see
+The oracle gate covers value parity, so these tests pin what the
+oracle cannot see
 (plan shapes, index layouts, crafted corner cases, randomized
 cutoff-invariance).
 """

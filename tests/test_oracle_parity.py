@@ -65,11 +65,11 @@ def test_no_half_cent_rounding_ties_at_driver_scale(spark, sf_dir):
 
 
 def test_quality_scores_exact_matches_python_rational(spark, sf_dir):
-    """The r16 exact-e4 quality_scores entry (landed from the r15
-    REWRITES queue after the sf0.1 sweep found a .xxxx5 ROUND(x,4)
-    boundary split) must emit TRUE half-up 4-decimal rounding of the
-    exact rational score — verified here against Python Fraction
-    arithmetic, an oracle independent of BOTH engines' float paths.
+    """The r16 exact-e4 quality_scores entry (landed after the sf0.1
+    sweep found a .xxxx5 ROUND(x,4) boundary split) must emit TRUE
+    half-up 4-decimal rounding of the exact rational score — verified
+    here against Python Fraction arithmetic, an oracle independent of
+    BOTH engines' float paths.
     The feature counts (n, a, p, toks) come from the same Spark
     expressions the entry uses (regex parity between the engines is
     the DuckDB oracle's job); this test pins the rounding arithmetic,

@@ -1,7 +1,7 @@
 """Persisted BM25 postings-index primitives — build, versioned-increment
-append, and index-only query. Shared by the staged
-``incremental_bm25_search`` catalog entry (plans/staging_r15.py, r16
-promotion queue) and the streaming BM25 index maintainer
+append, and index-only query. Shared by the
+``incremental_bm25_search`` catalog entry (plans/llm_pipeline.py) and
+the streaming BM25 index maintainer
 (streaming/bm25_index.py, maintainer #25). Lives in operators/ so the
 runtime maintainer never imports the plans layer (the
 operators/session_store.py precedent).
@@ -153,10 +153,8 @@ def bm25_from_index(spark: SparkSession, path: str,
     The scan itself stays distinct-term (a repeated term reads its
     postings once); only the scored sum picks up the qf factor, so
     distinct-term queries are bit-identical to the old set-semantics
-    scores. The batch ``bm25_topk`` adopts the same contract via the
-    queued ``bm25_search`` rewrite (plans/staging_r15.py, lands r18:
-    its current behavior on duplicates both double-weights AND
-    double-counts df, which distorts idf — neither honest)."""
+    scores. The batch ``bm25_topk`` (operators/text_analysis.py)
+    follows the same contract."""
     from collections import Counter
 
     qf = Counter(terms)

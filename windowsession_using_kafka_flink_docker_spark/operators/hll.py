@@ -1,6 +1,6 @@
 """Portable HyperLogLog register pipeline — shared by the batch NDV
-audit (plans/staging_r15.py ``hll_ndv_by_event_type``, registering with
-the next promotion window) and the streaming register maintainer
+audit (plans/analytics.py ``hll_ndv_by_event_type``) and the streaming
+register maintainer
 (streaming/analytics_twins.py ``IncrementalHllMaintainer``), so
 stream == batch is one code path.
 

@@ -1,7 +1,7 @@
 """Persisted MinHash-LSH near-dup index primitives — versioned-increment
-append and delta probe. Shared by the staged ``incremental_neardup_probe``
-catalog entry (plans/staging_r15.py, r16 promotion queue) and the
-streaming near-dup index maintainer (streaming/neardup_index.py,
+append and delta probe. Shared by the ``incremental_neardup_probe``
+catalog entry (plans/llm_pipeline.py) and the streaming near-dup index
+maintainer (streaming/neardup_index.py,
 maintainer #26). Lives in operators/ so the runtime maintainer never
 imports the plans layer (the operators/session_store.py precedent).
 

@@ -1,6 +1,6 @@
 """Token-budget document packing — shared greedy fold for the batch
-entry (plans/staging_r15.py ``token_budget_packing``, registering with
-the next promotion window) and the streaming bins maintainer
+entry (plans/curation.py ``token_budget_packing``) and the streaming
+bins maintainer
 (streaming/analytics_twins.py ``IncrementalPackingMaintainer``), so
 stream == batch is one code path.
 

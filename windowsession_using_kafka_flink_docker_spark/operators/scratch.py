@@ -1,7 +1,6 @@
 """Private per-app scratch roots for index exports.
 
-Promoted from plans/staging_r15.py with the r18-window registrations:
-the persistence-roundtrip entries (IVF index, MinHash-LSH near-dup
+The persistence-roundtrip entries (IVF index, MinHash-LSH near-dup
 index, BM25 postings index) export an index to parquet, re-import it,
 and verify the probe equals from-scratch — the export needs a scratch
 location that is per-application, unpredictable, and cleaned up as

@@ -1,9 +1,9 @@
 """Session-store primitives: fixed-gap sessionization with exact
 BIGINT cents, the store/delta tail merge, and the continuation-cutoff
 derivation — shared by the streaming session-store maintainer
-(streaming/session_store.py), the staged ``incremental_session_merge``
-/ ``late_event_session_repair`` catalog entries (plans/staging_r15.py,
-promoted r16), and their tests. Lives in operators/ so the runtime
+(streaming/session_store.py), the ``incremental_session_merge`` /
+``late_event_session_repair`` catalog entries (plans/parity.py), and
+their tests. Lives in operators/ so the runtime
 maintainer never imports the plans layer (which would drag full
 catalog registration into every streaming import).
 
@@ -11,7 +11,7 @@ Semantics: a session is a maximal run of same-user events with
 inter-event gaps <= ``gap_s`` (boundary INCLUSIVE — Spark's
 ``session_window`` merges at exactly the gap, matching the DuckDB
 oracles' ``> gap`` new-session test; probed empirically in
-tests/test_staging_r15.py). The reference's 30 s gap
+tests/test_maintenance_entries.py). The reference's 30 s gap
 (flink_stream_task1.py:30-41) is widened to 10 minutes for the
 maintenance family so multi-event sessions exist at every test SF.
 """
@@ -105,7 +105,7 @@ def merge_session_store(store: DataFrame, fresh: DataFrame,
     sessionization) — and the merged row combines BIGINT partials
     exactly. Equals full-recompute sessionization under the
     monotonicity precondition (cutoff-sweep + hypothesis property
-    tests, tests/test_staging_r15.py)."""
+    tests, tests/test_maintenance_entries.py)."""
     w_tail = Window.partitionBy("user_id").orderBy(F.desc("session_end"))
     tail = (store.withColumn("_rn", F.row_number().over(w_tail))
             .where(F.col("_rn") == 1).drop("_rn"))

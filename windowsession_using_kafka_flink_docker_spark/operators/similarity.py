@@ -659,7 +659,7 @@ def ivf_export(index: IvfIndex, spark, path: str) -> None:
     """Persist an IVF index: centroids as a tiny (cell, center) parquet,
     assignments PARTITIONED BY cell — the layout a 100 TB serving tier
     restores from (probes then prune to nprobe cell directories).
-    Promoted from plans/staging_r15.py with ivf_index_persist_roundtrip."""
+    Used by the ivf_index_persist_roundtrip entry."""
     import os
 
     centers = spark.createDataFrame(

@@ -16,6 +16,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from windowsession_using_kafka_flink_docker_spark.operators.hll import (
+    HLL_C,
+    HLL_EMPTY_TERM,
+    HLL_M,
+    HLL_RMAX,
+    hll_fold,
+    hll_registers,
+)
 from windowsession_using_kafka_flink_docker_spark.plans.catalog import register
 from windowsession_using_kafka_flink_docker_spark.sources.batch import load_table
 
@@ -1687,14 +1695,14 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # into this one; the suppkey aggregate below still needs its own).
     # Measured same-JVM at sf0.1: 2.18 -> 1.79 s median, rows identical.
     # At 100 TB the orders join is an SMJ already keyed on l_orderkey and
-    # this repartition collapses into it (same key, conf partition
-    # count); the old form's two pair-grain exchanges cost strictly more.
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    # this repartition collapses into it; the old form's two pair-grain
+    # exchanges cost strictly more. Key-only (no partition count), so AQE
+    # stays free to coalesce or skew-split the exchange.
     lines = (li.join(fo, li.l_orderkey == fo.o_orderkey)
              .select("l_orderkey", "l_suppkey",
                      (F.col("l_shipdate")
                       > F.date_add(F.col("o_orderdate"), 90)).alias("late"))
-             .repartition(n_part, "l_orderkey"))
+             .repartition("l_orderkey"))
     # pair-level combine: ONE (orderkey, suppkey) aggregate replaces both
     # countDistincts (whose 2-distinct form plans an Expand duplicating
     # every line through the shuffle) and carries the late-line counts
@@ -2547,13 +2555,13 @@ def q20_dominant_supplier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so neither plans its own Exchange — 3 shuffles became 2. Measured
     # same-JVM at sf0.1: 2.32 -> 2.01 s median, rows identical. (q20 was
     # also the worst 64k-AQE-floor regression, 1.31x; fewer tiny
-    # exchanges makes it floor-insensitive.)
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    # exchanges makes it floor-insensitive.) Key-only repartition, so
+    # AQE stays free to coalesce or skew-split the exchange.
     pair = (
         li.where((F.col("l_shipdate") >= "1996-01-01")
                  & (F.col("l_shipdate") < "1997-01-01"))
         .join(F.broadcast(red), F.col("l_partkey") == F.col("p_partkey"))
-        .repartition(n_part, "l_partkey")
+        .repartition("l_partkey")
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.sum(F.col("l_quantity").cast("long")).cast("long")
              .alias("pair_qty")))
@@ -3991,3 +3999,76 @@ def bloom_prejoin_urgent_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                           * (1 - F.col("l_discount"))), 2).alias("revenue"),
         )
     )
+
+
+# --------------------------------------------------------------------------
+# HyperLogLog NDV — the mergeable distinct sketch. The register pipeline
+# lives in operators/hll.py, shared with the streaming register maintainer
+# (streaming/analytics_twins.py IncrementalHllMaintainer), so stream ==
+# batch is one code path.
+# --------------------------------------------------------------------------
+
+@register(
+    "hll_ndv_by_event_type",
+    oracle=f"""
+WITH h AS (
+  SELECT event_type,
+         ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT AS h
+  FROM events
+),
+b AS (
+  SELECT event_type, h % {HLL_M} AS bkt, h // {HLL_M} AS w FROM h
+),
+regs AS (
+  SELECT event_type, bkt,
+         MAX(CASE WHEN w = 0 THEN {HLL_RMAX}
+                  ELSE {HLL_RMAX} - length(bin(w)) END) AS r
+  FROM b GROUP BY 1, 2
+),
+per AS (
+  SELECT event_type,
+         SUM(1::BIGINT << ({HLL_RMAX} - r))::BIGINT AS dobs,
+         CAST(COUNT(*) AS BIGINT) AS nb
+  FROM regs GROUP BY 1
+),
+est AS (
+  SELECT event_type, nb AS filled_buckets,
+         CAST(floor({HLL_C!r} / CAST(dobs + ({HLL_M} - nb)
+              * {HLL_EMPTY_TERM} AS DOUBLE)) AS BIGINT) AS ndv_hll_raw
+  FROM per
+),
+exact AS (
+  SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact
+  FROM events GROUP BY 1
+)
+SELECT x.event_type, x.n_exact, e.filled_buckets, e.ndv_hll_raw
+FROM exact x JOIN est e USING (event_type)
+""",
+    description="Per-event-type distinct users via 512-register "
+                "HyperLogLog over the portable md5 hash, audited against "
+                "the exact COUNT(DISTINCT). The register build is a "
+                "(type, bucket) MAX — map-side combinable, so executors "
+                "merge 512-row sketch states instead of shuffling keys; "
+                "rho uses integer/string ops only (length of bin(w), no "
+                "log2), the harmonic denominator is an exact BIGINT "
+                "two-power sum, and the raw estimate is ONE IEEE division "
+                "by a shared precomputed constant, floor()ed identically "
+                "on both engines. Emits the exact register fill count so "
+                "consumers apply the small-range linear-counting "
+                "correction downstream (ln's last ulp is engine-dependent, "
+                "so it stays out of the pinned columns).",
+    tags=("analytics", "sketch", "distinct", "exact"),
+)
+def hll_ndv_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact COUNT(DISTINCT) beside the HLL raw estimate and register
+    fill count. ONE scan computes (bucket, rho) per row; the register
+    build is a (type, bucket)-keyed MAX, partial-aggregated map-side, so
+    the shuffle carries register states, not rows. The fold reads
+    <= |types| x 512 rows."""
+    ev = load_table(spark, sf_dir, "events")
+    folded = hll_fold(hll_registers(ev))
+    exact = (ev.groupBy("event_type")
+             .agg(F.countDistinct("user_id").alias("n_exact")))
+    return (exact.join(folded, "event_type")
+            .select("event_type", "n_exact", "filled_buckets",
+                    "ndv_hll_raw"))

@@ -4,6 +4,8 @@ Every implemented operator gets a named entry: a PySpark callable
 ``(spark, sf_dir) -> DataFrame`` plus (when SQL-expressible) a DuckDB oracle
 SQL string over the same parquet tables. Column names/aliases match between
 the two on purpose — the driver sorts columns by name before value-hashing.
+``queries()``/``oracle_sql()`` list entries in registration order, so the
+reference-parity rows of plans/parity.py come first.
 
 Float discipline: any aggregate over DOUBLE is wrapped in ROUND(·, 2) on
 BOTH sides, because summation order differs between engines and the driver
@@ -41,205 +43,12 @@ def register(name: str, oracle: str | None, description: str = "",
     return deco
 
 
-#: Driver correctness-window size observed in CORRECTNESS_r0{2,3,4}.json.
-#: The per-round snapshot covers the first DRIVER_WINDOW names of
-#: ``queries()`` in iteration order.
-DRIVER_WINDOW = 50
-
-#: Maximum rounds a driver certification may age before the entry MUST be
-#: scheduled back into the upcoming window. Round 7 formally relaxed this
-#: from 2 to 3 (VERDICT r6 item 1) when the catalog hit the 2-round
-#: policy's arithmetic capacity of 130; round 10 relaxes 3 -> 4 on the
-#: same precedent (catalog at the 3-round ceiling's mandated-headroom
-#: line of 165, capacity now 5*50 - 4*10 = 210) — and pairs the longer
-#: age bound with a STRICTLY FRESHER mechanism: the rotation is now
-#: change-aware (see ``changed`` below), so any entry whose source or
-#: oracle is edited self-schedules into the very next window instead of
-#: waiting out the age bound. Age is the backstop for driver-side drift
-#: on untouched code; edits no longer ride it at all. The projection
-#: tests in tests/test_catalog_integrity.py prove the relaxed rotation
-#: still converges with no entry ever aging past the bound.
-#: The r18 window relaxes 4 -> 5 on the same precedent: the six
-#: maintained-index/incremental promotions took the catalog to 207,
-#: past the 4-round policy's mandated-headroom line of 205 (capacity
-#: 210), and the r19 queue (isotonic_monthly_revenue,
-#: semantic_rrf_hybrid_search) would land exactly on the ceiling.
-#: Capacity is now 6*50 - 5*10 = 250. The freshness mechanism is
-#: unchanged — change-aware front-loading covers every source/oracle
-#: edit the round it happens, and the sf0.1 full-catalog sweeps (r15+)
-#: re-verify ALL entries out-of-band each round regardless of window
-#: membership.
-STALENESS_BOUND = 5
-
-#: The 8 core reference-parity rows (SURVEY §2.1-2.10) plus the 2 ANN
-#: exact-identity pins — these must appear in EVERY driver window
-#: (VERDICT r4 item 6 / r5 item 7), so the reference-parity claim and the
-#: approximate-ANN hard gates are re-certified each round.
-PINNED: tuple[str, ...] = (
-    "session_fixed_gap",
-    "session_dynamic_gap",
-    "session_fixed_gap_bucketed",
-    "session_report",
-    "big_customer_alert",
-    "csv_parse_roundtrip",
-    "generated_sessionization",
-    "generated_big_customer_alert",
-    "ivf_recall_vs_exact",
-    "pq_rerank_all_vs_exact",
-)
-
-#: Historical snapshot-key renames: old driver key -> current catalog
-#: name. A green row under the old key counts as a green row for the
-#: renamed entry (the query itself did not change, only its name).
-RENAMED_ENTRIES: dict[str, str] = {
-    "anti_join_idle_customers": "anti_join_no_urgent_customers",
-}
-
-
-def driver_history(root: str | None = None) -> tuple[dict[str, int], int]:
-    """Parse every on-disk ``CORRECTNESS_r*.json`` driver snapshot.
-
-    Returns ``(last_green, latest_round)`` where ``last_green[name]`` is
-    the newest round in which the entry had a clean driver row: either a
-    full ``hash_match`` or — for entries without an oracle by design — a
-    rows-only check that produced rows. Snapshot keys that were since
-    renamed are mapped through :data:`RENAMED_ENTRIES`.
-    """
-    import glob
-    import json
-    import os
-
-    if root is None:
-        # walk up from this file until a directory holding driver
-        # snapshots (the repo root) is found
-        d = os.path.dirname(os.path.abspath(__file__))
-        while True:
-            if glob.glob(os.path.join(d, "CORRECTNESS_r*.json")):
-                root = d
-                break
-            parent = os.path.dirname(d)
-            if parent == d:
-                root = d  # filesystem root reached; no snapshots anywhere
-                break
-            d = parent
-    last_green: dict[str, int] = {}
-    latest_round = 0
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        rnd = int(os.path.basename(path).split("_r")[1].split(".")[0])
-        latest_round = max(latest_round, rnd)
-        with open(path) as f:
-            snap = json.load(f)
-        for name, row in snap.items():
-            name = RENAMED_ENTRIES.get(name, name)
-            ok = bool(row.get("hash_match")) or (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None)
-            if ok:
-                last_green[name] = max(last_green.get(name, 0), rnd)
-    return last_green, latest_round
-
-
-def window_cohorts(
-    names: list[str],
-    last_green: dict[str, int],
-) -> tuple[list[str], list[str], list[str], int]:
-    """The shared cohort arithmetic behind the rotation: returns
-    ``(at_bound, pinned, never, next_round)`` for the upcoming driver
-    window. Single source of truth for both
-    :func:`compute_driver_priority` and ``tools/promote_staging.py``
-    (r14 ADVICE: the tool re-implemented this and could drift —
-    e.g. deriving next_round from the newest snapshot FILE where the
-    rotation uses ``max(last_green) + 1``)."""
-    reg_pos = {n: i for i, n in enumerate(names)}
-    next_round = max(last_green.values(), default=0) + 1
-    at_bound = [n for n in names
-                if n in last_green
-                and last_green[n] <= next_round - STALENESS_BOUND - 1]
-    at_bound.sort(key=lambda n: (last_green[n], reg_pos[n]))
-    never = [n for n in names if n not in last_green]
-    pinned = [n for n in PINNED
-              if n in names and n not in set(never) | set(at_bound)]
-    return at_bound, pinned, never, next_round
-
-
-def compute_driver_priority(
-    names: list[str],
-    last_green: dict[str, int],
-    changed: frozenset[str] = frozenset(),
-) -> tuple[str, ...]:
-    """Order the catalog for the driver's rotating correctness window.
-
-    Policy (the *mechanism* — VERDICT r5 item 1 — replacing the fragile
-    hand-maintained tuple, so a freshly landed driver snapshot can never
-    leave the window out of sync with the rotation policy):
-
-    0. entries already AT the staleness bound go absolutely first —
-       ahead even of never-checked entries (r11 ADVICE: a large batch of
-       newly registered entries plus the pins could otherwise displace
-       at-bound entries past the bound). Displacement is asymmetric:
-       a bumped never/changed entry re-front-loads every round until
-       certified and loses nothing permanent; a bumped at-bound entry
-       goes red on the hard invariant. Feasible history bounds the
-       at-bound cohort by ``DRIVER_WINDOW - len(PINNED)`` (at-bound
-       entries were certified together in one window ``STALENESS_BOUND``
-       rounds ago, minus the always-re-certified pins), so at-bound +
-       pinned always fits in one window;
-    1. the :data:`PINNED` core-parity + ANN-identity rows follow —
-       ahead of the never bucket, so the pins-always-in-window invariant
-       (VERDICT r4 item 6) is as unconditional as the age bound;
-    2. entries never driver-checked in ANY snapshot follow (a new
-       operator is certified the round it lands whenever slots allow);
-    3. everything else is ordered oldest-last-green-first (ties broken by
-       registration order), so no entry's certification ages past
-       :data:`STALENESS_BOUND` rounds while the catalog stays under the
-       feasibility capacity ``(STALENESS_BOUND+1)*DRIVER_WINDOW -
-       STALENESS_BOUND*len(PINNED)`` (see
-       tests/test_catalog_integrity.py::test_catalog_size_leaves_rotation_headroom);
-    4. change-awareness (VERDICT r8 item 3 / r9 item 4): any name in
-       ``changed`` — its current source+oracle fingerprint differs from
-       the certified one recorded in :data:`fingerprints.RECORD_FILE` —
-       sorts ahead of every merely-aging entry, so an edited entry
-       re-enters the very next window instead of waiting out the age
-       bound (the r8 precision sweep and the r9 ANALYZE rewrite both
-       rode the age bound for 2+ rounds; this closes that hole);
-    5. the age bound outranks the changed-set (r10 ADVICE) AND the
-       never-checked bucket (r11 ADVICE) — see point 0. The bound round
-       is inferred as ``max(last_green) + 1`` (the next driver window
-       always follows the newest on-disk snapshot).
-
-    Pure function of ``(names, last_green, changed)`` — unit-tested with
-    projected future snapshots (including a changed-set burst) in
-    tests/test_catalog_integrity.py.
-    """
-    reg_pos = {n: i for i, n in enumerate(names)}
-    at_bound, pinned, never, _ = window_cohorts(names, last_green)
-    taken = set(never) | set(pinned) | set(at_bound)
-
-    def _key(n: str):
-        klass = 0 if n in changed else 1
-        return (klass, last_green.get(n, 0), reg_pos[n])
-
-    rest = sorted((n for n in names if n not in taken), key=_key)
-    return (*at_bound, *pinned, *never, *rest)
-
-
-#: Computed at import time (after the @register modules load, at the
-#: bottom of this file) from the on-disk correctness history.
-DRIVER_PRIORITY: tuple[str, ...] = ()
-
-
-def _ordered() -> dict[str, QuerySpec]:
-    front = [n for n in DRIVER_PRIORITY if n in CATALOG]
-    rest = [n for n in CATALOG if n not in set(front)]
-    return {n: CATALOG[n] for n in (*front, *rest)}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {n: s.spark for n, s in _ordered().items()}
+    return {n: s.spark for n, s in CATALOG.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {n: s.oracle for n, s in _ordered().items() if s.oracle is not None}
+    return {n: s.oracle for n, s in CATALOG.items() if s.oracle is not None}
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -257,15 +66,3 @@ from windowsession_using_kafka_flink_docker_spark.plans import (  # noqa: E402,F
     analytics,
 )
 
-# DRIVER_PRIORITY must be computed AFTER the @register imports above have
-# populated CATALOG. The changed-set compares each entry's current
-# source+oracle fingerprint against the certified record written by
-# tools/record_fingerprints.py at round start.
-from windowsession_using_kafka_flink_docker_spark.plans.fingerprints import (  # noqa: E402
-    changed_entries,
-    load_recorded,
-)
-
-DRIVER_PRIORITY = compute_driver_priority(
-    list(CATALOG), driver_history()[0],
-    changed_entries(CATALOG, load_recorded()))

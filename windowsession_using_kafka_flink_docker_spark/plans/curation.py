@@ -20,7 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from windowsession_using_kafka_flink_docker_spark.operators import packing
 from windowsession_using_kafka_flink_docker_spark.plans.catalog import register
+from windowsession_using_kafka_flink_docker_spark.plans.llm_pipeline import _TOKC_SQL
 from windowsession_using_kafka_flink_docker_spark.sources.batch import load_table
 
 # --------------------------------------------------------------------------
@@ -958,8 +960,7 @@ GROUP BY lang, shard, seq_id
     tags=("llm", "curation", "dedup", "decontamination", "packing"),
 )
 def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SINGLE-SCAN funnel (r15 rewrite, drafted in plans/staging_r15.py
-    while the r14 window was frozen): the original composition re-derived
+    """SINGLE-SCAN funnel (r15 rewrite): the original composition re-derived
     the quality-gated frame from the documents parquet at every semi/anti
     stage boundary — 8 corpus scans in one plan (r14 plan audit;
     SCALING.md round-14 finding). localCheckpoint truncates lineage into
@@ -1015,3 +1016,61 @@ def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Stage 5 — pack the surviving corpus into training sequences.
     return pack_sequences(survivors)
+
+
+# --------------------------------------------------------------------------
+# Token-budget document packing — the training-sequence construction step
+# between curation and tokenization. The greedy fold lives in
+# operators/packing.py, shared with the streaming bins maintainer
+# (streaming/analytics_twins.py IncrementalPackingMaintainer).
+# --------------------------------------------------------------------------
+
+@register(
+    "token_budget_packing",
+    oracle=f"""
+WITH RECURSIVE docs AS (
+  SELECT doc_id, CAST({_TOKC_SQL} AS BIGINT) AS toks,
+         doc_id % {packing.PACK_SHARDS} AS shard,
+         row_number() OVER (PARTITION BY doc_id % {packing.PACK_SHARDS}
+                            ORDER BY doc_id) AS rn
+  FROM documents
+),
+folded AS (
+  SELECT shard, rn, doc_id, toks, 0::BIGINT AS bin_id, toks AS cum
+  FROM docs WHERE rn = 1
+  UNION ALL
+  SELECT d.shard, d.rn, d.doc_id, d.toks,
+         CASE WHEN f.cum + d.toks > {packing.PACK_BUDGET}
+              THEN f.bin_id + 1 ELSE f.bin_id END,
+         CASE WHEN f.cum + d.toks > {packing.PACK_BUDGET}
+              THEN d.toks ELSE f.cum + d.toks END
+  FROM folded f JOIN docs d ON d.shard = f.shard AND d.rn = f.rn + 1
+)
+SELECT shard, bin_id,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(toks) AS BIGINT) AS bin_tokens,
+       MIN(doc_id) AS first_doc,
+       MAX(doc_id) AS last_doc
+FROM folded
+GROUP BY 1, 2
+""",
+    description="Greedy sequential packing of documents into <= 2048-"
+                "token training sequences, 16-way sharded by doc_id — the "
+                "sequence-construction step between curation and "
+                "tokenization. The running accumulator RESETS at each bin "
+                "boundary (not a prefix sum), so the fold runs in "
+                "applyInPandas per shard (one Arrow pass, the "
+                "capped-sessionize class of semantics); oversized docs "
+                "isolate into their own bin by the same rule. Oracle: a "
+                "DuckDB recursive CTE computing the identical fold across "
+                "shards in lockstep; the per-bin aggregation after the "
+                "fold is map-side combinable.",
+    tags=("llm", "text", "stateful", "packing"),
+)
+def token_budget_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row per bin: (shard, bin_id, n_docs, bin_tokens, first_doc,
+    last_doc). Each shard's fold is O(docs in shard) in one
+    Arrow-batched pass; at 100 TB the shard count scales with the
+    cluster."""
+    docs = load_table(spark, sf_dir, "documents")
+    return packing.bins_from_packed(packing.pack_documents(docs))

@@ -372,7 +372,7 @@ FROM scored WHERE q_e4 >= 5000
     tags=("llm", "text"),
 )
 def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-e4 form (landed r16 from the staging_r15 REWRITES queue).
+    """Exact-e4 form (landed r16).
 
     The r15 sf0.1 window sweep found the previous double pipeline's
     ROUND(score, 4) landing a document on an exact .xxxx5 boundary
@@ -515,7 +515,7 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Retired from the catalog (VERDICT r7 item 3 consolidation): the
     rows-only registration added no signal once ``ivf_recall_vs_exact``
-    (PINNED into every driver window) hash-pinned the nprobe=n_cells
+    (oracle-checked on every test run) hash-pinned the nprobe=n_cells
     exact-identity over this same index/probe code path. Still benched
     directly by bench.py (EXTRA_BENCH) and pinned by pytest."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -597,7 +597,7 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Retired from the catalog (VERDICT r7 item 3 consolidation): the
     rows-only registration added no signal once ``pq_rerank_all_vs_exact``
-    (PINNED into every driver window) hash-pinned the rerank-all
+    (oracle-checked on every test run) hash-pinned the rerank-all
     exact-identity over this same encode/ADC/rerank code path; recall
     0.73 vs exact at sf0.01 (rerank=50) stays measured in
     tools/scale_stress_embeddings.py and pinned by pytest on planted
@@ -3633,13 +3633,12 @@ def bpe_tokenizer_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# Maintained-index persistence family — promoted from
-# plans/staging_r15.py (drafted r14, registered in the r18 window):
-# the serving-restart / continuous-ingest contracts for the three
-# maintained indexes (IVF embedding cells, MinHash-LSH near-dup bands,
-# BM25 postings). Index primitives live in operators/ (shared with the
-# streaming maintainers, which must not import the plans layer);
-# scratch-root hygiene in operators/scratch.py.
+# Maintained-index persistence family: the serving-restart /
+# continuous-ingest contracts for the three maintained indexes (IVF
+# embedding cells, MinHash-LSH near-dup bands, BM25 postings). Index
+# primitives live in operators/ (shared with the streaming maintainers,
+# which must not import the plans layer); scratch-root hygiene in
+# operators/scratch.py.
 
 import os  # noqa: E402
 

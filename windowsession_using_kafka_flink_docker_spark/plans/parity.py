@@ -211,13 +211,12 @@ def session_fixed_gap_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# Session-window top-N (promoted from plans/staging_r15.py in r15 per
-# tools/promote_staging.py's PROMOTEPLAN): the reference's session
-# aggregate (flink_stream_task1.py:48-75) extended with ranking — the
-# "who are the heaviest sessions" question every session pipeline
-# eventually asks. Sums are EXACT BIGINT cents, not ROUND(double, 2),
-# so the engines' half-cent rounding split (BASELINE.md round-13
-# close) can never reorder a ranking.
+# Session-window top-N: the reference's session aggregate
+# (flink_stream_task1.py:48-75) extended with ranking — the "who are the
+# heaviest sessions" question every session pipeline eventually asks.
+# Sums are EXACT BIGINT cents, not ROUND(double, 2), so the engines'
+# half-cent rounding split (BASELINE.md round-13 close) can never
+# reorder a ranking.
 
 #: Gaps-and-islands sessionization over exact cents — the shared CTE
 #: skeleton of the top-N oracles (sessionize_oracle_sql's islands logic
@@ -338,10 +337,9 @@ def session_top10_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# Session-store maintenance pair — promoted from plans/staging_r15.py
-# (drafted r14, registered in the r18 window). The reference's session
-# gap semantics (flink_stream_task1.py:30-41; widened to a 10-minute
-# gap so multi-event sessions exist at every test SF) taken to the
+# Session-store maintenance pair. The reference's session gap semantics
+# (flink_stream_task1.py:30-41; widened to a 10-minute gap so
+# multi-event sessions exist at every test SF) taken to the
 # 100 TB incremental world, where history is NEVER re-sessionized.
 # Both oracles are the full recompute: the incremental result must
 # EQUAL from-scratch, so the oracle never mentions the cutoff / late

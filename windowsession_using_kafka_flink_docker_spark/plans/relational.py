@@ -4500,11 +4500,10 @@ def winsorized_spend_means(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "event_type_crosscorr",
-    # Promoted from plans/staging_r15.py (drafted r14-r16, registered in
-    # the r18 window). Same engine-agreement discipline as
-    # spend_autocorrelation: exact BIGINT partials, ONE identical IEEE
-    # floor-scaled division — extended from auto- to CROSS-correlation
-    # over the |types| x |days| daily-count grid.
+    # Same engine-agreement discipline as spend_autocorrelation: exact
+    # BIGINT partials, ONE identical IEEE floor-scaled division —
+    # extended from auto- to CROSS-correlation over the |types| x |days|
+    # daily-count grid.
     oracle="""
 WITH daily AS (
   SELECT event_type,
@@ -4584,12 +4583,11 @@ def event_type_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "isotonic_monthly_revenue",
-    # Promoted from plans/staging_r15.py (drafted r16, registered in the
-    # r18 window once the staleness relaxation opened slots). Oracle: the
-    # minimax characterization fitted(k) = max_{i<=k} min_{j>=k}
-    # avg(y[i..j]) — a closed-form SQL equivalent of PAV over prefix
-    # sums, every min/max decided by HUGEINT cross-multiplication and
-    # the same gcd reduction canonicalizing tied representatives.
+    # Oracle: the minimax characterization
+    # fitted(k) = max_{i<=k} min_{j>=k} avg(y[i..j]) — a closed-form SQL
+    # equivalent of PAV over prefix sums, every min/max decided by
+    # HUGEINT cross-multiplication and the same gcd reduction
+    # canonicalizing tied representatives.
     # PAV == minimax is the engine-agreement proof.
     oracle="""
 WITH per AS (
