@@ -19,7 +19,7 @@ from windowsession_using_kafka_flink_docker_spark.sources.batch import load_tabl
 from windowsession_using_kafka_flink_docker_spark.streaming import (
     IncrementalSessionStoreMaintainer,
     file_events_source,
-    streaming_session_store_maintenance,
+    streaming_maintenance,
 )
 
 _SCHEMA = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, value DOUBLE"
@@ -92,7 +92,7 @@ def test_stream_equals_batch_with_straddling_boundary(
 
     maint = IncrementalSessionStoreMaintainer(
         spark, str(tmp_path_factory.mktemp("sess_state")))
-    q = streaming_session_store_maintenance(
+    q = streaming_maintenance(
         file_events_source(spark, flat, schema=_SCHEMA,
                            max_files_per_trigger=1),
         maint, str(tmp_path_factory.mktemp("sess_ckpt")))
@@ -124,14 +124,14 @@ def test_restart_resumes_on_same_checkpoint(spark, sf_dir,
     ckpt = str(tmp_path_factory.mktemp("sess_ckpt2"))
 
     maint = IncrementalSessionStoreMaintainer(spark, state_dir)
-    _drain(streaming_session_store_maintenance(
+    _drain(streaming_maintenance(
         file_events_source(spark, flat, schema=_SCHEMA,
                            max_files_per_trigger=1), maint, ckpt))
     assert maint.current().count() > 0
 
     os.rename(held, os.path.join(flat, "01.parquet"))
     maint2 = IncrementalSessionStoreMaintainer(spark, state_dir)
-    _drain(streaming_session_store_maintenance(
+    _drain(streaming_maintenance(
         file_events_source(spark, flat, schema=_SCHEMA,
                            max_files_per_trigger=1), maint2, ckpt))
 
@@ -162,7 +162,7 @@ def test_late_arrival_raises_instead_of_corrupting(spark, sf_dir,
 
     maint = IncrementalSessionStoreMaintainer(
         spark, str(tmp_path_factory.mktemp("sess_state3")))
-    q = streaming_session_store_maintenance(
+    q = streaming_maintenance(
         file_events_source(spark, flat, schema=_SCHEMA,
                            max_files_per_trigger=1),
         maint, str(tmp_path_factory.mktemp("sess_ckpt3")))
@@ -214,7 +214,7 @@ def test_late_arrival_dead_letter_quarantines_and_continues(
     maint = IncrementalSessionStoreMaintainer(
         spark, str(tmp_path_factory.mktemp("sess_state5")),
         dead_letter_dir=dlq)
-    _drain(streaming_session_store_maintenance(
+    _drain(streaming_maintenance(
         file_events_source(spark, flat, schema=_SCHEMA,
                            max_files_per_trigger=1),
         maint, str(tmp_path_factory.mktemp("sess_ckpt5"))))
@@ -543,7 +543,7 @@ def test_stream_crash_drain_replay_lifecycle(spark, sf_dir,
 
     # resume on the SAME checkpoint: Spark re-delivers batch 2; the
     # replay must not clobber the repaired v=2
-    _drain(streaming_session_store_maintenance(
+    _drain(streaming_maintenance(
         file_events_source(spark, flat, schema=_SCHEMA,
                            max_files_per_trigger=1), maint2, ckpt))
     assert _rows(maint2.current()) == want
@@ -644,7 +644,7 @@ def test_stream_quarantine_drain_resume_lifecycle(spark, sf_dir,
     ckpt = str(tmp_path_factory.mktemp("lifecycle_ckpt"))
     maint = IncrementalSessionStoreMaintainer(spark, state,
                                               dead_letter_dir=dlq)
-    _drain(streaming_session_store_maintenance(
+    _drain(streaming_maintenance(
         file_events_source(spark, flat, schema=_SCHEMA,
                            max_files_per_trigger=1), maint, ckpt))
     assert maint.dead_letter_backlog() > 0  # the early file quarantined
@@ -669,7 +669,7 @@ def test_stream_quarantine_drain_resume_lifecycle(spark, sf_dir,
 
     maint2 = IncrementalSessionStoreMaintainer(spark, state,
                                                dead_letter_dir=dlq)
-    _drain(streaming_session_store_maintenance(
+    _drain(streaming_maintenance(
         file_events_source(spark, flat, schema=_SCHEMA,
                            max_files_per_trigger=1), maint2, ckpt))
     want = _rows(_sessions_full(ev.unionByName(c_new)))

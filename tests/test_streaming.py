@@ -805,7 +805,8 @@ class TestTransformWithState:
 
         stream_plan = streaming_capped_sessionize_tws(_events_stream(spark, stream_dir))
         assert stream_plan.isStreaming
-        assert "TransformWithStateInPySpark" in stream_plan._jdf.queryExecution()             .analyzed().toString() or True  # analysis must not raise
+        assert "TransformWithStateInPySpark" in stream_plan._jdf.queryExecution() \
+            .analyzed().toString()
         if not _protobuf_available():
             pytest.skip("google.protobuf unavailable: cannot run the v2 state worker")
 
@@ -1047,7 +1048,7 @@ class TestStreamingRollupMaintenance:
             rollup_merge, rollup_partials, rollup_present, with_day,
         )
         from windowsession_using_kafka_flink_docker_spark.streaming import (
-            IncrementalRollupMaintainer, streaming_rollup_maintenance,
+            IncrementalRollupMaintainer, streaming_maintenance,
         )
 
         flat = self._chunked_events(spark, sf_dir, tmp_path_factory)
@@ -1057,7 +1058,7 @@ class TestStreamingRollupMaintenance:
         stream = file_events_source(
             spark, flat, schema="ts TIMESTAMP, event_type STRING, value DOUBLE",
             max_files_per_trigger=1)
-        q = streaming_rollup_maintenance(stream, maint, ckpt)
+        q = streaming_maintenance(stream, maint, ckpt)
         try:
             q.processAllAvailable()
         finally:
@@ -1066,7 +1067,7 @@ class TestStreamingRollupMaintenance:
         # exactly current + previous survive: ≥2 proves a real
         # state+delta merge happened; ≤2 proves pruning bounds the
         # state dir (a 24/7 stream must not keep one copy per batch)
-        assert 2 >= len(maint._versions()) >= 2
+        assert 2 >= len(maint.state.versions()) >= 2
         got = _rows(maint.current(), exclude_sentinel=False)
         ev = load_table(spark, sf_dir, "events")
         want = _rows(rollup_present(rollup_partials(with_day(ev))),
@@ -1185,7 +1186,7 @@ class TestStreamingScd2Maintenance:
     def test_current_rows_match_batch_final_state(self, spark, sf_dir,
                                                   tmp_path_factory):
         from windowsession_using_kafka_flink_docker_spark.streaming import (
-            Scd2DimensionMaintainer, streaming_scd2_maintenance,
+            Scd2DimensionMaintainer, streaming_maintenance,
         )
 
         flat = self._change_stream_dir(spark, sf_dir, tmp_path_factory)
@@ -1196,7 +1197,7 @@ class TestStreamingScd2Maintenance:
         stream = file_events_source(
             spark, flat, schema="ts TIMESTAMP, user_id BIGINT, tier STRING",
             max_files_per_trigger=1)
-        q = streaming_scd2_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("scd2_ckpt")))
         try:
             q.processAllAvailable()
@@ -1461,7 +1462,7 @@ class TestStreamingAnalyticsTwins:
                                       tmp_path_factory):
         from windowsession_using_kafka_flink_docker_spark.plans.catalog import CATALOG
         from windowsession_using_kafka_flink_docker_spark.streaming import (
-            IncrementalEwmaMaintainer, streaming_ewma_maintenance,
+            IncrementalEwmaMaintainer, streaming_maintenance,
         )
 
         flat = self._chunked_events(
@@ -1472,7 +1473,7 @@ class TestStreamingAnalyticsTwins:
             spark, flat,
             schema="ts TIMESTAMP, user_id BIGINT, value DOUBLE",
             max_files_per_trigger=1)
-        q = streaming_ewma_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("ewma_ckpt")))
         try:
             q.processAllAvailable()
@@ -1488,7 +1489,7 @@ class TestStreamingAnalyticsTwins:
                                        tmp_path_factory):
         from windowsession_using_kafka_flink_docker_spark.plans.catalog import CATALOG
         from windowsession_using_kafka_flink_docker_spark.streaming import (
-            IncrementalDriftMaintainer, streaming_drift_maintenance,
+            IncrementalDriftMaintainer, streaming_maintenance,
         )
 
         flat = self._chunked_events(
@@ -1498,7 +1499,7 @@ class TestStreamingAnalyticsTwins:
         stream = file_events_source(
             spark, flat, schema="ts TIMESTAMP, event_type STRING",
             max_files_per_trigger=1)
-        q = streaming_drift_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("drift_ckpt")))
         try:
             q.processAllAvailable()
@@ -1574,7 +1575,7 @@ class TestStreamingLedgerMaintenance:
     def test_stream_equals_batch(self, spark, sf_dir, tmp_path_factory):
         from windowsession_using_kafka_flink_docker_spark.plans.catalog import CATALOG
         from windowsession_using_kafka_flink_docker_spark.streaming import (
-            IncrementalLedgerMaintainer, streaming_ledger_maintenance,
+            IncrementalLedgerMaintainer, streaming_maintenance,
         )
 
         flat = self._day_chunks(spark, sf_dir, tmp_path_factory)
@@ -1585,7 +1586,7 @@ class TestStreamingLedgerMaintenance:
             schema="ts TIMESTAMP, user_id BIGINT, event_id BIGINT, "
                    "event_type STRING, value DOUBLE",
             max_files_per_trigger=1)
-        q = streaming_ledger_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("ledger_ckpt")))
         try:
             q.processAllAvailable()
@@ -1650,7 +1651,7 @@ class TestStreamingDailyRevenueMaintenance:
         from windowsession_using_kafka_flink_docker_spark.plans.catalog import CATALOG
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalDailyRevenueMaintainer,
-            streaming_daily_revenue_maintenance,
+            streaming_maintenance,
         )
 
         flat = self._order_chunks(spark, sf_dir, tmp_path_factory)
@@ -1660,7 +1661,7 @@ class TestStreamingDailyRevenueMaintenance:
             spark, flat,
             schema="o_orderdate TIMESTAMP, o_totalprice DOUBLE",
             max_files_per_trigger=1)
-        q = streaming_daily_revenue_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("dailyrev_ckpt")))
         try:
             q.processAllAvailable()
@@ -1723,7 +1724,7 @@ class TestStreamingUserSpendMaintenance:
         from windowsession_using_kafka_flink_docker_spark.plans.catalog import CATALOG
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalUserSpendMaintainer,
-            streaming_user_spend_maintenance,
+            streaming_maintenance,
         )
 
         base = str(tmp_path_factory.mktemp("uspend_events"))
@@ -1743,7 +1744,7 @@ class TestStreamingUserSpendMaintenance:
             spark, flat,
             schema="ts TIMESTAMP, user_id BIGINT, value DOUBLE",
             max_files_per_trigger=1)
-        q = streaming_user_spend_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("uspend_ckpt")))
         try:
             q.processAllAvailable()
@@ -1796,7 +1797,7 @@ class TestStreamingTokenFrequencyMaintenance:
         from windowsession_using_kafka_flink_docker_spark.plans.catalog import CATALOG
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalTokenFrequencyMaintainer,
-            streaming_token_frequency_maintenance,
+            streaming_maintenance,
         )
 
         base = str(tmp_path_factory.mktemp("tokfreq_docs"))
@@ -1815,7 +1816,7 @@ class TestStreamingTokenFrequencyMaintenance:
         stream = file_events_source(
             spark, flat, schema="doc_id BIGINT, text STRING",
             max_files_per_trigger=1)
-        q = streaming_token_frequency_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("tokfreq_ckpt")))
         try:
             q.processAllAvailable()
@@ -1872,7 +1873,7 @@ class TestStreamingTableStatsMaintenance:
         from windowsession_using_kafka_flink_docker_spark.plans.catalog import CATALOG
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalTableStatsMaintainer,
-            streaming_table_stats_maintenance,
+            streaming_maintenance,
         )
 
         base = str(tmp_path_factory.mktemp("tabstats_orders"))
@@ -1892,7 +1893,7 @@ class TestStreamingTableStatsMaintenance:
             schema=("o_custkey BIGINT, o_orderstatus STRING, "
                     "o_orderpriority STRING, o_totalprice DOUBLE"),
             max_files_per_trigger=1)
-        q = streaming_table_stats_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("tabstats_ckpt")))
         try:
             q.processAllAvailable()
@@ -1946,7 +1947,7 @@ class TestStreamingContingencyMaintenance:
         from windowsession_using_kafka_flink_docker_spark.plans.catalog import CATALOG
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalContingencyMaintainer,
-            streaming_contingency_maintenance,
+            streaming_maintenance,
         )
 
         base = str(tmp_path_factory.mktemp("contingency_orders"))
@@ -1966,7 +1967,7 @@ class TestStreamingContingencyMaintenance:
             schema=("o_custkey BIGINT, o_orderstatus STRING, "
                     "o_orderpriority STRING"),
             max_files_per_trigger=1)
-        q = streaming_contingency_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("contingency_ckpt")))
         try:
             q.processAllAvailable()
@@ -2020,7 +2021,7 @@ class TestStreamingHhiMaintenance:
         from windowsession_using_kafka_flink_docker_spark.plans.catalog import CATALOG
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalHhiMaintainer,
-            streaming_hhi_maintenance,
+            streaming_maintenance,
         )
 
         base = str(tmp_path_factory.mktemp("hhi_lineitem"))
@@ -2042,7 +2043,7 @@ class TestStreamingHhiMaintenance:
             schema=("l_orderkey BIGINT, l_partkey BIGINT, "
                     "l_suppkey BIGINT, l_quantity DOUBLE"),
             max_files_per_trigger=1)
-        q = streaming_hhi_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("hhi_ckpt")))
         try:
             q.processAllAvailable()
@@ -2099,7 +2100,7 @@ class TestStreamingSourceMixMaintenance:
         from windowsession_using_kafka_flink_docker_spark.plans.catalog import CATALOG
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalSourceMixMaintainer,
-            streaming_source_mix_maintenance,
+            streaming_maintenance,
         )
 
         base = str(tmp_path_factory.mktemp("mix_docs"))
@@ -2119,7 +2120,7 @@ class TestStreamingSourceMixMaintenance:
             schema=("doc_id BIGINT, text STRING, source STRING, "
                     "lang STRING"),
             max_files_per_trigger=1)
-        q = streaming_source_mix_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("mix_ckpt")))
         try:
             q.processAllAvailable()
@@ -2306,7 +2307,7 @@ class TestStreamingQuantileMaintenance:
         )
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             BoundedQuantileMaintainer,
-            streaming_quantile_maintenance,
+            streaming_maintenance,
         )
 
         base = str(tmp_path_factory.mktemp("quantile_orders"))
@@ -2326,7 +2327,7 @@ class TestStreamingQuantileMaintenance:
             schema=("o_custkey BIGINT, o_orderkey BIGINT, "
                     "o_orderpriority STRING, o_totalprice DOUBLE"),
             max_files_per_trigger=1)
-        q = streaming_quantile_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("quantile_ckpt")))
         try:
             q.processAllAvailable()
@@ -2403,7 +2404,7 @@ class TestStreamingSetMembershipMaintenance:
         )
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalSetMembershipMaintainer,
-            streaming_set_membership_maintenance,
+            streaming_maintenance,
         )
 
         base = str(tmp_path_factory.mktemp("setmember_orders"))
@@ -2422,7 +2423,7 @@ class TestStreamingSetMembershipMaintenance:
             spark, flat,
             schema="o_custkey BIGINT, o_orderdate TIMESTAMP",
             max_files_per_trigger=1)
-        q = streaming_set_membership_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("setmember_ckpt")))
         try:
             q.processAllAvailable()
@@ -2498,7 +2499,7 @@ class TestStreamingRankTestMaintenance:
         )
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalRankTestMaintainer,
-            streaming_rank_test_maintenance,
+            streaming_maintenance,
         )
 
         base = str(tmp_path_factory.mktemp("ranktest_orders"))
@@ -2519,7 +2520,7 @@ class TestStreamingRankTestMaintenance:
             schema="o_custkey BIGINT, o_orderkey BIGINT, "
                    "o_totalprice DOUBLE",
             max_files_per_trigger=1)
-        q = streaming_rank_test_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("ranktest_ckpt")))
         try:
             q.processAllAvailable()
@@ -2600,7 +2601,7 @@ class TestStreamingOrderCountMaintenance:
         )
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalOrderCountMaintainer,
-            streaming_order_count_maintenance,
+            streaming_maintenance,
         )
 
         base = str(tmp_path_factory.mktemp("ocount_orders"))
@@ -2621,7 +2622,7 @@ class TestStreamingOrderCountMaintenance:
             spark, flat,
             schema="o_custkey BIGINT, o_orderkey BIGINT",
             max_files_per_trigger=1)
-        q = streaming_order_count_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("ocount_ckpt")))
         try:
             q.processAllAvailable()
@@ -2717,7 +2718,7 @@ class TestStreamingProfitMaintenance:
         )
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalProfitMaintainer,
-            streaming_profit_maintenance,
+            streaming_maintenance,
         )
 
         base = str(tmp_path_factory.mktemp("profit_li"))
@@ -2740,7 +2741,7 @@ class TestStreamingProfitMaintenance:
                    "l_suppkey BIGINT, l_quantity DOUBLE, "
                    "l_extendedprice DOUBLE, l_discount DOUBLE",
             max_files_per_trigger=1)
-        q = streaming_profit_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("profit_ckpt")))
         try:
             q.processAllAvailable()
@@ -2824,7 +2825,7 @@ class TestStreamingTrendMaintenance:
         from windowsession_using_kafka_flink_docker_spark.plans.catalog import CATALOG
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalTrendMaintainer,
-            streaming_trend_maintenance,
+            streaming_maintenance,
         )
 
         base = str(tmp_path_factory.mktemp("trend_events"))
@@ -2846,7 +2847,7 @@ class TestStreamingTrendMaintenance:
             spark, flat,
             schema="ts TIMESTAMP, user_id BIGINT, value DOUBLE",
             max_files_per_trigger=1)
-        q = streaming_trend_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("trend_ckpt")))
         try:
             q.processAllAvailable()
@@ -2926,7 +2927,7 @@ class TestStreamingCupedMaintenance:
         from windowsession_using_kafka_flink_docker_spark.plans.catalog import CATALOG
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalCupedMaintainer,
-            streaming_cuped_maintenance,
+            streaming_maintenance,
         )
 
         base = str(tmp_path_factory.mktemp("cuped_orders"))
@@ -2949,7 +2950,7 @@ class TestStreamingCupedMaintenance:
             schema="o_custkey BIGINT, o_orderdate TIMESTAMP, "
                    "o_totalprice DOUBLE",
             max_files_per_trigger=1)
-        q = streaming_cuped_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("cuped_ckpt")))
         try:
             q.processAllAvailable()
@@ -3015,7 +3016,7 @@ class TestStreamingFeatureMomentsMaintenance:
         from windowsession_using_kafka_flink_docker_spark.plans.catalog import CATALOG
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalFeatureMomentsMaintainer,
-            streaming_feature_moments_maintenance,
+            streaming_maintenance,
         )
 
         base = str(tmp_path_factory.mktemp("fmom_docs"))
@@ -3034,7 +3035,7 @@ class TestStreamingFeatureMomentsMaintenance:
         stream = file_events_source(
             spark, flat, schema="doc_id BIGINT, text STRING",
             max_files_per_trigger=1)
-        q = streaming_feature_moments_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("fmom_ckpt")))
         try:
             q.processAllAvailable()
@@ -3164,7 +3165,7 @@ class TestStreamingJpegFingerprintMaintenance:
         from windowsession_using_kafka_flink_docker_spark.plans.catalog import CATALOG
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalJpegFingerprintMaintainer,
-            streaming_jpeg_fingerprint_maintenance,
+            streaming_maintenance,
         )
 
         base = str(tmp_path_factory.mktemp("jpeg_docs"))
@@ -3185,7 +3186,7 @@ class TestStreamingJpegFingerprintMaintenance:
             spark, str(tmp_path_factory.mktemp("jpeg_state")))
         stream = file_events_source(
             spark, flat, schema="doc_id BIGINT", max_files_per_trigger=1)
-        q = streaming_jpeg_fingerprint_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("jpeg_ckpt")))
         try:
             q.processAllAvailable()
@@ -3628,10 +3629,10 @@ class TestCrashMidBatchDurability:
 
     def test_crash_mid_batch_rollup_and_scd2(self, spark, sf_dir,
                                              tmp_path_factory):
-        """Same drill for the two pre-_VersionedState schemes with their
-        own version plumbing: the rollup maintainer (summable partials)
-        and the SCD2 dimension maintainer (CDC merge — chronological
-        batches, so the replayed batch is a mid-history delta)."""
+        """Same drill for the rollup maintainer (summable partials) and
+        the SCD2 dimension maintainer, which keeps its own version
+        plumbing (CDC merge — chronological batches, so the replayed
+        batch is a mid-history delta)."""
         import glob
 
         from windowsession_using_kafka_flink_docker_spark.streaming import (
@@ -3657,12 +3658,12 @@ class TestCrashMidBatchDurability:
         cases = [
             ("rollup", lambda d: IncrementalRollupMaintainer(spark, d),
              rollup_chunks, "ts TIMESTAMP, event_type STRING, value DOUBLE",
-             None, lambda m: m.current()),
+             None, lambda m: m.current(), lambda m: m.state.versions()),
             ("scd2", mk_scd, scd_chunks,
              "ts TIMESTAMP, user_id BIGINT, tier STRING",
-             scd_flat, lambda m: m.current_rows()),
+             scd_flat, lambda m: m.current_rows(), lambda m: m._versions()),
         ]
-        for label, mk, chunks, schema, flat, present in cases:
+        for label, mk, chunks, schema, flat, present, versions in cases:
             ref = mk(str(tmp_path_factory.mktemp(f"{label}_xref")))
             for i, chunk in enumerate(chunks):
                 ref.merge_batch(chunk, i)
@@ -3684,7 +3685,7 @@ class TestCrashMidBatchDurability:
                 q.processAllAvailable()
             assert "injected crash" in str(excinfo.value), label
             q.stop()
-            assert wounded._versions()[-1] == 1, label
+            assert versions(wounded)[-1] == 1, label
 
             revived = mk(state_dir)
             q2 = (file_events_source(spark, flat, schema=schema,
@@ -3696,7 +3697,7 @@ class TestCrashMidBatchDurability:
                 q2.processAllAvailable()
             finally:
                 q2.stop()
-            assert revived._versions()[-1] == 2, label
+            assert versions(revived)[-1] == 2, label
             assert _rows(present(revived), exclude_sentinel=False) == want, (
                 f"{label}: crash-mid-batch + restart diverged from the "
                 f"uninterrupted run")
@@ -3920,15 +3921,33 @@ class TestEmptyBatchMerges:
     """A trigger can fire with ZERO rows (idle source, watermark-only
     progress); every maintainer's merge must treat an empty batch as a
     state-preserving no-op — the report after (real, empty) must equal
-    the report after just (real)."""
+    the report after just (real). Covers every maintainer on the shared
+    partial-merge base class."""
 
     def test_empty_batch_is_a_noop(self, spark, sf_dir, tmp_path_factory):
+        from functools import partial
+
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             BoundedQuantileMaintainer,
+            IncrementalContingencyMaintainer,
+            IncrementalCupedMaintainer,
+            IncrementalDailyRevenueMaintainer,
+            IncrementalDriftMaintainer,
+            IncrementalEwmaMaintainer,
             IncrementalFeatureMomentsMaintainer,
+            IncrementalHhiMaintainer,
+            IncrementalHllMaintainer,
             IncrementalJpegFingerprintMaintainer,
+            IncrementalOrderCountMaintainer,
+            IncrementalProfitMaintainer,
+            IncrementalRankTestMaintainer,
+            IncrementalRollupMaintainer,
+            IncrementalSetMembershipMaintainer,
             IncrementalSourceMixMaintainer,
+            IncrementalTableStatsMaintainer,
+            IncrementalTokenFrequencyMaintainer,
             IncrementalTrendMaintainer,
+            IncrementalUserSpendMaintainer,
         )
 
         orders = load_table(spark, sf_dir, "orders").select(
@@ -3936,6 +3955,11 @@ class TestEmptyBatchMerges:
         events = load_table(spark, sf_dir, "events").select(
             "ts", "user_id", "value")
         docs = load_table(spark, sf_dir, "documents")
+        all_orders = load_table(spark, sf_dir, "orders")
+        all_events = load_table(spark, sf_dir, "events")
+        lineitem = load_table(spark, sf_dir, "lineitem")
+        part = load_table(spark, sf_dir, "part")
+        customer = load_table(spark, sf_dir, "customer")
         cases = [
             ("quantile", BoundedQuantileMaintainer, orders),
             ("trend", IncrementalTrendMaintainer, events),
@@ -3944,13 +3968,37 @@ class TestEmptyBatchMerges:
              docs.select("doc_id")),
             ("mix", IncrementalSourceMixMaintainer,
              docs.select("doc_id", "text", "source", "lang")),
+            ("ewma", IncrementalEwmaMaintainer, all_events),
+            ("drift", IncrementalDriftMaintainer, all_events),
+            ("revenue", IncrementalDailyRevenueMaintainer, all_orders),
+            ("spend", IncrementalUserSpendMaintainer, all_events),
+            ("tokens", IncrementalTokenFrequencyMaintainer, docs),
+            ("tabstats", IncrementalTableStatsMaintainer, all_orders),
+            ("contingency", IncrementalContingencyMaintainer, all_orders),
+            ("hhi", partial(IncrementalHhiMaintainer, part=part), lineitem),
+            ("setmember", IncrementalSetMembershipMaintainer, all_orders),
+            ("ranktest", partial(IncrementalRankTestMaintainer,
+                                 customer=customer), all_orders),
+            ("ocount", partial(IncrementalOrderCountMaintainer,
+                               customer=customer), all_orders),
+            ("profit", partial(
+                IncrementalProfitMaintainer, part=part,
+                supplier=load_table(spark, sf_dir, "supplier"),
+                nation=load_table(spark, sf_dir, "nation"),
+                orders=all_orders), lineitem),
+            ("cuped", IncrementalCupedMaintainer, all_orders),
+            ("hll", IncrementalHllMaintainer, all_events),
+            ("rollup", IncrementalRollupMaintainer, all_events),
         ]
         for label, cls, frame in cases:
             m = cls(spark, str(tmp_path_factory.mktemp(f"{label}_empty")))
+            # revenue, spend and tokens present only through named
+            # reports; their maintained partials are the report input
+            present = getattr(m, "current", m.state.current)
             m.merge_batch(frame, 0)
-            before = _rows(m.current(), exclude_sentinel=False)
+            before = _rows(present(), exclude_sentinel=False)
             m.merge_batch(frame.where(F.lit(False)), 1)
-            after = _rows(m.current(), exclude_sentinel=False)
+            after = _rows(present(), exclude_sentinel=False)
             assert after == before, label
             assert m.state.versions()[-1] == 1, label  # version advanced
 
@@ -3975,7 +4023,7 @@ class TestStreamingHllMaintenance:
         )
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalHllMaintainer,
-            streaming_hll_maintenance,
+            streaming_maintenance,
         )
         from windowsession_using_kafka_flink_docker_spark.streaming.sources import (
             file_events_source,
@@ -3999,7 +4047,7 @@ class TestStreamingHllMaintenance:
             schema="ts TIMESTAMP, user_id BIGINT, event_type STRING, "
                    "value DOUBLE",
             max_files_per_trigger=1)
-        q = streaming_hll_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("hll_ckpt")))
         try:
             q.processAllAvailable()
@@ -4056,7 +4104,7 @@ class TestStreamingPackingMaintenance:
         )
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalPackingMaintainer,
-            streaming_packing_maintenance,
+            streaming_maintenance,
         )
         from windowsession_using_kafka_flink_docker_spark.streaming.sources import (
             file_events_source,
@@ -4084,7 +4132,7 @@ class TestStreamingPackingMaintenance:
         stream = file_events_source(
             spark, flat, schema="doc_id BIGINT, text STRING",
             max_files_per_trigger=1)
-        q = streaming_packing_maintenance(
+        q = streaming_maintenance(
             stream, maint, str(tmp_path_factory.mktemp("pack_ckpt")))
         try:
             q.processAllAvailable()

@@ -85,10 +85,14 @@ fixed-memory token-state variant):
 
 All states are key-space-bounded (calendar days / column domain /
 category grid / type x supplier / source x lang / users /
-vocabulary), versioned by
-batch id, replay-idempotent, and lifecycle-guarded — the same
-``_VersionedState`` scheme as the rollup/SCD2/join-view maintainers.
-Run either side (or both) from file drop-dirs:
+vocabulary), versioned by batch id, replay-idempotent, and
+lifecycle-guarded. The analytics and session-store states share
+``_VersionedState`` with the rollup maintainer; the BM25 and near-dup
+indexes keep per-batch increments with the same guard, and SCD2 and
+the join view (not run here) keep their own version plumbing. Every
+query is wired by ``streaming_maintenance`` except the two indexes,
+which bind their own sinks. Run either side (or both) from file
+drop-dirs:
 
     spark-submit maintain_analytics_job.py \
         --orders /data/orders_incoming --events /data/events_incoming \
@@ -124,28 +128,9 @@ from windowsession_using_kafka_flink_docker_spark.streaming import (
     IncrementalSessionStoreMaintainer,
     IncrementalTrendMaintainer,
     IncrementalUserSpendMaintainer,
-    streaming_bounded_token_frequency_maintenance,
-    streaming_contingency_maintenance,
-    streaming_daily_revenue_maintenance,
-    streaming_hhi_maintenance,
-    streaming_hll_maintenance,
-    streaming_packing_maintenance,
-    streaming_source_mix_maintenance,
-    streaming_quantile_maintenance,
-    streaming_order_count_maintenance,
-    streaming_profit_maintenance,
-    streaming_rank_test_maintenance,
-    streaming_set_membership_maintenance,
-    streaming_table_stats_maintenance,
-    streaming_token_frequency_maintenance,
-    streaming_cuped_maintenance,
-    streaming_feature_moments_maintenance,
-    streaming_jpeg_fingerprint_maintenance,
     streaming_bm25_index_maintenance,
     streaming_neardup_index_maintenance,
-    streaming_session_store_maintenance,
-    streaming_trend_maintenance,
-    streaming_user_spend_maintenance,
+    streaming_maintenance,
 )
 
 
@@ -218,25 +203,25 @@ def main() -> None:
                   .parquet(args.orders))
         rev = IncrementalDailyRevenueMaintainer(
             spark, os.path.join(args.state_root, "daily_revenue"))
-        queries.append(streaming_daily_revenue_maintenance(
+        queries.append(streaming_maintenance(
             orders, rev, os.path.join(args.checkpoint_root,
                                       "daily_revenue")))
         # maintainers #10/#11 share the orders stream: ANALYZE-TABLE
         # column statistics and the status x priority contingency state
         stats = IncrementalTableStatsMaintainer(
             spark, os.path.join(args.state_root, "table_stats"))
-        queries.append(streaming_table_stats_maintenance(
+        queries.append(streaming_maintenance(
             orders, stats, os.path.join(args.checkpoint_root,
                                         "table_stats")))
         cont = IncrementalContingencyMaintainer(
             spark, os.path.join(args.state_root, "contingency"))
-        queries.append(streaming_contingency_maintenance(
+        queries.append(streaming_maintenance(
             orders, cont, os.path.join(args.checkpoint_root,
                                        "contingency")))
         # maintainer #15: the bounded per-priority quantile sample
         quant = BoundedQuantileMaintainer(
             spark, os.path.join(args.state_root, "quantile"))
-        queries.append(streaming_quantile_maintenance(
+        queries.append(streaming_maintenance(
             orders, quant, os.path.join(args.checkpoint_root,
                                         "quantile")))
         # maintainer #17: per-(segment, arm, cents) rank-test counts
@@ -246,7 +231,7 @@ def main() -> None:
             rank = IncrementalRankTestMaintainer(
                 spark, os.path.join(args.state_root, "rank_test"),
                 customer)
-            queries.append(streaming_rank_test_maintenance(
+            queries.append(streaming_maintenance(
                 orders, rank, os.path.join(args.checkpoint_root,
                                            "rank_test")))
         # maintainer #18: per-customer exact order counts (the Q13
@@ -256,20 +241,20 @@ def main() -> None:
             ocount = IncrementalOrderCountMaintainer(
                 spark, os.path.join(args.state_root, "order_count"),
                 customer18)
-            queries.append(streaming_order_count_maintenance(
+            queries.append(streaming_maintenance(
                 orders, ocount, os.path.join(args.checkpoint_root,
                                              "order_count")))
         # maintainer #16: per-customer epoch membership bits
         member = IncrementalSetMembershipMaintainer(
             spark, os.path.join(args.state_root, "set_membership"))
-        queries.append(streaming_set_membership_maintenance(
+        queries.append(streaming_maintenance(
             orders, member, os.path.join(args.checkpoint_root,
                                          "set_membership")))
         # maintainer #21 shares the orders stream: the per-customer
         # CUPED unit grid (pre/post epoch spend cents)
         cuped = IncrementalCupedMaintainer(
             spark, os.path.join(args.state_root, "cuped"))
-        queries.append(streaming_cuped_maintenance(
+        queries.append(streaming_maintenance(
             orders, cuped, os.path.join(args.checkpoint_root, "cuped")))
     if args.events:
         events = (spark.readStream
@@ -278,20 +263,20 @@ def main() -> None:
                   .parquet(args.events))
         spend = IncrementalUserSpendMaintainer(
             spark, os.path.join(args.state_root, "user_spend"))
-        queries.append(streaming_user_spend_maintenance(
+        queries.append(streaming_maintenance(
             events, spend, os.path.join(args.checkpoint_root,
                                         "user_spend")))
         # maintainer #27 shares the events stream: the per-(event_type,
         # bucket) HLL register state — the mergeable-NDV sketch
         hll = IncrementalHllMaintainer(
             spark, os.path.join(args.state_root, "hll_ndv"))
-        queries.append(streaming_hll_maintenance(
+        queries.append(streaming_maintenance(
             events, hll, os.path.join(args.checkpoint_root, "hll_ndv")))
         # maintainer #20 shares the events stream: the per-(user, day)
         # daily-cents grid behind the OLS trend report
         trend = IncrementalTrendMaintainer(
             spark, os.path.join(args.state_root, "trend"))
-        queries.append(streaming_trend_maintenance(
+        queries.append(streaming_maintenance(
             events, trend, os.path.join(args.checkpoint_root, "trend")))
         # maintainer #24 shares the events stream: the incremental
         # session store (10-minute-gap session table kept current by
@@ -331,7 +316,7 @@ def main() -> None:
             print(f"session_store: skipping frozen compaction ({e}); "
                   "the re-delivered batch will overwrite the torn "
                   "increment")
-        queries.append(streaming_session_store_maintenance(
+        queries.append(streaming_maintenance(
             events, sess, os.path.join(args.checkpoint_root,
                                        "session_store")))
     if args.docs:
@@ -342,31 +327,31 @@ def main() -> None:
         if args.bounded_tokens:
             bfreq = BoundedTokenFrequencyMaintainer(
                 spark, os.path.join(args.state_root, "token_freq_bounded"))
-            queries.append(streaming_bounded_token_frequency_maintenance(
+            queries.append(streaming_maintenance(
                 docs, bfreq, os.path.join(args.checkpoint_root,
                                           "token_freq_bounded")))
         else:
             freq = IncrementalTokenFrequencyMaintainer(
                 spark, os.path.join(args.state_root, "token_freq"))
-            queries.append(streaming_token_frequency_maintenance(
+            queries.append(streaming_maintenance(
                 docs, freq,
                 os.path.join(args.checkpoint_root, "token_freq")))
         # maintainer #28 shares the documents stream: training-sequence
         # bins maintained from the per-shard tail (closed bins immutable)
         packm = IncrementalPackingMaintainer(
             spark, os.path.join(args.state_root, "packing"))
-        queries.append(streaming_packing_maintenance(
+        queries.append(streaming_maintenance(
             docs, packm, os.path.join(args.checkpoint_root, "packing")))
         # maintainer #13 shares the documents stream: domain-mix state
         mix = IncrementalSourceMixMaintainer(
             spark, os.path.join(args.state_root, "source_mix"))
-        queries.append(streaming_source_mix_maintenance(
+        queries.append(streaming_maintenance(
             docs, mix, os.path.join(args.checkpoint_root, "source_mix")))
         # maintainer #22 shares the documents stream: the 256-row
         # hashed-feature standardization moments
         fmom = IncrementalFeatureMomentsMaintainer(
             spark, os.path.join(args.state_root, "feature_moments"))
-        queries.append(streaming_feature_moments_maintenance(
+        queries.append(streaming_maintenance(
             docs, fmom, os.path.join(args.checkpoint_root,
                                      "feature_moments")))
         # maintainer #23 shares the documents stream: the JPEG aHash
@@ -374,7 +359,7 @@ def main() -> None:
         # merge)
         jfp = IncrementalJpegFingerprintMaintainer(
             spark, os.path.join(args.state_root, "jpeg_fingerprint"))
-        queries.append(streaming_jpeg_fingerprint_maintenance(
+        queries.append(streaming_maintenance(
             docs, jfp, os.path.join(args.checkpoint_root,
                                     "jpeg_fingerprint")))
         # maintainer #25 shares the documents stream: the persisted
@@ -428,7 +413,7 @@ def main() -> None:
         part = spark.read.parquet(args.part)
         hhi = IncrementalHhiMaintainer(
             spark, os.path.join(args.state_root, "hhi"), part)
-        queries.append(streaming_hhi_maintenance(
+        queries.append(streaming_maintenance(
             li, hhi, os.path.join(args.checkpoint_root, "hhi")))
         # maintainer #19: per-(nation, year) exact Q9-profit partials
         # (needs the supplier/nation dimensions and the orders frame
@@ -439,7 +424,7 @@ def main() -> None:
                 part, spark.read.parquet(args.supplier),
                 spark.read.parquet(args.nation),
                 spark.read.parquet(args.orders_dim))
-            queries.append(streaming_profit_maintenance(
+            queries.append(streaming_maintenance(
                 li, profit, os.path.join(args.checkpoint_root,
                                          "profit")))
     for q in queries:

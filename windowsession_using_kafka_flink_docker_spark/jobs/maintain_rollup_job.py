@@ -23,7 +23,7 @@ from windowsession_using_kafka_flink_docker_spark import get_spark
 from windowsession_using_kafka_flink_docker_spark.streaming import (
     IncrementalRollupMaintainer,
     kafka_events_source,
-    streaming_rollup_maintenance,
+    streaming_maintenance,
 )
 
 
@@ -52,8 +52,7 @@ def main() -> None:
                   .schema("ts TIMESTAMP, event_type STRING, value DOUBLE")
                   .parquet(args.source))
     maintainer = IncrementalRollupMaintainer(spark, args.state)
-    query = streaming_rollup_maintenance(events, maintainer,
-                                         args.checkpoint)
+    query = streaming_maintenance(events, maintainer, args.checkpoint)
     query.awaitTermination()
 
 

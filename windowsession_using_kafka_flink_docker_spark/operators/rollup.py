@@ -9,7 +9,9 @@ never average averages. One definition serves three call paths:
 - the batch catalog query ``incremental_rollup_merge`` (driver-oracled
   against a direct rollup over all events),
 - the streaming maintainer ``streaming/rollup.py`` (foreachBatch MERGE of
-  each micro-batch's partials into a versioned state table),
+  each micro-batch's ``rollup_partials`` into a versioned state table;
+  its merge is the shared partial maintainer's per-key sum, the same
+  algebra as ``rollup_merge``),
 - ad-hoc backfill (partials over any slice union-merge into the state).
 
 The reference (flink_stream_task1.py:51-62) keeps exactly this shape per

@@ -20,7 +20,6 @@ from windowsession_using_kafka_flink_docker_spark.streaming.stateful import (
 )
 from windowsession_using_kafka_flink_docker_spark.streaming.rollup import (
     IncrementalRollupMaintainer,
-    streaming_rollup_maintenance,
 )
 from windowsession_using_kafka_flink_docker_spark.streaming.joinview import (
     IncrementalJoinView,
@@ -28,7 +27,6 @@ from windowsession_using_kafka_flink_docker_spark.streaming.joinview import (
 )
 from windowsession_using_kafka_flink_docker_spark.streaming.session_store import (
     IncrementalSessionStoreMaintainer,
-    streaming_session_store_maintenance,
 )
 from windowsession_using_kafka_flink_docker_spark.streaming.bm25_index import (
     IncrementalBm25IndexMaintainer,
@@ -61,32 +59,10 @@ from windowsession_using_kafka_flink_docker_spark.streaming.analytics_twins impo
     IncrementalTokenFrequencyMaintainer,
     IncrementalUserSpendMaintainer,
     IncrementalLedgerMaintainer,
-    streaming_bounded_token_frequency_maintenance,
-    streaming_contingency_maintenance,
-    streaming_cuped_maintenance,
-    streaming_drift_maintenance,
-    streaming_feature_moments_maintenance,
-    streaming_jpeg_fingerprint_maintenance,
-    streaming_hhi_maintenance,
-    streaming_source_mix_maintenance,
-    streaming_daily_revenue_maintenance,
-    streaming_quantile_maintenance,
-    streaming_order_count_maintenance,
-    streaming_profit_maintenance,
-    streaming_rank_test_maintenance,
-    streaming_set_membership_maintenance,
-    streaming_table_stats_maintenance,
-    streaming_hll_maintenance,
-    streaming_packing_maintenance,
-    streaming_token_frequency_maintenance,
-    streaming_trend_maintenance,
-    streaming_user_spend_maintenance,
-    streaming_ewma_maintenance,
-    streaming_ledger_maintenance,
+    streaming_maintenance,
 )
 from windowsession_using_kafka_flink_docker_spark.streaming.scd import (
     Scd2DimensionMaintainer,
-    streaming_scd2_maintenance,
 )
 from windowsession_using_kafka_flink_docker_spark.streaming.sinks import (
     alert_grid_writer,
@@ -120,7 +96,7 @@ __all__ = [
     "streaming_windowed_counts",
     "streaming_capped_sessionize",
     "IncrementalRollupMaintainer",
-    "streaming_rollup_maintenance",
+    "streaming_maintenance",
     "BoundedTokenFrequencyMaintainer",
     "IncrementalContingencyMaintainer",
     "IncrementalDailyRevenueMaintainer",
@@ -139,36 +115,12 @@ __all__ = [
     "IncrementalUserSpendMaintainer",
     "IncrementalDriftMaintainer",
     "IncrementalLedgerMaintainer",
-    "streaming_bounded_token_frequency_maintenance",
-    "streaming_contingency_maintenance",
-    "streaming_daily_revenue_maintenance",
-    "streaming_hhi_maintenance",
-    "streaming_source_mix_maintenance",
-    "streaming_quantile_maintenance",
-    "streaming_order_count_maintenance",
-    "streaming_profit_maintenance",
     "IncrementalTrendMaintainer",
     "IncrementalCupedMaintainer",
     "IncrementalFeatureMomentsMaintainer",
     "IncrementalJpegFingerprintMaintainer",
-    "streaming_feature_moments_maintenance",
-    "streaming_jpeg_fingerprint_maintenance",
-    "streaming_cuped_maintenance",
-    "streaming_trend_maintenance",
-    "streaming_rank_test_maintenance",
-    "streaming_set_membership_maintenance",
-    "streaming_table_stats_maintenance",
-    "streaming_hll_maintenance",
-    "streaming_packing_maintenance",
-    "streaming_token_frequency_maintenance",
-    "streaming_user_spend_maintenance",
-    "streaming_ewma_maintenance",
-    "streaming_drift_maintenance",
-    "streaming_ledger_maintenance",
     "Scd2DimensionMaintainer",
-    "streaming_scd2_maintenance",
     "IncrementalSessionStoreMaintainer",
-    "streaming_session_store_maintenance",
     "IncrementalBm25IndexMaintainer",
     "streaming_bm25_index_maintenance",
     "IncrementalNearDupIndexMaintainer",

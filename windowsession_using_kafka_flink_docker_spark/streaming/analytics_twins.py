@@ -1,33 +1,29 @@
 """Streaming twins for the analytics entries that are incremental by
-construction (VERDICT r6 item 5, extended through rounds 7-8):
-eleven maintainers covering fourteen driver-oracled batch entries —
-``ewma_daily_spend``, ``distribution_drift_report``,
-``clamped_running_balance`` (whose non-associative clamp needs the
-in-order prefix-scan state documented on IncrementalLedgerMaintainer),
-the daily-revenue pair (``cusum_changepoint_daily_revenue`` +
-``seasonal_naive_backtest`` on ONE calendar-bounded state), the
-spend-statistics family (``gini_spend_inequality`` +
-``welch_t_spend_ab`` + ``mann_whitney_spend_ab`` on ONE user-bounded
-state), the corpus token frequencies (``heavy_hitter_tokens`` +
-``zipf_rank_frequency`` on ONE vocabulary-bounded state), the
-ANALYZE-TABLE column statistics (``orders_column_ndv_kmv`` on a
-4-row column-domain state, #10), the R x C contingency
-(``cramers_v_status_priority`` on a category-grid state, #11), and the
-supplier-concentration partials (``supplier_hhi_by_parttype`` on a
-|types| x |suppliers| state with stream-static dimension enrichment
-inside the merge, #12), and the domain-mix accounting
-(``source_mix_report`` on a |sources| x |langs| state, #13) — plus
-the one APPROXIMATE member, #14: the fixed-memory CMS+candidate-pool
-heavy-hitter state (``BoundedTokenFrequencyMaintainer``), the
-extreme-scale drop-in for the exact token state with a one-sided
-error guarantee and recall pinned in tests. Each
-``current_*()`` presentation calls the same helper the
-batch entry was refactored onto (``ewma_from_daily``,
-``cusum_from_daily``, ``backtest_from_daily``, ``*_from_spend``,
-``*_from_freq``, ``ndv_report_from_kmv_state``,
-``cramers_report_from_cells``, ``hhi_report_from_qty``,
-``source_mix_from_partials``), so
+construction. Every maintainer keeps a key-space-bounded state under a
+versioned parquet directory, and each ``current*()`` presentation calls
+the same helper the batch entry was refactored onto (``ewma_from_daily``,
+``cusum_from_daily``, ``*_from_spend``, ``*_from_freq``,
+``ndv_report_from_kmv_state``, ``cramers_report_from_cells``, ...), so
 stream == batch is one code path, never a parallel implementation.
+
+The fleet:
+
+- on ``_PartialMaintainer``, whose state is a commutative partial that
+  re-merges by one ``groupBy(keys)``: EWMA daily spend, distribution
+  drift, daily revenue (CUSUM + seasonal backtest on one calendar-bounded
+  state), user spend (Gini, Welch-t and Mann-Whitney on one user-bounded
+  state), exact token frequencies (heavy hitters + Zipf), ANALYZE-TABLE
+  column statistics (KMV), the R x C contingency, supplier HHI, source
+  mix, the bounded quantile sample, epoch set membership, rank-test
+  counts, Q13 order counts, Q9 profit, the trend grid (OLS, ACF,
+  Theil-Sen, Mann-Kendall), CUPED units, feature-bucket moments, HLL
+  registers and the JPEG fingerprint membership; the event rollup in
+  streaming/rollup.py is one more;
+- explicit classes, because their state is not a commutative partial:
+  the clamped ledger (in-order prefix scan), the fixed-memory
+  CMS+candidate-pool token state (two states, the pool scored against
+  the merged sketch) and token-budget packing (the delta reads the
+  previous per-shard tails).
 
 Every batch entry here reduces the fact stream to key-space-bounded
 mergeable partials before any derivation:
@@ -42,26 +38,36 @@ mergeable partials before any derivation:
   boundary. Exact integers, so the maintained report equals the batch
   report bit-for-bit under any batch interleaving.
 
-Versioning/replay is byte-for-byte the rollup maintainer's scheme
-(streaming/rollup.py): version ``v{batch_id}`` derived from the newest
-version strictly below ``batch_id``, overwritten on replay, pruned to
-current+previous, with the coupled-lifecycle guard against a fresh
-checkpoint over stale state.
+Versioning/replay is owned by ``_VersionedState``: version
+``v{batch_id}`` derived from the newest version strictly below
+``batch_id``, overwritten on replay, pruned to current+previous, with the
+coupled-lifecycle guard against a fresh checkpoint over stale state.
+``streaming_maintenance`` wires any maintainer to a stream.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
+from functools import cached_property
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 
 class _VersionedState:
-    """Shared versioned-parquet state plumbing (see streaming/rollup.py
-    for the replay-safety argument)."""
+    """Versioned-parquet state shared by every maintainer (see
+    streaming/rollup.py for the replay-safety argument).
+
+    Layout: ``state_dir/v=<batch_id>/`` parquet dirs plus the
+    ``_schema.txt`` stamp. No pointer file is needed — max(version with
+    _SUCCESS) is the pointer, and an interrupted write of v{N} is re-done
+    wholesale on replay of batch N (parquet overwrite), so readers never
+    observe a torn state.
+    """
 
     def __init__(self, spark: SparkSession, state_dir: str, schema: str):
         self.spark = spark
@@ -152,6 +158,10 @@ class _VersionedState:
         return self.read(versions[-1]) if versions else None
 
     def guard(self, batch_id: int) -> None:
+        # A fresh checkpoint dir (batch ids restart at 0) against an
+        # existing state_dir would silently rebase on nothing while
+        # versions() keeps serving the old run's higher-numbered state.
+        # batch_id == newest version is legal: that is the replay case.
         versions = self.versions()
         if versions and versions[-1] > batch_id:
             raise ValueError(
@@ -163,6 +173,9 @@ class _VersionedState:
         target = os.path.join(self.state_dir, f"v={batch_id}")
         self._write_stamp(self.state_dir)
         df.coalesce(1).write.mode("overwrite").parquet(target)
+        # Keep current + previous: replay needs only the newest version
+        # strictly below a re-run batch, and the engine never re-delivers
+        # batches older than the last committed one.
         for v in self.versions():
             if v < batch_id - 1:
                 shutil.rmtree(os.path.join(self.state_dir, f"v={v}"),
@@ -223,26 +236,71 @@ class _VersionedState:
         return v
 
 
-class IncrementalEwmaMaintainer:
+class _PartialMaintainer:
+    """A maintainer whose state is a commutative, replay-safe partial.
+
+    Subclasses declare the state ``_SCHEMA``, the merge ``_KEYS`` and
+    ``delta()`` (one micro-batch reduced to partials in the state
+    schema); this class owns the guard, the replay-safe base read, the
+    union and the versioned write. The default ``merge()`` sums every
+    non-key column back to its state type; a subclass whose partials
+    fold another way (min/max, k-min sets, set union) overrides it.
+    """
+
+    _SCHEMA: str
+    _KEYS: tuple[str, ...] = ()
+
+    def __init__(self, spark: SparkSession, state_dir: str):
+        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
+
+    def delta(self, batch_df: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    @cached_property
+    def _sums(self) -> list[Column]:
+        # built once per instance: parsing the schema is a JVM round trip
+        return [F.sum(f.name).cast(f.dataType.simpleString()).alias(f.name)
+                for f in StructType.fromDDL(self._SCHEMA).fields
+                if f.name not in self._KEYS]
+
+    def merge(self, partials: DataFrame) -> DataFrame:
+        return partials.groupBy(*self._KEYS).agg(*self._sums)
+
+    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        self.state.guard(batch_id)
+        delta = self.delta(batch_df)
+        prev = self.state.latest_before(batch_id)
+        merged = prev.unionByName(delta) if prev is not None else delta
+        self.state.write(batch_id, self.merge(merged))
+
+
+def streaming_maintenance(stream: DataFrame, maintainer,
+                          checkpoint_dir: str) -> StreamingQuery:
+    """Run ``maintainer.merge_batch`` on every micro-batch of ``stream``.
+    The sink emits nothing: all state lives in the maintainer's versioned
+    table. The query is named after the maintainer class
+    (``IncrementalDailyRevenueMaintainer`` -> ``daily_revenue_maintenance``)."""
+    stem = re.sub(r"^Incremental|Maintainer$", "", type(maintainer).__name__)
+    name = re.sub(r"(?<!^)(?=[A-Z])", "_", stem).lower()
+    return (stream.writeStream
+            .queryName(f"{name}_maintenance")
+            .option("checkpointLocation", checkpoint_dir)
+            .foreachBatch(maintainer.merge_batch)
+            .start())
+
+
+class IncrementalEwmaMaintainer(_PartialMaintainer):
     """Maintains per-(user, day) spend partials; ``current()`` derives
     the clamped-exponent EWMA exactly as the driver-oracled batch entry
     does (same ewma_from_daily core, same cent rounding)."""
 
     _SCHEMA = "user_id BIGINT, d DATE, _sum DOUBLE"
+    _KEYS = ("user_id", "d")
 
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
-
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self.state.guard(batch_id)
-        delta = (batch_df
-                 .groupBy("user_id", F.to_date("ts").alias("d"))
-                 .agg(F.sum("value").alias("_sum")))
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = (merged.groupBy("user_id", "d")
-                  .agg(F.sum("_sum").alias("_sum")))
-        self.state.write(batch_id, merged)
+    def delta(self, batch_df: DataFrame) -> DataFrame:
+        return (batch_df
+                .groupBy("user_id", F.to_date("ts").alias("d"))
+                .agg(F.sum("value").alias("_sum")))
 
     def current(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.analytics import (
@@ -254,30 +312,25 @@ class IncrementalEwmaMaintainer:
         return ewma_from_daily(daily)
 
 
-class IncrementalDriftMaintainer:
+class IncrementalDriftMaintainer(_PartialMaintainer):
     """Maintains per-event_type conditional counts against the fixed
     half boundary; ``current()`` is bit-identical to the batch
     distribution_drift_report presentation (exact integer counts in,
     scaled-floor shares out)."""
 
     _SCHEMA = "event_type STRING, n_a BIGINT, n_b BIGINT"
+    _KEYS = ("event_type",)
 
     def __init__(self, spark: SparkSession, state_dir: str,
                  boundary: str = "2024-01-15"):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
+        super().__init__(spark, state_dir)
         self.boundary = boundary
 
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self.state.guard(batch_id)
+    def delta(self, batch_df: DataFrame) -> DataFrame:
         is_a = F.to_date("ts") <= F.lit(self.boundary).cast("date")
-        delta = batch_df.groupBy("event_type").agg(
+        return batch_df.groupBy("event_type").agg(
             F.sum(is_a.cast("long")).alias("n_a"),
             F.sum((~is_a).cast("long")).alias("n_b"))
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = merged.groupBy("event_type").agg(
-            F.sum("n_a").alias("n_a"), F.sum("n_b").alias("n_b"))
-        self.state.write(batch_id, merged)
 
     def current(self) -> DataFrame:
         counts = self.state.current()
@@ -396,7 +449,7 @@ class IncrementalLedgerMaintainer:
             .cast("long").alias("final_balance_cents"))
 
 
-class IncrementalDailyRevenueMaintainer:
+class IncrementalDailyRevenueMaintainer(_PartialMaintainer):
     """Maintains per-day order-revenue cent partials; ONE bounded state
     (|calendar days| rows regardless of order volume) serves TWO
     driver-oracled presentations: ``current_changepoint()`` re-derives
@@ -409,21 +462,13 @@ class IncrementalDailyRevenueMaintainer:
     order can differ either: the partials are already integers)."""
 
     _SCHEMA = "d TIMESTAMP, cents BIGINT"
+    _KEYS = ("d",)
 
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
-
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self.state.guard(batch_id)
-        delta = (batch_df
-                 .groupBy(F.col("o_orderdate").alias("d"))
-                 .agg(F.sum(F.round(F.col("o_totalprice") * 100, 0)
-                            .cast("long")).cast("long").alias("cents")))
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = (merged.groupBy("d")
-                  .agg(F.sum("cents").cast("long").alias("cents")))
-        self.state.write(batch_id, merged)
+    def delta(self, batch_df: DataFrame) -> DataFrame:
+        return (batch_df
+                .groupBy(F.col("o_orderdate").alias("d"))
+                .agg(F.sum(F.round(F.col("o_totalprice") * 100, 0)
+                           .cast("long")).cast("long").alias("cents")))
 
     def current_changepoint(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.analytics import (
@@ -438,7 +483,7 @@ class IncrementalDailyRevenueMaintainer:
         return backtest_from_daily(self.state.current())
 
 
-class IncrementalUserSpendMaintainer:
+class IncrementalUserSpendMaintainer(_PartialMaintainer):
     """Maintains per-user spend partials; ONE user-space-bounded state
     serves the whole spend-statistics family: ``current_gini()``,
     ``current_welch()`` and ``current_mannwhitney()`` re-derive the
@@ -451,19 +496,10 @@ class IncrementalUserSpendMaintainer:
     the batch entries' own groupBy sums hash-stable."""
 
     _SCHEMA = "user_id BIGINT, _sum DOUBLE"
+    _KEYS = ("user_id",)
 
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
-
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self.state.guard(batch_id)
-        delta = (batch_df.groupBy("user_id")
-                 .agg(F.sum("value").alias("_sum")))
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = (merged.groupBy("user_id")
-                  .agg(F.sum("_sum").alias("_sum")))
-        self.state.write(batch_id, merged)
+    def delta(self, batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("user_id").agg(F.sum("value").alias("_sum"))
 
     def _spend(self) -> DataFrame:
         return self.state.current().select(
@@ -489,7 +525,7 @@ class IncrementalUserSpendMaintainer:
         return mann_whitney_from_spend(self._spend())
 
 
-class IncrementalTokenFrequencyMaintainer:
+class IncrementalTokenFrequencyMaintainer(_PartialMaintainer):
     """Maintains the corpus (token, n) frequency table from a documents
     stream; ``current_heavy_hitters()`` and ``current_zipf()`` re-derive
     the driver-oracled heavy_hitter_tokens / zipf_rank_frequency through
@@ -501,21 +537,13 @@ class IncrementalTokenFrequencyMaintainer:
     (operators/cms.py), trading the exact tail for fixed memory."""
 
     _SCHEMA = "token STRING, n BIGINT"
+    _KEYS = ("token",)
 
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
-
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def delta(self, batch_df: DataFrame) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.llm_pipeline import (
             token_freq_from_docs,
         )
-        self.state.guard(batch_id)
-        delta = token_freq_from_docs(batch_df)
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = (merged.groupBy("token")
-                  .agg(F.sum("n").cast("long").alias("n")))
-        self.state.write(batch_id, merged)
+        return token_freq_from_docs(batch_df)
 
     def current_heavy_hitters(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.llm_pipeline import (
@@ -530,7 +558,7 @@ class IncrementalTokenFrequencyMaintainer:
         return zipf_from_freq(self.state.current())
 
 
-class IncrementalTableStatsMaintainer:
+class IncrementalTableStatsMaintainer(_PartialMaintainer):
     """Streaming twin of ``orders_column_ndv_kmv`` — maintainer #10, the
     ANALYZE-TABLE state: per-column exact row/null counters, typed
     min/max, and the k-min set of distinct value hashes (KMV). Every
@@ -551,19 +579,20 @@ class IncrementalTableStatsMaintainer:
         from windowsession_using_kafka_flink_docker_spark.plans.relational import (
             KMV_STATS_STATE_SCHEMA,
         )
-        self.state = _VersionedState(spark, state_dir,
-                                     KMV_STATS_STATE_SCHEMA)
+        self._SCHEMA = KMV_STATS_STATE_SCHEMA
+        super().__init__(spark, state_dir)
 
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def delta(self, batch_df: DataFrame) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.relational import (
-            kmin_merge_agg,
             orders_kmv_state,
         )
-        self.state.guard(batch_id)
-        delta = orders_kmv_state(batch_df)
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = merged.groupBy("column_name").agg(
+        return orders_kmv_state(batch_df)
+
+    def merge(self, partials: DataFrame) -> DataFrame:
+        from windowsession_using_kafka_flink_docker_spark.plans.relational import (
+            kmin_merge_agg,
+        )
+        return partials.groupBy("column_name").agg(
             F.sum("n_rows").cast("long").alias("n_rows"),
             F.sum("n_nulls").cast("long").alias("n_nulls"),
             F.min("min_num").alias("min_num"),
@@ -571,7 +600,6 @@ class IncrementalTableStatsMaintainer:
             F.min("min_str").alias("min_str"),
             F.max("max_str").alias("max_str"),
             kmin_merge_agg())
-        self.state.write(batch_id, merged)
 
     def current(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.relational import (
@@ -580,65 +608,7 @@ class IncrementalTableStatsMaintainer:
         return ndv_report_from_kmv_state(self.state.current())
 
 
-def _maintenance_stream(events: DataFrame, maintainer, checkpoint_dir: str,
-                        query_name: str) -> StreamingQuery:
-    return (events.writeStream
-            .queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(maintainer.merge_batch)
-            .start())
-
-
-def streaming_ewma_maintenance(
-        events: DataFrame, maintainer: IncrementalEwmaMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(events, maintainer, checkpoint_dir,
-                               "ewma_maintenance")
-
-
-def streaming_drift_maintenance(
-        events: DataFrame, maintainer: IncrementalDriftMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(events, maintainer, checkpoint_dir,
-                               "drift_maintenance")
-
-
-def streaming_ledger_maintenance(
-        events: DataFrame, maintainer: IncrementalLedgerMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(events, maintainer, checkpoint_dir,
-                               "ledger_maintenance")
-
-
-def streaming_daily_revenue_maintenance(
-        orders: DataFrame, maintainer: IncrementalDailyRevenueMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(orders, maintainer, checkpoint_dir,
-                               "daily_revenue_maintenance")
-
-
-def streaming_user_spend_maintenance(
-        events: DataFrame, maintainer: IncrementalUserSpendMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(events, maintainer, checkpoint_dir,
-                               "user_spend_maintenance")
-
-
-def streaming_token_frequency_maintenance(
-        docs: DataFrame, maintainer: IncrementalTokenFrequencyMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(docs, maintainer, checkpoint_dir,
-                               "token_frequency_maintenance")
-
-
-def streaming_table_stats_maintenance(
-        orders: DataFrame, maintainer: IncrementalTableStatsMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(orders, maintainer, checkpoint_dir,
-                               "table_stats_maintenance")
-
-
-class IncrementalContingencyMaintainer:
+class IncrementalContingencyMaintainer(_PartialMaintainer):
     """Streaming twin of ``cramers_v_status_priority`` — maintainer #11,
     the R x C contingency state: one exact BIGINT count per observed
     (o_orderstatus, o_orderpriority) cell, so state is bounded by the
@@ -652,20 +622,11 @@ class IncrementalContingencyMaintainer:
     batch is one code path, never a parallel implementation."""
 
     _SCHEMA = "o_orderstatus STRING, o_orderpriority STRING, n BIGINT"
+    _KEYS = ("o_orderstatus", "o_orderpriority")
 
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
-
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self.state.guard(batch_id)
-        delta = (batch_df
-                 .groupBy("o_orderstatus", "o_orderpriority")
-                 .agg(F.count(F.lit(1)).cast("long").alias("n")))
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = (merged.groupBy("o_orderstatus", "o_orderpriority")
-                  .agg(F.sum("n").cast("long").alias("n")))
-        self.state.write(batch_id, merged)
+    def delta(self, batch_df: DataFrame) -> DataFrame:
+        return (batch_df.groupBy(*self._KEYS)
+                .agg(F.count(F.lit(1)).cast("long").alias("n")))
 
     def current(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.analytics import (
@@ -674,14 +635,7 @@ class IncrementalContingencyMaintainer:
         return cramers_report_from_cells(self.state.current())
 
 
-def streaming_contingency_maintenance(
-        orders: DataFrame, maintainer: IncrementalContingencyMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(orders, maintainer, checkpoint_dir,
-                               "contingency_maintenance")
-
-
-class IncrementalHhiMaintainer:
+class IncrementalHhiMaintainer(_PartialMaintainer):
     """Streaming twin of ``supplier_hhi_by_parttype`` — maintainer #12,
     the market-concentration state: one exact BIGINT quantity partial
     per (p_type, l_suppkey) pair, so state is bounded by |types| x
@@ -696,23 +650,18 @@ class IncrementalHhiMaintainer:
     are bit-identical to the batch aggregate under any interleaving."""
 
     _SCHEMA = "p_type STRING, l_suppkey BIGINT, q BIGINT"
+    _KEYS = ("p_type", "l_suppkey")
 
     def __init__(self, spark: SparkSession, state_dir: str,
                  part: DataFrame):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
+        super().__init__(spark, state_dir)
         self.part = part.select("p_partkey", "p_type")
 
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def delta(self, batch_df: DataFrame) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.relational import (
             hhi_qty_partials,
         )
-        self.state.guard(batch_id)
-        delta = hhi_qty_partials(batch_df, self.part)
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = (merged.groupBy("p_type", "l_suppkey")
-                  .agg(F.sum("q").cast("long").alias("q")))
-        self.state.write(batch_id, merged)
+        return hhi_qty_partials(batch_df, self.part)
 
     def current(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.relational import (
@@ -721,14 +670,7 @@ class IncrementalHhiMaintainer:
         return hhi_report_from_qty(self.state.current())
 
 
-def streaming_hhi_maintenance(
-        lineitem: DataFrame, maintainer: IncrementalHhiMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(lineitem, maintainer, checkpoint_dir,
-                               "hhi_maintenance")
-
-
-class IncrementalSourceMixMaintainer:
+class IncrementalSourceMixMaintainer(_PartialMaintainer):
     """Streaming twin of ``source_mix_report`` — maintainer #13, the
     RefinedWeb-style domain-mix state: per-(source, lang) doc and token
     counts, so state is bounded by |sources| x |langs| regardless of
@@ -742,35 +684,19 @@ class IncrementalSourceMixMaintainer:
     the same exact integers either way)."""
 
     _SCHEMA = "source STRING, lang STRING, n_docs BIGINT, n_tokens BIGINT"
+    _KEYS = ("source", "lang")
 
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
-
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def delta(self, batch_df: DataFrame) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.curation import (
             source_mix_partials,
         )
-        self.state.guard(batch_id)
-        delta = source_mix_partials(batch_df)
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = (merged.groupBy("source", "lang")
-                  .agg(F.sum("n_docs").cast("long").alias("n_docs"),
-                       F.sum("n_tokens").cast("long").alias("n_tokens")))
-        self.state.write(batch_id, merged)
+        return source_mix_partials(batch_df)
 
     def current(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.curation import (
             source_mix_from_partials,
         )
         return source_mix_from_partials(self.state.current())
-
-
-def streaming_source_mix_maintenance(
-        docs: DataFrame, maintainer: IncrementalSourceMixMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(docs, maintainer, checkpoint_dir,
-                               "source_mix_maintenance")
 
 
 class BoundedTokenFrequencyMaintainer:
@@ -859,14 +785,7 @@ class BoundedTokenFrequencyMaintainer:
         return heavy_hitters_from_freq(self.cand.current())
 
 
-def streaming_bounded_token_frequency_maintenance(
-        docs: DataFrame, maintainer: BoundedTokenFrequencyMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(docs, maintainer, checkpoint_dir,
-                               "bounded_token_frequency_maintenance")
-
-
-class BoundedQuantileMaintainer:
+class BoundedQuantileMaintainer(_PartialMaintainer):
     """Streaming maintainer #15 — mergeable quantile state, the
     bounded-memory sibling of the exact-median entries and the streaming
     half of the driver-oracled ``sampled_median_audit``: per order
@@ -890,22 +809,22 @@ class BoundedQuantileMaintainer:
         from windowsession_using_kafka_flink_docker_spark.plans.relational import (
             PRICE_SAMPLE_STATE_SCHEMA,
         )
-        self.state = _VersionedState(spark, state_dir,
-                                     PRICE_SAMPLE_STATE_SCHEMA)
+        self._SCHEMA = PRICE_SAMPLE_STATE_SCHEMA
+        super().__init__(spark, state_dir)
 
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def delta(self, batch_df: DataFrame) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.relational import (
             orders_price_sample_state,
+        )
+        return orders_price_sample_state(batch_df)
+
+    def merge(self, partials: DataFrame) -> DataFrame:
+        from windowsession_using_kafka_flink_docker_spark.plans.relational import (
             price_sample_merge_agg,
         )
-        self.state.guard(batch_id)
-        delta = orders_price_sample_state(batch_df)
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = merged.groupBy("o_orderpriority").agg(
+        return partials.groupBy("o_orderpriority").agg(
             F.sum("n_orders").cast("long").alias("n_orders"),
             price_sample_merge_agg())
-        self.state.write(batch_id, merged)
 
     def current(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.relational import (
@@ -914,14 +833,7 @@ class BoundedQuantileMaintainer:
         return median_report_from_price_sample_state(self.state.current())
 
 
-def streaming_quantile_maintenance(
-        orders: DataFrame, maintainer: BoundedQuantileMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(orders, maintainer, checkpoint_dir,
-                               "quantile_maintenance")
-
-
-class IncrementalSetMembershipMaintainer:
+class IncrementalSetMembershipMaintainer(_PartialMaintainer):
     """Streaming maintainer #16 — the epoch set-membership state behind
     the driver-oracled ``kmv_set_difference_audit``: one (in_a, in_b)
     bit-pair per customer that has ordered in either epoch. Bits OR
@@ -944,21 +856,16 @@ class IncrementalSetMembershipMaintainer:
 
     _SCHEMA = "o_custkey BIGINT, in_a INT, in_b INT"
 
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
-
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def delta(self, batch_df: DataFrame) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.relational import (
             order_epoch_membership,
         )
-        self.state.guard(batch_id)
-        delta = order_epoch_membership(batch_df)
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = merged.groupBy("o_custkey").agg(
+        return order_epoch_membership(batch_df)
+
+    def merge(self, partials: DataFrame) -> DataFrame:
+        return partials.groupBy("o_custkey").agg(
             F.max("in_a").cast("int").alias("in_a"),
             F.max("in_b").cast("int").alias("in_b"))
-        self.state.write(batch_id, merged)
 
     def current(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.relational import (
@@ -967,14 +874,7 @@ class IncrementalSetMembershipMaintainer:
         return set_difference_report_from_membership(self.state.current())
 
 
-def streaming_set_membership_maintenance(
-        orders: DataFrame, maintainer: IncrementalSetMembershipMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(orders, maintainer, checkpoint_dir,
-                               "set_membership_maintenance")
-
-
-class IncrementalRankTestMaintainer:
+class IncrementalRankTestMaintainer(_PartialMaintainer):
     """Streaming maintainer #17 — the rank-test family's state behind
     the driver-oracled ``bh_fdr_segment_spend``: per-(segment, arm,
     cents) exact order counts. A rank test naively needs the full spend
@@ -996,25 +896,20 @@ class IncrementalRankTestMaintainer:
     its own user-bounded state in IncrementalUserSpendMaintainer."""
 
     _SCHEMA = "seg STRING, arm STRING, cents BIGINT, cnt BIGINT"
+    _KEYS = ("seg", "arm", "cents")
 
     def __init__(self, spark: SparkSession, state_dir: str,
                  customer: DataFrame):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
+        super().__init__(spark, state_dir)
         self.customer = customer
 
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def delta(self, batch_df: DataFrame) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.analytics import (
             armed_rank_counts,
             armed_segment_spend,
         )
-        self.state.guard(batch_id)
-        delta = armed_rank_counts(
+        return armed_rank_counts(
             armed_segment_spend(batch_df, self.customer))
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = merged.groupBy("seg", "arm", "cents").agg(
-            F.sum("cnt").cast("long").alias("cnt"))
-        self.state.write(batch_id, merged)
 
     def current(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.analytics import (
@@ -1024,14 +919,7 @@ class IncrementalRankTestMaintainer:
                 .withColumnRenamed("seg", "c_mktsegment"))
 
 
-def streaming_rank_test_maintenance(
-        orders: DataFrame, maintainer: IncrementalRankTestMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(orders, maintainer, checkpoint_dir,
-                               "rank_test_maintenance")
-
-
-class IncrementalOrderCountMaintainer:
+class IncrementalOrderCountMaintainer(_PartialMaintainer):
     """Streaming maintainer #18 — the per-customer order-count state
     behind the driver-oracled ``q13_customer_order_distribution`` (the
     LEFT-OUTER double-aggregation classic): one exact BIGINT order
@@ -1048,23 +936,18 @@ class IncrementalOrderCountMaintainer:
     restores it exactly."""
 
     _SCHEMA = "o_custkey BIGINT, n_orders BIGINT"
+    _KEYS = ("o_custkey",)
 
     def __init__(self, spark: SparkSession, state_dir: str,
                  customer: DataFrame):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
+        super().__init__(spark, state_dir)
         self.customer = customer
 
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def delta(self, batch_df: DataFrame) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.analytics import (
             order_counts_per_customer,
         )
-        self.state.guard(batch_id)
-        delta = order_counts_per_customer(batch_df)
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = merged.groupBy("o_custkey").agg(
-            F.sum("n_orders").cast("long").alias("n_orders"))
-        self.state.write(batch_id, merged)
+        return order_counts_per_customer(batch_df)
 
     def current(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.analytics import (
@@ -1074,14 +957,7 @@ class IncrementalOrderCountMaintainer:
                                               self.state.current())
 
 
-def streaming_order_count_maintenance(
-        orders: DataFrame, maintainer: IncrementalOrderCountMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(orders, maintainer, checkpoint_dir,
-                               "order_count_maintenance")
-
-
-class IncrementalProfitMaintainer:
+class IncrementalProfitMaintainer(_PartialMaintainer):
     """Streaming maintainer #19 — the Q9-profit state behind the
     driver-oracled ``q9_product_type_profit``: per-(supplier nation,
     order year) exact e-4 profit partials, bounded by |nations| x
@@ -1099,41 +975,29 @@ class IncrementalProfitMaintainer:
     co-partitioned on orderkey."""
 
     _SCHEMA = "n_name STRING, o_year BIGINT, profit_e4 BIGINT"
+    _KEYS = ("n_name", "o_year")
 
     def __init__(self, spark: SparkSession, state_dir: str,
                  part: DataFrame, supplier: DataFrame, nation: DataFrame,
                  orders: DataFrame):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
+        super().__init__(spark, state_dir)
         self.part = part
         self.supplier = supplier
         self.nation = nation
         self.orders = orders
 
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def delta(self, batch_df: DataFrame) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.analytics import (
             q9_profit_partials,
         )
-        self.state.guard(batch_id)
-        delta = q9_profit_partials(batch_df, self.part, self.supplier,
-                                   self.nation, self.orders)
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = merged.groupBy("n_name", "o_year").agg(
-            F.sum("profit_e4").cast("long").alias("profit_e4"))
-        self.state.write(batch_id, merged)
+        return q9_profit_partials(batch_df, self.part, self.supplier,
+                                  self.nation, self.orders)
 
     def current(self) -> DataFrame:
         return self.state.current()
 
 
-def streaming_profit_maintenance(
-        lineitem: DataFrame, maintainer: IncrementalProfitMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(lineitem, maintainer, checkpoint_dir,
-                               "profit_maintenance")
-
-
-class IncrementalTrendMaintainer:
+class IncrementalTrendMaintainer(_PartialMaintainer):
     """Streaming maintainer #20 — the per-user OLS-trend state behind
     the driver-oracled ``grouped_ols_trend``: the per-(user, day-index)
     daily spend grid, bounded by |users| x |days| at ANY event volume.
@@ -1153,30 +1017,22 @@ class IncrementalTrendMaintainer:
     (r12 ADVICE)."""
 
     _SCHEMA = "user_id BIGINT, x INT, y BIGINT"
+    _KEYS = ("user_id", "x")
 
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
-
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def delta(self, batch_df: DataFrame) -> DataFrame:
         # Quantize each event to integer cents BEFORE any summation
         # (r12 ADVICE: float partial sums merged by float addition can
         # flip the round-to-cents at half-cent boundaries under an
         # adversarial interleaving; BIGINT cents ADD exactly in any
         # order). Same expression as the batch path's ols_daily_grid —
         # one cents semantic, two engines.
-        self.state.guard(batch_id)
-        delta = (batch_df
-                 .groupBy("user_id",
-                          F.datediff(F.to_date("ts"),
-                                     F.lit("2024-01-01").cast("date"))
-                          .alias("x"))
-                 .agg(F.sum(F.round(F.col("value") * 100, 0).cast("long"))
-                      .cast("long").alias("y")))
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = (merged.groupBy("user_id", "x")
-                  .agg(F.sum("y").cast("long").alias("y")))
-        self.state.write(batch_id, merged)
+        return (batch_df
+                .groupBy("user_id",
+                         F.datediff(F.to_date("ts"),
+                                    F.lit("2024-01-01").cast("date"))
+                         .alias("x"))
+                .agg(F.sum(F.round(F.col("value") * 100, 0).cast("long"))
+                     .cast("long").alias("y")))
 
     def _daily(self) -> DataFrame:
         return self.state.current().select("user_id", "x", "y")
@@ -1213,14 +1069,7 @@ class IncrementalTrendMaintainer:
         return mann_kendall_report_from_daily(self._daily())
 
 
-def streaming_trend_maintenance(
-        events: DataFrame, maintainer: IncrementalTrendMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(events, maintainer, checkpoint_dir,
-                               "trend_maintenance")
-
-
-class IncrementalCupedMaintainer:
+class IncrementalCupedMaintainer(_PartialMaintainer):
     """Streaming maintainer #21 — the CUPED unit grid behind the
     driver-oracled ``cuped_adjusted_ab``: per-customer exact pre-period
     (1996) and post-period (1997) spend cents, bounded by the CUSTOMER
@@ -1235,22 +1084,13 @@ class IncrementalCupedMaintainer:
     presentation, never state)."""
 
     _SCHEMA = "custkey BIGINT, x BIGINT, y BIGINT"
+    _KEYS = ("custkey",)
 
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
-
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def delta(self, batch_df: DataFrame) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.analytics import (
             cuped_units,
         )
-        self.state.guard(batch_id)
-        delta = cuped_units(batch_df)
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = (merged.groupBy("custkey")
-                  .agg(F.sum("x").cast("long").alias("x"),
-                       F.sum("y").cast("long").alias("y")))
-        self.state.write(batch_id, merged)
+        return cuped_units(batch_df)
 
     def current(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.analytics import (
@@ -1259,14 +1099,7 @@ class IncrementalCupedMaintainer:
         return cuped_report_from_units(self.state.current())
 
 
-def streaming_cuped_maintenance(
-        orders: DataFrame, maintainer: IncrementalCupedMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(orders, maintainer, checkpoint_dir,
-                               "cuped_maintenance")
-
-
-class IncrementalFeatureMomentsMaintainer:
+class IncrementalFeatureMomentsMaintainer(_PartialMaintainer):
     """Streaming maintainer #22 — the per-bucket feature-moment state
     behind the driver-oracled ``feature_bucket_moments``: count / sum /
     sum-of-squares of the hashed-feature matrix's non-zero cells per
@@ -1284,23 +1117,13 @@ class IncrementalFeatureMomentsMaintainer:
     (one code path)."""
 
     _SCHEMA = "bucket INT, n BIGINT, s BIGINT, ss DECIMAL(38,0)"
+    _KEYS = ("bucket",)
 
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
-
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def delta(self, batch_df: DataFrame) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.llm_pipeline import (
             feature_bucket_partials,
         )
-        self.state.guard(batch_id)
-        delta = feature_bucket_partials(batch_df)
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = (merged.groupBy("bucket")
-                  .agg(F.sum("n").cast("long").alias("n"),
-                       F.sum("s").cast("long").alias("s"),
-                       F.sum("ss").cast("decimal(38,0)").alias("ss")))
-        self.state.write(batch_id, merged)
+        return feature_bucket_partials(batch_df)
 
     def current(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.llm_pipeline import (
@@ -1309,14 +1132,7 @@ class IncrementalFeatureMomentsMaintainer:
         return feature_moments_from_matrix(self.state.current())
 
 
-def streaming_feature_moments_maintenance(
-        docs: DataFrame, maintainer: IncrementalFeatureMomentsMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(docs, maintainer, checkpoint_dir,
-                               "feature_moments_maintenance")
-
-
-class IncrementalJpegFingerprintMaintainer:
+class IncrementalJpegFingerprintMaintainer(_PartialMaintainer):
     """Streaming maintainer #23 — the JPEG aHash chunk-bucket membership
     state behind the driver-oracled ``jpeg_hamming_neardups`` (the first
     incremental twin in the multimodal family): per document, the four
@@ -1335,19 +1151,14 @@ class IncrementalJpegFingerprintMaintainer:
     _SCHEMA = ("doc_id BIGINT, hash_hi BIGINT, hash_lo BIGINT, "
                "pos INT, chunk STRING")
 
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
-
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def delta(self, batch_df: DataFrame) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.llm_pipeline import (
             jpeg_fingerprint_sides,
         )
-        self.state.guard(batch_id)
-        delta = jpeg_fingerprint_sides(batch_df)
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = merged.dropDuplicates(["doc_id", "pos"])
-        self.state.write(batch_id, merged)
+        return jpeg_fingerprint_sides(batch_df)
+
+    def merge(self, partials: DataFrame) -> DataFrame:
+        return partials.dropDuplicates(["doc_id", "pos"])
 
     def current(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.llm_pipeline import (
@@ -1356,15 +1167,8 @@ class IncrementalJpegFingerprintMaintainer:
         return hamming_pairs_from_sides(self.state.current())
 
 
-def streaming_jpeg_fingerprint_maintenance(
-        docs: DataFrame, maintainer: IncrementalJpegFingerprintMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(docs, maintainer, checkpoint_dir,
-                               "jpeg_fingerprint_maintenance")
-
-
-class IncrementalHllMaintainer:
-    """Streaming twin of the (staged) ``hll_ndv_by_event_type`` batch
+class IncrementalHllMaintainer(_PartialMaintainer):
+    """Streaming twin of the ``hll_ndv_by_event_type`` batch
     audit — maintainer #27: the per-(event_type, bucket) HyperLogLog
     REGISTER state kept live. This is the textbook mergeable sketch:
     registers merge by per-bucket MAX, which is commutative, idempotent
@@ -1387,20 +1191,15 @@ class IncrementalHllMaintainer:
 
     _SCHEMA = "event_type STRING, _b BIGINT, _r INT"
 
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.state = _VersionedState(spark, state_dir, self._SCHEMA)
-
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def delta(self, batch_df: DataFrame) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.operators.hll import (
             hll_registers,
         )
-        self.state.guard(batch_id)
-        delta = hll_registers(batch_df)
-        prev = self.state.latest_before(batch_id)
-        merged = (prev.unionByName(delta) if prev is not None else delta)
-        merged = (merged.groupBy("event_type", "_b")
-                  .agg(F.max("_r").alias("_r")))
-        self.state.write(batch_id, merged)
+        return hll_registers(batch_df)
+
+    def merge(self, partials: DataFrame) -> DataFrame:
+        return (partials.groupBy("event_type", "_b")
+                .agg(F.max("_r").alias("_r")))
 
     def current(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.operators.hll import (
@@ -1409,15 +1208,8 @@ class IncrementalHllMaintainer:
         return hll_fold(self.state.current())
 
 
-def streaming_hll_maintenance(
-        events: DataFrame, maintainer: IncrementalHllMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(events, maintainer, checkpoint_dir,
-                               "hll_maintenance")
-
-
 class IncrementalPackingMaintainer:
-    """Streaming twin of the (staged) ``token_budget_packing`` batch
+    """Streaming twin of the ``token_budget_packing`` batch
     entry — maintainer #28: training-sequence bins maintained as
     documents arrive, history never re-packed. Only a shard's LAST bin
     is open (the greedy fold's accumulator IS that bin's token total),
@@ -1508,38 +1300,20 @@ class IncrementalPackingMaintainer:
         return self.state.current()
 
 
-def streaming_packing_maintenance(
-        docs: DataFrame, maintainer: IncrementalPackingMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return _maintenance_stream(docs, maintainer, checkpoint_dir,
-                               "packing_maintenance")
-
-
 __all__ = [
+    "streaming_maintenance",
     "IncrementalFeatureMomentsMaintainer",
-    "streaming_feature_moments_maintenance",
     "IncrementalCupedMaintainer",
-    "streaming_cuped_maintenance",
     "IncrementalTrendMaintainer",
-    "streaming_trend_maintenance",
     "IncrementalProfitMaintainer",
-    "streaming_profit_maintenance",
     "IncrementalOrderCountMaintainer",
-    "streaming_order_count_maintenance",
     "IncrementalRankTestMaintainer",
-    "streaming_rank_test_maintenance",
     "BoundedQuantileMaintainer",
     "BoundedTokenFrequencyMaintainer",
     "IncrementalContingencyMaintainer",
     "IncrementalHhiMaintainer",
     "IncrementalSetMembershipMaintainer",
     "IncrementalSourceMixMaintainer",
-    "streaming_bounded_token_frequency_maintenance",
-    "streaming_quantile_maintenance",
-    "streaming_set_membership_maintenance",
-    "streaming_contingency_maintenance",
-    "streaming_hhi_maintenance",
-    "streaming_source_mix_maintenance",
     "IncrementalDailyRevenueMaintainer",
     "IncrementalEwmaMaintainer",
     "IncrementalUserSpendMaintainer",
@@ -1547,17 +1321,7 @@ __all__ = [
     "IncrementalLedgerMaintainer",
     "IncrementalTableStatsMaintainer",
     "IncrementalTokenFrequencyMaintainer",
-    "streaming_daily_revenue_maintenance",
-    "streaming_table_stats_maintenance",
-    "streaming_ewma_maintenance",
-    "streaming_token_frequency_maintenance",
-    "streaming_user_spend_maintenance",
-    "streaming_drift_maintenance",
-    "streaming_ledger_maintenance",
     "IncrementalJpegFingerprintMaintainer",
-    "streaming_jpeg_fingerprint_maintenance",
     "IncrementalHllMaintainer",
-    "streaming_hll_maintenance",
     "IncrementalPackingMaintainer",
-    "streaming_packing_maintenance",
 ]

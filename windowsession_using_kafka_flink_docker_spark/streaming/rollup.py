@@ -30,125 +30,45 @@ state generalized to a queryable maintained table.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql import DataFrame
 
 from windowsession_using_kafka_flink_docker_spark.operators.rollup import (
     ROLLUP_KEYS,
-    rollup_merge,
     rollup_partials,
     rollup_present,
     with_day,
 )
+from windowsession_using_kafka_flink_docker_spark.streaming.analytics_twins import (
+    _PartialMaintainer,
+)
 
-_STATE_SCHEMA = ("event_type STRING, day STRING, "
-                 "n_events BIGINT, _sum DOUBLE")
 
+class IncrementalRollupMaintainer(_PartialMaintainer):
+    """Owns the versioned rollup state under ``state_dir``
+    (``_VersionedState`` layout). Each micro-batch reduces to
+    ``rollup_partials``; the merge sums ``n_events``/``_sum`` per
+    ``ROLLUP_KEYS`` — the ``rollup_merge`` algebra. Replay-safe: state
+    input is the newest version STRICTLY below ``batch_id``, so a
+    re-delivered batch recomputes v{batch_id} from the same base instead
+    of double-counting itself."""
 
-class IncrementalRollupMaintainer:
-    """Owns the versioned rollup state under ``state_dir``.
+    _SCHEMA = ("event_type STRING, day STRING, "
+               "n_events BIGINT, _sum DOUBLE")
+    _KEYS = ROLLUP_KEYS
 
-    Layout: ``state_dir/v=<batch_id>/`` parquet dirs; the newest version
-    is the current state. No pointer file is needed — max(version) is the
-    pointer, and an interrupted write of v{N} is re-done wholesale on
-    replay of batch N (parquet overwrite), so readers taking max(version
-    with _SUCCESS) never observe a torn state.
-    """
-
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.spark = spark
-        self.state_dir = state_dir
-        os.makedirs(state_dir, exist_ok=True)
-
-    def _versions(self) -> list[int]:
-        out = []
-        for name in os.listdir(self.state_dir):
-            if name.startswith("v=") and os.path.exists(
-                    os.path.join(self.state_dir, name, "_SUCCESS")):
-                out.append(int(name[2:]))
-        return sorted(out)
-
-    def _read_version(self, version: int) -> DataFrame:
-        return self.spark.read.schema(_STATE_SCHEMA).parquet(
-            os.path.join(self.state_dir, f"v={version}"))
+    def delta(self, batch_df: DataFrame) -> DataFrame:
+        return rollup_partials(with_day(batch_df))
 
     def current_partials(self) -> DataFrame:
         """The maintained state (partials); empty frame before batch 0."""
-        versions = self._versions()
-        if not versions:
-            return self.spark.createDataFrame([], _STATE_SCHEMA)
-        return self._read_version(versions[-1])
+        return self.state.current()
 
     def current(self) -> DataFrame:
         """The rollup as consumers see it (rounded presentation edge)."""
         return rollup_present(self.current_partials())
 
-    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook: MERGE one micro-batch into the state.
-
-        Replay-safe: state input is the newest version STRICTLY below
-        ``batch_id``, so a re-delivered batch recomputes v{batch_id} from
-        the same base instead of double-counting itself.
-        """
-        versions = self._versions()
-        if versions and versions[-1] > batch_id:
-            # A fresh checkpoint dir (batch ids restart at 0) against an
-            # existing state_dir would silently rebase on nothing while
-            # _versions() keeps serving the old run's higher-numbered
-            # state. The two directories' lifecycles are coupled: wipe
-            # both or keep both. (batch_id == newest version is legal —
-            # that is exactly the replay-after-crash case.)
-            raise ValueError(
-                f"rollup state_dir {self.state_dir} already holds version "
-                f"v={versions[-1]} > incoming batch_id {batch_id}; "
-                "checkpoint_dir and state_dir must be reset together")
-        delta = rollup_partials(with_day(batch_df))
-        base_versions = [v for v in versions if v < batch_id]
-        if base_versions:
-            merged = rollup_merge(self._read_version(base_versions[-1]), delta)
-        else:
-            merged = delta.select("event_type", "day", "n_events", "_sum")
-        target = os.path.join(self.state_dir, f"v={batch_id}")
-        # Key-space-bounded output: coalesce keeps the state one file per
-        # version locally; production partitions by day instead.
-        merged.coalesce(1).write.mode("overwrite").parquet(target)
-        self._prune(keep_from=batch_id - 1)
-
-    def _prune(self, keep_from: int) -> None:
-        """Drop versions below ``keep_from`` — a 24/7 stream must not
-        accumulate one full state copy per micro-batch. Replay safety
-        needs only the newest version strictly below any batch that can
-        re-run, and the engine never re-delivers batches older than the
-        last committed one — keeping current + previous suffices."""
-        import shutil
-
-        for v in self._versions():
-            if v < keep_from:
-                shutil.rmtree(os.path.join(self.state_dir, f"v={v}"),
-                              ignore_errors=True)
-
-
-def streaming_rollup_maintenance(
-    events: DataFrame, maintainer: IncrementalRollupMaintainer,
-    checkpoint_dir: str, query_name: str = "rollup_maintenance",
-) -> StreamingQuery:
-    """Wire an events stream (ts, event_type, value, …) into the
-    maintainer. Update-less sink: all state lives in the maintainer's
-    versioned table, so the stream needs no watermark and emits nothing —
-    aggregation happens inside foreachBatch, set-at-a-time per batch."""
-    return (
-        events.writeStream
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(maintainer.merge_batch)
-        .start()
-    )
-
 
 __all__ = [
     "IncrementalRollupMaintainer",
-    "streaming_rollup_maintenance",
     "ROLLUP_KEYS",
 ]

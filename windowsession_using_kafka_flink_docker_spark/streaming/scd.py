@@ -24,7 +24,6 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from windowsession_using_kafka_flink_docker_spark.operators.scd import scd2_apply
 
@@ -117,18 +116,6 @@ class Scd2DimensionMaintainer:
                               ignore_errors=True)
 
 
-def streaming_scd2_maintenance(
-    changes: DataFrame, maintainer: Scd2DimensionMaintainer,
-    checkpoint_dir: str, query_name: str = "scd2_maintenance",
-) -> StreamingQuery:
-    """Wire a change-row stream into the maintainer (foreachBatch)."""
-    return (
-        changes.writeStream
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(maintainer.merge_batch)
-        .start()
-    )
 
 
-__all__ = ["Scd2DimensionMaintainer", "streaming_scd2_maintenance"]
+__all__ = ["Scd2DimensionMaintainer"]

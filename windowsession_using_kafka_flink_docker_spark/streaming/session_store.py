@@ -66,7 +66,6 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from windowsession_using_kafka_flink_docker_spark.operators.session_store import (
     merge_session_store,
@@ -535,12 +534,3 @@ class IncrementalSessionStoreMaintainer:
                                 os.path.join(self._frozen_dir(), leaf))
         return v
 
-
-def streaming_session_store_maintenance(
-        events: DataFrame, maintainer: IncrementalSessionStoreMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return (events.writeStream
-            .queryName("session_store_maintenance")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(maintainer.merge_batch)
-            .start())

@@ -29,7 +29,6 @@ this operator trades that for semantics they cannot express.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -86,6 +85,41 @@ def _emit(closed: list[tuple[int, int, int, int, int]]) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=list(_OUT_COLS))
 
 
+def _sorted_batch(pdfs: Iterator[pd.DataFrame], ts: str,
+                  value: str) -> tuple[list[int], list[int]]:
+    """One key's micro-batch rows, event-time sorted, as (µs, cents)."""
+    batch = pd.concat(list(pdfs)).sort_values(ts)
+    return ([int(pd.Timestamp(v).value // 1_000) for v in batch[ts]],
+            [_cents(float(v)) for v in batch[value]])
+
+
+def capped_fold(user_id: int, cur: tuple[int, ...] | None,
+                ts_us: list[int], cents: list[int], gap_us: int,
+                cap_us: int) -> tuple[list[tuple[int, int, int, int, int]],
+                                      tuple[int, ...] | None]:
+    """Fold one key's sorted micro-batch into its open segment.
+
+    ``cur`` is the STATE_SCHEMA tuple (or None for a new key). Returns
+    the segments the batch closed — ``(user_id, s0, s1, cents, count)``
+    — and the new open segment. Pure, so the applyInPandasWithState and
+    transformWithStateInPandas renderings share one definition."""
+    closed: list[tuple[int, int, int, int, int]] = []
+    for t, c in zip(ts_us, cents):
+        if cur is None:
+            cur = (t, 0, t, t, c, 1)
+            continue
+        gs0, seg, s0, s1, sc, scnt = cur
+        if t - s1 > gap_us:                      # inactivity gap: new gap session
+            closed.append((user_id, s0, s1, sc, scnt))
+            cur = (t, 0, t, t, c, 1)
+        elif (t - gs0) // cap_us != seg:         # duration cap: new segment
+            closed.append((user_id, s0, s1, sc, scnt))
+            cur = (gs0, (t - gs0) // cap_us, t, t, c, 1)
+        else:
+            cur = (gs0, seg, s0, max(s1, t), sc + c, scnt + 1)
+    return closed, cur
+
+
 def make_capped_session_fn(gap_sec: float, cap_sec: float,
                            ts: str = "ts", value: str = "value"):
     gap_us = int(gap_sec * 1_000_000)
@@ -94,9 +128,9 @@ def make_capped_session_fn(gap_sec: float, cap_sec: float,
     def fn(key: tuple, pdfs: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
         user_id = int(key[0])
-        closed: list[tuple[int, int, int, int, int]] = []
 
         if state.hasTimedOut:
+            closed = []
             if state.exists:
                 _gs0, _seg, s0, s1, sc, scnt = state.get
                 closed.append((user_id, s0, s1, sc, scnt))
@@ -104,23 +138,9 @@ def make_capped_session_fn(gap_sec: float, cap_sec: float,
             yield _emit(closed)
             return
 
-        batch = pd.concat(list(pdfs)).sort_values(ts)
-        cur: tuple[Any, ...] | None = state.get if state.exists else None
-        for ts_v, val in zip(batch[ts], batch[value]):
-            t = int(pd.Timestamp(ts_v).value // 1_000)  # ns -> µs
-            c = _cents(float(val))
-            if cur is None:
-                cur = (t, 0, t, t, c, 1)
-                continue
-            gs0, seg, s0, s1, sc, scnt = cur
-            if t - s1 > gap_us:                      # inactivity gap: new gap session
-                closed.append((user_id, s0, s1, sc, scnt))
-                cur = (t, 0, t, t, c, 1)
-            elif (t - gs0) // cap_us != seg:         # duration cap: new segment
-                closed.append((user_id, s0, s1, sc, scnt))
-                cur = (gs0, (t - gs0) // cap_us, t, t, c, 1)
-            else:
-                cur = (gs0, seg, s0, max(s1, t), sc + c, scnt + 1)
+        closed, cur = capped_fold(
+            user_id, state.get if state.exists else None,
+            *_sorted_batch(pdfs, ts, value), gap_us, cap_us)
         if cur is not None:
             state.update(cur)
             # evict once the watermark passes segment end + gap (ms API);
@@ -182,25 +202,10 @@ class CappedSessionProcessor:
         return tuple(self._session.get())
 
     def handleInputRows(self, key, rows, timerValues):
-        user_id = int(key[0])
-        closed: list[tuple[int, int, int, int, int]] = []
-        batch = pd.concat(list(rows)).sort_values(self._ts)
-        cur = self._snapshot()
-        for ts_v, val in zip(batch[self._ts], batch[self._value]):
-            t = int(pd.Timestamp(ts_v).value // 1_000)
-            c = _cents(float(val))
-            if cur is None:
-                cur = (t, 0, t, t, c, 1)
-                continue
-            gs0, seg, s0, s1, sc, scnt = cur
-            if t - s1 > self._gap_us:
-                closed.append((user_id, s0, s1, sc, scnt))
-                cur = (t, 0, t, t, c, 1)
-            elif (t - gs0) // self._cap_us != seg:
-                closed.append((user_id, s0, s1, sc, scnt))
-                cur = (gs0, (t - gs0) // self._cap_us, t, t, c, 1)
-            else:
-                cur = (gs0, seg, s0, max(s1, t), sc + c, scnt + 1)
+        closed, cur = capped_fold(
+            int(key[0]), self._snapshot(),
+            *_sorted_batch(rows, self._ts, self._value),
+            self._gap_us, self._cap_us)
         if cur is not None:
             self._session.update(cur)
             # one live timer per key: replace, don't accumulate
@@ -214,7 +219,7 @@ class CappedSessionProcessor:
         yield _emit(closed)
 
     def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        closed: list[tuple[int, int, int, float, int]] = []
+        closed: list[tuple[int, int, int, int, int]] = []
         cur = self._snapshot()
         if cur is not None:
             # guard against a stale timer racing a newer segment
