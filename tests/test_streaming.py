@@ -600,6 +600,45 @@ class TestStatefulCappedSessions:
         )
         assert len(got) == len(want) and got == want
 
+    def test_half_cent_tie_values_stream_equals_batch(self, spark, tmp_path):
+        """Cents are rounded by the JVM before the stateful operator, with
+        the batch operator's ``CAST(ROUND(value * 100, 0) AS BIGINT)``:
+        values whose double sits at or next to a half cent must give the
+        same sums and averages on both paths. Users 1-3 see every value
+        in one run of events 15 s apart (one gap session, cap-split at
+        120 s); user 4 sees each value alone (one session per value)."""
+        from windowsession_using_kafka_flink_docker_spark.operators.capped_sessionize import (
+            capped_sessionize,
+        )
+        from windowsession_using_kafka_flink_docker_spark.streaming import (
+            streaming_capped_sessionize,
+        )
+
+        ties = [1.005, 2.675, 0.285, 1.115, 0.145, 123456.785]
+        values = ties + [-v for v in ties]
+        t0 = datetime.datetime(2024, 1, 1)
+        rows = []
+        for u in (1, 2, 3):
+            for i in range(len(values)):
+                ts = t0 + datetime.timedelta(seconds=1000 * u + 15 * i)
+                rows.append((str(ts), u, values[(i + u) % len(values)]))
+        for i, v in enumerate(values):
+            rows.append((str(t0 + datetime.timedelta(seconds=5000 + 100 * i)), 4, v))
+        sentinel = [(str(t0 + datetime.timedelta(days=1)), SENTINEL_USER, 0.0)]
+        flat = _serialize_chunks(spark, str(tmp_path), [rows, sentinel])
+
+        stream = streaming_capped_sessionize(_events_stream(spark, flat))
+        q = memory_sink(stream, "stream_capped_ties")
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        got = _rows(spark.table("stream_capped_ties"))
+        want = _rows(capped_sessionize(
+            spark.read.parquet(flat).where(F.col("user_id") != SENTINEL_USER)))
+        assert len(want) == 3 * 2 + len(values)
+        assert got == want
+
     def test_cap_actually_splits_sessions(self, spark, sf_dir):
         """With the cap off (huge), results equal plain gap sessions on the
         real table; on a never-idle key (event every 10 s for 5 min) a 60 s
@@ -626,6 +665,106 @@ class TestStatefulCappedSessions:
         segs = capped_sessionize(bot, cap_sec=60.0).orderBy("session_start").collect()
         assert len(segs) == 5
         assert all(s.event_count == 6 for s in segs)
+
+
+class _StubGroupState:
+    """The slice of ``GroupState`` the capped-session function uses."""
+
+    def __init__(self, value=None, timed_out=False, watermark_ms=0):
+        self._value = value
+        self.hasTimedOut = timed_out
+        self._watermark_ms = watermark_ms
+        self.timeout_ms = None
+
+    @property
+    def exists(self):
+        return self._value is not None
+
+    @property
+    def get(self):
+        return self._value
+
+    def update(self, value):
+        self._value = tuple(value)
+
+    def remove(self):
+        self._value = None
+
+    def setTimeoutTimestamp(self, ms):
+        self.timeout_ms = ms
+
+    def getCurrentWatermarkMs(self):
+        return self._watermark_ms
+
+
+class TestCappedSessionFn:
+    """``make_capped_session_fn`` against a stub state, no Spark: a frame
+    leaves Python only when a segment closed, and only as BIGINTs."""
+
+    GAP_S, CAP_S = 30.0, 120.0
+    T0_US = 1_704_067_200_000_000  # 2024-01-01 00:00:00 UTC
+
+    @staticmethod
+    def _batch(ts_us, cents):
+        import pandas as pd
+
+        from windowsession_using_kafka_flink_docker_spark.streaming.stateful import (
+            _CENTS,
+            _TS,
+        )
+        return pd.DataFrame({
+            "user_id": pd.Series([7] * len(ts_us), dtype="int64"),
+            _TS: pd.to_datetime(ts_us, unit="us"),
+            _CENTS: pd.Series(cents, dtype="int64"),
+        })
+
+    def _fn(self):
+        from windowsession_using_kafka_flink_docker_spark.streaming.stateful import (
+            make_capped_session_fn,
+        )
+        return make_capped_session_fn(self.GAP_S, self.CAP_S)
+
+    @staticmethod
+    def _assert_fold_frame(pdf):
+        from pyspark.sql.types import LongType, _parse_datatype_string
+
+        from windowsession_using_kafka_flink_docker_spark.streaming.stateful import (
+            FOLD_SCHEMA,
+        )
+        schema = _parse_datatype_string(FOLD_SCHEMA)
+        assert all(isinstance(f.dataType, LongType) for f in schema.fields)
+        assert list(pdf.columns) == schema.names
+        assert all(str(t) == "int64" for t in pdf.dtypes)
+
+    def test_new_key_closing_nothing_yields_no_frame(self):
+        t0 = self.T0_US
+        state = _StubGroupState()
+        # two chunks, out of order: the batch is sorted before the fold
+        pdfs = [self._batch([t0 + 10_000_000], [250]), self._batch([t0], [-100])]
+        assert list(self._fn()((7,), iter(pdfs), state)) == []
+        assert state.get == (t0, 0, t0, t0 + 10_000_000, 150, 2)
+        assert state.timeout_ms == (t0 + 10_000_000) // 1_000 + 30_000 + 1
+
+    def test_closed_segments_leave_as_bigint_rows(self):
+        t0 = self.T0_US
+        state = _StubGroupState((t0, 0, t0, t0, 100, 1))
+        # 60 s of silence closes the open session; the new one stays open
+        out = list(self._fn()((7,), iter([self._batch([t0 + 60_000_000], [5])]), state))
+        assert len(out) == 1
+        self._assert_fold_frame(out[0])
+        assert out[0].values.tolist() == [[7, t0, t0, 100, 1]]
+        assert state.get == (t0 + 60_000_000, 0, t0 + 60_000_000,
+                             t0 + 60_000_000, 5, 1)
+
+    def test_timeout_yields_one_row_and_drops_state(self):
+        t0 = self.T0_US
+        state = _StubGroupState((t0, 1, t0 + 120_000_000, t0 + 130_000_000, -7, 3),
+                                timed_out=True)
+        out = list(self._fn()((7,), iter([]), state))
+        assert len(out) == 1
+        self._assert_fold_frame(out[0])
+        assert out[0].values.tolist() == [[7, t0 + 120_000_000, t0 + 130_000_000, -7, 3]]
+        assert not state.exists
 
 
 class TestStreamStreamIntervalJoin:

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
     _AVG_CENTS_EXPR,
+    _cents,
 )
 
 DEFAULT_CAP = 120.0  # seconds
@@ -71,13 +72,12 @@ def capped_sessionize(events: DataFrame, gap_sec: float = 30.0,
             F.expr(f"(unix_micros({ts}) - _gs_start_us) div {cap_us}"),
         )
     )
-    cents = F.round(F.col(value) * 100, 0).cast("long")
     return (
         seg.groupBy(key, "_gs", "_seg")
         .agg(
             F.min(ts).alias("session_start"),
             F.max(ts).alias("session_end"),
-            F.sum(cents).alias("_sc"),
+            F.sum(_cents(value)).alias("_sc"),
             F.count(F.lit(1)).alias("event_count"),
         )
         .select(

@@ -9,8 +9,54 @@ here are plain public Spark SQL configs.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
+
+
+def _reuse_unchanged_zip_directories() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's
+    directory only when the archive changed.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task (``worker_util.setup_spark_files``). Before CPython 3.13
+    each ``zipimporter`` then eagerly re-parses its whole archive, and a
+    worker holds one importer per imported package of ``pyspark.zip``
+    (1,328 entries, 14-18 importers): ~127 ms per call, ~0.08 ms with the
+    stat check below (14 importers, CPython 3.11). An archive is re-read
+    when its ``(st_mtime_ns, st_size)`` differs from the one seen at its
+    last read here (or was never read here), so a rewritten archive still
+    shows its new modules. 3.13+ already re-reads lazily; nothing is
+    installed there. Runs at import, so every Python worker that
+    unpickles an engine UDF installs it for its later tasks.
+    """
+    if sys.version_info >= (3, 13):
+        return
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "_reuses_unchanged", False):
+        return
+    read_at: dict[str, tuple[int, int] | None] = {}
+
+    def invalidate_caches(self) -> None:
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is not None and files is not None and read_at.get(self.archive) == stamp:
+            self._files = files
+            return
+        reread(self)
+        read_at[self.archive] = stamp
+
+    invalidate_caches._reuses_unchanged = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_reuse_unchanged_zip_directories()
 
 # Defaults chosen for the local[32]/128GiB test harness but expressed so the
 # same code is correct on a real cluster: AQE coalesces the 32→N shuffle

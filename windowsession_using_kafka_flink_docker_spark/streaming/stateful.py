@@ -8,34 +8,70 @@ timers, Arrow-batched Python. Semantics match
 ``operators.capped_sessionize.capped_sessionize`` exactly (the batch
 definition is the oracle; the stream-equals-batch pytest is the gate).
 
+The work is split three ways so Python touches only what needs a loop:
+
+1. **JVM prepares.** Before the stateful operator the plan keeps three
+   columns: the key, the watermarked ``ts`` (the event-time timeout needs
+   the watermark on the operator's input) and the exact BIGINT cents
+   ``CAST(ROUND(value * 100, 0) AS BIGINT)`` — the batch operator's own
+   expression (``sessionize._cents``), so the Spark ROUND tie-break is
+   the one the batch plan uses, not a Python mirror of it. Unused input
+   columns never reach Arrow.
+2. **Python folds.** Per key and micro-batch: one stable argsort of the
+   µs timestamps, then one call into the pure ``capped_fold``. A key
+   whose batch closed nothing yields no frame; a closed segment leaves
+   as BIGINTs ``(user_id, s0_us, s1_us, _sc, event_count)``
+   (``FOLD_SCHEMA``), so Arrow sees no object or datetime column.
+3. **JVM presents.** A ``select`` after the operator turns the fold rows
+   into ``OUT_SCHEMA``: ``timestamp_micros`` for the bounds,
+   ``_sc / 100.0`` and ``sessionize._AVG_CENTS_EXPR`` (the sign-correct
+   half-up cent quotient) for sum and average — the batch plan's
+   presentation, so stream == batch holds bit-for-bit.
+
 State per key: the one open segment ``(gap-session start, segment index,
 seg min/max ts, running cents sum/count)`` — O(1) per key, evicted by
 event-time timeout when the watermark passes ``segment end + gap`` (at
 which point any future event would start a new session anyway, so eviction
 is safe). The running sum is exact BIGINT cents, the batch operator's
 exact-e2 discipline (see ``operators/sessionize.py:_aggregate``): floats
-accumulate rounding error across micro-batches, cents don't, and the
-presented ``session_sum``/``session_avg`` derive from the cents sum the
-same way the batch plan derives them (``/100.0`` and the sign-correct
-half-up integer cent quotient) so stream == batch holds bit-for-bit.
+accumulate rounding error across micro-batches, cents don't.
+
+Timestamps reach Python as session-local wall time and the µs it folds
+are presented by ``timestamp_micros`` and compared with the watermark
+(an epoch), so the session time zone must be UTC, which ``get_spark``
+sets.
 
 In-order contract: like the reference's monotonous-watermark jobs, events
 per key are assumed non-decreasing in event time across micro-batches
 (within a batch they are sorted here). Out-of-order input within the
 watermark is handled by the declarative ``session_window`` pipelines;
 this operator trades that for semantics they cannot express.
+
+Cost (``perfbench`` ``stream_sessions``, 4 vCPUs): a capped micro-batch
+is one stage of one Python-worker task per state partition; at ~520
+rows per batch its median ``addBatch`` is ~1.1-1.4 s, most of it
+PySpark's per-group Arrow/pandas work around the fold. Keep per-row and
+per-key work in the JVM expressions above; see also
+``session._reuse_unchanged_zip_directories`` for the per-task import
+cost.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from windowsession_using_kafka_flink_docker_spark.operators.capped_sessionize import (
     DEFAULT_CAP,
+)
+from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
+    _AVG_CENTS_EXPR,
+    _cents,
 )
 
 OUT_SCHEMA = (
@@ -45,52 +81,50 @@ OUT_SCHEMA = (
 #: (gap-session start µs, segment index, seg min µs, seg max µs,
 #:  cents sum, count)
 STATE_SCHEMA = "gs0 long, seg long, s0 long, s1 long, sc long, scnt long"
+#: What the Python fold emits per closed segment; ``_present`` maps it
+#: to ``OUT_SCHEMA`` in the JVM.
+FOLD_SCHEMA = ("user_id long, s0_us long, s1_us long, _sc long, "
+               "event_count long")
 
-_OUT_COLS = ("user_id", "session_start", "session_end", "session_sum",
-             "event_count", "session_avg")
-
-
-def _cents(v: float) -> int:
-    """``ROUND(v * 100, 0)`` with Spark's decimal HALF_UP tie-break
-    (away from zero), mirrored exactly: Spark rounds the double's
-    shortest decimal repr, which is what ``Decimal(repr(x))`` holds.
-    On exact 2-decimal data the tie never fires (v*100 is within 4e-12
-    of an integer) — this keeps the rule identical anyway."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return int(Decimal(repr(v * 100.0)).quantize(Decimal("1"),
-                                                 rounding=ROUND_HALF_UP))
+_FOLD_COLS = [f.split()[0] for f in FOLD_SCHEMA.split(",")]
+#: Column names of the prepared input the fold reads.
+_TS, _CENTS = "_ts", "_cents"
 
 
-def _avg_cents(sc: int, n: int) -> int:
-    """Sign-correct half-up cent quotient — the Python-int mirror of
-    ``operators/sessionize.py:_AVG_CENTS_EXPR`` (exact ``//`` on
-    nonnegative operands, sign re-applied: half-up is away from zero)."""
-    q = (2 * abs(sc) + n) // (2 * n)
-    return -q if sc < 0 else q
+def _prepare(events: DataFrame, key: str, ts: str, value: str,
+             watermark_delay: str) -> DataFrame:
+    return events.withWatermark(ts, watermark_delay).select(
+        F.col(key),
+        F.col(ts).alias(_TS),
+        _cents(value).alias(_CENTS),
+    )
+
+
+def _present(folded: DataFrame) -> DataFrame:
+    return folded.select(
+        "user_id",
+        F.timestamp_micros("s0_us").alias("session_start"),
+        F.timestamp_micros("s1_us").alias("session_end"),
+        (F.col("_sc") / F.lit(100.0)).alias("session_sum"),
+        "event_count",
+        (F.expr(_AVG_CENTS_EXPR) / F.lit(100.0)).alias("session_avg"),
+    )
 
 
 def _emit(closed: list[tuple[int, int, int, int, int]]) -> pd.DataFrame:
-    rows = {
-        "user_id": pd.Series([c[0] for c in closed], dtype="int64"),
-        "session_start": pd.to_datetime([c[1] for c in closed], unit="us"),
-        "session_end": pd.to_datetime([c[2] for c in closed], unit="us"),
-        "session_sum": pd.Series([c[3] / 100.0 for c in closed],
-                                 dtype="float64"),
-        "event_count": pd.Series([c[4] for c in closed], dtype="int64"),
-        "session_avg": pd.Series(
-            [_avg_cents(c[3], c[4]) / 100.0 for c in closed],
-            dtype="float64"),
-    }
-    return pd.DataFrame(rows, columns=list(_OUT_COLS))
+    return pd.DataFrame(np.array(closed, dtype="int64"), columns=_FOLD_COLS)
 
 
-def _sorted_batch(pdfs: Iterator[pd.DataFrame], ts: str,
-                  value: str) -> tuple[list[int], list[int]]:
-    """One key's micro-batch rows, event-time sorted, as (µs, cents)."""
-    batch = pd.concat(list(pdfs)).sort_values(ts)
-    return ([int(pd.Timestamp(v).value // 1_000) for v in batch[ts]],
-            [_cents(float(v)) for v in batch[value]])
+def _sorted_batch(pdfs: Iterator[pd.DataFrame]) -> tuple[list[int], list[int]]:
+    """One key's micro-batch rows, event-time sorted, as (µs, cents).
+    Concatenates the columns, not the frames: a key's batch is usually one
+    Arrow chunk, and ``pd.concat`` costs ~8x the numpy path per key."""
+    chunks = list(pdfs)
+    ts_us = np.concatenate(
+        [c[_TS].to_numpy("datetime64[us]") for c in chunks]).view("int64")
+    cents = np.concatenate([c[_CENTS].to_numpy("int64") for c in chunks])
+    order = np.argsort(ts_us, kind="stable")
+    return ts_us[order].tolist(), cents[order].tolist()
 
 
 def capped_fold(user_id: int, cur: tuple[int, ...] | None,
@@ -120,8 +154,10 @@ def capped_fold(user_id: int, cur: tuple[int, ...] | None,
     return closed, cur
 
 
-def make_capped_session_fn(gap_sec: float, cap_sec: float,
-                           ts: str = "ts", value: str = "value"):
+def make_capped_session_fn(gap_sec: float, cap_sec: float):
+    """The ``applyInPandasWithState`` function over ``_prepare``'s columns;
+    it yields ``FOLD_SCHEMA`` frames, one per key whose batch or timeout
+    closed a segment."""
     gap_us = int(gap_sec * 1_000_000)
     cap_us = int(cap_sec * 1_000_000)
 
@@ -130,17 +166,15 @@ def make_capped_session_fn(gap_sec: float, cap_sec: float,
         user_id = int(key[0])
 
         if state.hasTimedOut:
-            closed = []
             if state.exists:
                 _gs0, _seg, s0, s1, sc, scnt = state.get
-                closed.append((user_id, s0, s1, sc, scnt))
                 state.remove()
-            yield _emit(closed)
+                yield _emit([(user_id, s0, s1, sc, scnt)])
             return
 
         closed, cur = capped_fold(
             user_id, state.get if state.exists else None,
-            *_sorted_batch(pdfs, ts, value), gap_us, cap_us)
+            *_sorted_batch(pdfs), gap_us, cap_us)
         if cur is not None:
             state.update(cur)
             # evict once the watermark passes segment end + gap (ms API);
@@ -150,7 +184,8 @@ def make_capped_session_fn(gap_sec: float, cap_sec: float,
             # makes applyInPandasWithState fail the query
             timeout_ms = cur[3] // 1_000 + int(gap_us // 1_000) + 1
             state.setTimeoutTimestamp(max(timeout_ms, state.getCurrentWatermarkMs() + 1))
-        yield _emit(closed)
+        if closed:
+            yield _emit(closed)
 
     return fn
 
@@ -163,34 +198,34 @@ def streaming_capped_sessionize(events: DataFrame, gap_sec: float = 30.0,
                                 value: str = "value") -> DataFrame:
     """Append-mode capped sessions: one row per closed segment, emitted on
     close (cap/gap hit by a newer event) or watermark eviction."""
-    return (
-        events.withWatermark(ts, watermark_delay)
+    folded = (
+        _prepare(events, key, ts, value, watermark_delay)
         .groupBy(key)
         .applyInPandasWithState(
-            make_capped_session_fn(gap_sec, cap_sec, ts, value),
-            OUT_SCHEMA,
+            make_capped_session_fn(gap_sec, cap_sec),
+            FOLD_SCHEMA,
             STATE_SCHEMA,
             "append",
             GroupStateTimeout.EventTimeTimeout,
         )
     )
+    return _present(folded)
 
 
 class CappedSessionProcessor:
     """``transformWithStateInPandas`` (Spark 4 arbitrary-state v2) rendering
     of the same capped-session semantics: explicit ``ValueState`` + real
     event-time timers instead of applyInPandasWithState's single implicit
-    state/timeout. Requires the RocksDB state store provider.
+    state/timeout. Requires the RocksDB state store provider. Reads
+    ``_prepare``'s columns and yields ``FOLD_SCHEMA`` frames.
 
     Defined lazily against ``StatefulProcessor`` (imported at call time) so
     the module stays importable on Spark builds without the v2 API.
     """
 
-    def __init__(self, gap_sec: float, cap_sec: float,
-                 ts: str = "ts", value: str = "value") -> None:
+    def __init__(self, gap_sec: float, cap_sec: float) -> None:
         self._gap_us = int(gap_sec * 1_000_000)
         self._cap_us = int(cap_sec * 1_000_000)
-        self._ts, self._value = ts, value
 
     def init(self, handle) -> None:
         self._handle = handle
@@ -203,8 +238,7 @@ class CappedSessionProcessor:
 
     def handleInputRows(self, key, rows, timerValues):
         closed, cur = capped_fold(
-            int(key[0]), self._snapshot(),
-            *_sorted_batch(rows, self._ts, self._value),
+            int(key[0]), self._snapshot(), *_sorted_batch(rows),
             self._gap_us, self._cap_us)
         if cur is not None:
             self._session.update(cur)
@@ -216,17 +250,16 @@ class CappedSessionProcessor:
             self._handle.registerTimer(
                 max(timeout_ms, timerValues.getCurrentWatermarkInMs() + 1)
             )
-        yield _emit(closed)
+        if closed:
+            yield _emit(closed)
 
     def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        closed: list[tuple[int, int, int, int, int]] = []
         cur = self._snapshot()
-        if cur is not None:
-            # guard against a stale timer racing a newer segment
-            if expiredTimerInfo.getExpiryTimeInMs() >= cur[3] // 1_000 + self._gap_us // 1_000:
-                closed.append((int(key[0]), cur[2], cur[3], cur[4], cur[5]))
-                self._session.clear()
-        yield _emit(closed)
+        # guard against a stale timer racing a newer segment
+        if cur is not None and (expiredTimerInfo.getExpiryTimeInMs()
+                                >= cur[3] // 1_000 + self._gap_us // 1_000):
+            self._session.clear()
+            yield _emit([(int(key[0]), cur[2], cur[3], cur[4], cur[5])])
 
     def close(self) -> None:
         pass
@@ -247,13 +280,14 @@ def streaming_capped_sessionize_tws(events: DataFrame, gap_sec: float = 30.0,
     # runtime subclass so import of this module never requires the v2 API
     proc_cls = type("_CappedSessionProcessor",
                     (CappedSessionProcessor, StatefulProcessor), {})
-    return (
-        events.withWatermark(ts, watermark_delay)
+    folded = (
+        _prepare(events, key, ts, value, watermark_delay)
         .groupBy(key)
         .transformWithStateInPandas(
-            proc_cls(gap_sec, cap_sec, ts, value),
-            OUT_SCHEMA,
+            proc_cls(gap_sec, cap_sec),
+            FOLD_SCHEMA,
             "Append",
             "EventTime",
         )
     )
+    return _present(folded)
