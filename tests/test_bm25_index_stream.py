@@ -22,7 +22,7 @@ from windowsession_using_kafka_flink_docker_spark.sources.batch import load_tabl
 from windowsession_using_kafka_flink_docker_spark.streaming import (
     IncrementalBm25IndexMaintainer,
     file_events_source,
-    streaming_bm25_index_maintenance,
+    streaming_maintenance,
 )
 
 _SCHEMA = "doc_id BIGINT, text STRING"
@@ -75,11 +75,13 @@ def test_stream_equals_batch_and_one_shot_index(spark, sf_dir,
     flat = _chunks(spark, sf_dir, base)
     maint = IncrementalBm25IndexMaintainer(
         spark, str(tmp_path_factory.mktemp("bm25_idx")))
-    _drain(streaming_bm25_index_maintenance(
+    q = streaming_maintenance(
         file_events_source(spark, flat, schema=_SCHEMA,
                            max_files_per_trigger=1),
-        maint, str(tmp_path_factory.mktemp("bm25_ckpt"))))
+        maint, str(tmp_path_factory.mktemp("bm25_ckpt")))
+    _drain(q)
 
+    assert q.name == "bm25_index_maintenance"
     assert len(maint.committed_increments()) == 3
     got = _rows(maint.search(_TERMS, _K))
 
@@ -102,14 +104,14 @@ def test_restart_resumes_on_same_checkpoint(spark, sf_dir,
     idx = str(tmp_path_factory.mktemp("bm25_idx2"))
     ckpt = str(tmp_path_factory.mktemp("bm25_ckpt2"))
     maint = IncrementalBm25IndexMaintainer(spark, idx)
-    _drain(streaming_bm25_index_maintenance(
+    _drain(streaming_maintenance(
         file_events_source(spark, flat, schema=_SCHEMA,
                            max_files_per_trigger=1), maint, ckpt))
     assert len(maint.committed_increments()) == 2
 
     os.rename(held, os.path.join(flat, "02.parquet"))
     maint2 = IncrementalBm25IndexMaintainer(spark, idx)
-    _drain(streaming_bm25_index_maintenance(
+    _drain(streaming_maintenance(
         file_events_source(spark, flat, schema=_SCHEMA,
                            max_files_per_trigger=1), maint2, ckpt))
     assert len(maint2.committed_increments()) == 3
@@ -130,10 +132,10 @@ def test_replayed_batch_overwrites_its_own_increment(spark, sf_dir,
     d1 = docs.where(F.pmod("doc_id", F.lit(3)) == 1)
     maint = IncrementalBm25IndexMaintainer(
         spark, str(tmp_path_factory.mktemp("bm25_idx3")))
-    maint.append_batch(d0, 0)
-    maint.append_batch(d1, 1)
+    maint.merge_batch(d0, 0)
+    maint.merge_batch(d1, 1)
     once = _rows(maint.search(_TERMS, _K))
-    maint.append_batch(d1, 1)  # crash-replay of batch 1
+    maint.merge_batch(d1, 1)  # crash-replay of batch 1
     assert maint.committed_increments() == ["inc=00000", "inc=00001"]
     assert _rows(maint.search(_TERMS, _K)) == once
 
@@ -149,15 +151,15 @@ def test_torn_increment_detected_then_healed_by_redelivery(
     d1 = docs.where(F.pmod("doc_id", F.lit(3)) == 1)
     idx = str(tmp_path_factory.mktemp("bm25_idx4"))
     maint = IncrementalBm25IndexMaintainer(spark, idx)
-    maint.append_batch(d0, 0)
-    maint.append_batch(d1, 1)
+    maint.merge_batch(d0, 0)
+    maint.merge_batch(d1, 1)
     want = _rows(maint.search(_TERMS, _K))
 
     shutil.rmtree(os.path.join(idx, "doclens", "inc=00001"))
     with pytest.raises(ValueError, match="mismatched increments"):
         maint.search(_TERMS, _K)
 
-    maint.append_batch(d1, 1)  # redelivery heals both components
+    maint.merge_batch(d1, 1)  # redelivery heals both components
     assert _rows(maint.search(_TERMS, _K)) == want
 
 
@@ -166,9 +168,9 @@ def test_empty_batch_writes_no_increment(spark, sf_dir,
     docs = _docs(spark, sf_dir)
     maint = IncrementalBm25IndexMaintainer(
         spark, str(tmp_path_factory.mktemp("bm25_idx5")))
-    maint.append_batch(docs, 0)
+    maint.merge_batch(docs, 0)
     before = _rows(maint.search(_TERMS, _K))
-    maint.append_batch(docs.where(F.lit(False)), 1)
+    maint.merge_batch(docs.where(F.lit(False)), 1)
     assert increments(maint.index_dir, "postings") == ["inc=00000"]
     assert _rows(maint.search(_TERMS, _K)) == before
 
@@ -185,7 +187,7 @@ class TestCompaction:
         maint = IncrementalBm25IndexMaintainer(
             spark, str(tmp_path_factory.mktemp("bm25_cmp")))
         for i in range(n):
-            maint.append_batch(
+            maint.merge_batch(
                 docs.where(F.pmod("doc_id", F.lit(n)) == i), i)
         return maint
 
@@ -218,10 +220,10 @@ class TestCompaction:
         maint = IncrementalBm25IndexMaintainer(
             spark, str(tmp_path_factory.mktemp("bm25_cmp2")))
         for i in range(3):
-            maint.append_batch(
+            maint.merge_batch(
                 docs.where(F.pmod("doc_id", F.lit(4)) == i), i)
         maint.compact()
-        maint.append_batch(docs.where(F.pmod("doc_id", F.lit(4)) == 3), 3)
+        maint.merge_batch(docs.where(F.pmod("doc_id", F.lit(4)) == 3), 3)
         assert maint.committed_increments() == [
             "inc=00000", "inc=00002", "inc=00003"]
 
@@ -233,7 +235,7 @@ class TestCompaction:
     def test_count_triggered_compaction_is_invisible(
             self, spark, sf_dir, tmp_path_factory):
         """compact_every=2 (r16: the continuous job's in-stream
-        read-amp control): the fold runs inside append_batch once the
+        read-amp control): the fold runs inside merge_batch once the
         increment count reaches the threshold — the increment list
         stays bounded, scores are unchanged vs a never-compacted
         one-shot index, and a crash-replay of the LAST batch after an
@@ -245,7 +247,7 @@ class TestCompaction:
         parts = [docs.where(F.pmod("doc_id", F.lit(4)) == i)
                  for i in range(4)]
         for i, p in enumerate(parts):
-            maint.append_batch(p, i)
+            maint.merge_batch(p, i)
             assert len(maint.committed_increments()) <= 2
 
         one_shot = str(tmp_path_factory.mktemp("bm25_cmp_every_ref"))
@@ -253,7 +255,7 @@ class TestCompaction:
         want = _rows(bm25_from_index(spark, one_shot, _TERMS, _K))
         assert _rows(maint.search(_TERMS, _K)) == want
 
-        maint.append_batch(parts[3], 3)  # crash-replay after the fold
+        maint.merge_batch(parts[3], 3)  # crash-replay after the fold
         assert _rows(maint.search(_TERMS, _K)) == want
 
     def test_crash_with_committed_tmp_resumes(self, spark, sf_dir,
@@ -364,7 +366,7 @@ class TestCompaction:
                 fh.write("\n".join(folded))
 
         # the quiescence violation: a new ingest lands before the swap
-        maint.append_batch(docs.where(F.pmod("doc_id", F.lit(7)) == 0), 4)
+        maint.merge_batch(docs.where(F.pmod("doc_id", F.lit(7)) == 0), 4)
         want = _rows(maint.search(_TERMS, _K))
 
         # the violated swap is aborted: stale tmps discarded, nothing
@@ -423,7 +425,7 @@ class TestCompaction:
                   os.path.join(idx, "postings", "inc=00000"))
         os.remove(os.path.join(idx, "postings", "inc=00000",
                                "_folded.txt"))
-        maint.append_batch(docs.where(F.pmod("doc_id", F.lit(7)) == 0), 4)
+        maint.merge_batch(docs.where(F.pmod("doc_id", F.lit(7)) == 0), 4)
 
         with pytest.raises(ValueError, match="mid-rename"):
             B.compact_index(spark, idx)
@@ -467,8 +469,8 @@ def test_reset_checkpoint_against_kept_index_fails_fast(
     docs = _docs(spark, sf_dir)
     maint = IncrementalBm25IndexMaintainer(
         spark, str(tmp_path_factory.mktemp("bm25_guard")))
-    maint.append_batch(docs.where(F.pmod("doc_id", F.lit(2)) == 0), 0)
-    maint.append_batch(docs.where(F.pmod("doc_id", F.lit(2)) == 1), 1)
-    maint.append_batch(docs.where(F.pmod("doc_id", F.lit(2)) == 1), 1)
+    maint.merge_batch(docs.where(F.pmod("doc_id", F.lit(2)) == 0), 0)
+    maint.merge_batch(docs.where(F.pmod("doc_id", F.lit(2)) == 1), 1)
+    maint.merge_batch(docs.where(F.pmod("doc_id", F.lit(2)) == 1), 1)
     with pytest.raises(ValueError, match="reset together"):
-        maint.append_batch(docs, 0)
+        maint.merge_batch(docs, 0)

@@ -17,7 +17,7 @@ from windowsession_using_kafka_flink_docker_spark.sources.batch import load_tabl
 from windowsession_using_kafka_flink_docker_spark.streaming import (
     IncrementalNearDupIndexMaintainer,
     file_events_source,
-    streaming_neardup_index_maintenance,
+    streaming_maintenance,
 )
 
 _SCHEMA = "doc_id BIGINT, text STRING"
@@ -57,7 +57,7 @@ def _from_scratch_pairs(spark, sf_dir, tmp_path_factory):
     that single within-batch self-join."""
     ref = IncrementalNearDupIndexMaintainer(
         spark, str(tmp_path_factory.mktemp("nd_ref")))
-    ref.process_batch(_docs(spark, sf_dir), 0)
+    ref.merge_batch(_docs(spark, sf_dir), 0)
     return _rows(ref.current_pairs())
 
 
@@ -70,11 +70,13 @@ def test_stream_equals_batch(spark, sf_dir, tmp_path_factory):
     flat = _chunks(spark, sf_dir, base)
     maint = IncrementalNearDupIndexMaintainer(
         spark, str(tmp_path_factory.mktemp("nd_idx")))
-    _drain(streaming_neardup_index_maintenance(
+    q = streaming_maintenance(
         file_events_source(spark, flat, schema=_SCHEMA,
                            max_files_per_trigger=1),
-        maint, str(tmp_path_factory.mktemp("nd_ckpt"))))
+        maint, str(tmp_path_factory.mktemp("nd_ckpt")))
+    _drain(q)
 
+    assert q.name == "near_dup_index_maintenance"
     assert len(maint.committed_increments()) == 3
     assert maint.current_pairs().where("is_cross").count() >= 1
     assert _rows(maint.current_pairs()) == \
@@ -91,14 +93,14 @@ def test_restart_resumes_on_same_checkpoint(spark, sf_dir,
     idx = str(tmp_path_factory.mktemp("nd_idx2"))
     ckpt = str(tmp_path_factory.mktemp("nd_ckpt2"))
     maint = IncrementalNearDupIndexMaintainer(spark, idx)
-    _drain(streaming_neardup_index_maintenance(
+    _drain(streaming_maintenance(
         file_events_source(spark, flat, schema=_SCHEMA,
                            max_files_per_trigger=1), maint, ckpt))
     assert len(maint.committed_increments()) == 2
 
     os.rename(held, os.path.join(flat, "02.parquet"))
     maint2 = IncrementalNearDupIndexMaintainer(spark, idx)
-    _drain(streaming_neardup_index_maintenance(
+    _drain(streaming_maintenance(
         file_events_source(spark, flat, schema=_SCHEMA,
                            max_files_per_trigger=1), maint2, ckpt))
     assert len(maint2.committed_increments()) == 3
@@ -117,10 +119,10 @@ def test_replayed_batch_recomputes_identical_pairs(spark, sf_dir,
         spark, str(tmp_path_factory.mktemp("nd_idx3")))
     d0 = docs.where(F.pmod("doc_id", F.lit(3)) == 0)
     d1 = docs.where(F.pmod("doc_id", F.lit(3)) == 1)
-    maint.process_batch(d0, 0)
-    maint.process_batch(d1, 1)
+    maint.merge_batch(d0, 0)
+    maint.merge_batch(d1, 1)
     once = _rows(maint.current_pairs())
-    maint.process_batch(d1, 1)  # crash-replay of batch 1
+    maint.merge_batch(d1, 1)  # crash-replay of batch 1
     assert len(maint.committed_increments()) == 2
     got = maint.current_pairs()
     assert _rows(got) == once
@@ -130,7 +132,7 @@ def test_replayed_batch_recomputes_identical_pairs(spark, sf_dir,
 def test_count_triggered_compaction_is_invisible(spark, sf_dir,
                                                  tmp_path_factory):
     """compact_every=2 (r16: the continuous job's in-stream read-amp
-    control): the fold runs inside process_batch after each append once
+    control): the fold runs inside merge_batch after each append once
     the increment count reaches the threshold — the increment list
     stays bounded, and the maintained pairs still equal the
     from-scratch single-batch run. Then a crash-replay of the LAST
@@ -144,12 +146,12 @@ def test_count_triggered_compaction_is_invisible(spark, sf_dir,
     parts = [docs.where(F.pmod("doc_id", F.lit(4)) == i)
              for i in range(4)]
     for i, p in enumerate(parts):
-        maint.process_batch(p, i)
+        maint.merge_batch(p, i)
         assert len(maint.committed_increments()) <= 2
     once = _rows(maint.current_pairs())
     assert once == _from_scratch_pairs(spark, sf_dir, tmp_path_factory)
 
-    maint.process_batch(parts[3], 3)  # crash-replay after the fold
+    maint.merge_batch(parts[3], 3)  # crash-replay after the fold
     assert _rows(maint.current_pairs()) == once
     assert maint.current_pairs().where("id_a = id_b").count() == 0
 
@@ -164,8 +166,8 @@ def test_torn_batch_detected_then_healed(spark, sf_dir,
     maint = IncrementalNearDupIndexMaintainer(spark, idx)
     d0 = docs.where(F.pmod("doc_id", F.lit(3)) == 0)
     d1 = docs.where(F.pmod("doc_id", F.lit(3)) == 1)
-    maint.process_batch(d0, 0)
-    maint.process_batch(d1, 1)
+    maint.merge_batch(d0, 0)
+    maint.merge_batch(d1, 1)
     want = _rows(maint.current_pairs())
 
     # crash between pairs write and index append: drop the index half
@@ -174,14 +176,14 @@ def test_torn_batch_detected_then_healed(spark, sf_dir,
     with pytest.raises(ValueError, match="pairs"):
         maint.current_pairs()
 
-    maint.process_batch(d1, 1)  # redelivery heals all components
+    maint.merge_batch(d1, 1)  # redelivery heals all components
     assert _rows(maint.current_pairs()) == want
 
     # crash between index components: counts increment missing
     shutil.rmtree(os.path.join(idx, "bucket_counts", "inc=00001"))
     with pytest.raises(ValueError, match="mismatched increments"):
         maint.current_pairs()
-    maint.process_batch(d1, 1)
+    maint.merge_batch(d1, 1)
     assert _rows(maint.current_pairs()) == want
 
 
@@ -189,9 +191,9 @@ def test_empty_batch_is_invisible(spark, sf_dir, tmp_path_factory):
     docs = _docs(spark, sf_dir)
     maint = IncrementalNearDupIndexMaintainer(
         spark, str(tmp_path_factory.mktemp("nd_idx5")))
-    maint.process_batch(docs, 0)
+    maint.merge_batch(docs, 0)
     before = _rows(maint.current_pairs())
-    maint.process_batch(docs.where(F.lit(False)), 1)
+    maint.merge_batch(docs.where(F.lit(False)), 1)
     assert len(maint.committed_increments()) == 1
     assert _rows(maint.current_pairs()) == before
 
@@ -205,7 +207,7 @@ def test_adhoc_probe_serves_without_appending(spark, sf_dir,
     docs = _docs(spark, sf_dir)
     maint = IncrementalNearDupIndexMaintainer(
         spark, str(tmp_path_factory.mktemp("nd_idx6")))
-    maint.process_batch(docs, 0)
+    maint.merge_batch(docs, 0)
 
     # re-probe a doc that IS in the corpus under a fresh id: its
     # shingle set is identical, so the probe must emit a jaccard-1.0
@@ -230,7 +232,7 @@ class TestNearDupCompaction:
         maint = IncrementalNearDupIndexMaintainer(
             spark, str(tmp_path_factory.mktemp("nd_cpt")))
         for i in range(n):
-            maint.process_batch(
+            maint.merge_batch(
                 docs.where(F.pmod("doc_id", F.lit(n)) == i), i)
         return maint
 
@@ -326,8 +328,8 @@ def test_reset_checkpoint_against_kept_index_fails_fast(
     docs = _docs(spark, sf_dir)
     maint = IncrementalNearDupIndexMaintainer(
         spark, str(tmp_path_factory.mktemp("nd_guard")))
-    maint.process_batch(docs.where(F.pmod("doc_id", F.lit(2)) == 0), 0)
-    maint.process_batch(docs.where(F.pmod("doc_id", F.lit(2)) == 1), 1)
-    maint.process_batch(docs.where(F.pmod("doc_id", F.lit(2)) == 1), 1)
+    maint.merge_batch(docs.where(F.pmod("doc_id", F.lit(2)) == 0), 0)
+    maint.merge_batch(docs.where(F.pmod("doc_id", F.lit(2)) == 1), 1)
+    maint.merge_batch(docs.where(F.pmod("doc_id", F.lit(2)) == 1), 1)
     with pytest.raises(ValueError, match="reset together"):
-        maint.process_batch(docs, 0)
+        maint.merge_batch(docs, 0)

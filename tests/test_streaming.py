@@ -918,63 +918,6 @@ class TestStreamingDedup:
         assert got == want
 
 
-def _protobuf_available() -> bool:
-    # transformWithState's Python driver worker speaks protobuf to the JVM;
-    # without a working google.protobuf the query crashes at start.
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-class TestTransformWithState:
-    def test_tws_capped_sessions_equal_batch(self, spark, sf_dir, stream_dir):
-        """The transformWithStateInPandas (state v2: ValueState + explicit
-        timers, RocksDB-backed) capped sessions must equal the DuckDB-oracled
-        batch operator — same gate as the applyInPandasWithState twin. The
-        plan must always CONSTRUCT; execution needs protobuf (absent in this
-        container), so the runtime half skips without it."""
-        from windowsession_using_kafka_flink_docker_spark.operators.capped_sessionize import (
-            capped_sessionize,
-        )
-        from windowsession_using_kafka_flink_docker_spark.streaming.stateful import (
-            streaming_capped_sessionize_tws,
-        )
-
-        stream_plan = streaming_capped_sessionize_tws(_events_stream(spark, stream_dir))
-        assert stream_plan.isStreaming
-        assert "TransformWithStateInPySpark" in stream_plan._jdf.queryExecution() \
-            .analyzed().toString()
-        if not _protobuf_available():
-            pytest.skip("google.protobuf unavailable: cannot run the v2 state worker")
-
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        try:
-            stream = streaming_capped_sessionize_tws(_events_stream(spark, stream_dir))
-            q = memory_sink(stream, "stream_tws")
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        finally:
-            if prev:
-                spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-            else:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        got = _rows(spark.table("stream_tws"))
-        want = _rows(
-            capped_sessionize(
-                load_table(spark, sf_dir, "events").select("ts", "user_id", "value")
-            )
-        )
-        assert len(got) == len(want) and got == want
-
-
 def _kafka_ready(spark) -> tuple[bool, str]:
     """(available, info): True only when BOTH the spark-sql-kafka connector
     jar is on the classpath AND a broker answers at $KAFKA_BOOTSTRAP_SERVERS
@@ -999,7 +942,7 @@ class TestKafkaEndToEnd:
     """Runtime Kafka round-trip — the reference's actual front door
     (flink_stream_task1.py:13-19). Runs only when the connector jar AND a
     broker are present (docker/README.md runbook starts both); skips
-    otherwise, mirroring the transformWithState protobuf-skip pattern.
+    otherwise.
     Wire format and pipeline are exactly the production path:
     CSV-serialized events -> kafka topic -> kafka_events_source ->
     streaming sessionization == batch sessionize of the same rows.
@@ -1522,7 +1465,7 @@ class TestIncrementalJoinView:
 
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalJoinView,
-            streaming_join_view_maintenance,
+            streaming_maintenance,
         )
         from windowsession_using_kafka_flink_docker_spark.streaming.sources import (
             file_events_source,
@@ -1553,19 +1496,20 @@ class TestIncrementalJoinView:
                 shutil.copy(f, os.path.join(flat, f"{i:02d}.parquet"))
 
         view = IncrementalJoinView(
-            spark, str(tmp_path_factory.mktemp("jv_state2")), key="custkey")
+            spark, str(tmp_path_factory.mktemp("jv_state2")), key="custkey",
+            a_cols=("o_orderkey", "o_totalprice"), b_cols=("c_name",))
         stream = file_events_source(
             spark, flat,
             schema=("_src STRING, custkey BIGINT, o_orderkey BIGINT, "
                     "o_totalprice DOUBLE, c_name STRING"),
             max_files_per_trigger=1)
-        q = streaming_join_view_maintenance(
-            stream, view, str(tmp_path_factory.mktemp("jv_ckpt")),
-            a_cols=("o_orderkey", "o_totalprice"), b_cols=("c_name",))
+        q = streaming_maintenance(
+            stream, view, str(tmp_path_factory.mktemp("jv_ckpt")))
         try:
             q.processAllAvailable()
         finally:
             q.stop()
+        assert q.name == "join_view_maintenance"
         got = _rows(view.current())
         want = _rows(orders.join(cust, "custkey"))
         assert len(got) == len(want) and got == want

@@ -72,7 +72,7 @@ def main() -> None:
     # ---- #25: BM25 postings index -------------------------------------
     bm = IncrementalBm25IndexMaintainer(spark, os.path.join(root, "bm25"))
     for i, third in enumerate(thirds):
-        timed(out, f"bm25_append_b{i}", lambda: bm.append_batch(third, i))
+        timed(out, f"bm25_append_b{i}", lambda: bm.merge_batch(third, i))
     timed(out, "bm25_search", lambda: bm.search(terms).collect())
     timed(out, "bm25_compact", lambda: compact_index(spark, bm.index_dir))
     timed(out, "bm25_search_post_compact",
@@ -81,7 +81,7 @@ def main() -> None:
     # ---- #26: near-dup LSH index --------------------------------------
     nd = IncrementalNearDupIndexMaintainer(spark, os.path.join(root, "nd"))
     for i, third in enumerate(thirds):
-        timed(out, f"neardup_batch_b{i}", lambda: nd.process_batch(third, i))
+        timed(out, f"neardup_batch_b{i}", lambda: nd.merge_batch(third, i))
     out["neardup_pairs_total"] = timed(
         out, "neardup_current_pairs", lambda: nd.current_pairs().count())
 

@@ -128,8 +128,6 @@ from windowsession_using_kafka_flink_docker_spark.streaming import (
     IncrementalSessionStoreMaintainer,
     IncrementalTrendMaintainer,
     IncrementalUserSpendMaintainer,
-    streaming_bm25_index_maintenance,
-    streaming_neardup_index_maintenance,
     streaming_maintenance,
 )
 
@@ -369,23 +367,6 @@ def main() -> None:
         bmi = IncrementalBm25IndexMaintainer(
             spark, os.path.join(args.state_root, "bm25_index"),
             compact_every=args.compact_every or None)
-        # Compact at the quiescent restart moment too (same rationale
-        # as the session-store drain above) — it also HEALS a torn
-        # mid-compaction state left by a crash, which the count trigger
-        # would otherwise hit as a fail-closed read on the next batch.
-        try:
-            folded = bmi.compact()
-            if folded:
-                print(f"bm25_index: compacted {folded} increment(s) "
-                      "before resuming")
-        except ValueError as e:
-            # a torn LAST batch is healed by the stream's redelivery,
-            # not by failing the job before the stream can start
-            print(f"bm25_index: skipping compaction ({e}); the "
-                  "re-delivered batch will overwrite the torn increment")
-        queries.append(streaming_bm25_index_maintenance(
-            docs, bmi, os.path.join(args.checkpoint_root,
-                                    "bm25_index")))
         # maintainer #26 shares the documents stream: continuous dedup
         # — each batch is probed against the MinHash-LSH index of
         # everything ingested so far (near-dup pairs persisted per
@@ -393,17 +374,24 @@ def main() -> None:
         ndi = IncrementalNearDupIndexMaintainer(
             spark, os.path.join(args.state_root, "neardup_index"),
             compact_every=args.compact_every or None)
-        try:
-            folded = ndi.compact()
-            if folded:
-                print(f"neardup_index: compacted {folded} increment(s) "
-                      "before resuming")
-        except ValueError as e:
-            print(f"neardup_index: skipping compaction ({e}); the "
-                  "re-delivered batch will overwrite the torn increment")
-        queries.append(streaming_neardup_index_maintenance(
-            docs, ndi, os.path.join(args.checkpoint_root,
-                                    "neardup_index")))
+        for name, index in (("bm25_index", bmi), ("neardup_index", ndi)):
+            # Compact at the quiescent restart moment too (same rationale
+            # as the session-store drain above) — it also HEALS a torn
+            # mid-compaction state left by a crash, which the count
+            # trigger would otherwise hit as a fail-closed read on the
+            # next batch.
+            try:
+                folded = index.compact()
+                if folded:
+                    print(f"{name}: compacted {folded} increment(s) "
+                          "before resuming")
+            except ValueError as e:
+                # a torn LAST batch is healed by the stream's redelivery,
+                # not by failing the job before the stream can start
+                print(f"{name}: skipping compaction ({e}); the "
+                      "re-delivered batch will overwrite the torn increment")
+            queries.append(streaming_maintenance(
+                docs, index, os.path.join(args.checkpoint_root, name)))
     if args.lineitem:
         li = (spark.readStream
               .schema("l_partkey BIGINT, l_suppkey BIGINT, "

@@ -24,7 +24,7 @@ import argparse
 from windowsession_using_kafka_flink_docker_spark import get_spark
 from windowsession_using_kafka_flink_docker_spark.streaming import (
     IncrementalJoinView,
-    streaming_join_view_maintenance,
+    streaming_maintenance,
 )
 
 
@@ -45,11 +45,11 @@ def main() -> None:
 
     spark = get_spark("maintain-join-view-job")
     tagged = (spark.readStream.schema(args.schema).parquet(args.source))
-    view = IncrementalJoinView(spark, args.state, key=args.key)
-    query = streaming_join_view_maintenance(
-        tagged, view, args.checkpoint,
+    view = IncrementalJoinView(
+        spark, args.state, key=args.key,
         a_cols=tuple(c for c in args.a_cols.split(",") if c),
         b_cols=tuple(c for c in args.b_cols.split(",") if c))
+    query = streaming_maintenance(tagged, view, args.checkpoint)
     query.awaitTermination()
 
 

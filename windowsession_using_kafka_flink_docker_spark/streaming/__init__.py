@@ -23,18 +23,15 @@ from windowsession_using_kafka_flink_docker_spark.streaming.rollup import (
 )
 from windowsession_using_kafka_flink_docker_spark.streaming.joinview import (
     IncrementalJoinView,
-    streaming_join_view_maintenance,
 )
 from windowsession_using_kafka_flink_docker_spark.streaming.session_store import (
     IncrementalSessionStoreMaintainer,
 )
 from windowsession_using_kafka_flink_docker_spark.streaming.bm25_index import (
     IncrementalBm25IndexMaintainer,
-    streaming_bm25_index_maintenance,
 )
 from windowsession_using_kafka_flink_docker_spark.streaming.neardup_index import (
     IncrementalNearDupIndexMaintainer,
-    streaming_neardup_index_maintenance,
 )
 from windowsession_using_kafka_flink_docker_spark.streaming.analytics_twins import (
     BoundedTokenFrequencyMaintainer,
@@ -85,7 +82,6 @@ from windowsession_using_kafka_flink_docker_spark.streaming.sources import (
 
 __all__ = [
     "IncrementalJoinView",
-    "streaming_join_view_maintenance",
     "MONOTONOUS_DELAY",
     "EVENT_WIRE_SCHEMA",
     "streaming_alerts",
@@ -122,9 +118,7 @@ __all__ = [
     "Scd2DimensionMaintainer",
     "IncrementalSessionStoreMaintainer",
     "IncrementalBm25IndexMaintainer",
-    "streaming_bm25_index_maintenance",
     "IncrementalNearDupIndexMaintainer",
-    "streaming_neardup_index_maintenance",
     "file_events_source",
     "kafka_events_source",
     "kafka_raw_source",

@@ -3,8 +3,8 @@
 The third serving index kept live by a stream, completing the
 maintained-index family the way maintainer #24 (streaming/
 session_store.py) completed sessionization: #24 maintains the session
-table (events), the staged ``incremental_neardup_probe`` maintains the
-LSH near-dup index (dedup), and this maintainer keeps the persisted
+table (events), #26 (streaming/neardup_index.py) maintains the LSH
+near-dup index (dedup), and this maintainer keeps the persisted
 BM25 postings index (operators/bm25_index.py) current as documents
 stream in — each micro-batch appends ITS OWN versioned increment, the
 corpus is never re-tokenized, and queries are served from the index
@@ -14,8 +14,9 @@ Replay-idempotence comes from keying the increment on the BATCH ID
 (``inc=<batch_id>``): a crash between the foreachBatch write and the
 checkpoint commit re-delivers the batch, whose re-append OVERWRITES the
 same increment directories with identical recomputed content — the
-``_VersionedState`` discipline (streaming/analytics_twins.py) applied
-to an index instead of a state table. An append interrupted between
+``_VersionedState`` discipline applied to an index instead of a state
+table (``_IndexMaintainer``, streaming/analytics_twins.py, owns the
+guard and the count-triggered compaction). An append interrupted between
 the postings and doclens components is caught by the reader's
 torn-index guard (operators/bm25_index.py:check_index_committed), so a
 torn increment can never silently mis-score; the re-delivered batch
@@ -34,8 +35,7 @@ are unchanged by compaction.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql import DataFrame
 
 from windowsession_using_kafka_flink_docker_spark.operators.bm25_index import (
     bm25_from_index,
@@ -43,74 +43,22 @@ from windowsession_using_kafka_flink_docker_spark.operators.bm25_index import (
     check_index_committed,
     compact_index,
 )
+from windowsession_using_kafka_flink_docker_spark.streaming.analytics_twins import (
+    _IndexMaintainer,
+)
 
 
-class IncrementalBm25IndexMaintainer:
+class IncrementalBm25IndexMaintainer(_IndexMaintainer):
     """Keeps a persisted BM25 postings index live from a document
     stream. ``search(terms, k)`` from the maintained index equals the
     from-scratch single-pass BM25 over every ingested document
     (stream==batch, asserted in tests/test_bm25_index_stream.py)."""
 
-    def __init__(self, spark: SparkSession, index_dir: str,
-                 compact_every: int | None = None):
-        """``compact_every=N`` folds the index whenever the increment
-        count reaches N, INSIDE the foreachBatch thread right after the
-        append — quiescent by construction, because that thread is the
-        index's only writer (the compaction's quiescence contract needs
-        no external coordination). Without it a long-running stream
-        only compacts at restart and the per-query read amplification
-        grows linearly with uptime (r15 VERDICT item 5). None keeps
-        the restart-only behavior."""
-        self.spark = spark
-        self.index_dir = index_dir
-        self.compact_every = compact_every
+    _GUARD = "postings"
 
-    def append_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._guard(batch_id)
-        # An empty micro-batch writes no increment: an empty inc=<n>
-        # pair would be value-neutral but adds two empty directories
-        # per idle trigger for the reader to list.
-        if batch_df.isEmpty():
-            return
+    def _append(self, batch_df: DataFrame, batch_id: int) -> None:
         bm25_index_append(self.spark, self.index_dir, batch_df,
                           inc=batch_id)
-        self._maybe_compact()
-
-    def _maybe_compact(self) -> None:
-        """Count-triggered fold after an append. The just-written
-        newest increment stays un-folded (the compact contract), so a
-        crash between this fold and the checkpoint commit replays a
-        batch whose own increment is still overwritable in place —
-        replay-idempotence is unchanged."""
-        from windowsession_using_kafka_flink_docker_spark.operators.bm25_index import (
-            increments,
-        )
-
-        if self.compact_every and len(
-                increments(self.index_dir, "postings")) \
-                >= self.compact_every:
-            folded = self.compact()
-            if folded:
-                print(f"bm25_index: compacted {folded} increment(s) "
-                      f"(compact_every={self.compact_every})")
-
-    def _guard(self, batch_id: int) -> None:
-        """The _VersionedState lifecycle guard, index-shaped (r15
-        review finding): a RESET checkpoint against a kept index dir
-        restarts batch ids at 0, and inc=00000 — which after a
-        compaction holds the folded FULL history — would be silently
-        overwritten by one batch's postings. Fail fast instead; a
-        replay of the newest batch (inc == batch_id) still passes."""
-        from windowsession_using_kafka_flink_docker_spark.operators.bm25_index import (
-            increments,
-        )
-
-        incs = increments(self.index_dir, "postings")
-        if incs and int(incs[-1].split("=")[1]) > batch_id:
-            raise ValueError(
-                f"index_dir {self.index_dir} already holds increment "
-                f"{incs[-1]} > incoming batch_id {batch_id}; "
-                "checkpoint_dir and index_dir must be reset together")
 
     def committed_increments(self) -> list[str]:
         """The committed ``inc=<n>`` leaves (guard-checked) — the
@@ -129,12 +77,3 @@ class IncrementalBm25IndexMaintainer:
         Returns the number of increments folded."""
         return compact_index(self.spark, self.index_dir)
 
-
-def streaming_bm25_index_maintenance(
-        docs: DataFrame, maintainer: IncrementalBm25IndexMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return (docs.writeStream
-            .queryName("bm25_index_maintenance")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(maintainer.append_batch)
-            .start())

@@ -42,7 +42,6 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 
 class IncrementalJoinView:
@@ -50,14 +49,24 @@ class IncrementalJoinView:
 
     ``key`` is the equi-join column (same name both sides); all other
     columns pass through (names must not collide apart from the key).
+    A stream feeds it through ``merge_batch``: Structured Streaming's
+    foreachBatch sees a single source, so the two delta streams arrive
+    unioned with a ``tag_col`` discriminator (``a_tag`` marks side A,
+    anything else side B). ``a_cols``/``b_cols`` name each side's
+    payload columns (the join key is always kept).
     """
 
     def __init__(self, spark: SparkSession, state_dir: str, key: str,
-                 buckets: int = 8):
+                 buckets: int = 8, tag_col: str = "_src", a_tag: str = "a",
+                 a_cols: tuple[str, ...] = (), b_cols: tuple[str, ...] = ()):
         self.spark = spark
         self.state_dir = state_dir
         self.key = key
         self.buckets = buckets
+        self.tag_col = tag_col
+        self.a_tag = a_tag
+        self.a_cols = a_cols
+        self.b_cols = b_cols
         import hashlib
         self._tag = hashlib.md5(
             os.path.abspath(state_dir).encode()).hexdigest()[:10]
@@ -160,35 +169,16 @@ class IncrementalJoinView:
         self._write("b", batch_id, b_new)
         self._write("m", batch_id, m_new)
 
+    def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        """Split one union-tagged micro-batch into (dA, dB) and apply it."""
+        is_a = F.col(self.tag_col) == self.a_tag
+        self.apply_batch(batch_df.where(is_a).select(self.key, *self.a_cols),
+                         batch_df.where(~is_a).select(self.key, *self.b_cols),
+                         batch_id)
+
     def current(self) -> DataFrame:
         versions = self._versions("m")
         if not versions:
             raise ValueError("join view: no state yet")
         return self._read("m", versions[-1])
 
-
-def streaming_join_view_maintenance(
-        tagged: DataFrame, view: IncrementalJoinView, checkpoint_dir: str,
-        tag_col: str = "_src", a_tag: str = "a",
-        a_cols: tuple[str, ...] = (), b_cols: tuple[str, ...] = (),
-) -> StreamingQuery:
-    """foreachBatch driver for the join view over ONE union-tagged stream.
-
-    Structured Streaming's foreachBatch sees a single source, so the two
-    delta streams arrive unioned with a ``tag_col`` discriminator (the
-    standard multi-source trick); each micro-batch is split back into
-    (dA, dB) and merged. ``a_cols``/``b_cols`` name each side's payload
-    columns (the join key is always kept).
-    """
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        da = (batch_df.where(F.col(tag_col) == a_tag)
-              .select(view.key, *a_cols))
-        db = (batch_df.where(F.col(tag_col) != a_tag)
-              .select(view.key, *b_cols))
-        view.apply_batch(da, db, batch_id)
-
-    return (tagged.writeStream
-            .foreachBatch(_merge)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .start())

@@ -44,47 +44,33 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql import DataFrame
 
 from windowsession_using_kafka_flink_docker_spark.operators.neardup_index import (
     _COMPONENTS,
-    increments,
     neardup_index_append,
     neardup_index_probe,
 )
 from windowsession_using_kafka_flink_docker_spark.operators.versioned_index import (
+    check_components_committed,
     compact_components,
+)
+from windowsession_using_kafka_flink_docker_spark.streaming.analytics_twins import (
+    _IndexMaintainer,
 )
 
 _PAIRS_SCHEMA = ("id_a BIGINT, id_b BIGINT, jaccard DOUBLE, "
                  "is_cross BOOLEAN")
 
 
-class IncrementalNearDupIndexMaintainer:
+class IncrementalNearDupIndexMaintainer(_IndexMaintainer):
     """Probe-then-append continuous dedup over a document stream.
     ``current_pairs()`` equals the from-scratch near-dup pairs over
     every ingested document (stream==batch)."""
 
-    def __init__(self, spark: SparkSession, index_dir: str,
-                 compact_every: int | None = None):
-        """``compact_every=N`` folds the index whenever the increment
-        count reaches N, INSIDE the foreachBatch thread right after the
-        append — quiescent by construction (that thread is the only
-        writer). Replay stays exact: the fold excludes the just-written
-        newest increment, and a replayed batch's ``before_inc=batch_id``
-        probe sees the folded ``inc=00000`` — a value-identical view of
-        'every increment strictly below me', since the fold only unions
-        rows and the bucket-cap ledger SUMs per-increment counts.
-        None keeps the restart-only compaction (r15 VERDICT item 5)."""
-        self.spark = spark
-        self.index_dir = index_dir
-        self.compact_every = compact_every
+    _GUARD = "bands"
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self._guard(batch_id)
-        if batch_df.isEmpty():
-            return
+    def _append(self, batch_df: DataFrame, batch_id: int) -> None:
         from windowsession_using_kafka_flink_docker_spark.operators import (
             dedup as D,
         )
@@ -115,39 +101,11 @@ class IncrementalNearDupIndexMaintainer:
                                  bands=bands)
         finally:
             shingles.unpersist()
-        self._maybe_compact()
-
-    def _maybe_compact(self) -> None:
-        if self.compact_every and len(
-                increments(self.index_dir, "bands")) \
-                >= self.compact_every:
-            folded = self.compact()
-            if folded:
-                print(f"neardup_index: compacted {folded} increment(s) "
-                      f"(compact_every={self.compact_every})")
-
-    def _guard(self, batch_id: int) -> None:
-        """The _VersionedState lifecycle guard, index-shaped (r15
-        review finding): a RESET checkpoint against a kept index dir
-        restarts batch ids at 0, probing an artificially empty
-        before_inc=0 view (missing every cross pair) and overwriting
-        inc=00000 — which after a compaction holds the folded FULL
-        history. Fail fast; a replay of the newest batch still passes."""
-        incs = increments(self.index_dir, "bands")
-        if incs and int(incs[-1].split("=")[1]) > batch_id:
-            raise ValueError(
-                f"index_dir {self.index_dir} already holds increment "
-                f"{incs[-1]} > incoming batch_id {batch_id}; "
-                "checkpoint_dir and index_dir must be reset together")
 
     def committed_increments(self) -> list[str]:
         """Committed increments across ALL components including pairs
         (fail-closed on any mismatch — one shared guard
         implementation, operators/versioned_index.py)."""
-        from windowsession_using_kafka_flink_docker_spark.operators.versioned_index import (
-            check_components_committed,
-        )
-
         return check_components_committed(
             self.index_dir, (*_COMPONENTS, "pairs"), "near-dup")
 
@@ -177,17 +135,10 @@ class IncrementalNearDupIndexMaintainer:
         shingle rows union, per-increment bucket counts still SUM to
         the same ledger, and current_pairs() is a union either way.
         The newest increment stays un-folded because a crash-replayed
-        batch may overwrite it. Returns the number folded."""
+        batch may overwrite it; that batch's ``before_inc=batch_id``
+        probe then sees the folded ``inc=00000``, a value-identical view
+        of every increment strictly below it. Returns the number folded."""
         return compact_components(
             self.spark, self.index_dir,
             {**_COMPONENTS, "pairs": ()}, "near-dup")
 
-
-def streaming_neardup_index_maintenance(
-        docs: DataFrame, maintainer: IncrementalNearDupIndexMaintainer,
-        checkpoint_dir: str) -> StreamingQuery:
-    return (docs.writeStream
-            .queryName("neardup_index_maintenance")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(maintainer.process_batch)
-            .start())

@@ -46,7 +46,6 @@ class Scd2DimensionMaintainer:
         self.attr_cols = attr_cols
         self.batch_ts_col = batch_ts_col
         self.change_order = change_order
-        self._schema = None  # captured from the first batch
         os.makedirs(state_dir, exist_ok=True)
 
     def _versions(self) -> list[int]:
@@ -77,7 +76,7 @@ class Scd2DimensionMaintainer:
             return
         versions = self._versions()
         if versions and versions[-1] > batch_id:
-            # Same lifecycle coupling as ContinuousRollupMaintainer: a
+            # Same lifecycle coupling as _VersionedState.guard: a
             # restart with a fresh checkpoint (batch ids back at 0) but a
             # stale state_dir would rebase on nothing while current()
             # keeps serving the old run's max(_versions) state.

@@ -135,8 +135,8 @@ def capped_fold(user_id: int, cur: tuple[int, ...] | None,
 
     ``cur`` is the STATE_SCHEMA tuple (or None for a new key). Returns
     the segments the batch closed — ``(user_id, s0, s1, cents, count)``
-    — and the new open segment. Pure, so the applyInPandasWithState and
-    transformWithStateInPandas renderings share one definition."""
+    — and the new open segment. Pure: ``make_capped_session_fn`` owns
+    the state handle and the timeout."""
     closed: list[tuple[int, int, int, int, int]] = []
     for t, c in zip(ts_us, cents):
         if cur is None:
@@ -211,83 +211,3 @@ def streaming_capped_sessionize(events: DataFrame, gap_sec: float = 30.0,
     )
     return _present(folded)
 
-
-class CappedSessionProcessor:
-    """``transformWithStateInPandas`` (Spark 4 arbitrary-state v2) rendering
-    of the same capped-session semantics: explicit ``ValueState`` + real
-    event-time timers instead of applyInPandasWithState's single implicit
-    state/timeout. Requires the RocksDB state store provider. Reads
-    ``_prepare``'s columns and yields ``FOLD_SCHEMA`` frames.
-
-    Defined lazily against ``StatefulProcessor`` (imported at call time) so
-    the module stays importable on Spark builds without the v2 API.
-    """
-
-    def __init__(self, gap_sec: float, cap_sec: float) -> None:
-        self._gap_us = int(gap_sec * 1_000_000)
-        self._cap_us = int(cap_sec * 1_000_000)
-
-    def init(self, handle) -> None:
-        self._handle = handle
-        self._session = handle.getValueState("session", STATE_SCHEMA)
-
-    def _snapshot(self):
-        if not self._session.exists():
-            return None
-        return tuple(self._session.get())
-
-    def handleInputRows(self, key, rows, timerValues):
-        closed, cur = capped_fold(
-            int(key[0]), self._snapshot(), *_sorted_batch(rows),
-            self._gap_us, self._cap_us)
-        if cur is not None:
-            self._session.update(cur)
-            # one live timer per key: replace, don't accumulate
-            for expiry in list(self._handle.listTimers()):
-                self._handle.deleteTimer(expiry)
-            # same watermark clamp as the applyInPandasWithState path
-            timeout_ms = cur[3] // 1_000 + self._gap_us // 1_000 + 1
-            self._handle.registerTimer(
-                max(timeout_ms, timerValues.getCurrentWatermarkInMs() + 1)
-            )
-        if closed:
-            yield _emit(closed)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        cur = self._snapshot()
-        # guard against a stale timer racing a newer segment
-        if cur is not None and (expiredTimerInfo.getExpiryTimeInMs()
-                                >= cur[3] // 1_000 + self._gap_us // 1_000):
-            self._session.clear()
-            yield _emit([(int(key[0]), cur[2], cur[3], cur[4], cur[5])])
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_capped_sessionize_tws(events: DataFrame, gap_sec: float = 30.0,
-                                    cap_sec: float = DEFAULT_CAP,
-                                    watermark_delay: str = "0 seconds",
-                                    key: str = "user_id", ts: str = "ts",
-                                    value: str = "value") -> DataFrame:
-    """Capped sessions on the transformWithStateInPandas API — same output
-    contract as ``streaming_capped_sessionize`` (asserted equal to the
-    DuckDB-oracled batch operator in tests). Needs
-    ``spark.sql.streaming.stateStore.providerClass =
-    RocksDBStateStoreProvider``."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # runtime subclass so import of this module never requires the v2 API
-    proc_cls = type("_CappedSessionProcessor",
-                    (CappedSessionProcessor, StatefulProcessor), {})
-    folded = (
-        _prepare(events, key, ts, value, watermark_delay)
-        .groupBy(key)
-        .transformWithStateInPandas(
-            proc_cls(gap_sec, cap_sec),
-            FOLD_SCHEMA,
-            "Append",
-            "EventTime",
-        )
-    )
-    return _present(folded)
