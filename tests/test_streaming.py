@@ -1272,10 +1272,10 @@ class TestStreamingScd2Maintenance:
         )
 
         flat = self._change_stream_dir(spark, sf_dir, tmp_path_factory)
+        state_dir = str(tmp_path_factory.mktemp("scd2_state"))
         maint = Scd2DimensionMaintainer(
-            spark, str(tmp_path_factory.mktemp("scd2_state")),
-            key="user_id", attr_cols=("tier",), batch_ts_col="ts",
-            change_order="ts")
+            spark, state_dir, key="user_id", attr_cols=("tier",),
+            batch_ts_col="ts", change_order="ts")
         stream = file_events_source(
             spark, flat, schema="ts TIMESTAMP, user_id BIGINT, tier STRING",
             max_files_per_trigger=1)
@@ -1310,7 +1310,7 @@ class TestStreamingScd2Maintenance:
 
         # replay idempotence: re-running the LAST batch leaves the dim
         # byte-identical (versioned write derives from versions < id)
-        versions = maint._versions()
+        versions = maint.state.versions()
         last = versions[-1]
         before = sorted(tuple(str(v) for v in r)
                         for r in maint.current().collect())
@@ -1320,6 +1320,25 @@ class TestStreamingScd2Maintenance:
         after = sorted(tuple(str(v) for v in r)
                        for r in maint.current().collect())
         assert before == after
+
+        # serving restart: a fresh maintainer over the same state_dir
+        # serves the writer's dimension before any batch — from the
+        # schema stamp, and with the stamp gone (as in a directory
+        # written before SCD2 state was stamped) from the newest
+        # version's parquet footer, which re-stamps the directory
+        stamp_path = os.path.join(state_dir, "_schema.txt")
+        with open(stamp_path) as fh:
+            stamp = fh.read()
+        for stamped in (True, False):
+            if not stamped:
+                os.remove(stamp_path)
+            fresh = Scd2DimensionMaintainer(
+                spark, state_dir, key="user_id", attr_cols=("tier",),
+                batch_ts_col="ts", change_order="ts")
+            assert sorted(tuple(str(v) for v in r)
+                          for r in fresh.current().collect()) == after
+            with open(stamp_path) as fh:
+                assert fh.read() == stamp, stamped
 
     def test_fresh_checkpoint_against_stale_state_fails_fast(
             self, spark, tmp_path_factory):
@@ -1413,7 +1432,7 @@ class TestIncrementalJoinView:
             spark, str(tmp_path_factory.mktemp("jv_bk")), key="custkey")
         view.apply_batch(orders, cust, 0)
 
-        b_state = view._read("b", 0)
+        b_state = view.b.read(0)
         delta = orders.where(F.col("o_orderkey") < 100)
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -1432,9 +1451,12 @@ class TestIncrementalJoinView:
     def test_state_survives_table_registry_loss(
             self, spark, sf_dir, tmp_path_factory):
         """Recovery path: dropping the bucketed-table registrations (what
-        a session restart does) must not lose state — _read re-registers
-        from the on-disk schema and the view still equals the batch
-        join."""
+        a session restart does) must not lose state — the sides' read
+        re-registers them from the state's schema and the view still
+        equals the batch join. The schema stamps are deleted too, as in
+        a directory written before the view's state was stamped: the
+        reopened view takes the schema from the parquet footers and
+        re-stamps each part."""
         from windowsession_using_kafka_flink_docker_spark.streaming import (
             IncrementalJoinView,
         )
@@ -1452,8 +1474,18 @@ class TestIncrementalJoinView:
         for t in spark.catalog.listTables():
             if t.name.startswith(f"jv_{view._tag}"):
                 spark.sql(f"DROP TABLE {t.name}")
+        stamps = {}
+        for part in ("a", "b", "m"):
+            path = os.path.join(state, part, "_schema.txt")
+            with open(path) as fh:
+                stamps[path] = fh.read()
+            os.remove(path)
         view2 = IncrementalJoinView(spark, state, key="custkey")
+        for path, stamp in stamps.items():
+            with open(path) as fh:
+                assert fh.read() == stamp, path
         view2.apply_batch(das[1], cust.limit(0), 1)
+        assert view2.m.versions()[-1] == 1
         got = _rows(view2.current())
         want = _rows(orders.join(cust, "custkey"))
         assert got == want
@@ -3713,9 +3745,9 @@ class TestCrashMidBatchDurability:
     def test_crash_mid_batch_rollup_and_scd2(self, spark, sf_dir,
                                              tmp_path_factory):
         """Same drill for the rollup maintainer (summable partials) and
-        the SCD2 dimension maintainer, which keeps its own version
-        plumbing (CDC merge — chronological batches, so the replayed
-        batch is a mid-history delta)."""
+        the SCD2 dimension maintainer, whose state schema comes from its
+        input (CDC merge — chronological batches, so the replayed batch
+        is a mid-history delta)."""
         import glob
 
         from windowsession_using_kafka_flink_docker_spark.streaming import (
@@ -3741,12 +3773,12 @@ class TestCrashMidBatchDurability:
         cases = [
             ("rollup", lambda d: IncrementalRollupMaintainer(spark, d),
              rollup_chunks, "ts TIMESTAMP, event_type STRING, value DOUBLE",
-             None, lambda m: m.current(), lambda m: m.state.versions()),
+             None, lambda m: m.current()),
             ("scd2", mk_scd, scd_chunks,
              "ts TIMESTAMP, user_id BIGINT, tier STRING",
-             scd_flat, lambda m: m.current_rows(), lambda m: m._versions()),
+             scd_flat, lambda m: m.current_rows()),
         ]
-        for label, mk, chunks, schema, flat, present, versions in cases:
+        for label, mk, chunks, schema, flat, present in cases:
             ref = mk(str(tmp_path_factory.mktemp(f"{label}_xref")))
             for i, chunk in enumerate(chunks):
                 ref.merge_batch(chunk, i)
@@ -3768,7 +3800,7 @@ class TestCrashMidBatchDurability:
                 q.processAllAvailable()
             assert "injected crash" in str(excinfo.value), label
             q.stop()
-            assert versions(wounded)[-1] == 1, label
+            assert wounded.state.versions()[-1] == 1, label
 
             revived = mk(state_dir)
             q2 = (file_events_source(spark, flat, schema=schema,
@@ -3780,7 +3812,7 @@ class TestCrashMidBatchDurability:
                 q2.processAllAvailable()
             finally:
                 q2.stop()
-            assert versions(revived)[-1] == 2, label
+            assert revived.state.versions()[-1] == 2, label
             assert _rows(present(revived), exclude_sentinel=False) == want, (
                 f"{label}: crash-mid-batch + restart diverged from the "
                 f"uninterrupted run")

@@ -86,12 +86,13 @@ fixed-memory token-state variant):
 All states are key-space-bounded (calendar days / column domain /
 category grid / type x supplier / source x lang / users /
 vocabulary), versioned by batch id, replay-idempotent, and
-lifecycle-guarded. The analytics and session-store states share
-``_VersionedState`` with the rollup maintainer; the BM25 and near-dup
-indexes keep per-batch increments with the same guard, and SCD2 and
-the join view (not run here) keep their own version plumbing. Every
-query is wired by ``streaming_maintenance`` except the two indexes,
-which bind their own sinks. Run either side (or both) from file
+lifecycle-guarded. The analytics and session-store states are
+``_VersionedState`` directories, like the rollup's, SCD2's and the join
+view's (neither run here); the BM25 and near-dup indexes keep per-batch
+increments with the same guard. Every query is wired by
+``streaming_maintenance``, with its state under
+``<state-root>/<name>`` and its checkpoint under
+``<checkpoint-root>/<name>``. Run either side (or both) from file
 drop-dirs:
 
     spark-submit maintain_analytics_job.py \
@@ -130,6 +131,52 @@ from windowsession_using_kafka_flink_docker_spark.streaming import (
     IncrementalUserSpendMaintainer,
     streaming_maintenance,
 )
+
+
+def _resume_session_store(name: str, sess) -> None:
+    """Drain dead letters left by a previous run BEFORE the stream
+    resumes — the quiescent moment the crash-safe drain protocol is
+    designed for (streaming/session_store.py: repair_from_dead_letter);
+    the backlog is logged either way so a persistent late-arrival source
+    is visible, never silent. Then fold the frozen increments."""
+    pending = sess.dead_letter_backlog()
+    if pending:
+        drained = sess.repair_from_dead_letter()
+        print(f"{name}: drained {drained} of {pending} "
+              "quarantined late event(s) into the store before "
+              "resuming (a remainder belongs to the newest batch — "
+              "it defers one restart so a crash replay can never "
+              "double-count)")
+    else:
+        print(f"{name}: dead-letter quarantine empty at start")
+    try:
+        folded = sess.compact_frozen()
+        if folded:
+            print(f"{name}: compacted {folded} frozen "
+                  "increment(s) before resuming")
+    except ValueError as e:
+        # a torn LAST frozen increment is healed by the stream's
+        # redelivery, not by failing the job before it can start
+        print(f"{name}: skipping frozen compaction ({e}); "
+              "the re-delivered batch will overwrite the torn "
+              "increment")
+
+
+def _compact_index(name: str, index) -> None:
+    """Compact at the quiescent restart moment (same rationale as the
+    session-store drain) — it also HEALS a torn mid-compaction state
+    left by a crash, which the count trigger would otherwise hit as a
+    fail-closed read on the next batch."""
+    try:
+        folded = index.compact()
+        if folded:
+            print(f"{name}: compacted {folded} increment(s) "
+                  "before resuming")
+    except ValueError as e:
+        # a torn LAST batch is healed by the stream's redelivery,
+        # not by failing the job before the stream can start
+        print(f"{name}: skipping compaction ({e}); the "
+              "re-delivered batch will overwrite the torn increment")
 
 
 def main() -> None:
@@ -193,205 +240,92 @@ def main() -> None:
 
     spark = get_spark("maintain-analytics-job")
     queries = []
+    compact_every = args.compact_every or None
+
+    def maintain(stream, name, cls, *dims, prepare=None, **kwargs):
+        """Build ``cls`` over ``<state-root>/<name>``, run its restart
+        step ``prepare(name, maintainer)`` if any, then start its query
+        with the checkpoint ``<checkpoint-root>/<name>``."""
+        m = cls(spark, os.path.join(args.state_root, name), *dims, **kwargs)
+        if prepare:
+            prepare(name, m)
+        queries.append(streaming_maintenance(
+            stream, m, os.path.join(args.checkpoint_root, name)))
+
     if args.orders:
         orders = (spark.readStream
                   .schema("o_orderdate TIMESTAMP, o_totalprice DOUBLE, "
                           "o_custkey BIGINT, o_orderkey BIGINT, "
                           "o_orderstatus STRING, o_orderpriority STRING")
                   .parquet(args.orders))
-        rev = IncrementalDailyRevenueMaintainer(
-            spark, os.path.join(args.state_root, "daily_revenue"))
-        queries.append(streaming_maintenance(
-            orders, rev, os.path.join(args.checkpoint_root,
-                                      "daily_revenue")))
-        # maintainers #10/#11 share the orders stream: ANALYZE-TABLE
-        # column statistics and the status x priority contingency state
-        stats = IncrementalTableStatsMaintainer(
-            spark, os.path.join(args.state_root, "table_stats"))
-        queries.append(streaming_maintenance(
-            orders, stats, os.path.join(args.checkpoint_root,
-                                        "table_stats")))
-        cont = IncrementalContingencyMaintainer(
-            spark, os.path.join(args.state_root, "contingency"))
-        queries.append(streaming_maintenance(
-            orders, cont, os.path.join(args.checkpoint_root,
-                                       "contingency")))
-        # maintainer #15: the bounded per-priority quantile sample
-        quant = BoundedQuantileMaintainer(
-            spark, os.path.join(args.state_root, "quantile"))
-        queries.append(streaming_maintenance(
-            orders, quant, os.path.join(args.checkpoint_root,
-                                        "quantile")))
-        # maintainer #17: per-(segment, arm, cents) rank-test counts
-        # (needs the customer dimension for the segment enrichment)
+        maintain(orders, "daily_revenue", IncrementalDailyRevenueMaintainer)
+        # #10/#11: ANALYZE-TABLE column statistics and the status x
+        # priority contingency state
+        maintain(orders, "table_stats", IncrementalTableStatsMaintainer)
+        maintain(orders, "contingency", IncrementalContingencyMaintainer)
+        # #15: the bounded per-priority quantile sample
+        maintain(orders, "quantile", BoundedQuantileMaintainer)
         if args.customer:
+            # #17 per-(segment, arm, cents) rank-test counts and #18
+            # per-customer order counts (the Q13 distribution) share the
+            # static customer dimension
             customer = spark.read.parquet(args.customer)
-            rank = IncrementalRankTestMaintainer(
-                spark, os.path.join(args.state_root, "rank_test"),
-                customer)
-            queries.append(streaming_maintenance(
-                orders, rank, os.path.join(args.checkpoint_root,
-                                           "rank_test")))
-        # maintainer #18: per-customer exact order counts (the Q13
-        # distribution; shares the --customer static dimension)
-        if args.customer:
-            customer18 = spark.read.parquet(args.customer)
-            ocount = IncrementalOrderCountMaintainer(
-                spark, os.path.join(args.state_root, "order_count"),
-                customer18)
-            queries.append(streaming_maintenance(
-                orders, ocount, os.path.join(args.checkpoint_root,
-                                             "order_count")))
-        # maintainer #16: per-customer epoch membership bits
-        member = IncrementalSetMembershipMaintainer(
-            spark, os.path.join(args.state_root, "set_membership"))
-        queries.append(streaming_maintenance(
-            orders, member, os.path.join(args.checkpoint_root,
-                                         "set_membership")))
-        # maintainer #21 shares the orders stream: the per-customer
-        # CUPED unit grid (pre/post epoch spend cents)
-        cuped = IncrementalCupedMaintainer(
-            spark, os.path.join(args.state_root, "cuped"))
-        queries.append(streaming_maintenance(
-            orders, cuped, os.path.join(args.checkpoint_root, "cuped")))
+            maintain(orders, "rank_test", IncrementalRankTestMaintainer,
+                     customer)
+            maintain(orders, "order_count", IncrementalOrderCountMaintainer,
+                     customer)
+        # #16: per-customer epoch membership bits
+        maintain(orders, "set_membership",
+                 IncrementalSetMembershipMaintainer)
+        # #21: the per-customer CUPED unit grid (pre/post epoch cents)
+        maintain(orders, "cuped", IncrementalCupedMaintainer)
     if args.events:
         events = (spark.readStream
                   .schema("ts TIMESTAMP, user_id BIGINT, value DOUBLE, "
                           "event_type STRING")
                   .parquet(args.events))
-        spend = IncrementalUserSpendMaintainer(
-            spark, os.path.join(args.state_root, "user_spend"))
-        queries.append(streaming_maintenance(
-            events, spend, os.path.join(args.checkpoint_root,
-                                        "user_spend")))
-        # maintainer #27 shares the events stream: the per-(event_type,
-        # bucket) HLL register state — the mergeable-NDV sketch
-        hll = IncrementalHllMaintainer(
-            spark, os.path.join(args.state_root, "hll_ndv"))
-        queries.append(streaming_maintenance(
-            events, hll, os.path.join(args.checkpoint_root, "hll_ndv")))
-        # maintainer #20 shares the events stream: the per-(user, day)
-        # daily-cents grid behind the OLS trend report
-        trend = IncrementalTrendMaintainer(
-            spark, os.path.join(args.state_root, "trend"))
-        queries.append(streaming_maintenance(
-            events, trend, os.path.join(args.checkpoint_root, "trend")))
-        # maintainer #24 shares the events stream: the incremental
-        # session store (10-minute-gap session table kept current by
-        # per-user tail merge). The continuous job configures a
-        # dead-letter dir so one late drop-file quarantines its late
-        # users' raw events (b=<batch_id> parquet, replay-idempotent)
-        # instead of crash-looping the query; drain it periodically
-        # through the late_event_session_repair path.
-        sess = IncrementalSessionStoreMaintainer(
-            spark, os.path.join(args.state_root, "session_store"),
-            dead_letter_dir=os.path.join(args.state_root,
-                                         "session_store_dead_letter"),
-            compact_every=args.compact_every or None)
-        # Drain dead letters left by a previous run BEFORE the stream
-        # resumes — the quiescent moment the crash-safe drain protocol
-        # is designed for (streaming/session_store.py:
-        # repair_from_dead_letter); the backlog is logged either way so
-        # a persistent late-arrival source is visible, never silent.
-        pending = sess.dead_letter_backlog()
-        if pending:
-            drained = sess.repair_from_dead_letter()
-            print(f"session_store: drained {drained} of {pending} "
-                  "quarantined late event(s) into the store before "
-                  "resuming (a remainder belongs to the newest batch — "
-                  "it defers one restart so a crash replay can never "
-                  "double-count)")
-        else:
-            print("session_store: dead-letter quarantine empty at start")
-        try:
-            folded = sess.compact_frozen()
-            if folded:
-                print(f"session_store: compacted {folded} frozen "
-                      "increment(s) before resuming")
-        except ValueError as e:
-            # a torn LAST frozen increment is healed by the stream's
-            # redelivery, not by failing the job before it can start
-            print(f"session_store: skipping frozen compaction ({e}); "
-                  "the re-delivered batch will overwrite the torn "
-                  "increment")
-        queries.append(streaming_maintenance(
-            events, sess, os.path.join(args.checkpoint_root,
-                                       "session_store")))
+        maintain(events, "user_spend", IncrementalUserSpendMaintainer)
+        # #27: the per-(event_type, bucket) HLL registers
+        maintain(events, "hll_ndv", IncrementalHllMaintainer)
+        # #20: the per-(user, day) daily-cents grid behind the OLS trend
+        maintain(events, "trend", IncrementalTrendMaintainer)
+        # #24: the incremental session store (10-minute-gap session
+        # table kept current by per-user tail merge). A dead-letter dir
+        # quarantines one late drop-file's late users' raw events
+        # (b=<batch_id> parquet, replay-idempotent) instead of
+        # crash-looping the query.
+        maintain(events, "session_store", IncrementalSessionStoreMaintainer,
+                 dead_letter_dir=os.path.join(args.state_root,
+                                              "session_store_dead_letter"),
+                 compact_every=compact_every, prepare=_resume_session_store)
     if args.docs:
         docs = (spark.readStream
                 .schema("doc_id BIGINT, text STRING, source STRING, "
                         "lang STRING")
                 .parquet(args.docs))
         if args.bounded_tokens:
-            bfreq = BoundedTokenFrequencyMaintainer(
-                spark, os.path.join(args.state_root, "token_freq_bounded"))
-            queries.append(streaming_maintenance(
-                docs, bfreq, os.path.join(args.checkpoint_root,
-                                          "token_freq_bounded")))
+            maintain(docs, "token_freq_bounded",
+                     BoundedTokenFrequencyMaintainer)
         else:
-            freq = IncrementalTokenFrequencyMaintainer(
-                spark, os.path.join(args.state_root, "token_freq"))
-            queries.append(streaming_maintenance(
-                docs, freq,
-                os.path.join(args.checkpoint_root, "token_freq")))
-        # maintainer #28 shares the documents stream: training-sequence
-        # bins maintained from the per-shard tail (closed bins immutable)
-        packm = IncrementalPackingMaintainer(
-            spark, os.path.join(args.state_root, "packing"))
-        queries.append(streaming_maintenance(
-            docs, packm, os.path.join(args.checkpoint_root, "packing")))
-        # maintainer #13 shares the documents stream: domain-mix state
-        mix = IncrementalSourceMixMaintainer(
-            spark, os.path.join(args.state_root, "source_mix"))
-        queries.append(streaming_maintenance(
-            docs, mix, os.path.join(args.checkpoint_root, "source_mix")))
-        # maintainer #22 shares the documents stream: the 256-row
-        # hashed-feature standardization moments
-        fmom = IncrementalFeatureMomentsMaintainer(
-            spark, os.path.join(args.state_root, "feature_moments"))
-        queries.append(streaming_maintenance(
-            docs, fmom, os.path.join(args.checkpoint_root,
-                                     "feature_moments")))
-        # maintainer #23 shares the documents stream: the JPEG aHash
-        # chunk-bucket membership (codec once per new doc, set-union
-        # merge)
-        jfp = IncrementalJpegFingerprintMaintainer(
-            spark, os.path.join(args.state_root, "jpeg_fingerprint"))
-        queries.append(streaming_maintenance(
-            docs, jfp, os.path.join(args.checkpoint_root,
-                                    "jpeg_fingerprint")))
-        # maintainer #25 shares the documents stream: the persisted
-        # BM25 postings index appended one versioned increment per
-        # batch (inc=batch_id, replay-idempotent; queries serve from
-        # the index alone with bucket-pruned postings reads)
-        bmi = IncrementalBm25IndexMaintainer(
-            spark, os.path.join(args.state_root, "bm25_index"),
-            compact_every=args.compact_every or None)
-        # maintainer #26 shares the documents stream: continuous dedup
-        # — each batch is probed against the MinHash-LSH index of
-        # everything ingested so far (near-dup pairs persisted per
-        # batch), then appended as its own increment
-        ndi = IncrementalNearDupIndexMaintainer(
-            spark, os.path.join(args.state_root, "neardup_index"),
-            compact_every=args.compact_every or None)
-        for name, index in (("bm25_index", bmi), ("neardup_index", ndi)):
-            # Compact at the quiescent restart moment too (same rationale
-            # as the session-store drain above) — it also HEALS a torn
-            # mid-compaction state left by a crash, which the count
-            # trigger would otherwise hit as a fail-closed read on the
-            # next batch.
-            try:
-                folded = index.compact()
-                if folded:
-                    print(f"{name}: compacted {folded} increment(s) "
-                          "before resuming")
-            except ValueError as e:
-                # a torn LAST batch is healed by the stream's redelivery,
-                # not by failing the job before the stream can start
-                print(f"{name}: skipping compaction ({e}); the "
-                      "re-delivered batch will overwrite the torn increment")
-            queries.append(streaming_maintenance(
-                docs, index, os.path.join(args.checkpoint_root, name)))
+            maintain(docs, "token_freq", IncrementalTokenFrequencyMaintainer)
+        # #28: training-sequence bins from the per-shard tail
+        maintain(docs, "packing", IncrementalPackingMaintainer)
+        # #13: domain-mix state
+        maintain(docs, "source_mix", IncrementalSourceMixMaintainer)
+        # #22: the 256-row hashed-feature standardization moments
+        maintain(docs, "feature_moments", IncrementalFeatureMomentsMaintainer)
+        # #23: the JPEG aHash chunk-bucket membership
+        maintain(docs, "jpeg_fingerprint",
+                 IncrementalJpegFingerprintMaintainer)
+        # #25: the BM25 postings index, one increment per batch
+        # (queries serve from the index alone with bucket-pruned
+        # postings reads); #26: continuous dedup — each batch probed
+        # against the MinHash-LSH index of everything ingested so far,
+        # then appended as its own increment
+        maintain(docs, "bm25_index", IncrementalBm25IndexMaintainer,
+                 compact_every=compact_every, prepare=_compact_index)
+        maintain(docs, "neardup_index", IncrementalNearDupIndexMaintainer,
+                 compact_every=compact_every, prepare=_compact_index)
     if args.lineitem:
         li = (spark.readStream
               .schema("l_partkey BIGINT, l_suppkey BIGINT, "
@@ -399,22 +333,15 @@ def main() -> None:
                       "l_extendedprice DOUBLE, l_discount DOUBLE")
               .parquet(args.lineitem))
         part = spark.read.parquet(args.part)
-        hhi = IncrementalHhiMaintainer(
-            spark, os.path.join(args.state_root, "hhi"), part)
-        queries.append(streaming_maintenance(
-            li, hhi, os.path.join(args.checkpoint_root, "hhi")))
-        # maintainer #19: per-(nation, year) exact Q9-profit partials
-        # (needs the supplier/nation dimensions and the orders frame
-        # for the order year; part is already required)
+        maintain(li, "hhi", IncrementalHhiMaintainer, part)
+        # #19: per-(nation, year) exact Q9-profit partials (the
+        # supplier/nation dimensions and the orders frame give the
+        # order year; part is already required)
         if args.supplier and args.nation and args.orders_dim:
-            profit = IncrementalProfitMaintainer(
-                spark, os.path.join(args.state_root, "profit"),
-                part, spark.read.parquet(args.supplier),
-                spark.read.parquet(args.nation),
-                spark.read.parquet(args.orders_dim))
-            queries.append(streaming_maintenance(
-                li, profit, os.path.join(args.checkpoint_root,
-                                         "profit")))
+            maintain(li, "profit", IncrementalProfitMaintainer, part,
+                     spark.read.parquet(args.supplier),
+                     spark.read.parquet(args.nation),
+                     spark.read.parquet(args.orders_dim))
     for q in queries:
         q.awaitTermination()
 

@@ -42,6 +42,10 @@ Versioning/replay is owned by ``_VersionedState``: version
 ``v{batch_id}`` derived from the newest version strictly below
 ``batch_id``, overwritten on replay, pruned to current+previous, with the
 coupled-lifecycle guard against a fresh checkpoint over stale state.
+Every maintainer's state is one: the twins here, the rollup, the session
+store, the SCD2 dimension (streaming/scd.py) and the join view's three
+parts (streaming/joinview.py, whose bucketed sides override how a
+version is laid down, read and pruned).
 ``_IndexMaintainer`` is the same discipline for the append-only indexes
 (BM25 postings, near-dup LSH): one increment per batch id.
 ``streaming_maintenance`` wires any maintainer to a stream.
@@ -73,9 +77,17 @@ class _VersionedState:
     _SUCCESS) is the pointer, and an interrupted write of v{N} is re-done
     wholesale on replay of batch N (parquet overwrite), so readers never
     observe a torn state.
+
+    An owner whose columns come from its input (SCD2's key and
+    attributes, the join view's payloads) passes no ``schema``: it is
+    then the stamp's, else the newest version's parquet footer, else the
+    first frame ``write()`` receives. ``_put``/``_drop`` are the one
+    place a version is laid down and pruned; the join view's bucketed
+    sides override them.
     """
 
-    def __init__(self, spark: SparkSession, state_dir: str, schema: str):
+    def __init__(self, spark: SparkSession, state_dir: str,
+                 schema: str | None = None):
         self.spark = spark
         self.state_dir = state_dir
         self.schema = schema
@@ -90,12 +102,19 @@ class _VersionedState:
 
     _STAMP = "_schema.txt"
 
+    @staticmethod
+    def _ddl(schema: StructType) -> str:
+        return ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
+                         for f in schema.fields)
+
     def _check_stamp(self, directory: str) -> None:
         path = os.path.join(directory, self._STAMP)
         if os.path.exists(path):
             with open(path) as fh:
                 stamped = fh.read().strip()
-            if stamped != self.schema:
+            if self.schema is None:
+                self.schema = stamped
+            elif stamped != self.schema:
                 raise ValueError(
                     f"state under {directory} was written with schema "
                     f"{stamped!r}, which does not match this "
@@ -113,14 +132,13 @@ class _VersionedState:
         versions = self._versions_under(directory)
         if not versions:
             return
-        from pyspark.sql.types import StructType
-
         footer = self.spark.read.parquet(
             os.path.join(directory, f"v={versions[-1]}")).schema
-        expected = StructType.fromDDL(self.schema)
-        got = sorted((f.name, f.dataType) for f in footer.fields)
-        want = sorted((f.name, f.dataType) for f in expected.fields)
-        if got != want:
+        if self.schema is None:
+            self.schema = self._ddl(footer)
+        elif (sorted((f.name, f.dataType) for f in footer.fields)
+              != sorted((f.name, f.dataType)
+                        for f in StructType.fromDDL(self.schema).fields)):
             raise ValueError(
                 f"unstamped state under {directory} has parquet footer "
                 f"schema {footer.simpleString()}, which does not match "
@@ -149,9 +167,11 @@ class _VersionedState:
     def versions(self) -> list[int]:
         return self._versions_under(self.state_dir)
 
+    def _path(self, version: int) -> str:
+        return os.path.join(self.state_dir, f"v={version}")
+
     def read(self, version: int) -> DataFrame:
-        return self.spark.read.schema(self.schema).parquet(
-            os.path.join(self.state_dir, f"v={version}"))
+        return self.spark.read.schema(self.schema).parquet(self._path(version))
 
     def current(self) -> DataFrame:
         versions = self.versions()
@@ -175,17 +195,23 @@ class _VersionedState:
                 f"v={versions[-1]} > incoming batch_id {batch_id}; "
                 "checkpoint_dir and state_dir must be reset together")
 
+    def _put(self, version: int, df: DataFrame) -> None:
+        df.coalesce(1).write.mode("overwrite").parquet(self._path(version))
+
+    def _drop(self, version: int) -> None:
+        shutil.rmtree(self._path(version), ignore_errors=True)
+
     def write(self, batch_id: int, df: DataFrame) -> None:
-        target = os.path.join(self.state_dir, f"v={batch_id}")
+        if self.schema is None:
+            self.schema = self._ddl(df.schema)
         self._write_stamp(self.state_dir)
-        df.coalesce(1).write.mode("overwrite").parquet(target)
+        self._put(batch_id, df)
         # Keep current + previous: replay needs only the newest version
         # strictly below a re-run batch, and the engine never re-delivers
         # batches older than the last committed one.
         for v in self.versions():
             if v < batch_id - 1:
-                shutil.rmtree(os.path.join(self.state_dir, f"v={v}"),
-                              ignore_errors=True)
+                self._drop(v)
 
     # -- persistence roundtrip (r12 VERDICT item 5) --------------------
     #

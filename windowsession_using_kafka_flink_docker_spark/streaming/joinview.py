@@ -23,12 +23,14 @@ bucketed scan reports HashPartitioning(key) and only the (small) delta
 exchanges; ``dM`` appends as new files per batch (MERGE-free). The
 no-Exchange-on-state property is plan-asserted in
 tests/test_streaming.py (VERDICT r6 item 4 — previously the module
-promised bucket-local probes but wrote ``coalesce(1)`` state). The
-versioning/replay scheme is byte-for-byte the rollup maintainer's
-(version ``v{batch_id}`` derived from the newest version < batch_id,
-overwritten on replay, pruned to two); after a session restart the
-bucketed tables are re-registered from the on-disk schema, so recovery
-needs only the state_dir.
+promised bucket-local probes but wrote ``coalesce(1)`` state). All three
+parts (``a``, ``b``, ``m``) are ``_VersionedState`` directories, so the
+versioning/replay scheme is every maintainer's (version ``v{batch_id}``
+derived from the newest version < batch_id, overwritten on replay,
+pruned to two, schema-stamped); the two sides only swap how a version is
+laid down, read and pruned for the bucketed tables, and after a session
+restart those tables are re-registered from the stamped schema, so
+recovery needs only the state_dir.
 
 Reference context: the reference has no joins at all (SURVEY §2.11);
 this is the streaming-extension counterpart of the batch
@@ -37,11 +39,53 @@ this is the streaming-extension counterpart of the batch
 
 from __future__ import annotations
 
+import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from windowsession_using_kafka_flink_docker_spark.streaming.analytics_twins import (
+    _VersionedState,
+)
+
+
+class _BucketedSide(_VersionedState):
+    """One accumulated side: each version is the external table
+    ``<prefix>_v<N>`` bucketed on the join key over the version's
+    directory, so the scan reports HashPartitioning(key) and the next
+    batch's delta probe never reshuffles the state."""
+
+    def __init__(self, spark: SparkSession, state_dir: str, prefix: str,
+                 key: str, buckets: int):
+        self.prefix, self.key, self.buckets = prefix, key, buckets
+        super().__init__(spark, state_dir)
+
+    def _table(self, version: int) -> str:
+        return f"{self.prefix}_v{version}"
+
+    def read(self, version: int) -> DataFrame:
+        # the files carry no bucket metadata by themselves: re-register
+        # the table after a session restart
+        name = self._table(version)
+        if not self.spark.catalog.tableExists(name):
+            self.spark.sql(
+                f"CREATE TABLE {name} ({self.schema}) USING PARQUET "
+                f"CLUSTERED BY (`{self.key}`) INTO {self.buckets} BUCKETS "
+                f"LOCATION '{self._path(version)}'")
+        return self.spark.table(name)
+
+    def _put(self, version: int, df: DataFrame) -> None:
+        # one file per bucket on the join key
+        name = self._table(version)
+        self.spark.sql(f"DROP TABLE IF EXISTS {name}")
+        (df.repartition(self.buckets, F.col(self.key))
+         .write.mode("overwrite").option("path", self._path(version))
+         .bucketBy(self.buckets, self.key).saveAsTable(name))
+
+    def _drop(self, version: int) -> None:
+        self.spark.sql(f"DROP TABLE IF EXISTS {self._table(version)}")
+        super()._drop(version)
 
 
 class IncrementalJoinView:
@@ -59,78 +103,18 @@ class IncrementalJoinView:
     def __init__(self, spark: SparkSession, state_dir: str, key: str,
                  buckets: int = 8, tag_col: str = "_src", a_tag: str = "a",
                  a_cols: tuple[str, ...] = (), b_cols: tuple[str, ...] = ()):
-        self.spark = spark
-        self.state_dir = state_dir
         self.key = key
-        self.buckets = buckets
         self.tag_col = tag_col
         self.a_tag = a_tag
         self.a_cols = a_cols
         self.b_cols = b_cols
-        import hashlib
         self._tag = hashlib.md5(
             os.path.abspath(state_dir).encode()).hexdigest()[:10]
-        os.makedirs(state_dir, exist_ok=True)
-
-    def _table_name(self, part: str, version: int) -> str:
-        return f"jv_{self._tag}_{part}_v{version}"
-
-    # -- versioned-state plumbing (same scheme as streaming/rollup.py) --
-    def _versions(self, part: str) -> list[int]:
-        root = os.path.join(self.state_dir, part)
-        if not os.path.isdir(root):
-            return []
-        out = []
-        for name in os.listdir(root):
-            if name.startswith("v=") and os.path.exists(
-                    os.path.join(root, name, "_SUCCESS")):
-                out.append(int(name[2:]))
-        return sorted(out)
-
-    def _read(self, part: str, version: int) -> DataFrame:
-        path = os.path.join(self.state_dir, part, f"v={version}")
-        if part == "m":
-            return self.spark.read.parquet(path)
-        # accumulated sides: read through the bucketed table so the scan
-        # reports HashPartitioning(key) and delta probes never reshuffle
-        # the state. Re-register from the on-disk schema after a session
-        # restart (the files carry no bucket metadata by themselves).
-        name = self._table_name(part, version)
-        if not self.spark.catalog.tableExists(name):
-            cols = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in self.spark.read.parquet(path).schema.fields)
-            self.spark.sql(
-                f"CREATE TABLE {name} ({cols}) USING PARQUET "
-                f"CLUSTERED BY (`{self.key}`) INTO {self.buckets} BUCKETS "
-                f"LOCATION '{path}'")
-        return self.spark.table(name)
-
-    def _latest_before(self, part: str, batch_id: int) -> DataFrame | None:
-        versions = [v for v in self._versions(part) if v < batch_id]
-        return self._read(part, versions[-1]) if versions else None
-
-    def _write(self, part: str, batch_id: int, df: DataFrame) -> None:
-        target = os.path.join(self.state_dir, part, f"v={batch_id}")
-        if part == "m":
-            df.coalesce(1).write.mode("overwrite").parquet(target)
-        else:
-            # accumulated sides are the probe state: bucket them on the
-            # join key (one file per bucket) so the NEXT batch's delta
-            # join scans them pre-partitioned
-            name = self._table_name(part, batch_id)
-            self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-            (df.repartition(self.buckets, F.col(self.key))
-             .write.mode("overwrite").option("path", target)
-             .bucketBy(self.buckets, self.key).saveAsTable(name))
-        for v in self._versions(part):
-            if v < batch_id - 1:
-                if part != "m":
-                    self.spark.sql(
-                        f"DROP TABLE IF EXISTS {self._table_name(part, v)}")
-                shutil.rmtree(
-                    os.path.join(self.state_dir, part, f"v={v}"),
-                    ignore_errors=True)
+        self.a, self.b = (
+            _BucketedSide(spark, os.path.join(state_dir, part),
+                          f"jv_{self._tag}_{part}", key, buckets)
+            for part in ("a", "b"))
+        self.m = _VersionedState(spark, os.path.join(state_dir, "m"))
 
     def apply_batch(self, delta_a: DataFrame, delta_b: DataFrame,
                     batch_id: int) -> None:
@@ -140,15 +124,10 @@ class IncrementalJoinView:
         the newest version STRICTLY below ``batch_id``; re-delivery
         recomputes v{batch_id} from the same base.
         """
-        versions = self._versions("m")
-        if versions and versions[-1] > batch_id:
-            raise ValueError(
-                f"join-view state_dir {self.state_dir} already holds "
-                f"version v={versions[-1]} > incoming batch_id {batch_id}; "
-                "checkpoint_dir and state_dir must be reset together")
-        a_prev = self._latest_before("a", batch_id)
-        b_prev = self._latest_before("b", batch_id)
-        m_prev = self._latest_before("m", batch_id)
+        self.m.guard(batch_id)
+        a_prev = self.a.latest_before(batch_id)
+        b_prev = self.b.latest_before(batch_id)
+        m_prev = self.m.latest_before(batch_id)
 
         parts = [delta_a.join(delta_b, self.key)]
         if b_prev is not None:
@@ -165,9 +144,9 @@ class IncrementalJoinView:
                  if b_prev is not None else delta_b)
         m_new = (m_prev.unionByName(delta_m)
                  if m_prev is not None else delta_m)
-        self._write("a", batch_id, a_new)
-        self._write("b", batch_id, b_new)
-        self._write("m", batch_id, m_new)
+        self.a.write(batch_id, a_new)
+        self.b.write(batch_id, b_new)
+        self.m.write(batch_id, m_new)
 
     def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Split one union-tagged micro-batch into (dA, dB) and apply it."""
@@ -177,8 +156,6 @@ class IncrementalJoinView:
                          batch_id)
 
     def current(self) -> DataFrame:
-        versions = self._versions("m")
-        if not versions:
+        if not self.m.versions():
             raise ValueError("join view: no state yet")
-        return self._read("m", versions[-1])
-
+        return self.m.current()

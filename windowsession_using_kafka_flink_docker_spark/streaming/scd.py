@@ -8,24 +8,24 @@ so the serving side always reads one parquet dir of current + expired
 rows and the as-of join (``operators/asof.py``) can attach the version
 valid at any event time.
 
-Same durability scheme as the rollup maintainer: version ``v{batch_id}``
-is derived from the newest version strictly below ``batch_id`` and
-overwritten wholesale on replay, making foreachBatch's at-least-once
-delivery land on byte-identical state; superseded versions are pruned
-(current + previous kept). At 100 TB the dimension is partitioned by
-``is_current`` so serving scans only current rows — exactly how the
-batch entry ``scd2_customer_upsert`` writes it.
+Same durability scheme as every maintainer (``_VersionedState``):
+version ``v{batch_id}`` is derived from the newest version strictly
+below ``batch_id`` and overwritten wholesale on replay, making
+foreachBatch's at-least-once delivery land on byte-identical state;
+superseded versions are pruned (current + previous kept). At 100 TB the
+dimension is partitioned by ``is_current`` so serving scans only current
+rows — exactly how the batch entry ``scd2_customer_upsert`` writes it.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from windowsession_using_kafka_flink_docker_spark.operators.scd import scd2_apply
+from windowsession_using_kafka_flink_docker_spark.streaming.analytics_twins import (
+    _VersionedState,
+)
 
 
 class Scd2DimensionMaintainer:
@@ -34,39 +34,26 @@ class Scd2DimensionMaintainer:
     ``key`` / ``attr_cols`` define the dimension; ``batch_ts_col`` names
     a column of the change stream giving each row's effective time (the
     batch's MAX is used as the version timestamp, so one batch = one
-    version instant — the standard micro-batch CDC granularity).
+    version instant — the standard micro-batch CDC granularity). The
+    state's schema is the dimension's own columns, so it comes from the
+    state (or the first write), not from a declaration.
     """
 
     def __init__(self, spark: SparkSession, state_dir: str, key: str,
                  attr_cols: tuple[str, ...], batch_ts_col: str = "ts",
                  change_order: str | None = None):
-        self.spark = spark
-        self.state_dir = state_dir
         self.key = key
         self.attr_cols = attr_cols
         self.batch_ts_col = batch_ts_col
         self.change_order = change_order
-        os.makedirs(state_dir, exist_ok=True)
-
-    def _versions(self) -> list[int]:
-        out = []
-        for name in os.listdir(self.state_dir):
-            if name.startswith("v=") and os.path.exists(
-                    os.path.join(self.state_dir, name, "_SUCCESS")):
-                out.append(int(name[2:]))
-        return sorted(out)
-
-    def _read_version(self, version: int) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self.state_dir, f"v={version}"))
+        self.state = _VersionedState(spark, state_dir)
 
     def current(self) -> DataFrame:
         """Full dimension (current + expired rows); raises before any
         batch has been applied."""
-        versions = self._versions()
-        if not versions:
+        if not self.state.versions():
             raise ValueError("scd2 maintainer: no state yet")
-        return self._read_version(versions[-1])
+        return self.state.current()
 
     def current_rows(self) -> DataFrame:
         return self.current().where(F.col("is_current"))
@@ -74,23 +61,13 @@ class Scd2DimensionMaintainer:
     def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        versions = self._versions()
-        if versions and versions[-1] > batch_id:
-            # Same lifecycle coupling as _VersionedState.guard: a
-            # restart with a fresh checkpoint (batch ids back at 0) but a
-            # stale state_dir would rebase on nothing while current()
-            # keeps serving the old run's max(_versions) state.
-            raise ValueError(
-                f"scd2 state_dir {self.state_dir} already holds version "
-                f"v={versions[-1]} > incoming batch_id {batch_id}; "
-                "checkpoint_dir and state_dir must be reset together")
+        self.state.guard(batch_id)
         batch_ts = batch_df.agg(F.max(self.batch_ts_col)).collect()[0][0]
         changes = batch_df.select(self.key, *self.attr_cols,
                                   *((self.change_order,)
                                     if self.change_order else ()))
-        base_versions = [v for v in self._versions() if v < batch_id]
-        if base_versions:
-            snap = self._read_version(base_versions[-1])
+        snap = self.state.latest_before(batch_id)
+        if snap is not None:
             history = snap.where(~F.col("is_current"))
             merged = scd2_apply(
                 snap.where(F.col("is_current")), changes, key=self.key,
@@ -107,14 +84,7 @@ class Scd2DimensionMaintainer:
                 empty_snap, changes, key=self.key,
                 batch_ts=F.lit(batch_ts), attr_cols=self.attr_cols,
                 change_order=self.change_order)
-        target = os.path.join(self.state_dir, f"v={batch_id}")
-        merged.coalesce(1).write.mode("overwrite").parquet(target)
-        for v in self._versions():
-            if v < batch_id - 1:
-                shutil.rmtree(os.path.join(self.state_dir, f"v={v}"),
-                              ignore_errors=True)
-
-
+        self.state.write(batch_id, merged)
 
 
 __all__ = ["Scd2DimensionMaintainer"]

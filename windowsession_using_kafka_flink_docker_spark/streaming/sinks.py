@@ -12,8 +12,12 @@
 - Memory sink: the test harness's window into append-mode output.
 - Parquet sink: durable output with checkpointing, the batch-plane handoff.
 
-Every writer takes ``checkpoint`` — exactly-once bookkeeping the reference
-never enables (no ``enable_checkpointing`` anywhere; SURVEY.md §4.1).
+The durable writers (Kafka, parquet) take ``checkpoint`` — exactly-once
+bookkeeping the reference never enables (no ``enable_checkpointing``
+anywhere; SURVEY.md §4.1). The two report writers return an unstarted
+builder instead: callers set ``checkpointLocation`` on it before
+``start()``. The console and memory sinks are debug surfaces and take
+none.
 """
 
 from __future__ import annotations
@@ -109,8 +113,8 @@ def session_report_writer(df: DataFrame, header_once: bool = True,
                           max_rows: int = MAX_REPORT_ROWS):
     """foreachBatch writer printing task1's session-expiry report
     (flink_stream_task1.py:75-85), capped at ``max_rows`` rows per batch
-    (truncation is announced). Returns the started query's builder
-    function for composition; call ``.start()`` on the result."""
+    (truncation is announced). Returns the unstarted writer; the caller
+    sets ``checkpointLocation`` and calls ``.start()``."""
     return (
         df.writeStream
         .foreachBatch(make_session_report_batch_fn(header_once, max_rows))
