@@ -9,7 +9,10 @@ from collections import Counter, defaultdict
 
 from pyspark.sql import functions as F
 
-from windowsession_using_kafka_flink_docker_spark.operators.sessionize import _aggregate
+from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
+    present_sessions,
+    session_partials,
+)
 from windowsession_using_kafka_flink_docker_spark.plans.catalog import CATALOG
 from windowsession_using_kafka_flink_docker_spark.sources.batch import load_table
 
@@ -117,7 +120,8 @@ def test_dynamic_gap_sessions_are_interval_unions(spark):
          int(r.session_start.replace(tzinfo=utc).timestamp() * 1_000_000),
          int(r.session_end.replace(tzinfo=utc).timestamp() * 1_000_000)):
         (float(r.session_sum), r.event_count)
-        for r in _aggregate(df, gap, "user_id", "ts", "value").collect()
+        for r in present_sessions(
+            session_partials(df, gap, "user_id", "ts", "value")).collect()
     }
     epoch = utc  # ts are naive; use UTC-consistent µs
     events = [(u, int(ts.replace(tzinfo=epoch).timestamp() * 1_000_000),

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Profile one or more catalog entries: noop-sink timings (median of N)
-plus per-stage metrics (duration, shuffle bytes, input bytes, spill)
-scraped from the local UI REST API — the optimization round's
-measure-first harness (guide sections 1 and 7).
+plus per-stage metrics (duration, shuffle bytes, input bytes, spill) of
+the last timed run, read from the status tracker and the status store —
+so it works with the Spark UI off, the engine default. Each timed run is
+its own job group, the way ``perfbench`` attributes executor work.
 
     python tools/profile_entry.py ngram_jaccard_neardups --sf /root/testdata/sf0.1
     python tools/profile_entry.py a b c --runs 3 --plan-dir /tmp/plans
@@ -11,19 +12,37 @@ measure-first harness (guide sections 1 and 7).
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import statistics
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from py4j.protocol import Py4JJavaError  # noqa: E402
 
-def _get(url: str):
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return json.load(r)
+from perfbench.common import job_group_stats  # noqa: E402
+
+
+def _stage_attempts(spark, group: str) -> list:
+    """The last attempt (status-store ``StageData``) of every stage of the
+    jobs run under ``group``; call after ``job_group_stats``, which waits
+    for the listener bus to drain."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    stage_ids = set()
+    for job in tracker.getJobIdsForGroup(group):
+        info = tracker.getJobInfo(job)
+        if info is not None:
+            stage_ids.update(info.stageIds)
+    out = []
+    for sid in sorted(stage_ids):
+        try:
+            out.append(store.lastStageAttempt(sid))
+        except Py4JJavaError:  # skipped stages never reach the store
+            continue
+    return out
 
 
 def main() -> None:
@@ -49,27 +68,21 @@ def main() -> None:
             return CATALOG[n].spark
         return getattr(llm_pipeline, n)
 
-    spark = get_spark("profile-entry",
-                      extra_conf={"spark.ui.enabled": "true",
-                                  "spark.ui.port": "4049"})
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    api = f"{ui}/api/v1/applications/{app_id}"
+    spark = get_spark("profile-entry")
+    sc = spark.sparkContext
 
     for name in args.name:
         fn = resolve(name)
         label = f"profile:{name}"
-        spark.sparkContext.setJobDescription(label)
+        sc.setJobGroup(f"{label}:warm", label)
         clear_stage_caches()
         fn(spark, args.sf).write.format("noop").mode("overwrite").save()
         times = []
-        first_job_of_last_run = 0
-        for _ in range(args.runs):
+        for i in range(args.runs):
             clear_stage_caches()
-            spark.sparkContext._jvm.System.gc()
-            jobs_before = _get(f"{api}/jobs?status=succeeded")
-            first_job_of_last_run = 1 + max(
-                (j["jobId"] for j in jobs_before), default=-1)
+            sc._jvm.System.gc()
+            group = f"{label}:{i}"
+            sc.setJobGroup(group, label)
             t0 = time.perf_counter()
             df = fn(spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
@@ -79,6 +92,7 @@ def main() -> None:
               f"runs={[round(t, 3) for t in times]}", flush=True)
         if args.plan_dir:
             os.makedirs(args.plan_dir, exist_ok=True)
+            sc.setJobGroup(f"{label}:plan", label)
             df2 = fn(spark, args.sf)
             fp = df2._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode
@@ -86,37 +100,29 @@ def main() -> None:
             with open(os.path.join(args.plan_dir,
                                    f"{name}.formatted.txt"), "w") as f:
                 f.write(fp)
-            time.sleep(0.7)
-            jobs = [j for j in _get(f"{api}/jobs")
-                    if j["jobId"] >= first_job_of_last_run]
-            stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
+            total = job_group_stats(spark, group)
             lines = [f"stages of the final timed run of {name} "
-                     f"(jobs >= {first_job_of_last_run})",
+                     f"(job group {group}: {total['jobs']} jobs, "
+                     f"{total['task_run_ms']} task ms, "
+                     f"{total['task_cpu_ms']:.0f} task cpu ms)",
                      f"{'stage':>5} {'ms':>7} {'tasks':>5} {'input':>10} "
                      f"{'sh_read':>10} {'sh_write':>10} {'spill':>9}  name"]
-            rows = []
-            for sid in stage_ids:
-                try:
-                    st = _get(f"{api}/stages/{sid}")
-                except Exception:
-                    continue
-                for att in st:
-                    if att["status"] not in ("COMPLETE", "FAILED"):
-                        continue
-                    dur = att.get("executorRunTime", 0)
-                    rows.append((dur, sid, att))
-            for dur, sid, att in sorted(rows, reverse=True):
+            rows = [sd for sd in _stage_attempts(spark, group)
+                    if str(sd.status()) in ("COMPLETE", "FAILED")]
+            for sd in sorted(rows, key=lambda sd: (sd.executorRunTime(),
+                                                   sd.stageId()),
+                             reverse=True):
                 lines.append(
-                    f"{sid:>5} {dur:>7} {att['numCompleteTasks']:>5} "
-                    f"{att.get('inputBytes', 0):>10} "
-                    f"{att.get('shuffleReadBytes', 0):>10} "
-                    f"{att.get('shuffleWriteBytes', 0):>10} "
-                    f"{att.get('diskBytesSpilled', 0):>9}  "
-                    f"{att['name'][:90]}")
+                    f"{sd.stageId():>5} {sd.executorRunTime():>7} "
+                    f"{sd.numCompleteTasks():>5} "
+                    f"{sd.inputBytes():>10} "
+                    f"{sd.shuffleReadBytes():>10} "
+                    f"{sd.shuffleWriteBytes():>10} "
+                    f"{sd.diskBytesSpilled():>9}  "
+                    f"{sd.name()[:90]}")
             with open(os.path.join(args.plan_dir,
                                    f"{name}.stages.txt"), "w") as f:
                 f.write("\n".join(lines) + "\n")
-        spark.sparkContext.setJobDescription(None)
 
 
 if __name__ == "__main__":

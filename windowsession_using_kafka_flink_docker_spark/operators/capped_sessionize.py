@@ -27,7 +27,7 @@ Presentation is the exact-e2 form (landed for the ``session_window``
 family in ``operators/sessionize.py`` first): both presented doubles
 derive from the exact BIGINT cents sum — ``session_sum = sum_cents/100.0``
 and ``session_avg`` the sign-correct half-up integer cent quotient
-(``sessionize._AVG_CENTS_EXPR``, one shared definition). This kills the
+(``sessionize.present_sessions``, one shared definition). This kills the
 ``ROUND(sum/count, 2)`` half-cent presentation-tie class the r16 sf0.1
 full-catalog sweep surfaced (the one remaining mismatch, 198th of 201).
 ``events.value`` is exact 2-decimal data (|v*100 - round(v*100)| <= 4e-12
@@ -44,8 +44,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
-    _AVG_CENTS_EXPR,
-    _cents,
+    cents,
+    present_sessions,
 )
 
 DEFAULT_CAP = 120.0  # seconds
@@ -72,23 +72,14 @@ def capped_sessionize(events: DataFrame, gap_sec: float = 30.0,
             F.expr(f"(unix_micros({ts}) - _gs_start_us) div {cap_us}"),
         )
     )
-    return (
-        seg.groupBy(key, "_gs", "_seg")
-        .agg(
-            F.min(ts).alias("session_start"),
-            F.max(ts).alias("session_end"),
-            F.sum(_cents(value)).alias("_sc"),
-            F.count(F.lit(1)).alias("event_count"),
-        )
-        .select(
-            F.col(key),
-            "session_start",
-            "session_end",
-            (F.col("_sc") / F.lit(100.0)).alias("session_sum"),
-            F.col("event_count"),
-            (F.expr(_AVG_CENTS_EXPR) / F.lit(100.0)).alias("session_avg"),
-        )
+    agg = seg.groupBy(key, "_gs", "_seg").agg(
+        F.min(ts).alias("session_start"),
+        F.max(ts).alias("session_end"),
+        F.sum(cents(value)).alias("_sc"),
+        F.count(F.lit(1)).alias("event_count"),
     )
+    return present_sessions(agg, key, start=F.col("session_start"),
+                            end=F.col("session_end"))
 
 
 def capped_sessionize_oracle_sql(gap_sec: float = 30.0,

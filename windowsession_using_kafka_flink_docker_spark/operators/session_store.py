@@ -21,6 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
+    session_partials,
+)
+
 #: Maintenance-family session gap, seconds (see module docstring).
 GAP_S = 600.0
 _GAP_EXPR = "10 minutes"
@@ -28,14 +32,16 @@ _GAP_EXPR = "10 minutes"
 
 def sessions_full(ev: DataFrame) -> DataFrame:
     """Fixed-gap sessions with first/last event ts + exact cent sums:
-    (user_id, session_start, session_end, sum_cents, event_count)."""
-    cents = F.round(F.col("value") * 100, 0).cast("long")
-    return (ev.groupBy("user_id", F.session_window("ts", _GAP_EXPR))
-            .agg(F.min("ts").alias("session_start"),
-                 F.max("ts").alias("session_end"),
-                 F.sum(cents).alias("sum_cents"),
-                 F.count(F.lit(1)).cast("long").alias("event_count"))
-            .drop("session_window"))
+    (user_id, session_start, session_end, sum_cents, event_count). The
+    session window is ``[first ts, last ts + gap)``, so its bounds give
+    the first and last event ts without a min/max of their own."""
+    return session_partials(ev, _GAP_EXPR).select(
+        "user_id",
+        F.col("session_window.start").alias("session_start"),
+        (F.col("session_window.end") - F.expr(f"INTERVAL {_GAP_EXPR}"))
+        .alias("session_end"),
+        F.col("_sc").alias("sum_cents"),
+        "event_count")
 
 
 def continuation_cutoff(ev: DataFrame, gap_s: float = GAP_S):

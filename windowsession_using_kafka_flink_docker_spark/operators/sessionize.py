@@ -57,6 +57,17 @@ def dynamic_gap_expr(user_col: str | Column = "user_id") -> Column:
     return expr.otherwise(F.lit(f"{TIER_DEFAULT_SECONDS} seconds"))
 
 
+def tier_gap_expr(tier_col: str = "tier") -> Column:
+    """Per-event session-gap duration from the SCD2 loyalty tier
+    (``plans.relational.loyalty_tiers``): gold 300 s, silver 120 s,
+    bronze 60 s, no tier yet 30 s."""
+    c = F.col(tier_col)
+    return (F.when(c == "gold", "300 seconds")
+            .when(c == "silver", "120 seconds")
+            .when(c == "bronze", "60 seconds")
+            .otherwise("30 seconds"))
+
+
 def gap_seconds_sql(user_col: str = "user_id") -> str:
     """ANSI-SQL CASE yielding the tier gap in *seconds* (for oracles)."""
     arms = []
@@ -84,40 +95,56 @@ _AVG_CENTS_EXPR = (
 )
 
 
-def _cents(value: str) -> Column:
+def cents(col: str | Column) -> Column:
     """Exact BIGINT cents of a 2-decimal money double,
-    ``CAST(ROUND(value * 100, 0) AS BIGINT)`` (Spark ROUND: half-up on the
-    double's decimal form). The one rounding rule of the session family:
-    batch, capped and streaming capped sessions all use it."""
-    return F.round(F.col(value) * 100, 0).cast("long")
+    ``CAST(ROUND(col * 100, 0) AS BIGINT)`` (Spark ROUND: half-up on the
+    double's decimal form). The engine's one Spark-side money rule:
+    sessions, the analytics and relational plans and the streaming
+    maintainers all use it; only the DuckDB oracles spell it out."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.round(c * 100, 0).cast("long")
 
 
-def _aggregate(df: DataFrame, gap: Column | str, key: str, ts: str, value: str) -> DataFrame:
-    # Exact-e2 presentation (r16 VERDICT item 1, landed r17): derive BOTH
-    # presented doubles from the exact BIGINT cents sum. events.value is
-    # exact 2-decimal data (|v*100 - round(v*100)| <= 4e-12 at every SF),
-    # so sum_cents is the true sum and session_sum = _sc/100.0 is its
-    # nearest double on any engine; session_avg is a true half-up at cent
-    # resolution with no IEEE division before the final exact-integer
-    # quotient. This kills the ROUND(sum/count, 2) half-cent tie class
-    # where Spark's shortest-decimal half-up and DuckDB's binary-double
-    # rounding split by one cent (34.55/2 -> 17.28 vs 17.27).
-    out = (
-        df.groupBy(key, F.session_window(ts, gap))
-        .agg(
-            F.sum(_cents(value)).alias("_sc"),
-            F.count(F.lit(1)).alias("event_count"),
-        )
-        .select(
-            F.col(key),
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            (F.col("_sc") / F.lit(100.0)).alias("session_sum"),
-            F.col("event_count"),
-            (F.expr(_AVG_CENTS_EXPR) / F.lit(100.0)).alias("session_avg"),
-        )
+def session_partials(df: DataFrame, gap: Column | str, key: str = "user_id",
+                     ts: str = "ts", value: str = "value") -> DataFrame:
+    """The session aggregate: ``(key, session_window, _sc, event_count)``
+    with ``_sc`` the exact BIGINT cents sum. The window column stays so
+    callers can present it, filter or dedup on it first (chained
+    stateful operators need its event-time marker), or rename the
+    partials. Works on batch and streaming frames; a streaming caller
+    attaches ``withWatermark`` upstream."""
+    return df.groupBy(key, F.session_window(ts, gap)).agg(
+        F.sum(cents(value)).alias("_sc"),
+        F.count(F.lit(1)).alias("event_count"),
     )
-    return out
+
+
+def present_sessions(df: DataFrame, key: str = "user_id",
+                     start: Column | None = None,
+                     end: Column | None = None) -> DataFrame:
+    """The exact-e2 session presentation of ``(key, _sc, event_count)``
+    rows: ``(key, session_start, session_end, session_sum, event_count,
+    session_avg)``. Bounds default to ``session_partials``' window.
+
+    Both presented doubles derive from the exact BIGINT cents sum:
+    events.value is exact 2-decimal data (|v*100 - round(v*100)| <=
+    4e-12 at every SF), so ``_sc`` is the true sum and ``session_sum =
+    _sc/100.0`` is its nearest double on any engine; ``session_avg`` is a
+    true half-up at cent resolution with no IEEE division before the
+    final exact-integer quotient. This kills the ROUND(sum/count, 2)
+    half-cent tie class where Spark's shortest-decimal half-up and
+    DuckDB's binary-double rounding split by one cent (34.55/2 -> 17.28
+    vs 17.27)."""
+    start = F.col("session_window.start") if start is None else start
+    end = F.col("session_window.end") if end is None else end
+    return df.select(
+        F.col(key),
+        start.alias("session_start"),
+        end.alias("session_end"),
+        (F.col("_sc") / F.lit(100.0)).alias("session_sum"),
+        F.col("event_count"),
+        (F.expr(_AVG_CENTS_EXPR) / F.lit(100.0)).alias("session_avg"),
+    )
 
 
 def sessionize(df: DataFrame, gap: str = DEFAULT_GAP, key: str = "user_id",
@@ -127,13 +154,14 @@ def sessionize(df: DataFrame, gap: str = DEFAULT_GAP, key: str = "user_id",
     Works identically on batch and streaming DataFrames (add
     ``withWatermark`` upstream for streaming append mode).
     """
-    return _aggregate(df, gap, key, ts, value)
+    return present_sessions(session_partials(df, gap, key, ts, value), key)
 
 
 def sessionize_dynamic(df: DataFrame, key: str = "user_id", ts: str = "ts",
                        value: str = "value") -> DataFrame:
     """Dynamic per-user-tier gap sessionization (task3's intended job)."""
-    return _aggregate(df, dynamic_gap_expr(key), key, ts, value)
+    return present_sessions(
+        session_partials(df, dynamic_gap_expr(key), key, ts, value), key)
 
 
 def sessionize_oracle_sql(gap_seconds: int | str = 30, key: str = "user_id",
@@ -151,7 +179,7 @@ def sessionize_oracle_sql(gap_seconds: int | str = 30, key: str = "user_id",
     (tied rows never split a session, but a tie *after* a break point must
     land deterministically).
 
-    Presentation matches ``_aggregate``'s exact-e2 form: both doubles
+    Presentation matches ``present_sessions``' exact-e2 form: both doubles
     derive from the exact BIGINT cents sum (DuckDB ``SUM(BIGINT)`` is
     HUGEINT, so the half-up cross-products cannot overflow at any
     scale); the avg CASE keeps the ``//`` operands nonnegative so

@@ -24,13 +24,11 @@ from windowsession_using_kafka_flink_docker_spark.operators.hll import (
     hll_fold,
     hll_registers,
 )
+from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
+    cents,
+)
 from windowsession_using_kafka_flink_docker_spark.plans.catalog import register
 from windowsession_using_kafka_flink_docker_spark.sources.batch import load_table
-
-
-def _cents(col: str) -> Column:
-    """Exact integer cents from a 2-decimal DOUBLE money column."""
-    return F.round(F.col(col) * 100, 0).cast("long")
 
 
 @register(
@@ -79,8 +77,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
           .where(F.col("l_shipdate") > F.lit("1998-06-01").cast("timestamp"))
           .select("l_orderkey", "l_extendedprice", "l_discount"))
     rev_e4 = F.sum(
-        _cents("l_extendedprice")
-        * F.round((1 - F.col("l_discount")) * 100, 0).cast("long")
+        cents("l_extendedprice") * cents(1 - F.col("l_discount"))
     ).cast("long").alias("revenue_e4")
     return (
         orders.join(F.broadcast(cust),
@@ -138,7 +135,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_partkey", "qty_threshold")
     )
     sel = (
-        li.select("l_partkey", "l_quantity", _cents("l_extendedprice")
+        li.select("l_partkey", "l_quantity", cents("l_extendedprice")
                   .alias("cents"))
         .join(F.broadcast(th), "l_partkey")
         .where(F.col("l_quantity") < F.col("qty_threshold"))
@@ -187,7 +184,7 @@ FROM idle GROUP BY c_mktsegment
 )
 def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     bal = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment", _cents("c_acctbal").alias("bal_cents"))
+        "c_custkey", "c_mktsegment", cents("c_acctbal").alias("bal_cents"))
     avg_pos = (bal.where(F.col("bal_cents") > 0)
                .agg((F.sum("bal_cents").cast("double")
                      / F.count(F.lit(1))).alias("avg_cents")))
@@ -399,7 +396,7 @@ def ewma_daily_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "user_id", F.to_date("ts").alias("d")
-    ).agg(F.round(F.sum("value") * 100, 0).cast("long").alias("cents"))
+    ).agg(cents(F.sum("value")).alias("cents"))
     return ewma_from_daily(daily)
 
 
@@ -456,7 +453,7 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.lit("2001-09-01").cast("date"),
                    F.to_date(F.max("o_orderdate"))).alias("recency_days"),
         F.count(F.lit(1)).alias("frequency"),
-        F.sum(_cents("o_totalprice")).cast("long").alias("monetary_cents"),
+        F.sum(cents("o_totalprice")).cast("long").alias("monetary_cents"),
     )
     j = rfm.join(F.broadcast(cust), rfm.custkey == cust.c_custkey)
     seg = Window.partitionBy("c_mktsegment")
@@ -908,7 +905,7 @@ def dow_seasonality_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     base = ev.select(
         (F.weekday("ts") + 1).cast("long").alias("dow"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("cents"))
+        cents("value").alias("cents"))
     perdow = base.groupBy("dow").agg(
         F.count(F.lit(1)).alias("n"), F.sum("cents").alias("c"))
     tot = perdow.agg(F.sum("n").alias("nt"), F.sum("c").alias("ct"))
@@ -928,9 +925,9 @@ def ledger_deltas(ev: DataFrame) -> DataFrame:
     stream — shared by the batch entry and the streaming ledger
     maintainer (streaming/analytics_twins.py) so both sides price the
     same events identically."""
-    cents = F.round(F.col("value") * 100, 0).cast("long")
-    delta = (F.when(F.col("event_type") == "purchase", cents)
-             .when(F.col("event_type").isin("error", "click"), -cents)
+    c = cents("value")
+    delta = (F.when(F.col("event_type") == "purchase", c)
+             .when(F.col("event_type").isin("error", "click"), -c)
              .otherwise(F.lit(0).cast("long")))
     return ev.select("user_id", "ts", "event_id",
                      delta.alias("delta_cents"))
@@ -1133,7 +1130,7 @@ def mad_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     vals = ev.select(
         "user_id", "event_id",
-        F.round(F.col("value") * 100, 0).cast("long").alias("cents"))
+        cents("value").alias("cents"))
     wu = Window.partitionBy("user_id")
     w1 = wu.orderBy("cents", "event_id")
     ranked = vals.select(
@@ -1260,7 +1257,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ((F.year("o_orderdate") - F.year("cohort_month")) * 12
                  + (F.month("o_orderdate") - F.month("cohort_month")))
                 .alias("age_months"),
-                _cents("o_totalprice").alias("cents")))
+                cents("o_totalprice").alias("cents")))
     percohort = aged.groupBy("cohort", "age_months").agg(
         F.sum("cents").cast("long").alias("revenue_cents"),
         F.count(F.lit(1)).cast("long").alias("n_orders"))
@@ -1490,7 +1487,7 @@ FROM calc
 def welch_t_spend_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     spend = ev.groupBy("user_id").agg(
-        F.round(F.sum("value") * 100, 0).cast("long").alias("cents"))
+        cents(F.sum("value")).alias("cents"))
     return welch_from_spend(spend)
 
 
@@ -1605,8 +1602,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
           & F.col("p_size").between(1, 15)
           & F.col("l_quantity").between(20, 30))
     rev = F.sum(
-        F.round(F.col("l_extendedprice") * 100, 0).cast("long")
-        * F.round((1 - F.col("l_discount")) * 100, 0).cast("long")
+        cents("l_extendedprice") * cents(1 - F.col("l_discount"))
     ).cast("long").alias("revenue_e4")
     bracket = (F.when(F.col("p_brand") == "Brand#12", "small")
                .when(F.col("p_brand") == "Brand#23", "medium")
@@ -1796,7 +1792,7 @@ FROM tot t, shares s
 def gini_spend_inequality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     spend = ev.groupBy("user_id").agg(
-        F.round(F.sum("value") * 100, 0).cast("long").alias("cents"))
+        cents(F.sum("value")).alias("cents"))
     return gini_from_spend(spend)
 
 
@@ -1887,7 +1883,7 @@ def cusum_changepoint_daily_revenue(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(_cents("o_totalprice")).cast("long").alias("cents"))
+        F.sum(cents("o_totalprice")).cast("long").alias("cents"))
     return cusum_from_daily(daily)
 
 
@@ -1998,7 +1994,7 @@ FROM calc
 def mann_whitney_spend_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     spend = ev.groupBy("user_id").agg(
-        F.round(F.sum("value") * 100, 0).cast("long").alias("cents"))
+        cents(F.sum("value")).alias("cents"))
     return mann_whitney_from_spend(spend)
 
 
@@ -2128,7 +2124,7 @@ FROM exact
 def spearman_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").cast("long").alias("q"),
-        F.round(F.col("l_extendedprice") * 100, 0).cast("long").alias("p"),
+        cents("l_extendedprice").alias("p"),
         "l_orderkey", "l_linenumber")
     rq = (global_rank_ranged(li, ["q", "l_orderkey", "l_linenumber"])
           .groupBy("q")
@@ -2238,8 +2234,7 @@ def price_volume_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.when(F.col("l_shipdate") < F.lit("1998-07-01").cast("date"),
                     1).otherwise(2).alias("period"),
              F.col("l_quantity").cast("long").alias("qty"),
-             (F.round(F.col("l_extendedprice") * 100, 0).cast("long")
-              * F.round((1 - F.col("l_discount")) * 100, 0).cast("long"))
+             (cents("l_extendedprice") * cents(1 - F.col("l_discount")))
              .alias("rev_e4")))
     per = (j.groupBy("p_brand")
            .agg(F.sum(F.when(F.col("period") == 1, F.col("qty")).otherwise(0))
@@ -2304,7 +2299,7 @@ FROM paired GROUP BY 1
 def seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(_cents("o_totalprice")).cast("long").alias("cents"))
+        F.sum(cents("o_totalprice")).cast("long").alias("cents"))
     return backtest_from_daily(daily)
 
 
@@ -2689,7 +2684,7 @@ def armed_segment_spend(orders: DataFrame, customer: DataFrame) -> DataFrame:
     return (orders.join(customer.select("c_custkey", "c_mktsegment"),
                         F.col("c_custkey") == F.col("o_custkey"))
             .select(F.col("c_mktsegment").alias("seg"),
-                    _cents("o_totalprice").alias("cents"),
+                    cents("o_totalprice").alias("cents"),
                     "o_orderkey", arm.alias("arm")))
 
 
@@ -2826,9 +2821,8 @@ def q15_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.where((F.col("l_shipdate") >= "1996-01-01")
                  & (F.col("l_shipdate") < "1996-04-01"))
         .groupBy("l_suppkey")
-        .agg(F.sum(_cents("l_extendedprice")
-                   * F.round((1 - F.col("l_discount")) * 100, 0)
-                   .cast("long")).cast("long").alias("total_rev_e4")))
+        .agg(F.sum(cents("l_extendedprice") * cents(1 - F.col("l_discount")))
+             .cast("long").alias("total_rev_e4")))
     # rev feeds BOTH the scalar max and the equality probe; the planner
     # does not reuse the aggregate exchange across the two consumers
     # (measured: two lineitem scans in the AQE final plan), so stage the
@@ -2923,7 +2917,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     pf = (load_table(spark, sf_dir, "part")
           .where((F.col("p_type") == "LARGE") & (F.col("p_size") <= 10))
           .select("p_partkey", "p_brand", "p_size"))
-    unit = (_cents("l_extendedprice").cast("double") / F.col("l_quantity"))
+    unit = (cents("l_extendedprice").cast("double") / F.col("l_quantity"))
     pairs = (
         li.join(F.broadcast(pf.select("p_partkey")),
                 F.col("p_partkey") == F.col("l_partkey"))
@@ -2937,7 +2931,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         winners.join(F.broadcast(eu), F.col("s_suppkey") == F.col("l_suppkey"))
         .join(F.broadcast(pf), F.col("p_partkey") == F.col("l_partkey"))
-        .select(_cents("s_acctbal").alias("s_acctbal_c"),
+        .select(cents("s_acctbal").alias("s_acctbal_c"),
                 "s_name", "n_name", "p_partkey", "p_brand", "p_size",
                 F.floor(F.col("unit") * 100).cast("long")
                 .alias("min_unit_e4"))
@@ -2999,9 +2993,8 @@ def q11_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select("s_suppkey"))
     v = (li.join(F.broadcast(ns), F.col("s_suppkey") == F.col("l_suppkey"))
          .groupBy("l_partkey")
-         .agg(F.sum(_cents("l_extendedprice")
-                    * F.round((1 - F.col("l_discount")) * 100, 0)
-                    .cast("long")).cast("long").alias("value_e4")))
+         .agg(F.sum(cents("l_extendedprice") * cents(1 - F.col("l_discount")))
+              .cast("long").alias("value_e4")))
     # v feeds both the global total and the share filter; the planner
     # re-plans the aggregate (second fact scan) without staging — the
     # q15-measured pattern, |parts| rows, dimension-scale at any SF
@@ -3069,7 +3062,7 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.join(F.broadcast(matched),
                   F.col("c_custkey") == F.col("o_custkey"))
         .select("c_custkey", "c_name", "o_orderkey", "o_orderdate",
-                _cents("o_totalprice").alias("o_totalprice_c"),
+                cents("o_totalprice").alias("o_totalprice_c"),
                 "total_qty")
         .orderBy(F.col("o_totalprice_c").desc(), "o_orderkey")
         .limit(100))
@@ -3140,8 +3133,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (od.where((F.col("o_orderdate") >= "1996-01-01")
                   & (F.col("o_orderdate") < "1997-01-01"))
          .select("o_orderkey", "o_custkey"))
-    rev = _cents("l_extendedprice") \
-        * F.round((1 - F.col("l_discount")) * 100, 0).cast("long")
+    rev = cents("l_extendedprice") * cents(1 - F.col("l_discount"))
     return (
         o.join(c, F.col("c_custkey") == F.col("o_custkey"))
         .join(li.select("l_orderkey", "l_suppkey", "l_extendedprice",
@@ -3195,8 +3187,7 @@ def q10_returned_item_losses(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     nat = load_table(spark, sf_dir, "nation")
-    rev = _cents("l_extendedprice") \
-        * F.round((1 - F.col("l_discount")) * 100, 0).cast("long")
+    rev = cents("l_extendedprice") * cents(1 - F.col("l_discount"))
     o = (od.where((F.col("o_orderdate") >= "1996-07-01")
                   & (F.col("o_orderdate") < "1996-10-01"))
          .select("o_orderkey", "o_custkey"))
@@ -3211,7 +3202,7 @@ def q10_returned_item_losses(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nat),
               F.col("n_nationkey") == F.col("c_nationkey"))
         .select("c_custkey", "c_name", "lost_revenue_e4",
-                _cents("c_acctbal").alias("c_acctbal_c"), "n_name")
+                cents("c_acctbal").alias("c_acctbal_c"), "n_name")
         .orderBy(F.col("lost_revenue_e4").desc(), "c_custkey")
         .limit(20))
 
@@ -3259,8 +3250,7 @@ FROM f
 def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = (_cents("l_extendedprice")
-           * F.round((1 - F.col("l_discount")) * 100, 0).cast("long")) \
+    rev = (cents("l_extendedprice") * cents(1 - F.col("l_discount"))) \
         .cast("decimal(38,0)")
     # no forced broadcast: the part dimension is fact-scale at 100 TB;
     # AQE broadcasts the 2-column projection when it fits and falls back
@@ -3315,8 +3305,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
 )
 def q6_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    rev = _cents("l_extendedprice") \
-        * F.round(F.col("l_discount") * 100, 0).cast("long")
+    rev = cents("l_extendedprice") * cents("l_discount")
     return (
         li.where((F.col("l_shipdate") >= "1996-01-01")
                  & (F.col("l_shipdate") < "1997-01-01")
@@ -3380,8 +3369,7 @@ def q7_nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("cust_nation"))),
             F.col("cn_key") == F.col("c_nationkey"))
          .select("c_custkey", "cust_nation"))
-    rev = _cents("l_extendedprice") \
-        * F.round((1 - F.col("l_discount")) * 100, 0).cast("long")
+    rev = cents("l_extendedprice") * cents(1 - F.col("l_discount"))
     joined = (
         li.join(od.select("o_orderkey", "o_custkey"),
                 F.col("o_orderkey") == F.col("l_orderkey"))
@@ -3447,8 +3435,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = (sup.join(F.broadcast(nat.select("n_nationkey", "n_name")),
                   F.col("n_nationkey") == F.col("s_nationkey"))
          .select("s_suppkey", F.col("n_name").alias("supp_nation")))
-    rev = (_cents("l_extendedprice")
-           * F.round((1 - F.col("l_discount")) * 100, 0).cast("long")) \
+    rev = (cents("l_extendedprice") * cents(1 - F.col("l_discount"))) \
         .cast("decimal(38,0)")
     vol = (
         li.join(part, F.col("p_partkey") == F.col("l_partkey"))
@@ -3666,9 +3653,8 @@ def q9_profit_partials(li: DataFrame, part: DataFrame, sup: DataFrame,
     the key space is |nations| x |years| regardless of fact volume.
     The part/supplier/nation dimensions prune-then-broadcast into the
     single fact scan; orders joins co-partitioned on orderkey."""
-    profit = (_cents("l_extendedprice")
-              * F.round((1 - F.col("l_discount")) * 100, 0).cast("long")
-              - _cents("p_retailprice")
+    profit = (cents("l_extendedprice") * cents(1 - F.col("l_discount"))
+              - cents("p_retailprice")
               * F.col("l_quantity").cast("long") * 100)
     red = (part.where(F.col("p_name").like("%red%"))
            .select("p_partkey", "p_retailprice"))
@@ -3885,12 +3871,12 @@ def cuped_units(orders: DataFrame) -> DataFrame:
     key space is bounded by |customers|, so a maintainer holding this
     frame re-derives the full CUPED report at any time."""
     yr = F.year("o_orderdate")
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
+    c = cents("o_totalprice")
     return (orders.where(yr.isin(1996, 1997))
             .groupBy(F.col("o_custkey").alias("custkey"))
-            .agg(F.coalesce(F.sum(F.when(yr == 1996, cents)), F.lit(0))
+            .agg(F.coalesce(F.sum(F.when(yr == 1996, c)), F.lit(0))
                  .cast("long").alias("x"),
-                 F.coalesce(F.sum(F.when(yr == 1997, cents)), F.lit(0))
+                 F.coalesce(F.sum(F.when(yr == 1997, c)), F.lit(0))
                  .cast("long").alias("y")))
 
 

@@ -16,6 +16,7 @@ from windowsession_using_kafka_flink_docker_spark.operators.alerts import (
 )
 from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
     gap_seconds_sql,
+    session_partials,
     sessionize,
     sessionize_dynamic,
     sessionize_oracle_sql,
@@ -246,23 +247,12 @@ sess AS (
 """
 
 
-def _sessions_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """30 s fixed-gap sessions with EXACT cent sums — the Spark twin of
-    ``_SESS_CENTS_CTE``'s ``sess`` table (same session_window semantics
-    as operators/sessionize.py, re-aggregated because the public entry
-    PRESENTS doubles — sum_cents/100.0 since the r17 exact-e2 landing —
-    and a ranking must consume the integer cents, never a
-    presentation)."""
-    ev = _events(spark, sf_dir)
-    cents = F.round(F.col("value") * 100, 0).cast("long")
-    return (
-        ev.groupBy("user_id", F.session_window("ts", "30 seconds"))
-        .agg(F.sum(cents).alias("sum_cents"),
-             F.count(F.lit(1)).cast("long").alias("event_count"))
-        .select("user_id",
-                F.col("session_window.start").alias("session_start"),
-                "sum_cents", "event_count")
-    )
+#: 30 s fixed-gap sessions with EXACT cent sums, as a rename-select over
+#: ``session_partials`` — the Spark twin of ``_SESS_CENTS_CTE``'s
+#: ``sess`` table. The public entries PRESENT doubles (sum_cents/100.0);
+#: a ranking must consume the integer cents, never a presentation.
+_SESS_CENTS_COLS = ("user_id", "session_window.start AS session_start",
+                    "_sc AS sum_cents", "event_count")
 
 
 @register(
@@ -293,7 +283,8 @@ def session_top2_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     w = Window.partitionBy("user_id").orderBy(
         F.desc("sum_cents"), F.asc("session_start"))
-    return (_sessions_cents(spark, sf_dir)
+    return (session_partials(_events(spark, sf_dir), "30 seconds")
+            .selectExpr(*_SESS_CENTS_COLS)
             .withColumn("rk", F.row_number().over(w).cast("int"))
             .where(F.col("rk") <= 2)
             .select("user_id", "rk", "session_start", "sum_cents",
@@ -325,7 +316,8 @@ def session_top10_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort; the 10-row rank window after the limit is free."""
     from pyspark.sql import Window
 
-    top = (_sessions_cents(spark, sf_dir)
+    top = (session_partials(_events(spark, sf_dir), "30 seconds")
+           .selectExpr(*_SESS_CENTS_COLS)
            .orderBy(F.desc("sum_cents"), F.asc("user_id"),
                     F.asc("session_start"))
            .limit(10))

@@ -12,6 +12,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
+    cents,
+    present_sessions,
+    session_partials,
+    tier_gap_expr,
+)
 from windowsession_using_kafka_flink_docker_spark.plans.catalog import register
 from windowsession_using_kafka_flink_docker_spark.sources.batch import load_table
 
@@ -1848,15 +1854,6 @@ def loyalty_tier_intervals(ev: DataFrame) -> DataFrame:
         "valid_to", F.lead("valid_from").over(wn))
 
 
-def tier_gap_expr(tier_col: str = "tier"):
-    """Per-event session-gap duration from the loyalty tier."""
-    c = F.col(tier_col)
-    return (F.when(c == "gold", "300 seconds")
-            .when(c == "silver", "120 seconds")
-            .when(c == "bronze", "60 seconds")
-            .otherwise("30 seconds"))
-
-
 @register(
     "session_scd2_dynamic_gap",
     # Union-of-intervals islands oracle: with a gap that varies WITHIN a
@@ -1941,17 +1938,14 @@ def session_scd2_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from windowsession_using_kafka_flink_docker_spark.operators.asof import (
         asof_join,
     )
-    from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
-        _aggregate,
-    )
 
     ev = load_table(spark, sf_dir, "events")
     enriched = asof_join(
         ev.select("user_id", "ts", "value"), loyalty_tiers(ev),
         on=["user_id"], ts="ts", right_ts="valid_from",
         right_cols={"tier": "tier"}, how="left")
-    return _aggregate(enriched, tier_gap_expr(), "user_id", "ts",
-                      "value").drop("session_avg")
+    return present_sessions(
+        session_partials(enriched, tier_gap_expr())).drop("session_avg")
 
 
 @register(
@@ -2519,8 +2513,7 @@ def ols_daily_grid(events: DataFrame) -> DataFrame:
         "user_id",
         F.datediff(F.to_date("ts"), F.lit("2024-01-01").cast("date"))
         .alias("x"),
-    ).agg(F.sum(F.round(F.col("value") * 100, 0).cast("long"))
-          .cast("long").alias("y"))
+    ).agg(F.sum(cents("value")).cast("long").alias("y"))
 
 
 def ols_report_from_daily(daily: DataFrame) -> DataFrame:
@@ -2877,8 +2870,8 @@ def spend_percentile_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     spend = (orders.join(F.broadcast(cust),
                          orders.o_custkey == cust.c_custkey)
              .groupBy("c_mktsegment", F.col("o_custkey").alias("custkey"))
-             .agg(F.sum(F.round(F.col("o_totalprice") * 100, 0)
-                        .cast("long")).cast("long").alias("spend_cents")))
+             .agg(F.sum(cents("o_totalprice")).cast("long")
+                  .alias("spend_cents")))
     w = Window.partitionBy("c_mktsegment").orderBy("spend_cents", "custkey")
     return spend.select(
         "c_mktsegment", "custkey", "spend_cents",
@@ -2931,7 +2924,7 @@ def mode_imputation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(F.md5(F.col("event_id").cast("string").cast("binary")),
                     1, 1).isin("0", "1", "2", "3"),
         F.lit(None).cast("long")
-    ).otherwise(F.round(F.col("value") * 100, 0).cast("long"))
+    ).otherwise(cents("value"))
     base = ev.select("event_id", "event_type", nulled.alias("cents"))
     w = Window.partitionBy("event_type").orderBy(
         F.desc("n"), F.asc("cents"))
@@ -3431,13 +3424,13 @@ def table_stats_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(col).cast("string").alias("min_value"),
             F.max(col).cast("string").alias("max_value"))
 
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     return (col_stats("o_custkey", F.col("o_custkey"))
             .unionByName(col_stats("o_orderstatus",
                                    F.col("o_orderstatus")))
             .unionByName(col_stats("o_orderpriority",
                                    F.col("o_orderpriority")))
-            .unionByName(col_stats("o_totalprice_cents", cents,
+            .unionByName(col_stats("o_totalprice_cents",
+                                   cents("o_totalprice"),
                                    "o_totalprice_cents")))
 
 
@@ -3458,12 +3451,11 @@ KMV_STATS_STATE_SCHEMA = (
 
 #: The profiled orders columns: (name, expression, is_numeric).
 def _kmv_stats_columns() -> list[tuple[str, "F.Column", bool]]:
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     return [
         ("o_custkey", F.col("o_custkey"), True),
         ("o_orderstatus", F.col("o_orderstatus"), False),
         ("o_orderpriority", F.col("o_orderpriority"), False),
-        ("o_totalprice_cents", cents, True),
+        ("o_totalprice_cents", cents("o_totalprice"), True),
     ]
 
 
@@ -3872,10 +3864,9 @@ def orders_price_sample_state(orders: DataFrame) -> DataFrame:
     hv = F.conv(F.substring(
         F.md5(F.col("o_orderkey").cast("string").cast("binary")), 1, 15),
         16, 10).cast("long")
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     rows = orders.select(
         "o_orderpriority",
-        F.struct(hv.alias("hv"), cents.alias("cents"),
+        F.struct(hv.alias("hv"), cents("o_totalprice").alias("cents"),
                  F.col("o_orderkey").cast("long").alias("okey"))
         .alias("trip"),
         F.spark_partition_id().alias("_pid"))
@@ -3909,8 +3900,8 @@ def priority_cents_cumulative(orders: DataFrame) -> DataFrame:
     the ``ordered_set_percentiles`` family). The only ordered window
     runs per priority over the distinct-cents domain, bounded by the
     price grid, never the row count."""
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-    cnt = (orders.select("o_orderpriority", cents.alias("cents"))
+    cnt = (orders.select("o_orderpriority",
+                         cents("o_totalprice").alias("cents"))
            .groupBy("o_orderpriority", "cents")
            .agg(F.count(F.lit(1)).cast("long").alias("c")))
     wp = Window.partitionBy("o_orderpriority")
@@ -4668,11 +4659,10 @@ def isotonic_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from math import gcd
 
     orders = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
     month = (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1) \
         .cast("long")
     per = (orders.groupBy(month.alias("month_idx"))
-           .agg(F.sum(cents).alias("s"),
+           .agg(F.sum(cents("o_totalprice")).alias("s"),
                 F.count(F.lit(1)).cast("long").alias("c"))
            .orderBy("month_idx").collect())  # bounded: |months in span|
     blocks: list[list] = []  # [months, sum_cents, count]

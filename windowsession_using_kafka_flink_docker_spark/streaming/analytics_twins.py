@@ -63,6 +63,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
+    cents,
+)
 from windowsession_using_kafka_flink_docker_spark.operators.versioned_index import (
     increments,
 )
@@ -400,7 +403,7 @@ class IncrementalEwmaMaintainer(_PartialMaintainer):
         )
         daily = self.state.current().select(
             "user_id", "d",
-            F.round(F.col("_sum") * 100, 0).cast("long").alias("cents"))
+            cents("_sum").alias("cents"))
         return ewma_from_daily(daily)
 
 
@@ -559,8 +562,7 @@ class IncrementalDailyRevenueMaintainer(_PartialMaintainer):
     def delta(self, batch_df: DataFrame) -> DataFrame:
         return (batch_df
                 .groupBy(F.col("o_orderdate").alias("d"))
-                .agg(F.sum(F.round(F.col("o_totalprice") * 100, 0)
-                           .cast("long")).cast("long").alias("cents")))
+                .agg(F.sum(cents("o_totalprice")).cast("long").alias("cents")))
 
     def current_changepoint(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.analytics import (
@@ -596,7 +598,7 @@ class IncrementalUserSpendMaintainer(_PartialMaintainer):
     def _spend(self) -> DataFrame:
         return self.state.current().select(
             "user_id",
-            F.round(F.col("_sum") * 100, 0).cast("long").alias("cents"))
+            cents("_sum").alias("cents"))
 
     def current_gini(self) -> DataFrame:
         from windowsession_using_kafka_flink_docker_spark.plans.analytics import (
@@ -1123,8 +1125,7 @@ class IncrementalTrendMaintainer(_PartialMaintainer):
                          F.datediff(F.to_date("ts"),
                                     F.lit("2024-01-01").cast("date"))
                          .alias("x"))
-                .agg(F.sum(F.round(F.col("value") * 100, 0).cast("long"))
-                     .cast("long").alias("y")))
+                .agg(F.sum(cents("value")).cast("long").alias("y")))
 
     def _daily(self) -> DataFrame:
         return self.state.current().select("user_id", "x", "y")

@@ -20,7 +20,9 @@ At 100 TB: the accumulated sides are written BUCKETED by the join key
 (``bucketBy`` external tables over the versioned state paths), so each
 delta join probes the accumulated side without reshuffling it — the
 bucketed scan reports HashPartitioning(key) and only the (small) delta
-exchanges; ``dM`` appends as new files per batch (MERGE-free). The
+exchanges. The view ``m`` is not appended to: each batch rewrites it
+whole as one new version (``M ∪ dM``, one ``coalesce(1)`` file), so
+the per-batch write grows with the view, not with ``dM``. The
 no-Exchange-on-state property is plan-asserted in
 tests/test_streaming.py (VERDICT r6 item 4 — previously the module
 promised bucket-local probes but wrote ``coalesce(1)`` state). All three

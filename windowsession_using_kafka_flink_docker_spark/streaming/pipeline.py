@@ -3,11 +3,12 @@ plans (the engine's native rendering of flink_stream_task1/2/3).
 
 The batch and streaming planes share one sessionization definition
 (``operators.sessionize``): a streaming pipeline is the same
-``groupBy(key, session_window(ts, gap))`` plan with a watermark attached
-upstream, exactly the Structured Streaming unified-model contract
-(SIGMOD'18). Append mode emits each session once, after the watermark
-passes ``session_end`` — the same one-result-per-closed-session behavior as
-the reference's event-time trigger (flink_stream_task1.py:51).
+``session_partials`` aggregate and ``present_sessions`` select with a
+watermark attached upstream, exactly the Structured Streaming
+unified-model contract (SIGMOD'18). Append mode emits each session once,
+after the watermark passes ``session_end`` — the same
+one-result-per-closed-session behavior as the reference's event-time
+trigger (flink_stream_task1.py:51).
 
 Watermark parity (flink_stream_task1.py:38-41): the reference declares
 ``for_monotonous_timestamps`` (ordered input ⇒ zero lateness allowance) and
@@ -32,9 +33,11 @@ from windowsession_using_kafka_flink_docker_spark.operators.alerts import (
     BIG_CUSTOMER_THRESHOLD,
 )
 from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
-    _AVG_CENTS_EXPR,
     DEFAULT_GAP,
     dynamic_gap_expr,
+    present_sessions,
+    session_partials,
+    tier_gap_expr,
 )
 
 #: Monotonous-timestamps parity: ordered input needs no lateness allowance.
@@ -47,40 +50,6 @@ from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
 MONOTONOUS_DELAY = "0 seconds"
 
 
-def _project_sessions(agg: DataFrame, key: str) -> DataFrame:
-    """Shared post-aggregation projection (same shape AND same exact-e2
-    presentation as the batch ``sessionize`` output, so the
-    stream==batch pins hold value-exactly): start/end, sum and half-up
-    avg both derived from the exact BIGINT cents sum (the reference's
-    ``max(1, count)`` guard, flink_stream_task1.py:72, is vacuous —
-    ``event_count >= 1`` by construction)."""
-    return agg.select(
-        F.col(key),
-        F.col("session_window.start").alias("session_start"),
-        F.col("session_window.end").alias("session_end"),
-        (F.col("_sc") / F.lit(100.0)).alias("session_sum"),
-        F.col("event_count"),
-        (F.expr(_AVG_CENTS_EXPR) / F.lit(100.0)).alias("session_avg"),
-    )
-
-
-def _session_agg(events: DataFrame, gap, watermark_delay: str,
-                 key: str, ts: str, value: str) -> DataFrame:
-    """Watermark + session-window aggregate, window column retained (the
-    window carries the event-time marker chained stateful operators need).
-    Aggregates exact BIGINT cents (``_sc``) — the batch ``_aggregate``'s
-    exact-e2 form, streaming-side."""
-    cents = F.round(F.col(value) * 100, 0).cast("long")
-    return (
-        events.withWatermark(ts, watermark_delay)
-        .groupBy(key, F.session_window(ts, gap))
-        .agg(
-            F.sum(cents).alias("_sc"),
-            F.count(F.lit(1)).alias("event_count"),
-        )
-    )
-
-
 def streaming_sessionize(events: DataFrame, gap: str = DEFAULT_GAP,
                          watermark_delay: str = MONOTONOUS_DELAY,
                          key: str = "user_id", ts: str = "ts",
@@ -91,9 +60,8 @@ def streaming_sessionize(events: DataFrame, gap: str = DEFAULT_GAP,
     when the watermark passes session end (the reference's per-closed-
     session report, flink_stream_task1.py:84-85).
     """
-    return _project_sessions(
-        _session_agg(events, gap, watermark_delay, key, ts, value), key
-    )
+    return present_sessions(session_partials(
+        events.withWatermark(ts, watermark_delay), gap, key, ts, value), key)
 
 
 def streaming_sessionize_dynamic(events: DataFrame,
@@ -103,10 +71,9 @@ def streaming_sessionize_dynamic(events: DataFrame,
     """task3 streaming parity: per-user-tier dynamic session gaps
     (flink_stream_task3.py:54-62,106-111 intended semantics) — the gap is
     a per-event expression, natively supported by ``session_window``."""
-    return _project_sessions(
-        _session_agg(events, dynamic_gap_expr(key), watermark_delay, key, ts, value),
-        key,
-    )
+    return present_sessions(session_partials(
+        events.withWatermark(ts, watermark_delay), dynamic_gap_expr(key),
+        key, ts, value), key)
 
 
 def streaming_sessionize_scd2(events: DataFrame, tier_intervals: DataFrame,
@@ -134,12 +101,9 @@ def streaming_sessionize_scd2(events: DataFrame, tier_intervals: DataFrame,
     )
     enriched = e.join(t, cond, "left").select(
         f"e.{key}", f"e.{ts}", f"e.{value}", "t.tier")
-    from windowsession_using_kafka_flink_docker_spark.plans.relational import (
-        tier_gap_expr,
-    )
-    agg = _session_agg(enriched, tier_gap_expr(), watermark_delay, key, ts,
-                       value)
-    return _project_sessions(agg, key).drop("session_avg")
+    agg = session_partials(enriched.withWatermark(ts, watermark_delay),
+                           tier_gap_expr(), key, ts, value)
+    return present_sessions(agg, key).drop("session_avg")
 
 
 def streaming_windowed_counts(events: DataFrame, duration: str = "5 minutes",
@@ -182,9 +146,10 @@ def streaming_alerts(events: DataFrame,
     state — the reference's actual semantics). Both are chained stateful
     operators after the session aggregate, supported since Spark 3.5.
     """
-    agg = _session_agg(events, DEFAULT_GAP, watermark_delay, key, ts, value)
+    agg = session_partials(events.withWatermark(ts, watermark_delay),
+                           DEFAULT_GAP, key, ts, value)
     # Compare the PRESENTED sum (_sc/100.0), exactly the double the batch
-    # path filters (sessionize projects sum_cents/100.0) — a raw-cents
+    # path filters (present_sessions projects _sc/100.0) — a raw-cents
     # integer comparison against threshold*100 would be equivalent only
     # for thresholds that are themselves exact cents.
     qualified = agg.where(F.col("_sc") / F.lit(100.0) >= threshold)
@@ -192,7 +157,7 @@ def streaming_alerts(events: DataFrame,
         deduped = qualified.dropDuplicatesWithinWatermark([key])
     else:
         deduped = qualified.dropDuplicates([key])
-    return _project_sessions(deduped, key)
+    return present_sessions(deduped, key)
 
 
 def streaming_interval_join(left: DataFrame, right: DataFrame,

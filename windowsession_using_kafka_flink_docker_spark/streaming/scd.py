@@ -12,9 +12,11 @@ Same durability scheme as every maintainer (``_VersionedState``):
 version ``v{batch_id}`` is derived from the newest version strictly
 below ``batch_id`` and overwritten wholesale on replay, making
 foreachBatch's at-least-once delivery land on byte-identical state;
-superseded versions are pruned (current + previous kept). At 100 TB the
-dimension is partitioned by ``is_current`` so serving scans only current
-rows — exactly how the batch entry ``scd2_customer_upsert`` writes it.
+superseded versions are pruned (current + previous kept). Each version
+is the whole dimension (current and expired rows) as one unpartitioned
+``coalesce(1)`` file; ``current_rows()`` filters ``is_current`` over that
+full history, so serving cost grows with the history, not with the
+current rows.
 """
 
 from __future__ import annotations

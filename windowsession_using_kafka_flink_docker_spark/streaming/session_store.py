@@ -72,6 +72,9 @@ from windowsession_using_kafka_flink_docker_spark.operators.session_store import
     resessionize_atoms,
     sessions_full,
 )
+from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
+    cents,
+)
 from windowsession_using_kafka_flink_docker_spark.operators.versioned_index import (
     compact_components,
 )
@@ -404,10 +407,10 @@ class IncrementalSessionStoreMaintainer:
             *[os.path.join(self.dead_letter_dir, d) for d in dirs])
         n_late = late.count()
         affected = late.select("user_id").distinct()
-        cents = F.round(F.col("value") * 100, 0).cast("long")
         late_atoms = late.select(
             "user_id", F.col("ts").alias("session_start"),
-            F.col("ts").alias("session_end"), cents.alias("sum_cents"),
+            F.col("ts").alias("session_end"),
+            cents("value").alias("sum_cents"),
             F.lit(1).cast("long").alias("event_count"))
         touched = base.join(affected, "user_id", "left_semi")
         repaired = resessionize_atoms(touched.unionByName(late_atoms))

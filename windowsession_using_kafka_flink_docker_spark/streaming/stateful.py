@@ -14,7 +14,7 @@ The work is split three ways so Python touches only what needs a loop:
    columns: the key, the watermarked ``ts`` (the event-time timeout needs
    the watermark on the operator's input) and the exact BIGINT cents
    ``CAST(ROUND(value * 100, 0) AS BIGINT)`` — the batch operator's own
-   expression (``sessionize._cents``), so the Spark ROUND tie-break is
+   expression (``sessionize.cents``), so the Spark ROUND tie-break is
    the one the batch plan uses, not a Python mirror of it. Unused input
    columns never reach Arrow.
 2. **Python folds.** Per key and micro-batch: one stable argsort of the
@@ -22,19 +22,19 @@ The work is split three ways so Python touches only what needs a loop:
    whose batch closed nothing yields no frame; a closed segment leaves
    as BIGINTs ``(user_id, s0_us, s1_us, _sc, event_count)``
    (``FOLD_SCHEMA``), so Arrow sees no object or datetime column.
-3. **JVM presents.** A ``select`` after the operator turns the fold rows
-   into ``OUT_SCHEMA``: ``timestamp_micros`` for the bounds,
-   ``_sc / 100.0`` and ``sessionize._AVG_CENTS_EXPR`` (the sign-correct
-   half-up cent quotient) for sum and average — the batch plan's
-   presentation, so stream == batch holds bit-for-bit.
+3. **JVM presents.** ``sessionize.present_sessions`` after the operator
+   turns the fold rows into ``OUT_SCHEMA``, with ``timestamp_micros`` for
+   the bounds: ``_sc / 100.0`` and the sign-correct half-up cent quotient
+   for sum and average — the batch plan's own presentation, so
+   stream == batch holds bit-for-bit.
 
 State per key: the one open segment ``(gap-session start, segment index,
 seg min/max ts, running cents sum/count)`` — O(1) per key, evicted by
 event-time timeout when the watermark passes ``segment end + gap`` (at
 which point any future event would start a new session anyway, so eviction
 is safe). The running sum is exact BIGINT cents, the batch operator's
-exact-e2 discipline (see ``operators/sessionize.py:_aggregate``): floats
-accumulate rounding error across micro-batches, cents don't.
+exact-e2 discipline (see ``operators/sessionize.py:present_sessions``):
+floats accumulate rounding error across micro-batches, cents don't.
 
 Timestamps reach Python as session-local wall time and the µs it folds
 are presented by ``timestamp_micros`` and compared with the watermark
@@ -70,8 +70,8 @@ from windowsession_using_kafka_flink_docker_spark.operators.capped_sessionize im
     DEFAULT_CAP,
 )
 from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
-    _AVG_CENTS_EXPR,
-    _cents,
+    cents,
+    present_sessions,
 )
 
 OUT_SCHEMA = (
@@ -81,8 +81,8 @@ OUT_SCHEMA = (
 #: (gap-session start µs, segment index, seg min µs, seg max µs,
 #:  cents sum, count)
 STATE_SCHEMA = "gs0 long, seg long, s0 long, s1 long, sc long, scnt long"
-#: What the Python fold emits per closed segment; ``_present`` maps it
-#: to ``OUT_SCHEMA`` in the JVM.
+#: What the Python fold emits per closed segment; ``present_sessions``
+#: maps it to ``OUT_SCHEMA`` in the JVM.
 FOLD_SCHEMA = ("user_id long, s0_us long, s1_us long, _sc long, "
                "event_count long")
 
@@ -96,18 +96,7 @@ def _prepare(events: DataFrame, key: str, ts: str, value: str,
     return events.withWatermark(ts, watermark_delay).select(
         F.col(key),
         F.col(ts).alias(_TS),
-        _cents(value).alias(_CENTS),
-    )
-
-
-def _present(folded: DataFrame) -> DataFrame:
-    return folded.select(
-        "user_id",
-        F.timestamp_micros("s0_us").alias("session_start"),
-        F.timestamp_micros("s1_us").alias("session_end"),
-        (F.col("_sc") / F.lit(100.0)).alias("session_sum"),
-        "event_count",
-        (F.expr(_AVG_CENTS_EXPR) / F.lit(100.0)).alias("session_avg"),
+        cents(value).alias(_CENTS),
     )
 
 
@@ -209,5 +198,7 @@ def streaming_capped_sessionize(events: DataFrame, gap_sec: float = 30.0,
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-    return _present(folded)
+    return present_sessions(folded, "user_id",
+                            start=F.timestamp_micros("s0_us"),
+                            end=F.timestamp_micros("s1_us"))
 
