@@ -15,6 +15,9 @@ from pyspark.sql import functions as F
 from windowsession_using_kafka_flink_docker_spark.operators.session_store import (
     sessions_full as _sessions_full,
 )
+from windowsession_using_kafka_flink_docker_spark.operators.versioned_index import (
+    increments,
+)
 from windowsession_using_kafka_flink_docker_spark.sources.batch import load_table
 from windowsession_using_kafka_flink_docker_spark.streaming import (
     IncrementalSessionStoreMaintainer,
@@ -742,11 +745,40 @@ def test_orphan_frozen_increment_is_invisible_until_redelivery(
     maint.merge_batch(b1, 1)
     # resurrect the crash point: v=1 gone, frozen inc=00001 committed
     shutil.rmtree(os.path.join(state, "v=1"))
-    assert "inc=00001" in maint._frozen_leaves()
+    assert "inc=00001" in increments(maint.state.state_dir, "frozen")
     assert _rows(maint.current()) == after_b0  # orphan invisible
 
     maint.merge_batch(b1, 1)  # redelivery overwrites + commits
     assert _rows(maint.current()) == _rows(_sessions_full(ev))
+
+
+def test_drain_beside_orphan_increment_leaves_it_for_redelivery(
+        spark, sf_dir, tmp_path_factory):
+    """A dead-letter drain while an orphan ``frozen/inc=<target+1>``
+    exists (crash between batch 2's frozen write and its tail commit):
+    the shared swap folds only the leaves <= the drain target, so the
+    drained store equals the full recompute of the committed batches,
+    and the orphan survives until batch 2's redelivery overwrites it
+    and commits."""
+    maint, ev = _quarantined_maintainer(spark, sf_dir, tmp_path_factory)
+    state = maint.state.state_dir
+    # batch 2: strictly later events for every user (clean tail merge)
+    batch2 = ev.select(
+        (F.col("event_id") + 10_000_000).alias("event_id"),
+        (F.col("ts") + F.expr("INTERVAL 60 DAYS")).alias("ts"),
+        "user_id", "value").localCheckpoint()
+    maint.merge_batch(batch2, 2)
+    shutil.rmtree(os.path.join(state, "v=2"))  # the crash point
+    assert increments(state, "frozen")[-1] == "inc=00002"
+
+    assert maint.repair_from_dead_letter() > 0  # drains b=1 into v=1
+    assert _rows(maint.current()) == _rows(_sessions_full(ev))
+    assert increments(state, "frozen") == ["inc=00000", "inc=00002"]
+    assert maint.dead_letter_backlog() == 0
+
+    maint.merge_batch(batch2, 2)  # redelivery overwrites + commits
+    want = _rows(_sessions_full(ev).unionByName(_sessions_full(batch2)))
+    assert _rows(maint.current()) == want
 
 
 def test_compact_every_folds_in_stream_and_preserves_values(
@@ -767,7 +799,7 @@ def test_compact_every_folds_in_stream_and_preserves_values(
                                               compact_every=3)
     for i, sl in enumerate(slices):
         maint.merge_batch(sl, i)
-        assert len(maint._frozen_leaves()) <= 3
+        assert len(increments(maint.state.state_dir, "frozen")) <= 3
     assert _rows(maint.current()) == _rows(_sessions_full(ev))
 
 
@@ -788,7 +820,7 @@ def test_drain_swap_crash_resumes_frozen_fold(spark, sf_dir,
     for d in letters:
         sh.copytree(os.path.join(maint.dead_letter_dir, d),
                     os.path.join(saved, d))
-    pre_leaves = maint._frozen_leaves()
+    pre_leaves = increments(maint.state.state_dir, "frozen")
 
     assert maint.repair_from_dead_letter() > 0
     want = _rows(_sessions_full(ev))
@@ -821,7 +853,7 @@ def test_drain_swap_crash_resumes_frozen_fold(spark, sf_dir,
     assert maint.repair_from_dead_letter() == 0  # cleanup only
     assert _rows(maint.current()) == want
     assert not os.path.isdir(tmp)
-    assert maint._frozen_leaves() == ["inc=00000"]
+    assert increments(maint.state.state_dir, "frozen") == ["inc=00000"]
     assert maint.dead_letter_backlog() == 0
     assert maint._pre_drain_leaf() is None
 
@@ -835,7 +867,7 @@ def test_stale_repair_staging_is_discarded(spark, sf_dir,
     tmp = os.path.join(maint.state.state_dir, "frozen", "repair_tmp")
     spark.createDataFrame([], maint._SCHEMA).write.parquet(tmp)
     with open(os.path.join(tmp, "_folded.txt"), "w") as fh:
-        fh.write("\n".join(maint._frozen_leaves()))
+        fh.write("\n".join(increments(maint.state.state_dir, "frozen")))
 
     assert maint.repair_from_dead_letter() > 0
     assert _rows(maint.current()) == _rows(_sessions_full(ev))
@@ -866,7 +898,8 @@ def test_import_clears_stale_frozen_leaves(spark, sf_dir,
     target = IncrementalSessionStoreMaintainer(
         spark, str(tmp_path_factory.mktemp("imp_target")))
     target.merge_batch(ev.orderBy("ts").limit(400), 0)
-    assert target._frozen_leaves()  # the stale leaf exists
+    # the stale leaf exists
+    assert increments(target.state.state_dir, "frozen")
     shutil.rmtree(os.path.join(target.state.state_dir, "v=0"))
     # (behind the snapshot, so the versioned-state guard accepts it)
 

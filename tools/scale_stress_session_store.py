@@ -46,6 +46,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from windowsession_using_kafka_flink_docker_spark import get_spark
+from windowsession_using_kafka_flink_docker_spark.operators.versioned_index import (
+    increments,
+)
 from windowsession_using_kafka_flink_docker_spark.sources.batch import load_table
 
 N_BATCHES = int(os.environ.get("SESS_STORE_BATCHES", "48"))
@@ -115,8 +118,8 @@ def main() -> int:
         "n_batches": N_BATCHES,
         "merge_sec_at": merge_plain,
         "merge_sec_at_compacted": merge_comp,
-        "final_leaves": len(plain._frozen_leaves()),
-        "final_leaves_compacted": len(comp._frozen_leaves()),
+        "final_leaves": len(increments(state_a, "frozen")),
+        "final_leaves_compacted": len(increments(state_b, "frozen")),
         "read_sec": read_plain,
         "read_sec_compacted": read_comp,
         "whole_rewrite_sec": whole_sec,

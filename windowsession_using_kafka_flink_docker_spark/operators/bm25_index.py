@@ -34,8 +34,6 @@ near-dup LSH index, BM25 postings).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -70,6 +68,7 @@ from windowsession_using_kafka_flink_docker_spark.operators.versioned_index impo
     compact_components,
     increments,
     next_increment,
+    read_component,
     write_increment,
 )
 
@@ -172,17 +171,12 @@ def bm25_from_index(spark: SparkSession, path: str,
         .select(F.pmod(F.hash("tok"), F.lit(BM25_BUCKETS)).alias("b"))
         .collect()]
 
-    # basePath = the component root, so `inc` and `bucket` are both
-    # discovered partition columns and the bucket filter still prunes
-    # to <= |terms| directories PER increment.
-    postings = (spark.read.option("basePath", os.path.join(path, "postings"))
-                .parquet(*[os.path.join(path, "postings", x) for x in incs])
+    # `bucket` stays a discovered partition column, so the bucket filter
+    # still prunes to <= |terms| directories PER increment.
+    postings = (read_component(spark, path, "postings", incs)
                 .where(F.col("bucket").isin(buckets))
-                .where(F.col("tok").isin(list(terms)))
-                .drop("inc"))
-    doclens = (spark.read.option("basePath", os.path.join(path, "doclens"))
-               .parquet(*[os.path.join(path, "doclens", x) for x in incs])
-               .drop("inc"))
+                .where(F.col("tok").isin(list(terms))))
+    doclens = read_component(spark, path, "doclens", incs)
     stats = doclens.agg(F.count(F.lit(1)).alias("_n"),
                         F.avg("dl").alias("_avgdl"))
     dft = postings.groupBy("tok").agg(

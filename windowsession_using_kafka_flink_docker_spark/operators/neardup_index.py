@@ -34,8 +34,6 @@ math end to end.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -81,9 +79,9 @@ _COMPONENTS = {"bands": ("band_id",), "bucket_counts": (),
 
 from windowsession_using_kafka_flink_docker_spark.operators.versioned_index import (  # noqa: E402
     check_components_committed,
-    increments,
+    increment_leaf,
     next_increment,
-    read_component as _read_component_impl,
+    read_component,
     write_increment,
 )
 
@@ -121,7 +119,6 @@ def neardup_index_append(spark: SparkSession, batch: DataFrame,
 
     if inc is None:
         inc = next_increment(path, "bands")
-    leaf = f"inc={inc:05d}"
     own = shingles is None
     if own:
         shingles = D.shingle_table(batch)
@@ -133,7 +130,8 @@ def neardup_index_append(spark: SparkSession, batch: DataFrame,
         # Derive the count ledger from the JUST-WRITTEN parquet, not
         # the lazy bands frame — re-deriving would run the Arrow
         # minhash + 16-band-md5 pipeline a second time.
-        counts = (spark.read.parquet(os.path.join(path, "bands", leaf))
+        counts = (read_component(spark, path, "bands",
+                                 [increment_leaf(inc)])
                   .groupBy("band_id", "band_hash")
                   .agg(F.count(F.lit(1)).alias("n")))
         write_increment(counts, path, "bucket_counts", inc)
@@ -141,13 +139,6 @@ def neardup_index_append(spark: SparkSession, batch: DataFrame,
     finally:
         if own:
             shingles.unpersist()
-
-
-def _read_component(spark: SparkSession, path: str, comp: str,
-                    incs: list[str], before_inc: int | None):
-    """Read a component across increments (None when the filtered set
-    is empty — first batch / empty index)."""
-    return _read_component_impl(spark, path, comp, incs, before_inc)
 
 
 def neardup_index_probe(spark: SparkSession, path: str,
@@ -175,11 +166,10 @@ def neardup_index_probe(spark: SparkSession, path: str,
     from windowsession_using_kafka_flink_docker_spark.operators import dedup as D
 
     incs = check_index_committed(path, before_inc)
-    idx_bands = _read_component(spark, path, "bands", incs, before_inc)
-    idx_counts = _read_component(spark, path, "bucket_counts", incs,
-                                 before_inc)
-    idx_shingles = _read_component(spark, path, "shingles", incs,
-                                   before_inc)
+    # None when the scoped set is empty (first batch / empty index)
+    idx_bands = read_component(spark, path, "bands", incs)
+    idx_counts = read_component(spark, path, "bucket_counts", incs)
+    idx_shingles = read_component(spark, path, "shingles", incs)
 
     own = shingles is None
     d_shingles = D.shingle_table(delta) if own else shingles

@@ -1,13 +1,17 @@
-"""Shared versioned-increment plumbing for persisted serving indexes.
+"""Shared versioned-increment plumbing: the one implementation of the
+append-only increment log.
 
-Both maintained indexes — BM25 postings (operators/bm25_index.py,
-maintainer #25) and the near-dup LSH index (operators/neardup_index.py,
-maintainer #26) — follow the same on-disk discipline:
+Three maintained states follow the same on-disk discipline — the BM25
+postings index (operators/bm25_index.py, maintainer #25), the near-dup
+LSH index (operators/neardup_index.py, maintainer #26) and the session
+store's ``frozen`` component (streaming/session_store.py, maintainer
+#24):
 
-- an index is a set of COMPONENTS (``postings``/``doclens``;
-  ``bands``/``bucket_counts``/``shingles``/``pairs``), each a directory
-  of ``inc=<n>`` increments, one per ingest, each increment carrying
-  its own ``_SUCCESS`` commit marker;
+- a state is a set of COMPONENTS (``postings``/``doclens``;
+  ``bands``/``bucket_counts``/``shingles``/``pairs``; ``frozen``), each
+  a directory of ``inc=<n>`` increments, one per ingest, each increment
+  carrying its own ``_SUCCESS`` commit marker; increments order by
+  their NUMBER (``inc=100000`` is newer than ``inc=99999``);
 - readers require every component to hold the SAME committed increment
   set (fail closed on any mismatch — an ingest interrupted between
   component writes must never silently mis-serve);
@@ -35,40 +39,74 @@ maintainer #26) — follow the same on-disk discipline:
   a violation discovered mid-rename — a genuinely torn index — fails
   loudly.
 
-This module is the single implementation of that discipline; the index
-modules contribute only their component list, per-component partition
-columns, and the domain math.
+The session store's dead-letter drain stages to ``repair_tmp`` and
+swaps with the same :func:`finish_swap`, after its own commit point,
+so never through the compaction's discard-on-violation audit.
+
+This module is the single implementation of that discipline and the
+only code that knows the ``inc=<n>`` layout; its users contribute only
+their component list, per-component partition columns (and a schema,
+when they declare one), and the domain math.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-COMPACT_TARGET = "inc=00000"
 _COMPACT_TMP = "compact_tmp"  # does not start with "inc=": never listed
 _FOLDED = "_folded.txt"  # underscore prefix: invisible to parquet reads
 
 
-def _read_manifest(tmp_dir: str) -> list[str]:
-    with open(os.path.join(tmp_dir, _FOLDED)) as fh:
-        return [x for x in fh.read().split("\n") if x]
+def increment_leaf(inc: int) -> str:
+    """The directory name of increment ``inc``."""
+    return f"inc={inc:05d}"
+
+
+def _number(leaf: str) -> int:
+    return int(leaf.split("=")[1])
+
+
+COMPACT_TARGET = increment_leaf(0)
+
+
+def write_manifest(d: str, names: list[str]) -> None:
+    """Record ``names`` — what a staged fold replaces — in ``d``."""
+    with open(os.path.join(d, _FOLDED), "w") as fh:
+        fh.write("\n".join(names))
+
+
+def read_manifest(d: str) -> list[str] | None:
+    """The names recorded in ``d``; None when it has no manifest."""
+    try:
+        with open(os.path.join(d, _FOLDED)) as fh:
+            return [x for x in fh.read().split("\n") if x]
+    except FileNotFoundError:
+        return None
+
+
+def drop_manifest(d: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(os.path.join(d, _FOLDED))
 
 
 def increments(path: str, comp: str) -> list[str]:
-    """Sorted ``inc=<n>`` leaf names present under a component."""
+    """``inc=<n>`` leaf names present under a component, in increment
+    order."""
     d = os.path.join(path, comp)
     if not os.path.isdir(d):
         return []
-    return sorted(x for x in os.listdir(d) if x.startswith("inc="))
+    return sorted((x for x in os.listdir(d) if x.startswith("inc=")),
+                  key=_number)
 
 
 def _filtered(incs: list[str], before_inc: int | None) -> list[str]:
     if before_inc is None:
         return incs
-    return [x for x in incs if int(x.split("=")[1]) < before_inc]
+    return [x for x in incs if _number(x) < before_inc]
 
 
 def check_components_committed(path: str, comps: tuple[str, ...],
@@ -97,29 +135,93 @@ def check_components_committed(path: str, comps: tuple[str, ...],
 
 def next_increment(path: str, comp: str) -> int:
     incs = increments(path, comp)
-    return 1 + max((int(x.split("=")[1]) for x in incs), default=-1)
+    return 1 + _number(incs[-1]) if incs else 0
 
 
 def read_component(spark: SparkSession, path: str, comp: str,
                    incs: list[str],
-                   before_inc: int | None = None) -> DataFrame | None:
+                   schema: str | None = None) -> DataFrame | None:
     """Read a component across increments with ``basePath`` so ``inc``
     is a discovered partition column (dropped), preserving any deeper
-    partition columns for pruning. None when the scoped set is empty."""
-    incs = _filtered(incs, before_inc)
+    partition columns for pruning. ``schema`` (the owner's declared
+    data schema, if any) skips the footer-inference job. None when
+    ``incs`` is empty."""
     if not incs:
         return None
-    return (spark.read.option("basePath", os.path.join(path, comp))
-            .parquet(*[os.path.join(path, comp, x) for x in incs])
+    reader = spark.read.option("basePath", os.path.join(path, comp))
+    if schema is not None:
+        reader = reader.schema(schema)
+    return (reader.parquet(*[os.path.join(path, comp, x) for x in incs])
             .drop("inc"))
+
+
+def _write(df: DataFrame, d: str, partition_by: tuple[str, ...]) -> None:
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(d)
 
 
 def write_increment(df: DataFrame, path: str, comp: str, inc: int,
                     partition_by: tuple[str, ...] = ()) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(os.path.join(path, comp, f"inc={inc:05d}"))
+    _write(df, os.path.join(path, comp, increment_leaf(inc)), partition_by)
+
+
+def copy_increments(src: str, dst: str, comp: str,
+                    incs: list[str]) -> None:
+    """Copy the ``incs`` leaves of ``comp`` from state dir ``src`` to
+    ``dst``, replacing any leaf of the same name there."""
+    for x in incs:
+        target = os.path.join(dst, comp, x)
+        shutil.rmtree(target, ignore_errors=True)
+        shutil.copytree(os.path.join(src, comp, x), target)
+
+
+def stage_fold(df: DataFrame, path: str, comp: str, folded: list[str],
+               partition_by: tuple[str, ...] = (),
+               tmp: str = _COMPACT_TMP) -> None:
+    """Write ``df`` — the fold of the ``folded`` leaves — to the
+    component's staging sibling ``tmp``, then its manifest. The
+    manifest comes AFTER the Spark write (overwrite wipes the dir):
+    it records exactly which leaves this staging replaces, so
+    :func:`finish_swap` deletes those and only those."""
+    d = os.path.join(path, comp, tmp)
+    _write(df, d, partition_by)
+    write_manifest(d, folded)
+
+
+def _staged(d: str) -> bool:
+    # A staging is committed only once BOTH the Spark marker and the
+    # fold manifest exist — a crash between them leaves a staging whose
+    # folded set is unknowable, which must be discarded (safe: nothing
+    # is deleted until finish_swap).
+    return (os.path.exists(os.path.join(d, "_SUCCESS"))
+            and os.path.exists(os.path.join(d, _FOLDED)))
+
+
+def finish_swap(path: str, comp: str, tmp: str = _COMPACT_TMP) -> None:
+    """Swap a committed staging in: delete exactly its manifested
+    leaves, rename it to ``inc=00000``, drop the manifest. Re-entrant
+    at every crash point: no-op when no staging exists (the rename
+    already happened); a torn staging (no marker or manifest) is
+    discarded, since nothing was deleted yet."""
+    d = os.path.join(path, comp, tmp)
+    if not os.path.isdir(d):
+        return
+    if not _staged(d):
+        shutil.rmtree(d)
+        return
+    for leaf in read_manifest(d):
+        # FileNotFoundError: deleted by a prior finish attempt
+        with contextlib.suppress(FileNotFoundError):
+            shutil.rmtree(os.path.join(path, comp, leaf))
+    # The manifest rides into inc=00000 through the atomic rename
+    # (removing it first would open a crash window where folded leaves
+    # are deleted but the staging looks torn and gets discarded);
+    # underscore files are invisible to parquet reads.
+    target = os.path.join(path, comp, COMPACT_TARGET)
+    os.rename(d, target)
+    drop_manifest(target)
 
 
 def compact_components(
@@ -134,14 +236,6 @@ def compact_components(
     def tmp(c: str) -> str:
         return os.path.join(path, c, _COMPACT_TMP)
 
-    def committed(c: str) -> bool:
-        # A tmp is committed only once BOTH the Spark marker and the
-        # fold manifest exist — a crash between them leaves a tmp whose
-        # folded set is unknowable, which must be discarded (safe:
-        # nothing is deleted until _finish_compaction).
-        return (os.path.exists(os.path.join(tmp(c), "_SUCCESS"))
-                and os.path.exists(os.path.join(tmp(c), _FOLDED)))
-
     present = [c for c in names if os.path.isdir(tmp(c))]
     # Recovery disambiguation relies on the FIXED component order used
     # for both tmp writes and renames:
@@ -155,14 +249,14 @@ def compact_components(
     #   finish;
     # - any half-written tmp (no marker) only occurs before renames
     #   start, so it always falls in the discard case.
-    if present and (not all(committed(c) for c in present)
+    if present and (not all(_staged(tmp(c)) for c in present)
                     or (names[0] in present
                         and len(present) < len(names))):
         for c in present:
             shutil.rmtree(tmp(c))
         present = []
     if present:
-        n = len(_read_manifest(tmp(present[0])))
+        n = len(read_manifest(tmp(present[0])))
         completed = _finish_compaction(path, comps)
         return n if completed and len(present) == len(names) else 0
 
@@ -171,42 +265,23 @@ def compact_components(
     if not folded or folded == [COMPACT_TARGET]:
         return 0
     for c, parts in comps.items():
-        df = read_component(spark, path, c, folded)
-        w = df.write.mode("overwrite")
-        if parts:
-            w = w.partitionBy(*parts)
-        w.parquet(tmp(c))
-        # Manifest AFTER the Spark write (overwrite wipes the dir):
-        # records exactly which leaves this tmp folded, so the finish
-        # deletes those and only those.
-        with open(os.path.join(tmp(c), _FOLDED), "w") as fh:
-            fh.write("\n".join(folded))
+        stage_fold(read_component(spark, path, c, folded), path, c, folded,
+                   parts)
     return len(folded) if _finish_compaction(path, comps) else 0
 
 
 def _finish_compaction(path: str,
                        comps: dict[str, tuple[str, ...]]) -> bool:
-    """Delete exactly the MANIFESTED increments (the leaves actually
-    folded into each tmp) and rename each committed tmp into
-    ``inc=00000``, in component order — a mid-sequence crash is
-    detectable (mismatched components fail closed) and the next call
-    completes only the missing renames. Deleting 'all but newest' at
-    finish time instead (the pre-r16 behavior) silently dropped any
-    increment that landed between the fold and the finish: the
-    previously-newest UNFOLDED leaf became non-newest and was rmtree'd
-    (r15 ADVICE). A violated quiescence contract (at fold time exactly
-    one leaf — the then-newest — stays outside the fold, so more than
-    one non-manifested leaf means ingests ran mid-compaction) is
-    audited for EVERY pending component BEFORE anything is deleted:
-
-    - if no rename has happened yet (all components still hold their
-      tmps), the committed tmps are DISCARDED — increments are fully
-      intact, so this is safe, self-healing, and lets the next fold
-      rebuild with the extra increments included (r16 ADVICE: the
-      previous permanent ValueError re-raised on every later compact,
-      failing the wired streaming job on every run);
-    - mid-rename (some components already swapped), a violation is
-      genuinely torn — raise with the manual recovery spelled out.
+    """:func:`finish_swap` every pending component, in component order
+    (a mid-sequence crash leaves mismatched components, which fail
+    closed; the next call completes only the missing swaps). First the
+    quiescence contract is audited for EVERY pending component: at fold
+    time exactly one leaf — the then-newest — stays outside the fold,
+    so more than one non-manifested leaf means ingests ran
+    mid-compaction. Then, if no swap has happened yet, the committed
+    tmps are DISCARDED (increments intact: self-healing, the next fold
+    includes the extras — r16 ADVICE); mid-rename, the index is torn
+    and the call raises with the manual recovery spelled out.
 
     Returns True when the swap completed, False when it was aborted by
     the discard path (nothing changed on disk except the tmps).
@@ -216,7 +291,7 @@ def _finish_compaction(path: str,
                if os.path.isdir(os.path.join(path, c, _COMPACT_TMP))]
     violated = []
     for c in pending:
-        folded = _read_manifest(os.path.join(path, c, _COMPACT_TMP))
+        folded = read_manifest(os.path.join(path, c, _COMPACT_TMP))
         extras = [x for x in increments(path, c) if x not in folded]
         if len(extras) > 1:
             violated.append((c, extras))
@@ -237,17 +312,5 @@ def _finish_compaction(path: str,
             "its compact_tmp to inc=00000), or restore from the "
             "renamed components' inc=00000")
     for c in pending:
-        tmp = os.path.join(path, c, _COMPACT_TMP)
-        folded = _read_manifest(tmp)
-        for leaf in folded:
-            try:
-                shutil.rmtree(os.path.join(path, c, leaf))
-            except FileNotFoundError:
-                pass  # already deleted by a prior finish attempt
-        # The manifest rides into inc=00000 through the atomic rename
-        # (removing it first would open a crash window where folded
-        # leaves are deleted but the tmp looks uncommitted and gets
-        # discarded); underscore files are invisible to parquet reads.
-        os.rename(tmp, os.path.join(path, c, COMPACT_TARGET))
-        os.remove(os.path.join(path, c, COMPACT_TARGET, _FOLDED))
+        finish_swap(path, c)
     return True

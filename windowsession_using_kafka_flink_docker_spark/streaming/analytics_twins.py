@@ -68,6 +68,7 @@ from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
 )
 from windowsession_using_kafka_flink_docker_spark.operators.versioned_index import (
     increments,
+    next_increment,
 )
 
 
@@ -349,11 +350,11 @@ class _IndexMaintainer:
         # 0, and inc=00000 — which after a compaction holds the folded
         # FULL history — would be silently overwritten by one batch.
         # A replay of the newest batch (inc == batch_id) still passes.
-        incs = increments(self.index_dir, self._GUARD)
-        if incs and int(incs[-1].split("=")[1]) > batch_id:
+        newest = next_increment(self.index_dir, self._GUARD) - 1
+        if newest > batch_id:
             raise ValueError(
                 f"index_dir {self.index_dir} already holds increment "
-                f"{incs[-1]} > incoming batch_id {batch_id}; "
+                f"{newest} > incoming batch_id {batch_id}; "
                 "checkpoint_dir and index_dir must be reset together")
         # An empty micro-batch writes no increment: it would be
         # value-neutral but adds empty directories per idle trigger for

@@ -42,8 +42,6 @@ id-join shingle fetches for surviving candidates only.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 from windowsession_using_kafka_flink_docker_spark.operators.neardup_index import (
@@ -54,6 +52,8 @@ from windowsession_using_kafka_flink_docker_spark.operators.neardup_index import
 from windowsession_using_kafka_flink_docker_spark.operators.versioned_index import (
     check_components_committed,
     compact_components,
+    read_component,
+    write_increment,
 )
 from windowsession_using_kafka_flink_docker_spark.streaming.analytics_twins import (
     _IndexMaintainer,
@@ -93,9 +93,7 @@ class IncrementalNearDupIndexMaintainer(_IndexMaintainer):
             pairs = neardup_index_probe(self.spark, self.index_dir,
                                         batch_df, before_inc=batch_id,
                                         shingles=shingles, bands=bands)
-            (pairs.write.mode("overwrite")
-             .parquet(os.path.join(self.index_dir, "pairs",
-                                   f"inc={batch_id:05d}")))
+            write_increment(pairs, self.index_dir, "pairs", batch_id)
             neardup_index_append(self.spark, batch_df, self.index_dir,
                                  inc=batch_id, shingles=shingles,
                                  bands=bands)
@@ -112,14 +110,11 @@ class IncrementalNearDupIndexMaintainer(_IndexMaintainer):
     def current_pairs(self) -> DataFrame:
         """The maintained near-dup pair table (union of every batch's
         probe findings), empty-frame-safe before the first batch."""
-        incs = self.committed_increments()
-        if not incs:
+        pairs = read_component(self.spark, self.index_dir, "pairs",
+                               self.committed_increments())
+        if pairs is None:
             return self.spark.createDataFrame([], _PAIRS_SCHEMA)
-        return (self.spark.read
-                .option("basePath", os.path.join(self.index_dir, "pairs"))
-                .parquet(*[os.path.join(self.index_dir, "pairs", x)
-                           for x in incs])
-                .drop("inc"))
+        return pairs
 
     def probe(self, delta: DataFrame) -> DataFrame:
         """Serve an ad-hoc dedup query against the full index (no

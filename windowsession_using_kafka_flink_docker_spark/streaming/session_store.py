@@ -36,9 +36,10 @@ the session table itself — a maintained OUTPUT — split in two:
   precondition a batch can merge only with its user's NEWEST-ending
   session (``merge_session_store`` formalizes this), so every session
   that is not its user's newest at write time is immutable. Each
-  increment is one batch's newly-closed sessions (batch-sized), with
-  the versioned-index commit discipline (``_SUCCESS`` per leaf,
-  overwrite-on-replay ⇒ replay-idempotent).
+  increment is one batch's newly-closed sessions (batch-sized). The
+  component is an increment log of operators/versioned_index.py,
+  which lists, writes, reads, compacts and swaps it (``_SUCCESS`` per
+  leaf, overwrite-on-replay ⇒ replay-idempotent).
 - the TAIL — exactly one row per user (their newest session), a
   ``_VersionedState`` snapshot ``v=<batch_id>`` (shared replay/crash
   semantics). The tail write is the COMMIT POINT: the frozen
@@ -52,11 +53,12 @@ Per-batch write cost is O(batch + #users) — previously the WHOLE
 session table was rewritten every batch (O(all sessions ever), the
 "runs at sf0.1, dies at uptime" write-amplification risk). Frozen
 reads grow with the increment count; ``compact_every=N`` folds all
-frozen leaves except the newest into ``inc=00000`` in-stream
-(operators/versioned_index.py — the same count trigger as maintainers
-#25/#26), bounding read amplification on a long-running stream. At
-100 TB the frozen component becomes time-partitioned parquet; the
-layout is already append-only, so nothing about the protocol changes.
+frozen leaves except the newest into ``inc=00000`` in-stream (the same
+count trigger as maintainers #25/#26), bounding read amplification on
+a long-running stream; the dead-letter drain's ``frozen/repair_tmp``
+swaps in through the compaction's ``finish_swap``. At 100 TB the
+frozen component becomes time-partitioned parquet; the layout is
+already append-only, so nothing about the protocol changes.
 """
 
 from __future__ import annotations
@@ -76,7 +78,17 @@ from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
     cents,
 )
 from windowsession_using_kafka_flink_docker_spark.operators.versioned_index import (
+    check_components_committed,
     compact_components,
+    copy_increments,
+    drop_manifest,
+    finish_swap,
+    increments,
+    read_component,
+    read_manifest,
+    stage_fold,
+    write_increment,
+    write_manifest,
 )
 from windowsession_using_kafka_flink_docker_spark.streaming.analytics_twins import (
     _VersionedState,
@@ -103,7 +115,8 @@ class IncrementalSessionStoreMaintainer:
                "session_end TIMESTAMP, sum_cents BIGINT, "
                "event_count BIGINT")
     _FROZEN = "frozen"
-    #: The drain's staging dir for the repaired frozen component —
+    _KIND = "session store"
+    #: The drain's staging sibling for the repaired frozen component —
     #: deliberately NOT ``compact_tmp`` so compact_components' own
     #: resume logic never adopts a drain-staged tmp (and vice versa).
     _REPAIR_TMP = "repair_tmp"
@@ -115,39 +128,27 @@ class IncrementalSessionStoreMaintainer:
         self.state = _VersionedState(spark, state_dir, self._SCHEMA)
         self.dead_letter_dir = dead_letter_dir
         self.compact_every = compact_every
+        self._repair_dir = os.path.join(state_dir, self._FROZEN,
+                                        self._REPAIR_TMP)
 
     # -- frozen component -------------------------------------------------
 
-    def _frozen_dir(self) -> str:
-        return os.path.join(self.state.state_dir, self._FROZEN)
+    def _committed_frozen(self, scope: int) -> list[str]:
+        """Frozen leaves of batch ids <= ``scope``, in increment order.
+        With ``scope`` at most the newest tail version they are all
+        committed by construction (an increment is written before its
+        tail commits), and an orphan above it stays out of view."""
+        return check_components_committed(
+            self.state.state_dir, (self._FROZEN,), self._KIND,
+            before_inc=scope + 1)
 
-    def _repair_tmp(self) -> str:
-        return os.path.join(self._frozen_dir(), self._REPAIR_TMP)
-
-    def _frozen_leaves(self, scope: int | None = None) -> list[str]:
-        """COMMITTED ``inc=`` leaves under the frozen component, in
-        increment order, optionally scoped to batch ids <= ``scope``.
-        An uncommitted (torn) leaf is invisible — its batch's tail
-        never committed, so the stream re-delivers and overwrites it."""
-        d = self._frozen_dir()
-        if not os.path.isdir(d):
-            return []
-        out = []
-        for x in os.listdir(d):
-            if not x.startswith("inc="):
-                continue
-            if scope is not None and int(x.split("=")[1]) > scope:
-                continue
-            if os.path.exists(os.path.join(d, x, "_SUCCESS")):
-                out.append(x)
-        return sorted(out)
-
-    def _frozen_frame(self, scope: int | None) -> DataFrame | None:
-        leaves = self._frozen_leaves(scope)
-        if not leaves:
-            return None
-        return self.spark.read.schema(self._SCHEMA).parquet(
-            *[os.path.join(self._frozen_dir(), x) for x in leaves])
+    def _with_frozen(self, tail: DataFrame, scope: int) -> DataFrame:
+        """``tail`` plus the frozen rows of batch ids <= ``scope``."""
+        frozen = read_component(self.spark, self.state.state_dir,
+                                self._FROZEN,
+                                self._committed_frozen(scope),
+                                schema=self._SCHEMA)
+        return tail if frozen is None else frozen.unionByName(tail)
 
     def _split_ranked(self, sessions: DataFrame) -> DataFrame:
         """Rank each user's sessions newest-first: ``_rn == 1`` is the
@@ -163,15 +164,14 @@ class IncrementalSessionStoreMaintainer:
         for the orphan-increment argument), then the count-triggered
         fold. One materialization serves both writes."""
         ranked = self._split_ranked(sessions).localCheckpoint()
-        (ranked.where(F.col("_rn") > 1).drop("_rn")
-         .write.mode("overwrite")
-         .parquet(os.path.join(self._frozen_dir(),
-                               f"inc={batch_id:05d}")))
+        write_increment(ranked.where(F.col("_rn") > 1).drop("_rn"),
+                        self.state.state_dir, self._FROZEN, batch_id)
         self.state.write(batch_id,
                          ranked.where(F.col("_rn") == 1).drop("_rn"))
         if self.compact_every \
-                and len(self._frozen_leaves()) >= self.compact_every \
-                and not os.path.isdir(self._repair_tmp()):
+                and len(increments(self.state.state_dir, self._FROZEN)) \
+                >= self.compact_every \
+                and not os.path.isdir(self._repair_dir):
             self.compact_frozen()
 
     def compact_frozen(self) -> int:
@@ -181,7 +181,7 @@ class IncrementalSessionStoreMaintainer:
         re-entrant). Returns the number of leaves folded."""
         return compact_components(
             self.spark, self.state.state_dir, {self._FROZEN: ()},
-            "session_store")
+            self._KIND)
 
     def merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         self.state.guard(batch_id)
@@ -285,7 +285,6 @@ class IncrementalSessionStoreMaintainer:
             *[os.path.join(self.dead_letter_dir, d) for d in dirs]).count()
 
     _PRE_DRAIN = "pre_drain_v"
-    _FOLDED = "_folded.txt"
 
     def _pre_drain_leaf(self) -> str | None:
         names = [n for n in os.listdir(self.state.state_dir)
@@ -324,8 +323,9 @@ class IncrementalSessionStoreMaintainer:
             the backup (underscore prefix: invisible to parquet reads);
         4.  write the repaired TAIL (rank 1) to a fresh ``v=N`` (torn
             write => no ``_SUCCESS`` => invisible) — the commit point;
-        5a. swap the frozen staging in (delete exactly its manifested
-            leaves, rename ``repair_tmp`` -> ``inc=00000``);
+        5a. swap the frozen staging in with the compaction's own
+            ``finish_swap`` (delete exactly its manifested leaves,
+            rename ``repair_tmp`` -> ``inc=00000``);
         5b. delete exactly the manifested letter dirs, THEN the backup.
 
         Every crash point re-enters cleanly on the next drain call: a
@@ -339,25 +339,23 @@ class IncrementalSessionStoreMaintainer:
         since ``current()`` alone would silently drop the last merged
         batch."""
         pre_leaf = self._pre_drain_leaf()
-        if pre_leaf is None and os.path.isdir(self._repair_tmp()):
+        if pre_leaf is None:
             # crash after staging the repaired frozen (step 1b) but
             # before the tail backup: nothing was deleted yet and the
             # staged content belongs to an attempt that never reached
             # its commit point — discard and redo fresh.
-            shutil.rmtree(self._repair_tmp())
+            shutil.rmtree(self._repair_dir, ignore_errors=True)
         if pre_leaf is not None:
             target = int(pre_leaf.split("=")[1])
             pre_path = os.path.join(self.state.state_dir, pre_leaf)
-            manifest = os.path.join(pre_path, self._FOLDED)
-            if target in self.state.versions() \
-                    and os.path.exists(manifest):
+            folded = read_manifest(pre_path)
+            if target in self.state.versions() and folded is not None:
                 # step-5 crash: the fold committed; finish the frozen
                 # swap if it was interrupted, delete exactly the
                 # letters the manifest names, then the backup, then
                 # fall through to drain any newer safe letters fresh.
-                self._finish_frozen_swap()
-                with open(manifest) as fh:
-                    folded = [x for x in fh.read().split("\n") if x]
+                finish_swap(self.state.state_dir, self._FROZEN,
+                            self._REPAIR_TMP)
                 for d in folded:
                     shutil.rmtree(os.path.join(self.dead_letter_dir, d),
                                   ignore_errors=True)
@@ -368,14 +366,12 @@ class IncrementalSessionStoreMaintainer:
                 # discard it and re-repair from the backup over the
                 # currently-drainable letters bounded by the original
                 # target.
-                if os.path.isdir(self._repair_tmp()):
-                    shutil.rmtree(self._repair_tmp())
+                shutil.rmtree(self._repair_dir, ignore_errors=True)
                 dirs = [d for d in self._dead_letter_batches()
                         if int(d.split("=")[1]) <= target]
                 if not dirs:  # nothing left to fold: restore the backup
                     if os.path.exists(os.path.join(pre_path, "_SUCCESS")):
-                        if os.path.exists(manifest):
-                            os.remove(manifest)
+                        drop_manifest(pre_path)
                         os.rename(pre_path, os.path.join(
                             self.state.state_dir, f"v={target}"))
                     else:
@@ -386,23 +382,19 @@ class IncrementalSessionStoreMaintainer:
                         .parquet(pre_path)
                 else:  # empty-store sentinel backup
                     tail = self.spark.createDataFrame([], self._SCHEMA)
-                frozen = self._frozen_frame(scope=target)
-                base = tail if frozen is None \
-                    else frozen.unionByName(tail)
-                return self._fold(base, target, pre_path, dirs,
-                                  pre_exists=True, scope=target)
+                return self._fold(self._with_frozen(tail, target), target,
+                                  target, dirs, pre_path)
 
         dirs = self._drainable_batches()
         if not dirs:
             return 0
         versions = self.state.versions()
         target = versions[-1] if versions else 0
-        return self._fold(self.current(), target, None, dirs,
-                          pre_exists=False,
-                          scope=versions[-1] if versions else -1)
+        return self._fold(self.current(), target,
+                          versions[-1] if versions else -1, dirs)
 
-    def _fold(self, base: DataFrame, target: int, pre_path: str | None,
-              dirs: list[str], pre_exists: bool, scope: int) -> int:
+    def _fold(self, base: DataFrame, target: int, scope: int,
+              dirs: list[str], pre_path: str | None = None) -> int:
         late = self.spark.read.parquet(
             *[os.path.join(self.dead_letter_dir, d) for d in dirs])
         n_late = late.count()
@@ -426,14 +418,11 @@ class IncrementalSessionStoreMaintainer:
         # will overwrite) is never folded into the repair. Nothing is
         # deleted until after the tail commit (step 4), so a crash
         # anywhere up to there just discards this staging.
-        leaves = self._frozen_leaves(scope=scope)
-        tmp = self._repair_tmp()
-        (ranked.where(F.col("_rn") > 1).drop("_rn")
-         .write.mode("overwrite").parquet(tmp))
-        with open(os.path.join(tmp, self._FOLDED), "w") as fh:
-            fh.write("\n".join(leaves))
+        stage_fold(ranked.where(F.col("_rn") > 1).drop("_rn"),
+                   self.state.state_dir, self._FROZEN,
+                   self._committed_frozen(scope), tmp=self._REPAIR_TMP)
 
-        if not pre_exists:
+        if pre_path is None:
             pre_path = os.path.join(self.state.state_dir,
                                     f"{self._PRE_DRAIN}={target}")
             cur = os.path.join(self.state.state_dir, f"v={target}")
@@ -441,45 +430,18 @@ class IncrementalSessionStoreMaintainer:
                 os.rename(cur, pre_path)  # step 2: atomic backup
             else:
                 os.makedirs(pre_path)  # empty-store sentinel backup
-        with open(os.path.join(pre_path, self._FOLDED), "w") as fh:
-            fh.write("\n".join(dirs))  # step 3: fold manifest
+        write_manifest(pre_path, dirs)  # step 3: fold manifest
         self.state.write(target, ranked.where(F.col("_rn") == 1)
                          .drop("_rn"))  # step 4: commit
-        self._finish_frozen_swap()  # step 5a: frozen swap
+        # step 5a: frozen swap. The plain swap, never compact_components'
+        # discard-on-violation branch: this runs after the tail commit,
+        # and discarding the repaired frozen rows would lose the
+        # letters' events. The staging folds every leaf it replaces.
+        finish_swap(self.state.state_dir, self._FROZEN, self._REPAIR_TMP)
         for d in dirs:  # step 5b: manifested letters first, backup last
             shutil.rmtree(os.path.join(self.dead_letter_dir, d))
         shutil.rmtree(pre_path, ignore_errors=True)
         return n_late
-
-    def _finish_frozen_swap(self) -> None:
-        """Complete a committed frozen-repair staging: delete exactly
-        the manifested leaves, rename ``repair_tmp`` to ``inc=00000``
-        (the repaired frozen is by construction a fold of everything it
-        replaces). Re-entrant at every crash point; a half-written
-        staging (no marker/manifest) is discarded. No-op when no
-        staging exists — e.g. re-entering after the rename already
-        happened."""
-        tmp = self._repair_tmp()
-        if not os.path.isdir(tmp):
-            return
-        manifest = os.path.join(tmp, self._FOLDED)
-        if not (os.path.exists(os.path.join(tmp, "_SUCCESS"))
-                and os.path.exists(manifest)):
-            shutil.rmtree(tmp)  # torn staging: nothing was deleted yet
-            return
-        with open(manifest) as fh:
-            folded = [x for x in fh.read().split("\n") if x]
-        for leaf in folded:
-            try:
-                shutil.rmtree(os.path.join(self._frozen_dir(), leaf))
-            except FileNotFoundError:
-                pass  # already deleted by a prior finish attempt
-        # the manifest rides into inc=00000 through the atomic rename
-        # (removing it first would open a crash window where folded
-        # leaves are gone but the tmp looks torn and gets discarded)
-        os.rename(tmp, os.path.join(self._frozen_dir(), "inc=00000"))
-        os.remove(os.path.join(self._frozen_dir(), "inc=00000",
-                               self._FOLDED))
 
     @staticmethod
     def _late_users(store: DataFrame, fresh: DataFrame) -> DataFrame:
@@ -499,10 +461,9 @@ class IncrementalSessionStoreMaintainer:
         a crash between the frozen and tail writes is invisible until
         its re-delivered batch commits) unioned with the per-user
         tail."""
-        tail = self.state.current()
         versions = self.state.versions()
-        frozen = self._frozen_frame(versions[-1]) if versions else None
-        return tail if frozen is None else frozen.unionByName(tail)
+        return self._with_frozen(self.state.current(),
+                                 versions[-1] if versions else -1)
 
     # -- snapshot roundtrip (both components; the tail-only
     # _VersionedState export would silently drop the frozen rows) ------
@@ -511,11 +472,8 @@ class IncrementalSessionStoreMaintainer:
         """Snapshot the newest consistent state (tail version + scoped
         frozen leaves) to ``path``. Returns the exported version."""
         v = self.state.export_to(path)
-        for leaf in self._frozen_leaves(scope=v):
-            src = os.path.join(self._frozen_dir(), leaf)
-            dst = os.path.join(path, self._FROZEN, leaf)
-            shutil.rmtree(dst, ignore_errors=True)
-            shutil.copytree(src, dst)
+        copy_increments(self.state.state_dir, path, self._FROZEN,
+                        self._committed_frozen(v))
         return v
 
     def import_from(self, path: str) -> int:
@@ -527,13 +485,9 @@ class IncrementalSessionStoreMaintainer:
         survive the copy and double-serve its rows — the snapshot is
         the complete frozen state, not a delta."""
         v = self.state.import_from(path)
-        shutil.rmtree(self._frozen_dir(), ignore_errors=True)
-        snap_frozen = os.path.join(path, self._FROZEN)
-        if os.path.isdir(snap_frozen):
-            for leaf in sorted(os.listdir(snap_frozen)):
-                if not leaf.startswith("inc="):
-                    continue
-                shutil.copytree(os.path.join(snap_frozen, leaf),
-                                os.path.join(self._frozen_dir(), leaf))
+        shutil.rmtree(os.path.join(self.state.state_dir, self._FROZEN),
+                      ignore_errors=True)
+        copy_increments(path, self.state.state_dir, self._FROZEN,
+                        increments(path, self._FROZEN))
         return v
 

@@ -89,17 +89,17 @@ def _capped_rows(batch_df: DataFrame, columns, max_rows: int):
     return rows[:max_rows], truncated
 
 
-def make_session_report_batch_fn(header_once: bool = True,
-                                 max_rows: int = MAX_REPORT_ROWS):
+def make_session_report_batch_fn(max_rows: int = MAX_REPORT_ROWS):
     """Per-batch function behind :func:`session_report_writer` (factored
-    out so tests can drive it with a plain batch DataFrame)."""
+    out so tests can drive it with a plain batch DataFrame). The header
+    prints once, before the first non-empty batch."""
     state = {"printed_header": False}
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         rows, truncated = _capped_rows(batch_df, REPORT_COLUMNS, max_rows)
         if not rows:
             return
-        if not state["printed_header"] or not header_once:
+        if not state["printed_header"]:
             print("\n** Session Expiry Report ** (All UIDs Processed)")
             state["printed_header"] = True
         print(format_report_rows(rows))
@@ -109,15 +109,14 @@ def make_session_report_batch_fn(header_once: bool = True,
     return _write
 
 
-def session_report_writer(df: DataFrame, header_once: bool = True,
-                          max_rows: int = MAX_REPORT_ROWS):
+def session_report_writer(df: DataFrame, max_rows: int = MAX_REPORT_ROWS):
     """foreachBatch writer printing task1's session-expiry report
     (flink_stream_task1.py:75-85), capped at ``max_rows`` rows per batch
     (truncation is announced). Returns the unstarted writer; the caller
     sets ``checkpointLocation`` and calls ``.start()``."""
     return (
         df.writeStream
-        .foreachBatch(make_session_report_batch_fn(header_once, max_rows))
+        .foreachBatch(make_session_report_batch_fn(max_rows))
         .outputMode("append")
     )
 
