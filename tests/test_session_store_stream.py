@@ -905,3 +905,85 @@ def test_import_clears_stale_frozen_leaves(spark, sf_dir,
 
     assert target.import_from(snap) == 1
     assert _rows(target.current()) == want
+
+
+# ---------------------------------------------------------------------
+# A swap stopped between deleting its manifested leaves and renaming
+# the staging to inc=00000. The frozen log has one component, so the
+# mismatched-increments guard can never fire; the staging's manifest
+# naming a deleted leaf is what makes the read fail closed.
+
+
+def _crash_on_rename(monkeypatch, staging):
+    """Make the rename of ``staging`` into place raise, as if the
+    process died right after finish_swap deleted the folded leaves."""
+    from windowsession_using_kafka_flink_docker_spark.operators import (
+        versioned_index,
+    )
+
+    real = os.rename
+
+    def rename(src, dst):
+        if os.path.basename(src) == staging:
+            raise OSError(f"simulated crash before renaming {src}")
+        return real(src, dst)
+
+    monkeypatch.setattr(versioned_index.os, "rename", rename)
+
+
+def test_torn_compaction_swap_fails_closed_until_compact_frozen(
+        spark, sf_dir, tmp_path_factory, monkeypatch):
+    """compact_tmp: three batches, the fold of the first two dies after
+    deleting inc=00000 and inc=00001. current() must raise and name
+    compact_frozen(); compact_frozen() (re-entrant) finishes the swap
+    and every row is served again."""
+    ev = load_table(spark, sf_dir, "events").select(*_COLS)
+    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
+    span = (hi - lo) / 3
+    state = str(tmp_path_factory.mktemp("torn_compact"))
+    maint = IncrementalSessionStoreMaintainer(spark, state)
+    for i in range(3):
+        sl = ev.where(F.col("ts") >= F.lit(lo + i * span))
+        if i < 2:
+            sl = sl.where(F.col("ts") < F.lit(lo + (i + 1) * span))
+        maint.merge_batch(sl, i)
+    want = _rows(_sessions_full(ev))
+    assert _rows(maint.current()) == want
+
+    with monkeypatch.context() as m:
+        _crash_on_rename(m, "compact_tmp")
+        with pytest.raises(OSError, match="simulated crash"):
+            maint.compact_frozen()
+    assert increments(state, "frozen") == ["inc=00002"]
+
+    with pytest.raises(ValueError, match=r"compact_frozen\(\)"):
+        maint.current()
+    # ingest never reads the frozen rows, so it is not blocked
+
+    assert maint.compact_frozen() == 2
+    assert increments(state, "frozen") == ["inc=00000", "inc=00002"]
+    assert _rows(maint.current()) == want
+
+
+def test_torn_drain_swap_fails_closed_until_redrain(
+        spark, sf_dir, tmp_path_factory, monkeypatch):
+    """repair_tmp: the drain commits the repaired tail, then dies
+    after deleting the frozen leaves its staging replaces. current()
+    must raise and name repair_from_dead_letter(); the re-drain
+    finishes the swap without re-applying the letters."""
+    maint, ev = _quarantined_maintainer(spark, sf_dir, tmp_path_factory)
+    state = maint.state.state_dir
+
+    with monkeypatch.context() as m:
+        _crash_on_rename(m, "repair_tmp")
+        with pytest.raises(OSError, match="simulated crash"):
+            maint.repair_from_dead_letter()
+    assert increments(state, "frozen") == []
+
+    with pytest.raises(ValueError, match=r"repair_from_dead_letter\(\)"):
+        maint.current()
+
+    assert maint.repair_from_dead_letter() == 0  # cleanup only
+    assert _rows(maint.current()) == _rows(_sessions_full(ev))
+    assert maint.dead_letter_backlog() == 0
+    assert maint._pre_drain_leaf() is None

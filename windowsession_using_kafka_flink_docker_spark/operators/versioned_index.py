@@ -28,7 +28,11 @@ store's ``frozen`` component (streaming/session_store.py, maintainer
   re-enters: a half-written tmp set is discarded (increments intact);
   a fully committed tmp set resumes the delete+rename; a mid-rename
   crash leaves components mismatched — reads FAIL CLOSED until the
-  next compact call completes the remaining renames. The manifest is
+  next compact call completes the remaining renames. A crash inside
+  one component's swap (leaves deleted, staging not yet renamed) also
+  fails reads closed, through the staging's manifest naming a leaf
+  that is gone; that is the only signal a one-component log (the
+  session store's ``frozen``) gives. The manifest is
   what makes the swap safe against a VIOLATED quiescence contract
   (r15 ADVICE): deletion is confined to the leaves actually folded
   into the tmp, so an increment that lands between the fold and the
@@ -57,7 +61,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-_COMPACT_TMP = "compact_tmp"  # does not start with "inc=": never listed
+COMPACT_TMP = "compact_tmp"  # does not start with "inc=": never listed
 _FOLDED = "_folded.txt"  # underscore prefix: invisible to parquet reads
 
 
@@ -109,13 +113,42 @@ def _filtered(incs: list[str], before_inc: int | None) -> list[str]:
     return [x for x in incs if _number(x) < before_inc]
 
 
-def check_components_committed(path: str, comps: tuple[str, ...],
-                               kind: str,
-                               before_inc: int | None = None) -> list[str]:
+def _check_no_torn_swap(path: str, comp: str, kind: str,
+                        recovery: dict[str, str]) -> None:
+    """Fail closed on a swap that :func:`finish_swap` left half done: a
+    committed staging whose manifest names a leaf that is gone. The
+    leaves it folded are (partly) deleted and the fold is not yet
+    ``inc=00000``, so the listed increments are only part of the
+    table. One component can never mismatch, so this is the only
+    signal a single-component log gives."""
+    d = os.path.join(path, comp)
+    for tmp, call in recovery.items():
+        staging = os.path.join(d, tmp)
+        if not _staged(staging):
+            continue
+        gone = [x for x in read_manifest(staging)
+                if not os.path.isdir(os.path.join(d, x))]
+        if gone:
+            raise ValueError(
+                f"{kind} index under {path} has a half-finished swap: "
+                f"{comp}/{tmp} is committed but its folded leaves {gone} "
+                "are already deleted, so the increments serve only part "
+                f"of the table; run {call} to finish the swap "
+                "before reading")
+
+
+def check_components_committed(
+        path: str, comps: tuple[str, ...], kind: str,
+        before_inc: int | None = None,
+        recovery: dict[str, str] | None = None) -> list[str]:
     """The fail-closed reader guard: every component's (optionally
-    ``before_inc``-scoped) increment set must match exactly, and every
-    increment must carry its commit marker. Returns the committed
-    increment leaves. ``kind`` names the index in error messages."""
+    ``before_inc``-scoped) increment set must match exactly, no
+    component may hold a staging whose swap stopped after deleting its
+    folded leaves, and every increment must carry its commit marker.
+    Returns the committed increment leaves. ``kind`` names the index in
+    error messages; ``recovery`` maps each staging directory name the
+    owner uses to the call that finishes its swap (default: the
+    compaction's ``compact_tmp``)."""
     sets = {c: _filtered(increments(path, c), before_inc) for c in comps}
     first = sets[comps[0]]
     if any(s != first for s in sets.values()):
@@ -123,7 +156,9 @@ def check_components_committed(path: str, comps: tuple[str, ...],
             f"{kind} index under {path} has mismatched increments "
             f"({sets}) — an export or append was interrupted between "
             "components; re-drive the increment before reading")
+    recovery = recovery or {COMPACT_TMP: "the compaction"}
     for c in comps:
+        _check_no_torn_swap(path, c, kind, recovery)
         for x in first:
             if not os.path.exists(os.path.join(path, c, x, "_SUCCESS")):
                 raise ValueError(
@@ -179,7 +214,7 @@ def copy_increments(src: str, dst: str, comp: str,
 
 def stage_fold(df: DataFrame, path: str, comp: str, folded: list[str],
                partition_by: tuple[str, ...] = (),
-               tmp: str = _COMPACT_TMP) -> None:
+               tmp: str = COMPACT_TMP) -> None:
     """Write ``df`` — the fold of the ``folded`` leaves — to the
     component's staging sibling ``tmp``, then its manifest. The
     manifest comes AFTER the Spark write (overwrite wipes the dir):
@@ -199,7 +234,7 @@ def _staged(d: str) -> bool:
             and os.path.exists(os.path.join(d, _FOLDED)))
 
 
-def finish_swap(path: str, comp: str, tmp: str = _COMPACT_TMP) -> None:
+def finish_swap(path: str, comp: str, tmp: str = COMPACT_TMP) -> None:
     """Swap a committed staging in: delete exactly its manifested
     leaves, rename it to ``inc=00000``, drop the manifest. Re-entrant
     at every crash point: no-op when no staging exists (the rename
@@ -234,7 +269,7 @@ def compact_components(
     names = tuple(comps)
 
     def tmp(c: str) -> str:
-        return os.path.join(path, c, _COMPACT_TMP)
+        return os.path.join(path, c, COMPACT_TMP)
 
     present = [c for c in names if os.path.isdir(tmp(c))]
     # Recovery disambiguation relies on the FIXED component order used
@@ -288,10 +323,10 @@ def _finish_compaction(path: str,
     """
     names = tuple(comps)
     pending = [c for c in names
-               if os.path.isdir(os.path.join(path, c, _COMPACT_TMP))]
+               if os.path.isdir(os.path.join(path, c, COMPACT_TMP))]
     violated = []
     for c in pending:
-        folded = read_manifest(os.path.join(path, c, _COMPACT_TMP))
+        folded = read_manifest(os.path.join(path, c, COMPACT_TMP))
         extras = [x for x in increments(path, c) if x not in folded]
         if len(extras) > 1:
             violated.append((c, extras))
@@ -300,7 +335,7 @@ def _finish_compaction(path: str,
             # Nothing deleted or renamed yet: discarding the tmps is
             # safe and restores the pre-compaction state exactly.
             for c in pending:
-                shutil.rmtree(os.path.join(path, c, _COMPACT_TMP))
+                shutil.rmtree(os.path.join(path, c, COMPACT_TMP))
             return False
         raise ValueError(
             f"compaction of {path} found increments beyond the fold "

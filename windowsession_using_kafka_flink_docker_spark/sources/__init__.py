@@ -1,3 +1,3 @@
-from windowsession_using_kafka_flink_docker_spark.sources.batch import TABLES, load_table, load_tables
+from windowsession_using_kafka_flink_docker_spark.sources.batch import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_tables"]
+__all__ = ["TABLES", "load_table"]

@@ -10,6 +10,7 @@ between scanning 2 columns and scanning 11 is the whole ballgame.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,10 +34,81 @@ _TS_COLS = {
 }
 
 
+#: Session settings that change what parquet schema inference returns
+#: for the same files; a registered schema is valid only under the
+#: values it was inferred with. (``nanosAsLong`` is one too, but
+#: ``load_table`` sets it before every read.)
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: The schema registry: (applicationId, path) -> (stamp, raw inferred
+#: schema). Metadata, not results, so it lives as long as the process
+#: and ``clear_stage_caches()`` leaves it alone; a new application (a
+#: stopped-and-restarted session) never sees the old entries.
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, T.StructType]] = {}
+
+
+def _stamp(spark: SparkSession, path: str) -> tuple | None:
+    """What must be unchanged for a registered schema of ``path`` to
+    hold: the files' ``(mtime_ns, size)`` — for a directory table, of
+    every file below it, by relative name, so a file rewritten in place
+    is noticed — plus the session's inference settings. None when
+    ``path`` is not a local file or directory (no registry: Spark infers
+    the schema, or reports the missing path, on every call)."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            files: tuple = (st.st_mtime_ns, st.st_size)
+        else:
+            entries = []
+            for root, _, names in os.walk(path):
+                rel = os.path.relpath(root, path)
+                for n in names:
+                    e = os.stat(os.path.join(root, n))
+                    entries.append((os.path.join(rel, n), e.st_mtime_ns,
+                                    e.st_size))
+            files = tuple(sorted(entries))
+    except OSError:
+        return None
+    return files, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+
+
+def _read_parquet(spark: SparkSession,
+                  path: str) -> tuple[DataFrame, T.StructType]:
+    """``spark.read.parquet(path)`` and its raw schema, inferring the
+    schema (one footer job) only the first time a table is read in this
+    application or after its files or the inference settings changed;
+    otherwise the registered schema is handed to the reader and no job
+    runs."""
+    stamp = _stamp(spark, path)
+    key = (spark.sparkContext.applicationId, path)
+    hit = _SCHEMAS.get(key)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path), hit[1]
+    df = spark.read.parquet(path)
+    raw = df.schema
+    if stamp is not None:
+        _SCHEMAS[key] = (stamp, raw)
+    return df, raw
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one parquet table from a scale-factor directory.
 
-    Normalizes timestamp columns to TimestampType (UTC instant):
+    The schema is inferred once per Spark application and registered
+    (``_read_parquet``); later calls pass it to the reader and run no
+    inference job. A table is re-inferred when any of its files changes
+    ``mtime``/size (a directory table is stamped file by file, so an
+    in-place rewrite of one part file counts) or when a parquet
+    inference setting of the session differs from the registered one.
+
+    Normalizes timestamp columns to TimestampType (UTC instant), after
+    every read, registered or not (the NTZ branch depends on the
+    session time zone):
     - TIMESTAMP(NANOS) files read as int64 (spark.sql.legacy.parquet.
       nanosAsLong) are truncated ns → µs with exact integer arithmetic
       (`div 1000` — floor == truncate for the positive epochs here);
@@ -49,9 +121,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       that shift — net effect: instant == NTZ-as-UTC in any session.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df, raw = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     for col in _TS_COLS.get(name, ()):
-        field = df.schema[col]
+        field = raw[col]
         if isinstance(field.dataType, T.LongType):
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
         elif isinstance(field.dataType, T.TimestampNTZType):
@@ -62,12 +134,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 ),
             )
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str,
-                names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    """Read several tables; returns {name: DataFrame}."""
-    return {n: load_table(spark, sf_dir, n) for n in names}
 
 
 def read_csv_events(spark: SparkSession, path: str) -> DataFrame:

@@ -78,6 +78,7 @@ from windowsession_using_kafka_flink_docker_spark.operators.sessionize import (
     cents,
 )
 from windowsession_using_kafka_flink_docker_spark.operators.versioned_index import (
+    COMPACT_TMP,
     check_components_committed,
     compact_components,
     copy_increments,
@@ -140,7 +141,9 @@ class IncrementalSessionStoreMaintainer:
         tail commits), and an orphan above it stays out of view."""
         return check_components_committed(
             self.state.state_dir, (self._FROZEN,), self._KIND,
-            before_inc=scope + 1)
+            before_inc=scope + 1,
+            recovery={COMPACT_TMP: "compact_frozen()",
+                      self._REPAIR_TMP: "repair_from_dead_letter()"})
 
     def _with_frozen(self, tail: DataFrame, scope: int) -> DataFrame:
         """``tail`` plus the frozen rows of batch ids <= ``scope``."""
