@@ -666,6 +666,150 @@ class TestStatefulCappedSessions:
         assert len(segs) == 5
         assert all(s.event_count == 6 for s in segs)
 
+    def test_restart_resumes_and_changed_buckets_fail_closed(self, spark, tmp_path):
+        """Sessions open across a stop resume from the checkpoint: the two
+        runs' output equals the batch definition. A restart under another
+        ``spark.sql.shuffle.partitions`` would hash users to other state
+        buckets and split their open segments, so the query fails with
+        the bucket-count error instead and emits nothing."""
+        import shutil
+        import time
+
+        from windowsession_using_kafka_flink_docker_spark.operators.capped_sessionize import (
+            capped_sessionize,
+        )
+        from windowsession_using_kafka_flink_docker_spark.streaming import (
+            streaming_capped_sessionize,
+        )
+
+        t0_us = 1_704_067_200_000_000
+        # 200 users, one event per 10 s each; users 0-99 keep going after
+        # the stop (one 200 s gap session, cap-split at 120 s), users
+        # 100-199 stop at 50 s and close by the watermark
+        first = _events_at(spark, 1200, f"{t0_us} + (id div 200) * 10000000 + id % 200",
+                           "id % 200", "(id % 7) - 2.5")
+        second = _events_at(spark, 1500,
+                            f"{t0_us} + (6 + id div 100) * 10000000 + id % 100",
+                            "id % 100", "(id % 5) * 0.25")
+        sentinel = _events_at(spark, 1, f"{t0_us} + 86400000000",
+                              str(SENTINEL_USER), "0")
+        src = str(tmp_path / "src")
+        os.makedirs(src)
+        now = time.time()
+        _drop_frame(first, src, "00", now)
+        ckpt, ckpt_other = str(tmp_path / "ckpt"), str(tmp_path / "ckpt_other")
+
+        def run(ckpt_dir, rows):
+            q = _collecting_query(
+                streaming_capped_sessionize(_events_stream(spark, src)), ckpt_dir, rows)
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+            return rows
+
+        before = run(ckpt, [])
+        shutil.copytree(ckpt, ckpt_other)
+        _drop_frame(second, src, "01", now + 60)
+        _drop_frame(sentinel, src, "02", now + 120)
+        after = run(ckpt, [])
+
+        want = _rows(capped_sessionize(first.unionByName(second)))
+        assert len(want) == 2 * 100 + 100
+        assert len(before) < len(want)           # work spanned the restart
+        assert _tuples(before + after) == want
+
+        parts = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(2 * int(parts)))
+        split = []
+        try:
+            with pytest.raises(Exception, match="buckets but this plan has") as err:
+                run(ckpt_other, split)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+        n = 4 * int(parts)
+        assert f"written with {n} buckets but this plan has {2 * n}" in str(err.value)
+        assert split == []
+
+    def test_hot_key_matches_batch_with_state_bounded_by_buckets(self, spark, tmp_path):
+        """Generator phase 4: 100k events of one user among 2,000
+        background users, over four micro-batches. Stream equals batch,
+        and the state holds at most one row per bucket however many
+        events or users a batch brings."""
+        import time
+
+        from windowsession_using_kafka_flink_docker_spark.operators.capped_sessionize import (
+            capped_sessionize,
+        )
+        from windowsession_using_kafka_flink_docker_spark.streaming import (
+            streaming_capped_sessionize,
+        )
+
+        t0_us = 1_704_067_200_000_000
+        span_s = 100_000
+        hot = _events_at(spark, span_s, f"{t0_us} + id * 1000000", "4",
+                         "(id % 1000) / 100")
+        background = _events_at(
+            spark, 10_000, f"{t0_us} + ((id * 9973) % {span_s}) * 1000000 + 500000",
+            "1000 + id % 2000", "(id % 300) / 100 - 1")
+        events = hot.unionByName(background)
+        src = str(tmp_path / "src")
+        os.makedirs(src)
+        now, quarter_us = time.time(), span_s // 4 * 1_000_000
+        for i in range(4):
+            part = events.where(
+                F.unix_micros("ts").between(t0_us + i * quarter_us,
+                                            t0_us + (i + 1) * quarter_us - 1))
+            _drop_frame(part, src, f"{i:02d}", now + 60 * i)
+        _drop_frame(_events_at(spark, 1, f"{t0_us + 2 * span_s * 1_000_000}",
+                               str(SENTINEL_USER), "0"), src, "04", now + 240)
+
+        rows = []
+        q = _collecting_query(streaming_capped_sessionize(_events_stream(spark, src)),
+                              str(tmp_path / "ckpt"), rows)
+        try:
+            q.processAllAvailable()
+            progress = q.recentProgress
+        finally:
+            q.stop()
+        assert _tuples(rows) == _rows(capped_sessionize(events))
+        buckets = 4 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+        state_rows = [op.numRowsTotal for p in progress for op in p.stateOperators]
+        assert state_rows and max(state_rows) <= buckets
+
+
+def _drop_frame(df, src, name, mtime):
+    """Write ``df`` as one parquet file ``src/<name>.parquet`` with the
+    given mtime (the file source replays oldest mtime first)."""
+    import glob
+    import shutil
+
+    tmp = os.path.join(os.path.dirname(src), f"stage_{name}")
+    df.coalesce(1).write.parquet(tmp)
+    (part,) = glob.glob(os.path.join(tmp, "*.parquet"))
+    dst = os.path.join(src, f"{name}.parquet")
+    shutil.copy(part, dst)
+    os.utime(dst, (mtime, mtime))
+
+
+def _events_at(spark, n, ts_us, user_id, value):
+    """``n`` events built in the JVM from SQL expressions over ``id``."""
+    return spark.range(n).select(
+        F.timestamp_micros(F.expr(ts_us)).alias("ts"),
+        F.expr(user_id).cast("long").alias("user_id"),
+        F.expr(value).cast("double").alias("value"))
+
+
+def _collecting_query(stream, ckpt, rows):
+    return (stream.writeStream.option("checkpointLocation", ckpt)
+            .foreachBatch(lambda df, _id: rows.extend(df.collect())).start())
+
+
+def _tuples(rows):
+    """``_rows``'s form of collected rows, sentinel excluded."""
+    return sorted(tuple(str(r[c]) for c in sorted(r.asDict()))
+                  for r in rows if r.user_id != SENTINEL_USER)
+
 
 class _StubGroupState:
     """The slice of ``GroupState`` the capped-session function uses."""
@@ -698,73 +842,132 @@ class _StubGroupState:
 
 
 class TestCappedSessionFn:
-    """``make_capped_session_fn`` against a stub state, no Spark: a frame
-    leaves Python only when a segment closed, and only as BIGINTs."""
+    """``make_capped_session_fn`` against a stub state of one bucket, no
+    Spark: a frame leaves Python only when a segment closed, and only as
+    BIGINTs; a call also closes bucket-mates whose deadline passed."""
 
-    GAP_S, CAP_S = 30.0, 120.0
+    GAP_S, CAP_S, BUCKETS = 30.0, 120.0, 16
     T0_US = 1_704_067_200_000_000  # 2024-01-01 00:00:00 UTC
+    T0_MS = T0_US // 1_000
 
     @staticmethod
-    def _batch(ts_us, cents):
+    def _batch(rows):
+        """``rows``: (user, µs, cents) tuples, in arrival order."""
         import pandas as pd
 
         from windowsession_using_kafka_flink_docker_spark.streaming.stateful import (
             _CENTS,
+            _KEY,
             _TS,
         )
+        users, ts_us, cents = zip(*rows)
         return pd.DataFrame({
-            "user_id": pd.Series([7] * len(ts_us), dtype="int64"),
-            _TS: pd.to_datetime(ts_us, unit="us"),
+            _KEY: pd.Series(users, dtype="int64"),
+            _TS: pd.to_datetime(list(ts_us), unit="us"),
             _CENTS: pd.Series(cents, dtype="int64"),
         })
 
-    def _fn(self):
+    def _state(self, *segs, buckets=None, **kw):
+        """A stub holding the open segments ``(user, gs0, seg, s0, s1, sc,
+        scnt)`` in the array state layout."""
+        slots = tuple(list(col) for col in zip(*segs))
+        return _StubGroupState((*slots, buckets or self.BUCKETS), **kw)
+
+    @staticmethod
+    def _segs(state):
+        *slots, _ = state.get
+        return sorted(zip(*slots))
+
+    def _call(self, state, pdfs=()):
         from windowsession_using_kafka_flink_docker_spark.streaming.stateful import (
             make_capped_session_fn,
         )
-        return make_capped_session_fn(self.GAP_S, self.CAP_S)
+        fn = make_capped_session_fn(self.GAP_S, self.CAP_S, self.BUCKETS)
+        return list(fn((3,), iter(pdfs), state))
 
     @staticmethod
-    def _assert_fold_frame(pdf):
-        from pyspark.sql.types import LongType, _parse_datatype_string
-
+    def _rows(out):
         from windowsession_using_kafka_flink_docker_spark.streaming.stateful import (
             FOLD_SCHEMA,
         )
-        schema = _parse_datatype_string(FOLD_SCHEMA)
-        assert all(isinstance(f.dataType, LongType) for f in schema.fields)
-        assert list(pdf.columns) == schema.names
-        assert all(str(t) == "int64" for t in pdf.dtypes)
+        assert len(out) == 1
+        names, types = zip(*(f.split() for f in FOLD_SCHEMA.split(",")))
+        assert set(types) == {"long"}
+        assert list(out[0].columns) == list(names)
+        assert all(str(t) == "int64" for t in out[0].dtypes)
+        return sorted(out[0].values.tolist())
 
     def test_new_key_closing_nothing_yields_no_frame(self):
         t0 = self.T0_US
         state = _StubGroupState()
-        # two chunks, out of order: the batch is sorted before the fold
-        pdfs = [self._batch([t0 + 10_000_000], [250]), self._batch([t0], [-100])]
-        assert list(self._fn()((7,), iter(pdfs), state)) == []
-        assert state.get == (t0, 0, t0, t0 + 10_000_000, 150, 2)
-        assert state.timeout_ms == (t0 + 10_000_000) // 1_000 + 30_000 + 1
+        # two chunks, users and times out of order: sorted before the fold
+        pdfs = [self._batch([(9, t0 + 20_000_000, 1), (7, t0 + 10_000_000, 250)]),
+                self._batch([(7, t0, -100)])]
+        assert self._call(state, pdfs) == []
+        assert self._segs(state) == [(7, t0, 0, t0, t0 + 10_000_000, 150, 2),
+                                     (9, t0 + 20_000_000, 0, t0 + 20_000_000,
+                                      t0 + 20_000_000, 1, 1)]
+        assert state.get[-1] == self.BUCKETS
+        # armed at the earliest deadline: user 7's segment end + gap
+        assert state.timeout_ms == self.T0_MS + 10_000 + 30_000 + 1
 
     def test_closed_segments_leave_as_bigint_rows(self):
         t0 = self.T0_US
-        state = _StubGroupState((t0, 0, t0, t0, 100, 1))
+        state = self._state((7, t0, 0, t0, t0, 100, 1))
         # 60 s of silence closes the open session; the new one stays open
-        out = list(self._fn()((7,), iter([self._batch([t0 + 60_000_000], [5])]), state))
-        assert len(out) == 1
-        self._assert_fold_frame(out[0])
-        assert out[0].values.tolist() == [[7, t0, t0, 100, 1]]
-        assert state.get == (t0 + 60_000_000, 0, t0 + 60_000_000,
-                             t0 + 60_000_000, 5, 1)
+        out = self._call(state, [self._batch([(7, t0 + 60_000_000, 5)])])
+        assert self._rows(out) == [[7, t0, t0, 100, 1]]
+        assert self._segs(state) == [(7, t0 + 60_000_000, 0, t0 + 60_000_000,
+                                      t0 + 60_000_000, 5, 1)]
+
+    def test_data_call_closes_expired_mate_without_rows(self):
+        t0 = self.T0_US
+        # user 7's deadline (t0 + 30.001 s) is behind the watermark, user
+        # 8's (t0 + 80.001 s) is not; only user 9 has rows
+        state = self._state((7, t0, 0, t0, t0, 100, 1),
+                            (8, t0, 0, t0, t0 + 50_000_000, 200, 2),
+                            (9, t0, 0, t0, t0 + 40_000_000, 300, 3),
+                            watermark_ms=self.T0_MS + 60_000)
+        out = self._call(state, [self._batch([(9, t0 + 65_000_000, 4)])])
+        assert self._rows(out) == [[7, t0, t0, 100, 1]]
+        assert self._segs(state) == [
+            (8, t0, 0, t0, t0 + 50_000_000, 200, 2),
+            (9, t0, 0, t0, t0 + 65_000_000, 304, 4)]
+        assert state.timeout_ms == self.T0_MS + 50_000 + 30_000 + 1
+
+    def test_rearm_clamps_to_watermark_plus_one(self):
+        t0 = self.T0_US
+        # user 7's rows are older than watermark - gap: its deadline has
+        # passed already, and a timeout at or before the watermark fails
+        # the query
+        state = _StubGroupState(watermark_ms=self.T0_MS + 100_000)
+        assert self._call(state, [self._batch([(7, t0, 1)])]) == []
+        assert state.timeout_ms == self.T0_MS + 100_001
+
+    def test_timeout_closes_only_expired_users_and_rearms(self):
+        t0 = self.T0_US
+        state = self._state((7, t0, 0, t0, t0 + 10_000_000, 100, 1),
+                            (8, t0, 1, t0 + 120_000_000, t0 + 130_000_000, -7, 3),
+                            (9, t0, 0, t0, t0 + 45_000_000, 5, 1),
+                            timed_out=True, watermark_ms=self.T0_MS + 50_000)
+        out = self._call(state)
+        assert self._rows(out) == [[7, t0, t0 + 10_000_000, 100, 1]]
+        assert [s[0] for s in self._segs(state)] == [8, 9]
+        assert state.timeout_ms == self.T0_MS + 45_000 + 30_000 + 1
 
     def test_timeout_yields_one_row_and_drops_state(self):
         t0 = self.T0_US
-        state = _StubGroupState((t0, 1, t0 + 120_000_000, t0 + 130_000_000, -7, 3),
-                                timed_out=True)
-        out = list(self._fn()((7,), iter([]), state))
-        assert len(out) == 1
-        self._assert_fold_frame(out[0])
-        assert out[0].values.tolist() == [[7, t0 + 120_000_000, t0 + 130_000_000, -7, 3]]
+        state = self._state((7, t0, 1, t0 + 120_000_000, t0 + 130_000_000, -7, 3),
+                            timed_out=True, watermark_ms=self.T0_MS + 200_000)
+        out = self._call(state)
+        assert self._rows(out) == [[7, t0 + 120_000_000, t0 + 130_000_000, -7, 3]]
         assert not state.exists
+
+    def test_state_of_another_bucket_count_fails_closed(self):
+        t0 = self.T0_US
+        state = self._state((7, t0, 0, t0, t0, 100, 1), buckets=32)
+        with pytest.raises(ValueError, match="written with 32 buckets but this plan has 16"):
+            self._call(state, [self._batch([(7, t0 + 1_000_000, 5)])])
 
 
 class TestStreamStreamIntervalJoin:
